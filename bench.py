@@ -19,6 +19,15 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
+def best_of(runs: "list[float | None]") -> float:
+    """One query's recorded time over its runs (``None`` = a failed run):
+    the fastest run, or -1.0 if ANY run failed — a later success must never
+    hide an earlier failure from ``n_failed``."""
+    if not runs or any(r is None for r in runs):
+        return -1.0
+    return min(runs)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
@@ -75,23 +84,21 @@ def main() -> None:
 
     for name, fn in qs.items():
         print(f"# bench start {name}", file=sys.stderr, flush=True)
-        best = None
+        runs: list[float | None] = []
         for _ in range(n_runs):
             t0 = time.time()
             try:
                 df = fn(spark, sf_dir)
                 df.write.format("noop").mode("overwrite").save()
-                dt = round(time.time() - t0, 3)
-                best = dt if best is None or best < 0 else min(best, dt)
+                runs.append(round(time.time() - t0, 3))
             except Exception as ex:  # record failures distinctly, keep going
-                if best is None:
-                    best = -1.0
+                runs.append(None)
                 print(f"# bench error {name}: {type(ex).__name__}: {str(ex)[:200]}", file=sys.stderr)
             finally:
                 # operator-internal persists are per-query staging; release so
                 # one query's cached blocks never skew the next run's budget
                 release_caches()
-        timings[name] = best if best is not None else -1.0
+        timings[name] = best_of(runs)
         if timings[name] >= 0:
             print(f"# bench done  {name} {timings[name]}s", file=sys.stderr, flush=True)
 

@@ -1,0 +1,72 @@
+"""The one "small enough for a single task?" guard.
+
+Rank statistics (a Kaplan–Meier curve, a median interval, exact
+quantiles, a Pettitt scan) need one global ordering.  The distributed form
+of that ordering is ``operators/distsort.py``: a boundary sketch job, a
+prefix-offset job and bucket-keyed windows, so that no task ever holds more
+than a bucket.  Below a few tens of thousands of rows that machinery is
+pure job overhead; one task sorts the rows in milliseconds.
+
+``bounded`` makes that decision the same way at every site: persist the
+input through ``register_cache`` (so the count and every later pass share
+one materialisation), count it once, and compare the count with
+``BOUND``.  There is deliberately no ``limit(BOUND + 1)`` probe: on an
+expensive upstream the CollectLimit plan re-scans it, and the cached count
+costs the same single pass the consumer needs anyway.
+
+Each decision is appended to a bounded in-memory record, read with
+``decisions()``, as ``{operator, path, n, bound}``; ``path`` is
+``"bounded"`` (the single-task or driver-side form) or ``"distsort"``.
+"""
+
+from __future__ import annotations
+
+from collections import deque
+from typing import NamedTuple
+
+from pyspark.sql import DataFrame as SparkDF
+
+from ._cache import register_cache
+
+__all__ = ["BOUND", "Guarded", "bounded", "decisions", "clear_decisions"]
+
+# rows one task may sort or the driver may collect: the same 65,536 that
+# bounds the train_bpe artifact
+BOUND = 65_536
+
+_DECISIONS: "deque[dict]" = deque(maxlen=1024)
+
+
+class Guarded(NamedTuple):
+    frame: SparkDF  # the persisted input; every later pass reads the cache
+    n: int  # its row count
+    small: bool  # n <= bound: take the bounded path
+
+
+def bounded(sdf: SparkDF, operator: str, bound: "int | None" = None) -> Guarded:
+    """Persist ``sdf``, count it once and decide the path for ``operator``.
+
+    ``bound`` defaults to the module's ``BOUND`` read at call time, so a
+    test can force either side by setting ``_bounded.BOUND``."""
+    limit = BOUND if bound is None else int(bound)
+    cached = register_cache(sdf)
+    n = cached.count()
+    small = n <= limit
+    _DECISIONS.append(
+        {
+            "operator": operator,
+            "path": "bounded" if small else "distsort",
+            "n": n,
+            "bound": limit,
+        }
+    )
+    return Guarded(cached, n, small)
+
+
+def decisions() -> "list[dict]":
+    """The most recent guard decisions, oldest first (at most 1024)."""
+    return list(_DECISIONS)
+
+
+def clear_decisions() -> None:
+    _DECISIONS.clear()

@@ -26,10 +26,26 @@ def spread_plain_scan(sdf: SparkDF) -> SparkDF:
     default parallelism.  Returns ``sdf`` unchanged otherwise."""
     par = sdf.sparkSession.sparkContext.defaultParallelism
     try:
-        logical = str(sdf._jdf.queryExecution().logical())
-        simple = not any(k in logical for k in _WIDE_NODES)
+        simple = not any(
+            k in name
+            for name in _node_names(sdf._jdf.queryExecution().logical())
+            for k in _WIDE_NODES
+        )
         if simple and sdf.rdd.getNumPartitions() < par:
             return sdf.repartition(par)
     except Exception:  # pragma: no cover - plan-introspection guard
         pass
     return sdf
+
+
+def _node_names(plan) -> "list[str]":
+    """Class names of every node of a JVM logical plan, walked through its
+    ``children()``.  Only node names count: a column or alias that merely
+    contains "Window" or "Join" is not a wide node."""
+    names, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        names.append(node.getClass().getSimpleName())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return names

@@ -922,15 +922,18 @@ def rmst(
     semantics): RMST = Σ S(tᵢ₋₁)·(min(tᵢ,τ) − min(tᵢ₋₁,τ)) + S(t_last)·
     (τ − min(t_last, τ)), with S = 1 before the first event time.
 
-    The lag over the curve shards on the key; the GLOBAL path rides halo
-    buckets (1-row predecessor halo) — no single-partition window at any
-    scale.  Output: [keys...,] tau, n_times, rmst."""
+    Scale shape: the lag over the curve shards on the key.  The GLOBAL
+    path reuses survival_curve's bound decision (one count per call): at
+    most 65,536 time cells (``_bounded.BOUND``, the rule stated in
+    operators/distsort.py) take the lag in one window task; above it the
+    lag rides halo buckets (1-row predecessor halo) — no single-partition
+    window at scale.  Output: [keys...,] tau, n_times, rmst."""
     tau = float(tau)
     if tau <= 0:
         raise ValueError("tau must be > 0")
     keys = [by] if isinstance(by, str) else list(by or [])
-    curve = survival_curve(frame, time_col, event_col, by=by).spark
-    if keys:
+    curve, windowed = _km_curve(frame, time_col, event_col, by, 6)
+    if windowed:
         w = Window.partitionBy(*keys).orderBy("t")
         staged = curve
         halo_col = None
@@ -1242,18 +1245,35 @@ def survival_curve(
     event times — the churn/retention curve done right (censoring-aware,
     unlike a naive survival fraction).
 
-    The subject table collapses to DISTINCT (key, time) rows first (one
-    map-side-combining aggregate), so all windows ride on time cardinality,
-    not subjects.  Per-key (``by=``) windows shard on the key.  The GLOBAL
-    path reuses the range-bucket + driver-prefix-offset machinery
-    (operators/distsort.py) for both running sums (at-risk counts and
-    Σ ln(1−d/n)), so no single-partition window runs at any scale.  Keep
-    ``time_col`` at a sensible granularity (day/week buckets) — the output
-    has one row per distinct time.
+    Scale shape: the subject table collapses to DISTINCT (key, time) rows
+    first (one map-side-combining aggregate), so all windows ride on time
+    cardinality, not subjects.  Per-key (``by=``) windows shard on the key.
+    The GLOBAL path takes the one bound rule of operators/distsort.py:
+    the time cells are cached and counted once, and at most 65,536 cells
+    (``_bounded.BOUND``) run the keyed windows with an empty key — one
+    task over the cells.  Above the bound both running sums (at-risk
+    counts and Σ ln(1−d/n)) ride range buckets + driver prefix offsets, so
+    no single-partition window runs at scale.  Keep ``time_col`` at a
+    sensible granularity (day/week buckets) — the output has one row per
+    distinct time.
 
     Output: [keys...,] t, n_risk, d (events), c (censored), survival —
     survival is the post-t value, rows only at times with ≥1 event or
     censoring.  S hits exact 0 when the last at-risk subject events."""
+    return LazyFrame(_km_curve(frame, time_col, event_col, by, round_to)[0])
+
+
+def _km_curve(
+    frame: "LazyFrame | SparkDF",
+    time_col: str,
+    event_col: str,
+    by: "str | list[str] | None",
+    round_to: int,
+) -> "tuple[SparkDF, bool]":
+    """survival_curve's body.  Returns ``(curve, windowed)``: ``windowed``
+    is True when the curve came from the keyed window form (per key, or
+    unkeyed below the bound), so a consumer can run its own window over
+    the curve under the same decision without counting again."""
     sdf = _sdf(frame)
     keys = [by] if isinstance(by, str) else list(by or [])
     t = F.col(time_col).cast("double")
@@ -1262,7 +1282,12 @@ def survival_curve(
     grp = base.groupBy(*keys, t.alias("t")).agg(
         F.sum(ev).alias("d"), F.sum(1 - ev).alias("c")
     )
-    if keys:
+    small = False
+    if not keys:
+        from .._bounded import bounded
+
+        grp, _n, small = bounded(grp, "survival_curve")
+    if keys or small:
         wtot = Window.partitionBy(*keys)
         wexcl = (
             Window.partitionBy(*keys)
@@ -1295,12 +1320,11 @@ def survival_curve(
                 F.when(cum_zf > 0, F.lit(0.0)).otherwise(F.exp(cum_lg)), round_to
             ).alias("survival"),
         )
-        return LazyFrame(out)
+        return out, True
     from .._cache import register_cache
     from .distsort import with_bucket_offsets, with_prefix_offsets
 
-    g = register_cache(grp)
-    d3, gb, tot = with_bucket_offsets(g, "t", {"dc": F.col("d") + F.col("c")})
+    d3, gb, tot = with_bucket_offsets(grp, "t", {"dc": F.col("d") + F.col("c")})
     n_total = float(tot["dc"])
     wexcl = (
         Window.partitionBy(gb).orderBy("t").rowsBetween(Window.unboundedPreceding, -1)
@@ -1335,7 +1359,7 @@ def survival_curve(
             F.when(cum_zf > 0, F.lit(0.0)).otherwise(F.exp(cum_lg)), round_to
         ).alias("survival"),
     )
-    return LazyFrame(out)
+    return out, False
 
 
 def time_weighted_average(

@@ -28,12 +28,25 @@ buckets empty/hot in proportion to the tie mass — the same exposure a keyed
 window has to a hot key, and tunable via ``nbuckets``.
 
 Beyond-reference scaffolding (the reference computes rank statistics on a
-single node); consumers: roc_auc / average_precision (llm/evaluation.py),
-mann_whitney_u / spearman_corr (operators/regression.py),
-with_rank_normalized (operators/analytics.py).
+single node), so it runs only where one node would not do.  **The one
+bound rule:** an operator whose global ordering runs over one cached
+frame (distinct cells, or median_ci's non-null values) counts that frame
+once through ``polars_net_spark._bounded.bounded`` and compares the count
+with one constant, ``_bounded.BOUND`` = 65,536 rows.  At or below it the
+ordering runs in a single window task or on the driver (no sketch,
+offsets or halo job); above it the machinery here runs unchanged.
+Operators behind the guard: survival_curve and rmst (unkeyed), median_ci,
+exact_quantiles, pettitt_test; each decision is recorded as
+``{operator, path, n, bound}`` (``_bounded.decisions()``).
+
+Consumers of the bucket machinery: roc_auc / average_precision
+(llm/evaluation.py), mann_whitney_u / spearman_corr
+(operators/regression.py), with_rank_normalized (operators/analytics.py).
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import Column, DataFrame as SparkDF, Window
 from pyspark.sql import functions as F
@@ -72,8 +85,7 @@ def with_range_buckets(
                 c, F.array(*[F.lit(q) for q in qs]), F.lit(int(accuracy))
             ).alias("b")
         ).first()
-        raw = row["b"] if row is not None else None
-        bounds = sorted({float(b) for b in (raw or []) if b is not None})
+        bounds = _distinct_bounds(row["b"] if row is not None else None)
     else:
         bounds = []
     if not bounds:
@@ -137,6 +149,19 @@ def _bucket_pred(c: Column, desc: bool):
     return (lambda b: b > c) if desc else (lambda b: b < c)
 
 
+def _distinct_bounds(raw) -> "list[float]":
+    """The sorted distinct non-null bounds, counted the way the live
+    ``array_distinct`` counts them: every NaN is one value, sorted last as
+    Spark orders it.  A plain Python set would keep each NaN object apart
+    and, since NaN > x holds in Spark, shift every desc literal id away
+    from the live id its offset was collected under."""
+    vals = [float(b) for b in (raw or []) if b is not None]
+    out = sorted({b for b in vals if not math.isnan(b)})
+    if any(math.isnan(b) for b in vals):
+        out.append(math.nan)
+    return out
+
+
 def _bucket_literal_expr(col_name: str, bounds: "list[float]", desc: bool) -> Column:
     c = F.col(col_name).cast("double")
     if not bounds:
@@ -198,9 +223,7 @@ def _fused_sketch_sums(
             .collect()
         )
         raw = rows[0]["__bnds__"] if rows else None
-        # sorted-set dedup, matching both the live array_distinct above and
-        # with_range_buckets' historical literal construction
-        bounds = sorted({float(b) for b in (raw or []) if b is not None})
+        bounds = _distinct_bounds(raw)
     else:
         rows = (
             sdf.groupBy(F.lit(0).alias(BUCKET_COL))
@@ -481,7 +504,7 @@ def exact_quantiles(
     col,
     probs: "list[float]",
     nbuckets: "int | None" = None,
-    driver_threshold: int = 65_536,
+    driver_threshold: "int | None" = None,
 ) -> "list[float | None]":
     """EXACT linear-interpolation quantiles of one numeric column as driver
     scalars, computed DISTRIBUTED — the scale-safe replacement for a global
@@ -502,13 +525,14 @@ def exact_quantiles(
     falls back to the single-reducer ``F.percentile`` (same result).
     Returns one float per prob, or Nones when the column has no rows.
 
-    When the distinct-value table holds at most ``driver_threshold`` rows
-    (the train_bpe bounded-artifact precedent) the order statistics
-    resolve DRIVER-SIDE from the collected (value, count) pairs — the
-    identical selection + interpolation arithmetic, two cheap jobs on the
-    cached table instead of the sketch/offsets/final chain (measured
-    ~+1.2 s of per-call job overhead on low-cardinality gate columns).
-    The distributed path is unchanged above the threshold, so the 100 TB
+    Scale shape: the module's one bound rule.  The distinct-value table
+    is cached and counted once; at most ``driver_threshold`` rows (default
+    ``_bounded.BOUND`` = 65,536) resolve the order statistics DRIVER-SIDE
+    from the collected (value, count) pairs — the identical selection +
+    interpolation arithmetic, two cheap jobs on the cached table instead
+    of the sketch/offsets/final chain (measured ~+1.2 s of per-call job
+    overhead on low-cardinality gate columns).
+    The distributed path is unchanged above the bound, so the 100 TB
     contract — no task ever buffers more than a bucket — still holds;
     note Spark's own ``F.percentile`` buffer is a per-distinct-value
     count map, so BOUNDED-cardinality columns were never the risk; the
@@ -517,12 +541,14 @@ def exact_quantiles(
     for p in probs:
         if not (0.0 <= p <= 1.0):
             raise ValueError("each prob must be in [0, 1]")
-    from .._cache import register_cache
+    from .._bounded import bounded
 
     c = F.col(col).cast("double") if isinstance(col, str) else col.cast("double")
     base = sdf.select(c.alias("__v__")).filter(F.col("__v__").isNotNull())
-    dv = register_cache(
-        base.groupBy("__v__").agg(F.count(F.lit(1)).alias("__cnt__"))
+    dv, ndv, small = bounded(
+        base.groupBy("__v__").agg(F.count(F.lit(1)).alias("__cnt__")),
+        "exact_quantiles",
+        driver_threshold,
     )
 
     def _fallback_nan() -> "list[float | None]":
@@ -532,12 +558,9 @@ def exact_quantiles(
         arr = row["b"] if row is not None else None
         return [None] * len(probs) if arr is None else [float(x) for x in arr]
 
-    import math
-
-    ndv = dv.count()
     if ndv == 0:
         return [None] * len(probs)
-    if ndv <= int(driver_threshold):
+    if small:
         pairs = sorted(
             (r["__v__"], int(r["__cnt__"])) for r in dv.collect()
         )
@@ -572,8 +595,6 @@ def exact_quantiles(
     n = int(totals["c"] or 0)
     if n == 0:
         return [None] * len(probs)
-    import math
-
     targets: list[int] = []
     fracs: list[tuple[int, int, float]] = []  # (lo_idx, hi_idx, frac)
     for p in probs:
@@ -628,8 +649,6 @@ def exact_quantiles_multi(
     for p in probs:
         if not (0.0 <= p <= 1.0):
             raise ValueError("each prob must be in [0, 1]")
-    import math
-
     from .._cache import register_cache
 
     names = list(cols)

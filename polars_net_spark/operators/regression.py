@@ -1339,26 +1339,39 @@ def ipf_weights(
         if not erows or n_total <= 0:
             # no calibratable cells: mirror the distributed path's empty
             # result (joins drop everything)
+            from pyspark.sql.types import (
+                DoubleType, LongType, StringType, StructField, StructType,
+            )
+
             out = spark.createDataFrame(
                 [],
-                f"{row_col} string, {col_col} string, n bigint, "
-                "weight double, mass double",
+                StructType([
+                    StructField(row_col, StringType()),
+                    StructField(col_col, StringType()),
+                    StructField("n", LongType()),
+                    StructField("weight", DoubleType()),
+                    StructField("mass", DoubleType()),
+                ]),
             )
             return LazyFrame(out)
         m = {(rr, cc): n / n_total for rr, cc, n, _, _ in erows}
         tr = {rr: t for rr, _, _, t, _ in erows}
         tc = {cc: t for _, cc, _, _, t in erows}
+
+        def _rake(axis: int, target: dict) -> None:
+            # Spark's semantics, so both paths agree: sum() skips nulls and
+            # is null over all-null cells; x / 0 and x / null are null
+            tot: dict = {}
+            for key, v in m.items():
+                if v is not None:
+                    tot[key[axis]] = tot.get(key[axis], 0.0) + v
+            for key, v in m.items():
+                d = tot.get(key[axis])
+                m[key] = None if v is None or not d else v * target[key[axis]] / d
+
         for _ in range(int(iterations)):
-            rs: dict = {}
-            for (rr, cc), v in m.items():
-                rs[rr] = rs.get(rr, 0.0) + v
-            for key in m:
-                m[key] = m[key] * tr[key[0]] / rs[key[0]]
-            cs: dict = {}
-            for (rr, cc), v in m.items():
-                cs[cc] = cs.get(cc, 0.0) + v
-            for key in m:
-                m[key] = m[key] * tc[key[1]] / cs[key[1]]
+            _rake(0, tr)
+            _rake(1, tc)
         staged = spark.createDataFrame(
             [
                 (rr, cc, n, m[(rr, cc)], n / n_total)
@@ -1902,60 +1915,62 @@ def median_ci(
     interval for skewed latency/quality metrics where a mean ± t·se is
     meaningless.
 
-    Scale shape: distsort range buckets + prefix offsets give every row
-    its global rank (= offset + within-bucket row_number) with no
-    single-partition window; n comes back as the prefix pass's grand
-    total (no separate count() action), and the MEDIAN is read off the
-    same rank column as order statistics m1=(n+1)//2, m2=n//2+1 —
-    bounds and median fuse into ONE final aggregate, no keyless join.
+    Scale shape: the non-null values are cached and counted once, which
+    gives n, and ranked under the one bound rule of operators/distsort.py:
+    at most 65,536 rows (``_bounded.BOUND``) take one global
+    ``row_number`` in a single task, with no sketch or offsets job; above
+    it distsort range buckets + prefix offsets give every row its global
+    rank (= offset + within-bucket row_number) with no single-partition
+    window.  The MEDIAN is read off the same rank column as order
+    statistics m1=(n+1)//2, m2=n//2+1 — bounds and median fuse into ONE
+    final aggregate, no keyless join.
     Output (1 row): n, median, ci_lo, ci_hi, z."""
     import math
 
+    from .._bounded import bounded
     from .distsort import with_prefix_offsets, with_range_buckets
 
     sdf = _sdf(frame)
     x = F.col(value_col).cast("double")
-    base = sdf.filter(x.isNotNull()).select(x.alias("__x__"))
-    base.persist()
-    try:
-        # measured EXCEPTION to the r13 fused bucket+offsets migration: on
-        # this raw-row (not cells-collapsed) 600k-value input the fused
-        # BNLJ shape reproducibly costs ~+1.0 s (matched same-session A/B,
-        # min-of-4: two-job 2.63 s vs fused 3.67 s) while 31 of 39 consumer
-        # gates get faster — this one consumer keeps the two-job chain
+    base, n, small = bounded(
+        sdf.filter(x.isNotNull()).select(x.alias("__x__")), "median_ci"
+    )
+    if n < 2:
+        raise ValueError("median_ci needs >= 2 non-null values")
+    zz = float(z)
+    lo_rank = max(1, int(math.floor((n - zz * math.sqrt(n)) / 2.0)))
+    hi_rank = min(n, int(math.ceil((n + zz * math.sqrt(n)) / 2.0)) + 1)
+    m1 = (n + 1) // 2
+    m2 = n // 2 + 1
+    if small:
+        ranked = base
+        rank = F.row_number().over(Window.orderBy("__x__"))
+    else:
+        # the two-job chain, not the fused with_bucket_offsets: on this
+        # raw-row (not cells-collapsed) input the fused BNLJ shape measured
+        # ~+1.0 s slower (same-session A/B, min-of-4: two-job 2.63 s vs
+        # fused 3.67 s at 600k values)
         bucketed, gb = with_range_buckets(base, "__x__")
-        offs, tot = with_prefix_offsets(bucketed, gb, {"c": F.lit(1)})
-        n = int(tot["c"])
-        if n < 2:
-            raise ValueError("median_ci needs >= 2 non-null values")
-        zz = float(z)
-        lo_rank = max(1, int(math.floor((n - zz * math.sqrt(n)) / 2.0)))
-        hi_rank = min(n, int(math.ceil((n + zz * math.sqrt(n)) / 2.0)) + 1)
-        m1 = (n + 1) // 2
-        m2 = n // 2 + 1
+        ranked, _tot = with_prefix_offsets(bucketed, gb, {"c": F.lit(1)})
         w = Window.partitionBy(gb).orderBy("__x__")
-        rank = (F.col("__off_c__") + F.row_number().over(w)).cast("long")
-        wanted = sorted({lo_rank, hi_rank, m1, m2})
-        picked = offs.select("__x__", rank.alias("__r__")).filter(
-            F.col("__r__").isin(wanted)
-        )
+        rank = F.col("__off_c__") + F.row_number().over(w)
+    wanted = sorted({lo_rank, hi_rank, m1, m2})
+    picked = ranked.select("__x__", rank.cast("long").alias("__r__")).filter(
+        F.col("__r__").isin(wanted)
+    )
 
-        def _at(r: int) -> Column:
-            return F.min(F.when(F.col("__r__") == r, F.col("__x__")))
+    def _at(r: int) -> Column:
+        return F.min(F.when(F.col("__r__") == r, F.col("__x__")))
 
-        out = picked.agg(
-            F.lit(int(n)).cast("long").alias("n"),
-            F.round((_at(m1) + _at(m2)) / 2.0, round_to).alias("median"),
-            F.round(_at(lo_rank), round_to).alias("ci_lo"),
-            F.round(_at(hi_rank), round_to).alias("ci_hi"),
-            F.lit(zz).alias("z"),
-        )
-        # materialise before unpersist so the cached base backs all passes
-        rows = out.collect()
-    finally:
-        base.unpersist()
-    spark = sdf.sparkSession
-    return LazyFrame(spark.createDataFrame(rows, out.schema))
+    # lazy over the registered cache: release_caches() frees it after use
+    out = picked.agg(
+        F.lit(int(n)).cast("long").alias("n"),
+        F.round((_at(m1) + _at(m2)) / 2.0, round_to).alias("median"),
+        F.round(_at(lo_rank), round_to).alias("ci_lo"),
+        F.round(_at(hi_rank), round_to).alias("ci_hi"),
+        F.lit(zz).alias("z"),
+    )
+    return LazyFrame(out)
 
 
 __all__.append("median_ci")
@@ -3016,7 +3031,7 @@ def pettitt_test(
     time_col: str,
     value_col: str,
     round_to: int = 6,
-    driver_threshold: int = 65_536,
+    driver_threshold: "int | None" = None,
 ) -> LazyFrame:
     """Pettitt changepoint test — the RANK-based (outlier-proof) "did the
     level shift, and when" locator that complements best_changepoint's
@@ -3027,25 +3042,30 @@ def pettitt_test(
 
     Rows tied on ``time_col`` collapse to their mean value first (a rank
     sequence needs distinct positions), mirroring best_changepoint's
-    determinism contract.  Scale shape: value ranks from ONE distsort
-    pass over distinct-value cells (average rank = strictly-below count
-    + (ties+1)/2) joined back on the value, then the U scan rides a
-    second distsort pass keyed on time — no data-sized window, no
-    self-join.  Output (1 row): split_at, u_stat, k_stat, n, p_value."""
+    determinism contract.  Scale shape: the time-collapsed series is
+    cached and counted once under the one bound rule of
+    operators/distsort.py.  At most ``driver_threshold`` distinct times
+    (default ``_bounded.BOUND`` = 65,536) are collected and scanned on
+    the driver.  Above it, value ranks come from ONE distsort pass over
+    distinct-value cells (average rank = strictly-below count +
+    (ties+1)/2) joined back on the value, then the U scan rides a second
+    distsort pass keyed on time — no data-sized window, no self-join.
+    Output (1 row): split_at, u_stat, k_stat, n, p_value."""
+    from .._bounded import bounded
     from .distsort import with_bucket_offsets
 
     sdf = _sdf(frame)
     t = F.col(time_col).cast("double")
     v = F.col(value_col).cast("double")
-    series = (
+    series, n_series, small = bounded(
         sdf.filter(t.isNotNull() & v.isNotNull())
         .groupBy(t.alias("__t__"))
-        .agg(F.avg(v).alias("__v__"))
+        .agg(F.avg(v).alias("__v__")),
+        "pettitt_test",
+        driver_threshold,
     )
-    series = series.persist()
     try:
-        # DRIVER PATH (r13, the exact_quantiles driver_threshold / ipf
-        # convention): the U scan runs over DISTINCT TIMES, so after the one
+        # DRIVER PATH: the U scan runs over DISTINCT TIMES, so after the one
         # data-sized time-collapse the series is a bounded artifact for any
         # realistic calendar granularity.  Collect it once and run the rank
         # + U arithmetic in Python: every quantity is exactly representable
@@ -3054,42 +3074,46 @@ def pettitt_test(
         # struct-min ordering), so the result is bit-identical to the
         # distributed path, in 2 cache-backed jobs instead of the
         # cells/fused-offsets/rank-join/struct-min chain.  Above the
-        # threshold the distributed path stands — the 100 TB contract.
-        n_series = series.count()
-        if n_series <= int(driver_threshold):
+        # bound the distributed path stands — the 100 TB contract.
+        if small:
             if n_series < 3:
                 raise ValueError("pettitt_test needs at least 3 distinct times")
+            import math
+            from collections import Counter
+
+            def _order(x: float) -> tuple:
+                # Spark's double ordering: every NaN equal, after +inf
+                return (1, 0.0) if math.isnan(x) else (0, x)
+
             pts = sorted(
-                (float(r["__t__"]), float(r["__v__"])) for r in series.collect()
+                ((float(r["__t__"]), float(r["__v__"])) for r in series.collect()),
+                key=lambda p: _order(p[0]),
             )
             n = n_series
             # midranks of the values: strictly-below count + (ties+1)/2
-            from collections import Counter
-
-            cnt = Counter(v2 for _, v2 in pts)
+            cnt = Counter(_order(v2) for _, v2 in pts)
             below = {}
             run = 0
-            for v2 in sorted(cnt):
-                below[v2] = run
-                run += cnt[v2]
-            best_key = None
+            for k in sorted(cnt):
+                below[k] = run
+                run += cnt[k]
+            best_key = best_t = None
             cr = 0.0
             for idx, (t2, v2) in enumerate(pts, start=1):
-                cr += below[v2] + (cnt[v2] + 1.0) / 2.0
+                cr += below[_order(v2)] + (cnt[_order(v2)] + 1.0) / 2.0
                 if idx > n - 1:
                     break
                 u = 2.0 * cr - idx * float(n + 1)
-                key = (-abs(u), t2, u)
+                key = (-abs(u), _order(t2), u)
                 if best_key is None or key < best_key:
-                    best_key = key
-            import math
+                    best_key, best_t = key, t2
 
             k_stat = abs(best_key[2])
             p = min(1.0, 2.0 * math.exp(-6.0 * k_stat * k_stat / (n ** 3 + n ** 2)))
             spark = sdf.sparkSession
             out = spark.createDataFrame(
                 [(
-                    round(best_key[1], round_to), round(best_key[2], round_to),
+                    round(best_t, round_to), round(best_key[2], round_to),
                     round(k_stat, round_to), n, round(p, round_to),
                 )],
                 "split_at double, u_stat double, k_stat double, n bigint, "

@@ -129,6 +129,36 @@ class TestIpf:
         with pytest.raises(ValueError):
             ipf_weights(df, "r", "c", {}, {"x": 1})
 
+    def test_zero_marginal_gives_null_on_both_paths(self, spark):
+        """A zero column target empties row a's only column; the next row
+        rake divides by a zero marginal.  Both paths give null there (the
+        driver path used to raise ZeroDivisionError)."""
+        from polars_net_spark.operators.regression import ipf_weights
+
+        df = spark.createDataFrame(
+            [("a", "x")] * 3 + [("b", "x")] * 2 + [("b", "y")] * 5,
+            "r string, c string",
+        )
+        rt, ct = {"a": 0.5, "b": 0.5}, {"x": 0.0, "y": 1.0}
+        drv = sorted(rows(ipf_weights(df, "r", "c", rt, ct, iterations=3)))
+        # zero-share padding keys push the grid past the driver-path bound
+        # without changing the normalized targets
+        rt_pad = {**rt, **{f"pr{i}": 0.0 for i in range(70)}}
+        ct_pad = {**ct, **{f"pc{i}": 0.0 for i in range(70)}}
+        dist = sorted(rows(ipf_weights(df, "r", "c", rt_pad, ct_pad, iterations=3)))
+        assert drv == dist
+        by_cell = {(r[0], r[1]): r for r in drv}
+        assert by_cell[("a", "x")][3] is None and by_cell[("a", "x")][4] is None
+        assert by_cell[("b", "y")][4] == pytest.approx(1.0)
+
+    def test_empty_result_schema_with_names_needing_backticks(self, spark):
+        from polars_net_spark.operators.regression import ipf_weights
+
+        df = spark.createDataFrame([("zzz", "x")], "`row key` string, `col-key` string")
+        out = ipf_weights(df, "row key", "col-key", {"a": 1}, {"x": 1})
+        assert out.spark.columns == ["row key", "col-key", "n", "weight", "mass"]
+        assert rows(out) == []
+
 
 class TestKendall:
     def test_matches_scipy_example(self, spark):

@@ -137,3 +137,27 @@ def test_fused_bucket_ids_contiguous_under_heavy_ties(spark):
     out, gb, _tot = with_bucket_offsets(sdf, "v", {"c": F.lit(1)}, nbuckets=32)
     ids = sorted(r[gb] for r in out.select(gb).distinct().collect())
     assert ids == list(range(len(ids)))
+
+
+def test_fused_desc_offsets_with_nan_scores(spark):
+    """NaN scores put several NaN bounds in the sketch.  The live bucket id
+    counts them once (array_distinct), so the literal ids must as well:
+    with a NaN kept per sketch slot, every desc id (NaN > x in Spark) was
+    shifted and the offsets were read against the wrong buckets — the
+    gains_chart / average_precision / qini / abc / bh_adjust shape."""
+    nan = float("nan")
+    vals = [float(i % 17) for i in range(60)] + [nan] * 60
+    sdf = spark.createDataFrame([(v,) for v in vals], "s double")
+    out, gb, tot = with_bucket_offsets(
+        sdf, "s", {"c": F.lit(1)}, desc=True, nbuckets=8
+    )
+    assert tot["c"] == len(vals)
+    w = Window.partitionBy(gb).orderBy(F.col("s").desc())
+    ranks = sorted(
+        r["r"]
+        for r in out.select(
+            (F.col("__off_c__") + F.row_number().over(w)).cast("long").alias("r")
+        ).collect()
+    )
+    # a global desc rank: each position exactly once
+    assert ranks == list(range(1, len(vals) + 1))

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame as SparkDF
 
 from ._cache import register_cache
 
-__all__ = ["BOUND", "Guarded", "bounded", "decisions", "clear_decisions"]
+__all__ = ["BOUND", "Guarded", "bounded", "record", "decisions", "clear_decisions"]
 
 # rows one task may sort or the driver may collect: the same 65,536 that
 # bounds the train_bpe artifact
@@ -48,9 +48,18 @@ def bounded(sdf: SparkDF, operator: str, bound: "int | None" = None) -> Guarded:
 
     ``bound`` defaults to the module's ``BOUND`` read at call time, so a
     test can force either side by setting ``_bounded.BOUND``."""
-    limit = BOUND if bound is None else int(bound)
     cached = register_cache(sdf)
     n = cached.count()
+    return Guarded(cached, n, record(operator, n, bound))
+
+
+def record(operator: str, n: int, bound: "int | None" = None) -> bool:
+    """Compare an already-known size ``n`` with the bound (``BOUND`` read
+    at call time when ``bound`` is None), record the decision for
+    ``operator`` and return whether ``n`` takes the bounded path.  For
+    sites that count several inputs in one job, such as
+    ``exact_quantiles_multi``'s per-column distinct counts."""
+    limit = BOUND if bound is None else int(bound)
     small = n <= limit
     _DECISIONS.append(
         {
@@ -60,7 +69,7 @@ def bounded(sdf: SparkDF, operator: str, bound: "int | None" = None) -> Guarded:
             "bound": limit,
         }
     )
-    return Guarded(cached, n, small)
+    return small
 
 
 def decisions() -> "list[dict]":

@@ -11,6 +11,8 @@ handled.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame as SparkDF, Window
 from pyspark.sql import functions as F
 
@@ -1404,18 +1406,22 @@ def containment_pairs(
     g = F.size("grams")
     exploded = grams.select("id", g.alias("g"), F.explode("grams").alias("gram"))
 
-    def _df_attach(tbl):
+    @functools.cache
+    def _broadcast_df() -> bool:
         # the gram-df table is bounded by distinct grams <= total gram
         # occurrences; when that bound (read off the cached gram table, one
-        # cache-read aggregate) fits comfortably in a broadcast relation,
-        # broadcasting it removes the gram-keyed exchange of the full
-        # postings stream (the cell_ranks broadcast_threshold convention —
-        # measured 2.33 s -> 1.38 s on the candidate pass at sf0.1).  Above
-        # the bound the plain shuffle join stands: at corpus scale the
-        # gram-df table is corpus-sized and must never be broadcast.
+        # cache-read aggregate, run at most once per call) fits comfortably
+        # in a broadcast relation, broadcasting it removes the gram-keyed
+        # exchange of the full postings stream (the cell_ranks
+        # broadcast_threshold convention — measured 2.33 s -> 1.38 s on the
+        # candidate pass at sf0.1).  Above the bound the plain shuffle join
+        # stands: at corpus scale the gram-df table is corpus-sized and
+        # must never be broadcast.
         occ_row = grams.agg(F.sum(F.size("grams")).alias("o")).first()
-        occ = int(occ_row["o"] or 0)
-        return F.broadcast(tbl) if occ <= 2_000_000 else tbl
+        return int(occ_row["o"] or 0) <= 2_000_000
+
+    def _df_attach(tbl):
+        return F.broadcast(tbl) if _broadcast_df() else tbl
 
     rhs_post = exploded
     if max_gram_df is not None:

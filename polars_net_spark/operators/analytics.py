@@ -1895,7 +1895,7 @@ def pareto_front(
     many distinct x.  A frontier x-group survives iff its max-y strictly
     exceeds every larger-x max-y; surviving rows are the group's max-y
     rows, recovered with one semi-join back to the input.  Nulls drop."""
-    from .distsort import with_range_buckets
+    from .distsort import with_prefix_folds, with_range_buckets
 
     sdf = _sdf(frame)
     x = F.col(x_col).cast("double")
@@ -1908,22 +1908,9 @@ def pareto_front(
     )
     bucketed, bcol = with_range_buckets(gx, "__x__", desc=True)
     # driver prefix-MAX per bucket: max __ym__ over all STRICTLY EARLIER
-    # (larger-x) buckets — ≤ nbuckets rows to the driver, back as a map
-    # literal (the with_prefix_offsets pattern with max instead of sum)
-    rows = bucketed.groupBy(bcol).agg(F.max("__ym__").alias("m")).collect()
-    rows.sort(key=lambda r: r[bcol])
-    prefix: dict[int, float] = {}
-    running = float("-inf")
-    for r in rows:
-        prefix[r[bcol]] = running
-        running = max(running, float(r["m"]))
-    if prefix:
-        m = F.create_map(
-            *[lit for k, v in prefix.items() for lit in (F.lit(int(k)), F.lit(float(v)))]
-        )
-        off = F.coalesce(F.element_at(m, F.col(bcol)), F.lit(float("-inf")))
-    else:
-        off = F.lit(float("-inf"))
+    # (larger-x) buckets — ≤ nbuckets rows to the driver
+    bucketed, _mx = with_prefix_folds(bucketed, bcol, {"ym": F.col("__ym__")}, "max")
+    off = F.col("__off_ym__")
     wb = Window.partitionBy(bcol).orderBy(F.col("__x__").desc())
     in_bucket_prev = F.max("__ym__").over(
         wb.rowsBetween(Window.unboundedPreceding, -1)

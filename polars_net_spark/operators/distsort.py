@@ -4,24 +4,32 @@ exclusive prefix totals.
 The anti-pattern this replaces is ``Window.partitionBy()`` — an empty
 partition spec moves EVERY row to one task for the global sort (an OOM at
 corpus scale).  The distributed equivalent of "global rank / global running
-total" used here:
+total" used here has one shape, two driver actions per call:
 
-1. **Bucket boundaries** from ONE ``percentile_approx`` aggregate (a
-   Greenwald–Khanna sketch — constant executor memory, one small driver
-   row).  Unlike ``repartitionByRange`` (whose sampled boundaries differ
-   between re-executions of the same plan), the collected boundaries become
-   *plan literals*, so bucket assignment is a pure deterministic function of
-   the value — consistent across the totals pass and the main pass.
-2. **Bucket id** = number of boundary literals strictly below (asc) /
-   above (desc) the value.  Ties share a bucket by construction (the id is a
-   function of the value alone), so tie-averaged ranks never split across
-   buckets.
-3. **Per-bucket totals** from one map-side-combining aggregate, collected
-   (≤ nbuckets rows) and prefix-summed on the driver; the exclusive prefix
-   comes back as a ``create_map`` plan literal.
-4. Global cumulant = prefix-of-earlier-buckets + an ordinary
+1. **Bucket boundaries** (``with_range_buckets``, action 1) from ONE
+   ``percentile_approx`` aggregate (a Greenwald–Khanna sketch — constant
+   executor memory, one small driver row).  Unlike ``repartitionByRange``
+   (whose sampled boundaries differ between re-executions of the same
+   plan), the collected boundaries become *plan literals*, so bucket
+   assignment is a pure deterministic function of the value — consistent
+   across the totals pass and the main pass.  **Bucket id** = number of
+   distinct boundary literals strictly below (asc) / above (desc) the
+   value.  Ties share a bucket by construction, so tie-averaged ranks never
+   split across buckets, and the ids are contiguous along the value axis
+   (every boundary is a data value, so no id between two occupied ids is
+   empty).
+2. **Per-bucket totals** (``with_prefix_folds``, action 2) from one
+   map-side-combining aggregate, collected (≤ nbuckets rows) and folded on
+   the driver into an exclusive prefix that comes back as a ``create_map``
+   plan literal.  This is the one offset builder: ``with_prefix_offsets``
+   is its running-sum form, and the prefix-min / prefix-max sweeps
+   (bh_adjust, holm_adjust, pareto_front) call it with their fold.
+3. Global cumulant = prefix-of-earlier-buckets + an ordinary
    ``Window.partitionBy(bucket).orderBy(value)`` within-bucket cumulant —
    every window task holds ~1/nbuckets of the data.
+
+``with_bucket_offsets`` is steps 1 and 2 in sequence; ``with_halo_buckets``
+is step 1 plus one per-bucket count aggregate.
 
 Skewed boundaries (a value spanning whole quantile steps) merely leave some
 buckets empty/hot in proportion to the tie mass — the same exposure a keyed
@@ -36,22 +44,27 @@ with one constant, ``_bounded.BOUND`` = 65,536 rows.  At or below it the
 ordering runs in a single window task or on the driver (no sketch,
 offsets or halo job); above it the machinery here runs unchanged.
 Operators behind the guard: survival_curve and rmst (unkeyed), median_ci,
-exact_quantiles, pettitt_test; each decision is recorded as
-``{operator, path, n, bound}`` (``_bounded.decisions()``).
-
-Consumers of the bucket machinery: roc_auc / average_precision
-(llm/evaluation.py), mann_whitney_u / spearman_corr
-(operators/regression.py), with_rank_normalized (operators/analytics.py).
+exact_quantiles, exact_quantiles_multi (per column), pettitt_test; each
+decision is recorded as ``{operator, path, n, bound}``
+(``_bounded.decisions()``).
 """
 
 from __future__ import annotations
 
+import bisect
+import itertools
 import math
 
 from pyspark.sql import Column, DataFrame as SparkDF, Window
 from pyspark.sql import functions as F
 
-__all__ = ["with_range_buckets", "with_prefix_offsets", "BUCKET_COL"]
+__all__ = [
+    "with_range_buckets",
+    "with_prefix_folds",
+    "with_prefix_offsets",
+    "with_bucket_offsets",
+    "BUCKET_COL",
+]
 
 BUCKET_COL = "__gb__"
 
@@ -61,6 +74,18 @@ def _default_nbuckets(sdf: SparkDF) -> int:
         return max(int(sdf.sparkSession.conf.get("spark.sql.shuffle.partitions")), 8)
     except Exception:  # noqa: BLE001 — e.g. "auto" under AQE-only configs
         return 32
+
+
+def _distinct_bounds(raw) -> "list[float]":
+    """The sorted distinct non-null sketch bounds.  Every NaN counts as one
+    value, sorted last as Spark orders it: a plain Python set would keep
+    each NaN object apart and, since NaN > x holds in Spark, shift every
+    desc bucket id by the number of NaN sketch slots."""
+    vals = [float(b) for b in (raw or []) if b is not None]
+    out = sorted({b for b in vals if not math.isnan(b)})
+    if any(math.isnan(b) for b in vals):
+        out.append(math.nan)
+    return out
 
 
 def with_range_buckets(
@@ -99,34 +124,44 @@ def with_range_buckets(
     return sdf.withColumn(BUCKET_COL, bucket), BUCKET_COL
 
 
-def with_prefix_offsets(
+# fold name -> (per-bucket aggregate, identity, driver-side combine)
+_FOLDS = {
+    "sum": (F.sum, 0, lambda acc, x: acc + (x or 0)),
+    "min": (F.min, math.inf, lambda acc, x: min(acc, float(x))),
+    "max": (F.max, -math.inf, lambda acc, x: max(acc, float(x))),
+}
+
+
+def with_prefix_folds(
     sdf: SparkDF,
     bucket_col: str,
-    sums: "dict[str, Column]",
+    cols: "dict[str, Column]",
+    fold: str,
     offset_prefix: str = "__off_",
 ) -> tuple[SparkDF, "dict[str, float]"]:
-    """For each named expression, attach ``__off_<name>__`` = its total over
-    all STRICTLY EARLIER buckets, so a global running total is
-    ``__off_x__ + <within-bucket cumulative>``.  One map-side-combining
-    aggregate, ≤ nbuckets rows to the driver, offsets return as a
-    ``create_map`` literal.  Also returns the grand totals (exact — sums of
-    the per-bucket longs/doubles)."""
-    names = list(sums)
+    """The one exclusive-prefix builder.  For each named expression, attach
+    ``<offset_prefix><name>__`` = its ``fold`` (``"sum"``, ``"min"`` or
+    ``"max"``) over all STRICTLY EARLIER buckets; the first bucket gets
+    the fold's identity (0, +inf, -inf).  One map-side-combining aggregate, ≤ nbuckets
+    rows to the driver, offsets return as a ``create_map`` literal.  Also
+    returns the fold over all buckets (for sums: the exact grand totals)."""
+    agg, identity, combine = _FOLDS[fold]
+    names = list(cols)
     rows = (
         sdf.groupBy(bucket_col)
-        .agg(*[F.sum(sums[n]).alias(n) for n in names])
+        .agg(*[agg(cols[n]).alias(n) for n in names])
         .collect()
     )
     rows.sort(key=lambda r: r[bucket_col])
     offsets: dict[str, dict[int, float]] = {n: {} for n in names}
-    totals: dict[str, float] = {n: 0 for n in names}
+    totals: dict[str, float] = {n: identity for n in names}
     for r in rows:
         for n in names:
             offsets[n][r[bucket_col]] = totals[n]
-            totals[n] += r[n] or 0
+            totals[n] = combine(totals[n], r[n])
     out = sdf
     for n in names:
-        col_name = f"{offset_prefix}{n}__"
+        off = F.lit(float(identity))
         if offsets[n]:
             m = F.create_map(
                 *[
@@ -135,104 +170,22 @@ def with_prefix_offsets(
                     for lit in (F.lit(int(k)), F.lit(float(v)))
                 ]
             )
-            off = F.coalesce(F.element_at(m, F.col(bucket_col)), F.lit(0.0))
-        else:
-            off = F.lit(0.0)
-        out = out.withColumn(col_name, off)
+            off = F.coalesce(F.element_at(m, F.col(bucket_col)), off)
+        out = out.withColumn(f"{offset_prefix}{n}__", off)
     return out, totals
 
 
-def _bucket_pred(c: Column, desc: bool):
-    # strictly-below/above, as in with_range_buckets; a null boundary
-    # element fails the predicate and drops out of the filtered array,
-    # matching the literal path which skips None bounds
-    return (lambda b: b > c) if desc else (lambda b: b < c)
-
-
-def _distinct_bounds(raw) -> "list[float]":
-    """The sorted distinct non-null bounds, counted the way the live
-    ``array_distinct`` counts them: every NaN is one value, sorted last as
-    Spark orders it.  A plain Python set would keep each NaN object apart
-    and, since NaN > x holds in Spark, shift every desc literal id away
-    from the live id its offset was collected under."""
-    vals = [float(b) for b in (raw or []) if b is not None]
-    out = sorted({b for b in vals if not math.isnan(b)})
-    if any(math.isnan(b) for b in vals):
-        out.append(math.nan)
-    return out
-
-
-def _bucket_literal_expr(col_name: str, bounds: "list[float]", desc: bool) -> Column:
-    c = F.col(col_name).cast("double")
-    if not bounds:
-        return F.lit(0)
-    arr = F.array(*[F.lit(b) for b in bounds])
-    return F.size(F.filter(arr, _bucket_pred(c, desc)))
-
-
-def _fused_sketch_sums(
+def with_prefix_offsets(
     sdf: SparkDF,
-    col_name: str,
+    bucket_col: str,
     sums: "dict[str, Column]",
-    desc: bool,
-    nbuckets: "int | None",
-    accuracy: int,
-) -> "tuple[list[float], list]":
-    """ONE driver job computing the boundary sketch AND the per-bucket sums:
-    the ``percentile_approx`` aggregate rides a broadcast single-row cross
-    join, the live bucket id derives from that array column, and the
-    boundary array comes back WITH the collected per-bucket rows (``first``
-    per group — every group shares the one broadcast row).  Returns
-    ``(bounds, rows sorted by bucket id)``; bounds are the DEDUPED sorted
-    boundary set, and the live bucket id counts the array_distinct'ed
-    array, so a literal re-derivation counts exactly the same distinct
-    boundary set the live expression counted AND ids stay contiguous along
-    the value axis (required by ±1-neighbor consumers like
-    with_halo_buckets)."""
-    if nbuckets is None:
-        nbuckets = _default_nbuckets(sdf)
-    names = list(sums)
-    c = F.col(col_name).cast("double")
-    if nbuckets > 1:
-        qs = [i / nbuckets for i in range(1, nbuckets)]
-        bnd = sdf.agg(
-            F.percentile_approx(
-                c, F.array(*[F.lit(q) for q in qs]), F.lit(int(accuracy))
-            ).alias("__bnds__")
-        )
-        # DEDUP the boundary multiset in-plan: bucket id must equal the
-        # count of DISTINCT bounds beyond the value, exactly as
-        # with_range_buckets' literal path computes it — duplicated sketch
-        # bounds would leave GAPS in the id sequence, which breaks any
-        # consumer doing ±1 arithmetic on bucket ids (with_halo_buckets'
-        # neighbor assignment silently lost its halo rows on small/tied
-        # inputs until this matched)
-        bucket_live = F.when(F.col("__bnds__").isNull(), F.lit(0)).otherwise(
-            F.size(F.filter(F.array_distinct(F.col("__bnds__")), _bucket_pred(c, desc)))
-        )
-        # the boundary ARRAY rides as a second GROUP KEY (identical for all
-        # rows — same broadcast row), NOT as a first() aggregate: an
-        # array-typed aggregate buffer forces SortAggregate + a full sort
-        # of the data-sized stream, while array group keys keep the
-        # codegen'd HashAggregate (measured: the first() form regressed
-        # q302/q250-class raw-row consumers ~0.3-0.5 s)
-        rows = (
-            sdf.crossJoin(F.broadcast(bnd))
-            .groupBy(bucket_live.alias(BUCKET_COL), F.col("__bnds__"))
-            .agg(*[F.sum(sums[n]).alias(n) for n in names])
-            .collect()
-        )
-        raw = rows[0]["__bnds__"] if rows else None
-        bounds = _distinct_bounds(raw)
-    else:
-        rows = (
-            sdf.groupBy(F.lit(0).alias(BUCKET_COL))
-            .agg(*[F.sum(sums[n]).alias(n) for n in names])
-            .collect()
-        )
-        bounds = []
-    rows.sort(key=lambda r: r[BUCKET_COL])
-    return bounds, rows
+    offset_prefix: str = "__off_",
+) -> tuple[SparkDF, "dict[str, float]"]:
+    """For each named expression, attach ``__off_<name>__`` = its total over
+    all STRICTLY EARLIER buckets, so a global running total is
+    ``__off_x__ + <within-bucket cumulative>``.  Also returns the grand
+    totals (exact — sums of the per-bucket longs/doubles)."""
+    return with_prefix_folds(sdf, bucket_col, sums, "sum", offset_prefix)
 
 
 def with_bucket_offsets(
@@ -244,47 +197,12 @@ def with_bucket_offsets(
     accuracy: int = 10_000,
     offset_prefix: str = "__off_",
 ) -> tuple[SparkDF, str, "dict[str, float]"]:
-    """Fused ``with_range_buckets`` + ``with_prefix_offsets``: ONE driver job
-    instead of two.  The boundary sketch and the per-bucket totals are
-    computed together — the ``percentile_approx`` aggregate is attached to
-    the rows as a broadcast single-row cross join, the bucket id is derived
-    from that array column, and the per-bucket sums are collected WITH the
-    boundary array riding along (``first`` per group, all groups share the
-    one broadcast row).  The collected boundaries then become plan literals
-    for the returned DataFrame, exactly as the two-job shape produced:
-    bucket choice is result-invariant, and here the literal ids reproduce
-    the fused job's ids by construction (same raw array, same strict
-    comparison), so the offsets/totals and the final pass agree on every
-    bucket.  Returns ``(sdf + BUCKET_COL + __off_<name>__ columns,
-    BUCKET_COL, grand totals)`` — the same contract as calling the two
-    helpers in sequence."""
-    bounds, rows = _fused_sketch_sums(sdf, col_name, sums, desc, nbuckets, accuracy)
-    names = list(sums)
-    out = sdf.withColumn(BUCKET_COL, _bucket_literal_expr(col_name, bounds, desc))
-    offsets: dict[str, dict[int, float]] = {n: {} for n in names}
-    totals: dict[str, float] = {n: 0 for n in names}
-    for r in rows:
-        for n in names:
-            offsets[n][r[BUCKET_COL]] = totals[n]
-            totals[n] += r[n] or 0
-    for n in names:
-        col_out = f"{offset_prefix}{n}__"
-        if offsets[n]:
-            m = F.create_map(
-                *[
-                    lit
-                    for k, v in offsets[n].items()
-                    for lit in (F.lit(int(k)), F.lit(float(v)))
-                ]
-            )
-            off = F.coalesce(F.element_at(m, F.col(BUCKET_COL)), F.lit(0.0))
-        else:
-            off = F.lit(0.0)
-        out = out.withColumn(col_out, off)
-    return out, BUCKET_COL, totals
-
-
-__all__.append("with_bucket_offsets")
+    """``with_range_buckets`` then ``with_prefix_offsets``: two driver
+    actions (the boundary sketch, the per-bucket sums).  Returns ``(sdf +
+    BUCKET_COL + __off_<name>__ columns, BUCKET_COL, grand totals)``."""
+    bucketed, bcol = with_range_buckets(sdf, col_name, desc, nbuckets, accuracy)
+    out, totals = with_prefix_offsets(bucketed, bcol, sums, offset_prefix)
+    return out, bcol, totals
 
 
 HALO_COL = "__halo__"
@@ -326,17 +244,13 @@ def with_halo_buckets(
     explode fan-out of ≤ (before+after) rows per bucket — no
     single-partition stage at any scale."""
     before, after = int(before), int(after)
+    bucketed, bcol = with_range_buckets(sdf, order_col, nbuckets=nbuckets)
     if before <= 0 and after <= 0:
-        bucketed, bcol = with_range_buckets(sdf, order_col, nbuckets=nbuckets)
         return bucketed.withColumn(HALO_COL, F.lit(False)), bcol, HALO_COL
-    # FUSED (r13): the boundary sketch and the per-bucket counts come from
-    # ONE driver job (the with_bucket_offsets machinery) instead of the
-    # sketch action + counts.collect() pair
-    bounds, counts = _fused_sketch_sums(
-        sdf, order_col, {"count": F.lit(1)}, False, nbuckets, 10_000
+    counts = sorted(
+        bucketed.groupBy(bcol).agg(F.count(F.lit(1)).alias("count")).collect(),
+        key=lambda r: r[bcol],
     )
-    bcol = BUCKET_COL
-    bucketed = sdf.withColumn(bcol, _bucket_literal_expr(order_col, bounds, False))
     # coalesce thin buckets: every surviving bucket must hold >= need rows
     # so its halo alone can complete the neighbor's window
     need = max(before, after)
@@ -499,6 +413,80 @@ def cell_ranks(
 __all__.append("cell_ranks")
 
 
+def _interpolate(n: int, probs: "list[float]", at) -> "list[float | None]":
+    """Spark's Percentile interpolation over ``n`` ordered values, ``at(k)``
+    giving the 0-based order statistic k: pos = (n-1)·p, result = lower +
+    (higher-lower)·(pos-floor(pos))."""
+    out: "list[float | None]" = []
+    for p in probs:
+        pos = (n - 1) * float(p)
+        lo_v, hi_v = at(int(math.floor(pos))), at(int(math.ceil(pos)))
+        out.append(lo_v + (hi_v - lo_v) * (pos - math.floor(pos)))
+    return out
+
+
+def _percentile_fallback(sdf: SparkDF, c: Column, probs) -> "list[float | None]":
+    """The single-reducer ``F.percentile`` over the double column ``c``:
+    NaN values need Spark's NaN-sorts-last order, which the resolvers do
+    not model."""
+    row = sdf.agg(
+        F.percentile(c, F.array(*[F.lit(float(p)) for p in probs])).alias("b")
+    ).first()
+    arr = row["b"] if row is not None else None
+    return [None] * len(probs) if arr is None else [float(x) for x in arr]
+
+
+def _order_statistics(
+    sdf: SparkDF, c: Column, dv: SparkDF, small: bool, probs, nbuckets
+) -> "list[float | None]":
+    """Quantiles of ``c`` from its non-empty (``__v__``, ``__cnt__``)
+    distinct-value table ``dv``: resolved on the driver from the collected
+    pairs when ``small``, else distributed — range buckets + prefix
+    offsets give each distinct value its 0-based order-statistic span
+    [start, start+cnt-1] and every requested statistic resolves in ONE
+    fused conditional reduce."""
+    if small:
+        pairs = sorted((r["__v__"], int(r["__cnt__"])) for r in dv.collect())
+        if any(math.isnan(v) for v, _ in pairs):
+            return _percentile_fallback(sdf, c, probs)
+        cum = list(itertools.accumulate(cnt for _, cnt in pairs))
+        return _interpolate(
+            cum[-1], probs, lambda k: float(pairs[bisect.bisect_right(cum, k)][0])
+        )
+    if dv.filter(F.isnan("__v__")).limit(1).count():
+        return _percentile_fallback(sdf, c, probs)
+    offs, bcol, totals = with_bucket_offsets(
+        dv, "__v__", {"c": F.col("__cnt__")}, nbuckets=nbuckets
+    )
+    n = int(totals["c"])
+    targets = set()
+    for p in probs:
+        pos = (n - 1) * float(p)
+        targets.update((int(math.floor(pos)), int(math.ceil(pos))))
+    w = Window.partitionBy(bcol).orderBy("__v__").rowsBetween(
+        Window.unboundedPreceding, -1
+    )
+    start = F.col("__off_c__") + F.coalesce(F.sum("__cnt__").over(w), F.lit(0.0))
+    staged = offs.select(
+        "__v__", start.alias("__s__"), (start + F.col("__cnt__")).alias("__e__")
+    )
+    row = staged.agg(
+        *[
+            F.min(
+                F.when((F.col("__s__") <= i) & (F.lit(i) < F.col("__e__")), F.col("__v__"))
+            ).alias(f"t{i}")
+            for i in sorted(targets)
+        ]
+    ).first()
+    return _interpolate(n, probs, lambda k: float(row[f"t{k}"]))
+
+
+def _check_probs(probs) -> None:
+    for p in probs:
+        if not (0.0 <= p <= 1.0):
+            raise ValueError("each prob must be in [0, 1]")
+
+
 def exact_quantiles(
     sdf: SparkDF,
     col,
@@ -538,9 +526,7 @@ def exact_quantiles(
     count map, so BOUNDED-cardinality columns were never the risk; the
     continuous (all-distinct) columns that are stay on distsort.
     """
-    for p in probs:
-        if not (0.0 <= p <= 1.0):
-            raise ValueError("each prob must be in [0, 1]")
+    _check_probs(probs)
     from .._bounded import bounded
 
     c = F.col(col).cast("double") if isinstance(col, str) else col.cast("double")
@@ -550,80 +536,9 @@ def exact_quantiles(
         "exact_quantiles",
         driver_threshold,
     )
-
-    def _fallback_nan() -> "list[float | None]":
-        row = sdf.agg(
-            F.percentile(c, F.array(*[F.lit(float(p)) for p in probs])).alias("b")
-        ).first()
-        arr = row["b"] if row is not None else None
-        return [None] * len(probs) if arr is None else [float(x) for x in arr]
-
     if ndv == 0:
         return [None] * len(probs)
-    if small:
-        pairs = sorted(
-            (r["__v__"], int(r["__cnt__"])) for r in dv.collect()
-        )
-        if any(math.isnan(v) for v, _ in pairs):
-            return _fallback_nan()
-        n = sum(cnt for _, cnt in pairs)
-        # order statistic k (0-based) via the cumulative counts
-        cum: list[int] = []
-        t = 0
-        for _, cnt in pairs:
-            t += cnt
-            cum.append(t)
-
-        def _at(k: int) -> float:
-            import bisect
-
-            return float(pairs[bisect.bisect_right(cum, k)][0])
-
-        out: "list[float | None]" = []
-        for p in probs:
-            pos = (n - 1) * float(p)
-            lo_i, hi_i = int(math.floor(pos)), int(math.ceil(pos))
-            lo_v, hi_v = _at(lo_i), _at(hi_i)
-            out.append(lo_v + (hi_v - lo_v) * (pos - math.floor(pos)))
-        return out
-    has_nan = dv.filter(F.isnan("__v__")).limit(1).count()
-    if has_nan:
-        return _fallback_nan()
-    offs, bcol, totals = with_bucket_offsets(
-        dv, "__v__", {"c": F.col("__cnt__")}, nbuckets=nbuckets
-    )
-    n = int(totals["c"] or 0)
-    if n == 0:
-        return [None] * len(probs)
-    targets: list[int] = []
-    fracs: list[tuple[int, int, float]] = []  # (lo_idx, hi_idx, frac)
-    for p in probs:
-        pos = (n - 1) * float(p)
-        lo_i, hi_i = int(math.floor(pos)), int(math.ceil(pos))
-        fracs.append((lo_i, hi_i, pos - math.floor(pos)))
-        targets.extend([lo_i, hi_i])
-    targets = sorted(set(targets))
-    w = Window.partitionBy(bcol).orderBy("__v__").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    start = F.col("__off_c__") + F.coalesce(F.sum("__cnt__").over(w), F.lit(0.0))
-    staged = offs.select(
-        "__v__", start.alias("__s__"), (start + F.col("__cnt__")).alias("__e__")
-    )
-    row = staged.agg(
-        *[
-            F.min(
-                F.when((F.col("__s__") <= i) & (F.lit(i) < F.col("__e__")), F.col("__v__"))
-            ).alias(f"t{i}")
-            for i in targets
-        ]
-    ).first()
-    at = {i: float(row[f"t{i}"]) for i in targets}
-    out: list[float | None] = []
-    for lo_i, hi_i, frac in fracs:
-        lo_v, hi_v = at[lo_i], at[hi_i]
-        out.append(lo_v + (hi_v - lo_v) * frac)
-    return out
+    return _order_statistics(sdf, c, dv, small, probs, nbuckets)
 
 
 __all__.append("exact_quantiles")
@@ -634,7 +549,7 @@ def exact_quantiles_multi(
     cols: "dict[str, Column | str]",
     probs: "list[float]",
     nbuckets: "int | None" = None,
-    driver_threshold: int = 65_536,
+    driver_threshold: "int | None" = None,
 ) -> "dict[str, list[float | None]]":
     """``exact_quantiles`` for SEVERAL columns in ONE shared input pass —
     the multi-column feature-scaling shape (r12 ADVICE: a per-column loop
@@ -642,23 +557,24 @@ def exact_quantiles_multi(
     (explode of per-column structs) feeds one map-side-combined
     (column, value) distinct-count aggregate, persisted; each column's
     order statistics then resolve against that cached table with the
-    IDENTICAL per-column arithmetic as ``exact_quantiles`` (driver-side
-    selection under ``driver_threshold`` distinct values, the distsort
-    bucket machinery above it, Spark-Percentile interpolation bit-for-bit
-    in both).  Returns {name: [quantile per prob]}."""
-    for p in probs:
-        if not (0.0 <= p <= 1.0):
-            raise ValueError("each prob must be in [0, 1]")
+    IDENTICAL per-column arithmetic as ``exact_quantiles``.  Each column's
+    distinct-value count is checked against the one bound
+    (``driver_threshold``, default ``_bounded.BOUND`` read at call time)
+    and recorded as an ``exact_quantiles_multi`` decision.  Returns
+    {name: [quantile per prob]}."""
+    _check_probs(probs)
+    from .._bounded import record
     from .._cache import register_cache
 
     names = list(cols)
-    structs = []
-    for name in names:
-        c = cols[name]
-        c = F.col(c) if isinstance(c, str) else c
-        structs.append(
-            F.struct(F.lit(name).alias("__k__"), c.cast("double").alias("__v__"))
-        )
+    casts = {
+        name: (F.col(c) if isinstance(c, str) else c).cast("double")
+        for name, c in cols.items()
+    }
+    structs = [
+        F.struct(F.lit(name).alias("__k__"), casts[name].alias("__v__"))
+        for name in names
+    ]
     base = (
         sdf.select(F.explode(F.array(*structs)).alias("__e__"))
         .select(F.col("__e__.__k__").alias("__k__"), F.col("__e__.__v__").alias("__v__"))
@@ -673,89 +589,13 @@ def exact_quantiles_multi(
     out: "dict[str, list[float | None]]" = {}
     for name in names:
         n_distinct = ndv.get(name, 0)
+        small = record("exact_quantiles_multi", n_distinct, driver_threshold)
         if n_distinct == 0:
             out[name] = [None] * len(probs)
             continue
         col_dv = dv.filter(F.col("__k__") == name).select("__v__", "__cnt__")
-        if n_distinct <= int(driver_threshold):
-            pairs = sorted((r["__v__"], int(r["__cnt__"])) for r in col_dv.collect())
-            if any(math.isnan(v) for v, _ in pairs):
-                out[name] = _percentile_fallback(sdf, cols[name], probs)
-                continue
-            n = sum(cnt for _, cnt in pairs)
-            cum: list[int] = []
-            t = 0
-            for _, cnt in pairs:
-                t += cnt
-                cum.append(t)
-
-            def _at(k: int) -> float:
-                import bisect
-
-                return float(pairs[bisect.bisect_right(cum, k)][0])
-
-            vals: "list[float | None]" = []
-            for p in probs:
-                pos = (n - 1) * float(p)
-                lo_i, hi_i = int(math.floor(pos)), int(math.ceil(pos))
-                lo_v, hi_v = _at(lo_i), _at(hi_i)
-                vals.append(lo_v + (hi_v - lo_v) * (pos - math.floor(pos)))
-            out[name] = vals
-            continue
-        if col_dv.filter(F.isnan("__v__")).limit(1).count():
-            out[name] = _percentile_fallback(sdf, cols[name], probs)
-            continue
-        offs, bcol, totals = with_bucket_offsets(
-            col_dv, "__v__", {"c": F.col("__cnt__")}, nbuckets=nbuckets
-        )
-        n = int(totals["c"] or 0)
-        if n == 0:
-            out[name] = [None] * len(probs)
-            continue
-        targets: list[int] = []
-        fracs: list[tuple[int, int, float]] = []
-        for p in probs:
-            pos = (n - 1) * float(p)
-            lo_i, hi_i = int(math.floor(pos)), int(math.ceil(pos))
-            fracs.append((lo_i, hi_i, pos - math.floor(pos)))
-            targets.extend([lo_i, hi_i])
-        targets = sorted(set(targets))
-        w = Window.partitionBy(bcol).orderBy("__v__").rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        start = F.col("__off_c__") + F.coalesce(F.sum("__cnt__").over(w), F.lit(0.0))
-        staged = offs.select(
-            "__v__", start.alias("__s__"), (start + F.col("__cnt__")).alias("__e__")
-        )
-        row = staged.agg(
-            *[
-                F.min(
-                    F.when(
-                        (F.col("__s__") <= i) & (F.lit(i) < F.col("__e__")),
-                        F.col("__v__"),
-                    )
-                ).alias(f"t{i}")
-                for i in targets
-            ]
-        ).first()
-        at = {i: float(row[f"t{i}"]) for i in targets}
-        vals = []
-        for lo_i, hi_i, frac in fracs:
-            lo_v, hi_v = at[lo_i], at[hi_i]
-            vals.append(lo_v + (hi_v - lo_v) * frac)
-        out[name] = vals
+        out[name] = _order_statistics(sdf, casts[name], col_dv, small, probs, nbuckets)
     return out
-
-
-def _percentile_fallback(sdf, col, probs) -> "list[float | None]":
-    c = F.col(col) if isinstance(col, str) else col
-    row = sdf.agg(
-        F.percentile(
-            c.cast("double"), F.array(*[F.lit(float(p)) for p in probs])
-        ).alias("b")
-    ).first()
-    arr = row["b"] if row is not None else None
-    return [None] * len(probs) if arr is None else [float(x) for x in arr]
 
 
 __all__.append("exact_quantiles_multi")

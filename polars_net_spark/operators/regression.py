@@ -1018,15 +1018,14 @@ def bh_adjust(
     ordering ties deterministically (default: all other columns are
     carried but ordering ties break on p alone — fine, ties adjust
     equally).  Appends ``adj_col``."""
-    from .distsort import with_bucket_offsets
+    from .distsort import with_bucket_offsets, with_prefix_folds
 
     sdf = _sdf(frame)
     pv = F.col(p_col).cast("double")
     base = sdf.filter(pv.isNotNull())
     # prefix counts (for the ascending rank) and prefix MIN of raw values
-    # need different machineries: counts via the fused bucket+offsets job,
-    # the running raw-min needs the rank first — two passes over tiny
-    # per-bucket aggregates, both driver-bounded.
+    # are two prefix passes: the running raw-min needs the rank first —
+    # both over tiny per-bucket aggregates, driver-bounded.
     offs, bcol, totals = with_bucket_offsets(base, p_col, {"c": F.lit(1)}, desc=True)
     m = float(totals["c"])
     # by_adjust: Benjamini–Yekutieli multiplies the BH raw by the exact
@@ -1038,27 +1037,17 @@ def bh_adjust(
     pos_desc = F.col("__off_c__") + F.row_number().over(wd)
     rank_asc = F.lit(m) - pos_desc + 1
     raw = pv * F.lit(m * c_m) / rank_asc
-    staged = offs.withColumn("__raw__", raw)
-    # per-bucket raw minima -> driver prefix-min map (larger-p buckets first)
-    rows = staged.groupBy(bcol).agg(F.min("__raw__").alias("mn")).collect()
-    rows.sort(key=lambda r: r[bcol])
-    prefix: dict[int, float] = {}
-    running = float("inf")
-    for r in rows:
-        prefix[r[bcol]] = running
-        running = min(running, float(r["mn"]))
-    if prefix:
-        mp = F.create_map(
-            *[lit for k, v in prefix.items() for lit in (F.lit(int(k)), F.lit(float(v)))]
-        )
-        off_min = F.coalesce(F.element_at(mp, F.col(bcol)), F.lit(float("inf")))
-    else:
-        off_min = F.lit(float("inf"))
+    # per-bucket raw minima -> driver prefix-min (larger-p buckets first)
+    staged, _mins = with_prefix_folds(
+        offs.withColumn("__raw__", raw), bcol, {"mn": F.col("__raw__")}, "min"
+    )
     run_min = F.min("__raw__").over(
         wd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    adj = F.least(F.lit(1.0), F.least(off_min, run_min))
-    out = staged.withColumn(adj_col, F.round(adj, round_to)).drop(bcol, "__off_c__", "__raw__")
+    adj = F.least(F.lit(1.0), F.least(F.col("__off_mn__"), run_min))
+    out = staged.withColumn(adj_col, F.round(adj, round_to)).drop(
+        bcol, "__off_c__", "__raw__", "__off_mn__"
+    )
     return LazyFrame(out)
 
 
@@ -1928,7 +1917,7 @@ def median_ci(
     import math
 
     from .._bounded import bounded
-    from .distsort import with_prefix_offsets, with_range_buckets
+    from .distsort import with_bucket_offsets
 
     sdf = _sdf(frame)
     x = F.col(value_col).cast("double")
@@ -1946,12 +1935,7 @@ def median_ci(
         ranked = base
         rank = F.row_number().over(Window.orderBy("__x__"))
     else:
-        # the two-job chain, not the fused with_bucket_offsets: on this
-        # raw-row (not cells-collapsed) input the fused BNLJ shape measured
-        # ~+1.0 s slower (same-session A/B, min-of-4: two-job 2.63 s vs
-        # fused 3.67 s at 600k values)
-        bucketed, gb = with_range_buckets(base, "__x__")
-        ranked, _tot = with_prefix_offsets(bucketed, gb, {"c": F.lit(1)})
+        ranked, gb, _tot = with_bucket_offsets(base, "__x__", {"c": F.lit(1)})
         w = Window.partitionBy(gb).orderBy("__x__")
         rank = F.col("__off_c__") + F.row_number().over(w)
     wanted = sorted({lo_rank, hi_rank, m1, m2})
@@ -3073,7 +3057,7 @@ def pettitt_test(
         # 2·cr − idx·(n+1) is exact, the argmax tie-break replicates the
         # struct-min ordering), so the result is bit-identical to the
         # distributed path, in 2 cache-backed jobs instead of the
-        # cells/fused-offsets/rank-join/struct-min chain.  Above the
+        # cells/offsets/rank-join/struct-min chain.  Above the
         # bound the distributed path stands — the 100 TB contract.
         if small:
             if n_series < 3:
@@ -4897,7 +4881,7 @@ def holm_adjust(
     asc, driver PREFIX-MAX offsets (≤ nbuckets rows), within-bucket
     running-max window over ~1/nbuckets of the data — no single-partition
     window.  Null p-values drop.  Appends ``adj_col``."""
-    from .distsort import with_bucket_offsets
+    from .distsort import with_bucket_offsets, with_prefix_folds
 
     sdf = _sdf(frame)
     pv = F.col(p_col).cast("double")
@@ -4908,26 +4892,16 @@ def holm_adjust(
     wa = Window.partitionBy(bcol).orderBy(pv.asc(), *[c.asc() for c in tie])
     rank_asc = F.col("__off_c__") + F.row_number().over(wa)
     raw = pv * (F.lit(m) - rank_asc + 1.0)
-    staged = offs.withColumn("__raw__", raw)
-    rows = staged.groupBy(bcol).agg(F.max("__raw__").alias("mx")).collect()
-    rows.sort(key=lambda r: r[bcol])
-    prefix: dict[int, float] = {}
-    running = float("-inf")
-    for r in rows:
-        prefix[r[bcol]] = running
-        running = max(running, float(r["mx"]))
-    if prefix:
-        mp = F.create_map(
-            *[lit for k, v in prefix.items() for lit in (F.lit(int(k)), F.lit(float(v)))]
-        )
-        off_max = F.coalesce(F.element_at(mp, F.col(bcol)), F.lit(float("-inf")))
-    else:
-        off_max = F.lit(float("-inf"))
+    staged, _maxes = with_prefix_folds(
+        offs.withColumn("__raw__", raw), bcol, {"mx": F.col("__raw__")}, "max"
+    )
     run_max = F.max("__raw__").over(
         wa.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    adj = F.least(F.lit(1.0), F.greatest(off_max, run_max))
-    out = staged.withColumn(adj_col, F.round(adj, round_to)).drop(bcol, "__off_c__", "__raw__")
+    adj = F.least(F.lit(1.0), F.greatest(F.col("__off_mx__"), run_max))
+    out = staged.withColumn(adj_col, F.round(adj, round_to)).drop(
+        bcol, "__off_c__", "__raw__", "__off_mx__"
+    )
     return LazyFrame(out)
 
 
@@ -5293,9 +5267,9 @@ def brunner_munzel(
     estimate.
 
     Combined midranks ride the spearman/wilcoxon distsort rank-table
-    construction; within-group midranks get the same treatment with the
-    driver prefix keyed by (group, bucket) (2·nbuckets rows) — no
-    single-partition window on either ranking.  Output (1 row): w, df,
+    construction; within-group midranks get the same treatment, one
+    prefix offset per group (≤ nbuckets rows) — no single-partition
+    window on either ranking.  Output (1 row): w, df,
     p_hat, mean_rank_a, mean_rank_b, n_a, n_b."""
     from .._cache import register_cache
 
@@ -5326,41 +5300,21 @@ def brunner_munzel(
         "__v__", (cumb + (F.col("__cnt__") + F.lit(1)) / 2.0).alias("__R__")
     )
 
-    # within-group midranks: (group, value) cells; driver prefix keyed by
-    # (group, bucket) — bounded by 2·nbuckets rows
+    # within-group midranks: (group, value) cells over their own buckets;
+    # the per-bucket rows carry BOTH groups' counts (sa, sb) and each cell
+    # reads its own group's offset
     gcells = register_cache(
         base.groupBy("__g__", "__v__").agg(F.count(F.lit(1)).alias("__c__"))
     )
-    # FUSED (r13): the second boundary sketch and the (group, bucket) sums
-    # come from ONE driver job — per-bucket rows carry BOTH groups' counts
-    from .distsort import BUCKET_COL, _bucket_literal_expr, _fused_sketch_sums
-
-    bounds2, rows2 = _fused_sketch_sums(
+    gcells, gb2, _tot2 = with_bucket_offsets(
         gcells, "__v__",
         {
             "sa": F.when(F.col("__g__") == "a", F.col("__c__")).otherwise(F.lit(0)),
             "sb": F.when(F.col("__g__") == "b", F.col("__c__")).otherwise(F.lit(0)),
         },
-        False, None, 10_000,
     )
-    gb2 = BUCKET_COL
-    gcells = gcells.withColumn(gb2, _bucket_literal_expr("__v__", bounds2, False))
-    offsets: dict = {}
-    running: dict = {}
-    for r in rows2:
-        for grp, fld in (("a", "sa"), ("b", "sb")):
-            offsets[(grp, r[gb2])] = running.get(grp, 0.0)
-            running[grp] = offsets[(grp, r[gb2])] + float(r[fld] or 0)
-    mp = F.create_map(
-        *[
-            lit
-            for (grp, bk), off in offsets.items()
-            for lit in (F.concat_ws("|", F.lit(grp), F.lit(str(int(bk)))), F.lit(float(off)))
-        ]
-    )
-    off2 = F.coalesce(
-        F.element_at(mp, F.concat_ws("|", F.col("__g__"), F.col(gb2).cast("string"))),
-        F.lit(0.0),
+    off2 = F.when(F.col("__g__") == "a", F.col("__off_sa__")).otherwise(
+        F.col("__off_sb__")
     )
     wexcl2 = (
         Window.partitionBy("__g__", gb2)

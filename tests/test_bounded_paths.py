@@ -15,7 +15,7 @@ import pytest
 
 from polars_net_spark import _bounded
 from polars_net_spark.operators.analytics import rmst, survival_curve
-from polars_net_spark.operators.distsort import exact_quantiles
+from polars_net_spark.operators.distsort import exact_quantiles, exact_quantiles_multi
 from polars_net_spark.operators.regression import median_ci, pettitt_test
 
 NAN, INF = float("nan"), float("inf")
@@ -42,6 +42,9 @@ FIXTURES = {
 }
 
 
+PROBS = [0.0, 0.1, 0.25, 0.5, 0.9, 1.0]
+
+
 def _rows(lf):
     return lf.collect().rows()
 
@@ -53,7 +56,12 @@ OPERATORS = {
     "median_ci": ("median_ci", lambda d: _rows(median_ci(d, "t"))),
     "exact_quantiles": (
         "exact_quantiles",
-        lambda d: [exact_quantiles(d, "t", [0.0, 0.1, 0.25, 0.5, 0.9, 1.0])],
+        lambda d: [exact_quantiles(d, "t", PROBS)],
+    ),
+    # one column, so one decision per call
+    "exact_quantiles_multi": (
+        "exact_quantiles_multi",
+        lambda d: [exact_quantiles_multi(d, {"t": "t"}, PROBS)["t"]],
     ),
     "pettitt_test": ("pettitt_test", lambda d: _rows(pettitt_test(d, "t", "v"))),
 }
@@ -116,14 +124,20 @@ def test_decision_record_is_bounded(spark):
 
 
 def test_explicit_driver_threshold_still_wins(spark):
-    """exact_quantiles / pettitt_test keep their driver_threshold argument;
-    it overrides the module bound for that call."""
+    """exact_quantiles / exact_quantiles_multi / pettitt_test keep their
+    driver_threshold argument; it overrides the module bound for that
+    call."""
     sdf = spark.createDataFrame([(float(i), 0, float(i % 3)) for i in range(10)],
                                 "t double, e int, v double")
     _bounded.clear_decisions()
     exact_quantiles(sdf, "t", [0.5], driver_threshold=0)
+    exact_quantiles_multi(sdf, {"t": "t", "v": "v"}, [0.5], driver_threshold=5)
     pettitt_test(sdf, "t", "v", driver_threshold=0).collect()
-    assert [(d["operator"], d["path"], d["bound"]) for d in _bounded.decisions()] == [
-        ("exact_quantiles", "distsort", 0),
-        ("pettitt_test", "distsort", 0),
+    assert [
+        (d["operator"], d["path"], d["n"], d["bound"]) for d in _bounded.decisions()
+    ] == [
+        ("exact_quantiles", "distsort", 10, 0),
+        ("exact_quantiles_multi", "distsort", 10, 5),
+        ("exact_quantiles_multi", "bounded", 3, 5),
+        ("pettitt_test", "distsort", 10, 0),
     ]

@@ -73,10 +73,8 @@ class TestBhAdjust:
         out = {r[0]: r[2] for r in rows(bh_adjust(df, "p", id_cols="id"))}
         assert out[1] == out[2] == pytest.approx(0.03, abs=1e-9)  # .02*3/2
 
-    def test_matches_scipy_on_random_block(self, spark):
-        # deterministic pseudo-random p's, checked against the textbook
-        # O(m log m) reference implementation
-        ps = [((i * 37) % 97 + 1) / 98.0 for i in range(40)]
+    @staticmethod
+    def _check_reference(spark, ps):
         df = spark.createDataFrame([(i, p) for i, p in enumerate(ps)],
                                    "id long, p double")
         out = {r[0]: r[2] for r in rows(bh_adjust(df, "p", id_cols="id"))}
@@ -89,6 +87,18 @@ class TestBhAdjust:
         ref = {order[k]: min(1.0, suffix[k]) for k in range(m)}
         for i in range(m):
             assert out[i] == pytest.approx(ref[i], abs=1e-6)
+
+    def test_matches_scipy_on_random_block(self, spark):
+        # deterministic pseudo-random p's, checked against the textbook
+        # O(m log m) reference implementation
+        self._check_reference(spark, [((i * 37) % 97 + 1) / 98.0 for i in range(40)])
+
+    def test_matches_reference_across_buckets(self, spark):
+        # 320 p-values over 31 tied levels: the suffix-min carries across
+        # all 8 range buckets, and tied p's straddle bucket boundaries
+        self._check_reference(
+            spark, [((i * 7) % 31 + 1) / 40.0 for i in range(320)]
+        )
 
     def test_null_p_drops(self, spark):
         df = spark.createDataFrame([(1, 0.5), (2, None)], "id long, p double")

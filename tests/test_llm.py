@@ -1016,6 +1016,42 @@ def test_containment_prefix_orders_exact(spark):
     assert any(a == 101 and b == 100 for a, b, _ in base)
 
 
+def test_containment_df_probe_runs_once(spark):
+    """With max_gram_df set and prefix_order="df", two gram-df tables attach
+    but the occurrence-count probe that decides their broadcast runs once:
+    building the plan submits as many Spark jobs as the one-attach form,
+    and the output is unchanged."""
+    from polars_net_spark.llm import containment_pairs
+
+    hot = "the quick brown fox jumps over dog"
+    rows = [(i, f"{hot} filler{i} pad{i} tail{i}") for i in range(1, 16)]
+    rows += [(200, hot), (201, hot + " extra trailing words here")]
+    d = pl.from_records(rows, ["doc_id", "text"])
+    sc = spark.sparkContext
+
+    def build_jobs(**kw):
+        pl.release_caches()
+        group = f"containment_probe_{len(kw)}"
+        sc.setJobGroup(group, group)
+        try:
+            lf = containment_pairs(d, threshold=0.9, prefix_order="df", **kw)
+            return len(sc.statusTracker().getJobIdsForGroup(group)), lf
+        finally:
+            sc.setJobGroup(None, None)
+
+    one_attach, _ = build_jobs()
+    two_attach, lf = build_jobs(max_gram_df=1000)
+    assert one_attach >= 1
+    assert two_attach == one_attach
+    got = sorted(tuple(r) for r in lf.collect().rows())
+    full = sorted(
+        tuple(r) for r in
+        containment_pairs(d, threshold=0.9, prefix_order=None).collect().rows()
+    )
+    assert got == full
+    pl.release_caches()
+
+
 def test_containment_max_gram_df_recall_contract(spark):
     """max_gram_df is approximate: capped output ⊆ uncapped output, every
     emitted value is the true containment, and a generous cap changes

@@ -164,12 +164,12 @@ class TestLjungBox:
 
 
 class TestHolmAdjust:
-    def test_matches_brute_force(self, spark):
-        ps = [0.001, 0.008, 0.039, 0.041, 0.042, 0.06, 0.074, 0.205, 0.212, 0.216]
+    @staticmethod
+    def _check_brute_force(spark, ps):
         d = spark.createDataFrame([(i, p) for i, p in enumerate(ps)], "id int, p double")
         out = {r[0]: r[2] for r in rows(holm_adjust(d, "p", id_cols="id"))}
         m = len(ps)
-        order = sorted(range(m), key=lambda i: ps[i])
+        order = sorted(range(m), key=lambda i: (ps[i], i))
         adj_ref = {}
         running = 0.0
         for rank, i in enumerate(order, start=1):
@@ -177,6 +177,17 @@ class TestHolmAdjust:
             adj_ref[i] = min(1.0, running)
         for i in range(m):
             assert abs(out[i] - adj_ref[i]) < 1e-6
+
+    def test_matches_brute_force(self, spark):
+        ps = [0.001, 0.008, 0.039, 0.041, 0.042, 0.06, 0.074, 0.205, 0.212, 0.216]
+        self._check_brute_force(spark, ps)
+
+    def test_matches_brute_force_across_buckets(self, spark):
+        # 320 p-values over 29 tied levels, small enough that the cap does
+        # not flatten them: the prefix-max crosses all 8 range buckets
+        self._check_brute_force(
+            spark, [((i * 11) % 29 + 1) / 50_000.0 for i in range(320)]
+        )
 
     def test_monotone_and_capped(self, spark):
         ps = [0.5, 0.9, 0.2, 0.8, 0.04]

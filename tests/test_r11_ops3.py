@@ -63,9 +63,8 @@ class TestThetaForecast:
 
 
 class TestBrunnerMunzel:
-    def test_matches_brute_force(self, spark):
-        xs = [1.0, 2.0, 1.5, 3.2, 2.8, 1.1, 2.2, 3.0]
-        ys = [2.5, 3.5, 4.0, 2.9, 3.3, 4.2, 3.9, 2.5, 4.8, 3.1]
+    @staticmethod
+    def _check_brute_force(spark, xs, ys):
         d = spark.createDataFrame(
             [("a", v) for v in xs] + [("b", v) for v in ys], "g string, v double"
         )
@@ -98,6 +97,20 @@ class TestBrunnerMunzel:
         assert abs(w - w_ref) < 1e-6
         assert abs(df - df_ref) < 1e-4
         assert abs(ph - ph_ref) < 1e-6
+
+    def test_matches_brute_force(self, spark):
+        xs = [1.0, 2.0, 1.5, 3.2, 2.8, 1.1, 2.2, 3.0]
+        ys = [2.5, 3.5, 4.0, 2.9, 3.3, 4.2, 3.9, 2.5, 4.8, 3.1]
+        self._check_brute_force(spark, xs, ys)
+
+    def test_matches_brute_force_across_buckets(self, spark):
+        # 330 rows over 23 tied values: every value (so every one of the
+        # session's 8 range buckets) holds both groups, and the per-group
+        # prefix offsets carry across every bucket boundary
+        vals = [(i % 3 != 0, float((i * 13) % 23)) for i in range(330)]
+        xs = [v for is_a, v in vals if is_a]
+        ys = [v + 0.5 * (v > 11) for is_a, v in vals if not is_a]
+        self._check_brute_force(spark, xs, ys)
 
     def test_degenerate_raises(self, spark):
         from py4j.protocol import Py4JJavaError

@@ -1,6 +1,11 @@
-"""Parity: the fused with_bucket_offsets must reproduce the two-job
-with_range_buckets + with_prefix_offsets chain — identical totals and an
-identical global cumulant (offset + within-bucket running sum) per row."""
+"""The one distsort shape: ``with_bucket_offsets`` is
+``with_range_buckets`` followed by ``with_prefix_offsets``, and calling it
+must give the same totals and per-row global cumulant (offset +
+within-bucket running sum) as calling the two steps by hand.  The module
+also pins the true global cumulant, contiguous bucket ids under heavy ties,
+desc offsets with NaN sketch bounds, and empty / all-null / single-bucket
+inputs.  (The file name dates from a fused one-job variant of
+``with_bucket_offsets``, since removed.)"""
 
 import pytest
 from pyspark.sql import Window

@@ -88,3 +88,24 @@ class TestParetoFront:
         )
         ids = {r[0] for r in rows(pareto_front(df, "x", "y"))}
         assert ids == {"p", "q"}
+
+    def test_matches_brute_force_across_buckets(self, spark):
+        # 320 points over 40 tied x values (8 rows each, repeated max-y
+        # rows): frontier groups sit in every one of the session's 8 range
+        # buckets, and the first group of each bucket is decided by the
+        # prefix-max carried over the larger-x buckets
+        pts = [
+            (float(i % 40), float(39 - i % 40 + 3 * (i % 40 * 7 % 3) + (i * 29) % 7 // 5))
+            for i in range(320)
+        ]
+        df = spark.createDataFrame(pts, "x double, y double")
+        ref = sorted(
+            (x, y)
+            for x, y in pts
+            if not any(
+                a >= x and b >= y and (a > x or b > y) for a, b in pts
+            )
+        )
+        out = sorted(rows(pareto_front(df, "x", "y")))
+        assert len(ref) > 8
+        assert out == ref

@@ -1,11 +1,14 @@
-"""The one "small enough for a single task?" guard.
+"""The one "small enough?" guard and the one way to ship driver objects.
 
 Rank statistics (a Kaplan–Meier curve, a median interval, exact
 quantiles, a Pettitt scan) need one global ordering.  The distributed form
 of that ordering is ``operators/distsort.py``: a boundary sketch job, a
 prefix-offset job and bucket-keyed windows, so that no task ever holds more
 than a bucket.  Below a few tens of thousands of rows that machinery is
-pure job overhead; one task sorts the rows in milliseconds.
+pure job overhead; one task sorts the rows in milliseconds.  Iterative
+graph and model fits (dedup_clusters, bradley_terry, train_bpe) face the
+same choice: a small edge or vocabulary table runs its rounds on the
+driver, a large one runs them as Spark jobs.
 
 ``bounded`` makes that decision the same way at every site: persist the
 input through ``register_cache`` (so the count and every later pass share
@@ -14,25 +17,48 @@ one materialisation), count it once, and compare the count with
 expensive upstream the CollectLimit plan re-scans it, and the cached count
 costs the same single pass the consumer needs anyway.
 
+``ship`` gets a driver-side object (a vocabulary dict, a model table, a
+matrix) to the worker code.  It measures the object's pickled size,
+stopping once the size passes ``SHIP_BYTES`` = 1 MiB.  At or below it the
+object travels in the task closure.  1 MiB is Spark's default
+``spark.broadcast.UDFCompressionThreshold``: a pickled Python command
+above it is broadcast by PySpark anyway, and unpickled again by every
+task, whereas an explicit broadcast is loaded once per worker.  So above
+1 MiB ``ship`` calls ``sc.broadcast`` and registers the handle with the
+cache registry: ``release_caches()`` / ``scoped_caches()`` unpersist it
+(never destroy it), so a released plan that runs again fetches the value
+from the driver again.  Either way the caller gets a zero-argument getter
+that the worker code calls.
+
 Each decision is appended to a bounded in-memory record, read with
 ``decisions()``, as ``{operator, path, n, bound}``; ``path`` is
-``"bounded"`` (the single-task or driver-side form) or ``"distsort"``.
+``"bounded"`` (the single-task, driver-side or closure form) or
+``"distributed"``, and ``n`` is a row count, except for ``ship``, where it
+is bytes.
 """
 
 from __future__ import annotations
 
+import pickle
 from collections import deque
-from typing import NamedTuple
+from typing import Any, Callable, NamedTuple
 
 from pyspark.sql import DataFrame as SparkDF
 
-from ._cache import register_cache
+from ._cache import _CACHES, register_cache
 
-__all__ = ["BOUND", "Guarded", "bounded", "record", "decisions", "clear_decisions"]
+__all__ = [
+    "BOUND", "SHIP_BYTES", "Guarded", "bounded", "ship", "record", "decisions",
+    "clear_decisions",
+]
 
 # rows one task may sort or the driver may collect: the same 65,536 that
 # bounds the train_bpe artifact
 BOUND = 65_536
+
+# pickled bytes an object may add to every task closure (see the module
+# docstring for why this is Spark's UDFCompressionThreshold)
+SHIP_BYTES = 1 << 20
 
 _DECISIONS: "deque[dict]" = deque(maxlen=1024)
 
@@ -53,18 +79,54 @@ def bounded(sdf: SparkDF, operator: str, bound: "int | None" = None) -> Guarded:
     return Guarded(cached, n, record(operator, n, bound))
 
 
+class _Oversize(Exception):
+    pass
+
+
+class _ByteCounter:
+    """A write-only pickle sink that counts bytes and gives up past ``limit``."""
+
+    def __init__(self, limit: int):
+        self.n, self.limit = 0, limit
+
+    def write(self, data) -> None:
+        self.n += memoryview(data).nbytes  # data may be a PickleBuffer
+        if self.n > self.limit:
+            raise _Oversize
+
+
+def ship(sc, obj: Any, operator: str) -> Callable[[], Any]:
+    """Return a zero-argument getter for ``obj`` that worker code calls.
+
+    Objects whose pickled size is at most ``SHIP_BYTES`` (read at call
+    time) ride in the task closure; larger ones are broadcast and the
+    handle is registered for ``release_caches()``."""
+    limit = SHIP_BYTES
+    sink = _ByteCounter(limit)
+    try:
+        pickle.Pickler(sink, protocol=pickle.HIGHEST_PROTOCOL).dump(obj)
+    except _Oversize:
+        pass
+    if record(operator, sink.n, limit):
+        return lambda: obj
+    handle = sc.broadcast(obj)
+    _CACHES.append(handle)
+    return lambda: handle.value
+
+
 def record(operator: str, n: int, bound: "int | None" = None) -> bool:
     """Compare an already-known size ``n`` with the bound (``BOUND`` read
     at call time when ``bound`` is None), record the decision for
     ``operator`` and return whether ``n`` takes the bounded path.  For
     sites that count several inputs in one job, such as
-    ``exact_quantiles_multi``'s per-column distinct counts."""
+    ``exact_quantiles_multi``'s per-column distinct counts, or whose size
+    is known without a job, such as ipf_weights' category grid."""
     limit = BOUND if bound is None else int(bound)
     small = n <= limit
     _DECISIONS.append(
         {
             "operator": operator,
-            "path": "bounded" if small else "distsort",
+            "path": "bounded" if small else "distributed",
             "n": n,
             "bound": limit,
         }
@@ -73,7 +135,7 @@ def record(operator: str, n: int, bound: "int | None" = None) -> bool:
 
 
 def decisions() -> "list[dict]":
-    """The most recent guard decisions, oldest first (at most 1024)."""
+    """The most recent decisions, oldest first (at most 1024)."""
     return list(_DECISIONS)
 
 

@@ -379,17 +379,11 @@ def build_sft_examples(
     from pyspark.sql import DataFrame as SparkDF
 
     from ..frame import LazyFrame
+    from .vocab import _ship_vocab
 
     sdf = frame if isinstance(frame, SparkDF) else frame.spark
     vdf = vocab if isinstance(vocab, SparkDF) else vocab.spark
-    vmap: dict = {}
-    for r in vdf.select("term", "token_id").collect():
-        t, i = r["term"], r["token_id"]
-        if i is not None and (t not in vmap or i < vmap[t]):
-            vmap[t] = int(i)
-    tid_type = vdf.schema["token_id"].dataType.simpleString()
-    if tid_type not in ("int", "bigint"):
-        tid_type = "int"
+    get_vmap, tid_type = _ship_vocab(vdf, "build_sft_examples")
 
     def _w(c):
         w = F.split(F.lower(F.trim(F.coalesce(F.col(c), F.lit("")))), r"\s+")
@@ -405,14 +399,12 @@ def build_sft_examples(
     id_type = staged.schema["__id__"].dataType.simpleString()
     oov = int(oov_id)
     mask = int(mask_label)
-    # broadcast once per executor, not once per task closure
-    bc_vmap = sdf.sparkSession.sparkContext.broadcast(vmap)
 
     def _enc(batches):
         import pyarrow as pa
 
         elem = pa.int32() if tid_type == "int" else pa.int64()
-        get = bc_vmap.value.get
+        get = get_vmap().get
         for batch in batches:
             pws = batch.column(1).to_pylist()
             rws = batch.column(2).to_pylist()

@@ -16,6 +16,7 @@ import functools
 from pyspark.sql import Column, DataFrame as SparkDF, Window
 from pyspark.sql import functions as F
 
+from .._bounded import bounded, record
 from .._cache import register_cache
 from ..frame import LazyFrame
 from ..session import scoped_checkpoint_dir
@@ -634,11 +635,11 @@ def embedding_near_dup_pairs(
     """Embedding-cosine near-dup pairs (id_a < id_b, cosine >= threshold).
 
     method='numpy' (default when the table fits ``broadcast_limit`` rows):
-    broadcast the id/vector matrix, then every executor scores its Arrow
-    batches against it with one BLAS matmul and emits only above-threshold
-    pairs — the standard blocked all-pairs design.  Compute is O(n²·d) either
-    way, but the matmul path is ~10-50× faster than per-pair expressions and
-    shuffles nothing (output pairs only).
+    ship the id/vector matrix (``_bounded.ship``), then every executor
+    scores its Arrow batches against it with one BLAS matmul and emits only
+    above-threshold pairs — the standard blocked all-pairs design.  Compute
+    is O(n²·d) either way, but the matmul path is ~10-50× faster than
+    per-pair expressions and shuffles nothing (output pairs only).
 
     method='bucketed' (default ABOVE broadcast_limit — the 100 TB path):
     random-hyperplane LSH buckets (``num_planes``/``num_tables``, shared with
@@ -732,11 +733,10 @@ def _numpy_near_dup_pairs(sdf: SparkDF, vec_col, id_col, threshold, round_to) ->
     import numpy as np
     import pandas as pd
 
-    rows = sdf.select(id_col, vec_col).collect()  # broadcast side (bounded by caller)
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    M = np.array([list(r[1]) for r in rows], dtype=np.float64)  # (n, d)
-    norms = np.sqrt((M * M).sum(axis=1))
-    bc = sdf.sparkSession.sparkContext.broadcast((ids, M, norms))
+    from .similarity import _ship_matrix
+
+    # the shipped side is bounded by the caller's broadcast_limit
+    get_matrix = _ship_matrix(sdf, id_col, vec_col, "embedding_near_dup_pairs")
     # Score the corpus in column chunks so peak per-task memory is one
     # (batch_rows x CHUNK) float64 block (~40 MB at 625x8192), not a full
     # (batch_rows x n) matrix — at broadcast_limit rows the unchunked block
@@ -746,7 +746,7 @@ def _numpy_near_dup_pairs(sdf: SparkDF, vec_col, id_col, threshold, round_to) ->
     CHUNK = 8192
 
     def gen(it):
-        b_ids, b_M, b_norms = bc.value
+        b_ids, b_M, b_norms = get_matrix()
         n = b_ids.shape[0]
         for pdf in it:
             if pdf.empty:
@@ -860,11 +860,21 @@ def dedup_clusters(
     components are solved with a driver-side union-find over one collect —
     identical output (min reachable id), one job instead of rounds.  Above
     the threshold the distributed fixpoint runs unchanged.  Set
-    ``driver_threshold=0`` to force the distributed path.
+    ``driver_threshold=0`` to force the distributed path for any non-empty
+    pair list.
     """
     p = _sdf(pairs).select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    edges = register_cache(
-        p.union(p.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct()
+    # strategy probe = count() of the cached edges frame.  This is not an
+    # eager scan of the input: edges is the candidate-generation OUTPUT,
+    # which both strategies must fully materialize anyway (the fixpoint
+    # joins it every round), and the count is what populates the cache they
+    # read.  limit-based probing is wrong here — CollectLimit's incremental
+    # partition scanning re-runs the expensive upstream stages several times
+    # (measured 6.8s vs 0.2s on a 512-edge graph).
+    edges, _, small = bounded(
+        p.union(p.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct(),
+        "dedup_clusters",
+        2 * driver_threshold,
     )
     # iterate only over the edge-induced subgraph: vertices in no pair can
     # never change label, so the fixpoint runs on ~2·|pairs| rows regardless
@@ -881,22 +891,13 @@ def dedup_clusters(
     else:
         out_name = id_a
         verts = None
-    if driver_threshold:
-        # strategy probe = count() of the cached edges frame.  This is not an
-        # eager scan of the input: edges is the candidate-generation OUTPUT,
-        # which both strategies must fully materialize anyway (the fixpoint
-        # joins it every round), and the count is what populates the cache
-        # they read.  limit-based probing is wrong here — CollectLimit's
-        # incremental partition scanning re-runs the expensive upstream
-        # stages several times (measured 6.8s vs 0.2s on a 512-edge graph).
-        n_edges = edges.count()
-        if n_edges <= 2 * driver_threshold:
-            clustered = _driver_union_find(edges, active)
-            if verts is not None:
-                clustered = verts.join(clustered, "id", "left").select(
-                    "id", F.coalesce("cluster_id", "id").alias("cluster_id")
-                )
-            return LazyFrame(clustered.select(F.col("id").alias(out_name), "cluster_id"))
+    if small:
+        clustered = _driver_union_find(edges, active)
+        if verts is not None:
+            clustered = verts.join(clustered, "id", "left").select(
+                "id", F.coalesce("cluster_id", "id").alias("cluster_id")
+            )
+        return LazyFrame(clustered.select(F.col("id").alias(out_name), "cluster_id"))
 
     # no checkpoint on the seed: round 1's checkpoint truncates the lineage,
     # and the edge staging is already persisted via the cache registry
@@ -1418,7 +1419,7 @@ def containment_pairs(
         # stands: at corpus scale the gram-df table is corpus-sized and
         # must never be broadcast.
         occ_row = grams.agg(F.sum(F.size("grams")).alias("o")).first()
-        return int(occ_row["o"] or 0) <= 2_000_000
+        return record("containment_pairs", int(occ_row["o"] or 0), 2_000_000)
 
     def _df_attach(tbl):
         return F.broadcast(tbl) if _broadcast_df() else tbl

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame as SparkDF
 from pyspark.sql import functions as F
 
+from .._bounded import bounded
+from .._cache import register_cache
 from ..frame import LazyFrame
 
 __all__ = ["preference_pairs"]
@@ -142,8 +144,9 @@ def bradley_terry(
     MM rounds run on the DRIVER over the collected edge list instead of
     6 × 3 Spark stages over a few hundred rows — same arithmetic, same
     result, an order of magnitude less wall (the dedup_clusters
-    driver-path pattern).  The distributed path remains for web-scale
-    item spaces; set ``driver_threshold=0`` to force it.
+    driver-path pattern, through ``_bounded.bounded``).  The distributed
+    path remains for web-scale item spaces; set ``driver_threshold=0`` to
+    force it for any non-empty input.
 
     Output: (item, n_comparisons, wins, score) — score descending is the
     preference ranking."""
@@ -154,9 +157,16 @@ def bradley_terry(
         w.alias("__w__"), l.alias("__l__")
     )
     lo, hi = F.least("__w__", "__l__"), F.greatest("__w__", "__l__")
-    edges = base.groupBy(lo.alias("a"), hi.alias("b")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum((F.col("__w__") == F.least("__w__", "__l__")).cast("long")).alias("wa"),
+    # persist the edge aggregate once, then a plain count (limit-based
+    # probing re-runs the upstream aggregate incrementally — the
+    # dedup_clusters lesson)
+    edges, _, small = bounded(
+        base.groupBy(lo.alias("a"), hi.alias("b")).agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum((F.col("__w__") == F.least("__w__", "__l__")).cast("long")).alias("wa"),
+        ),
+        "bradley_terry",
+        driver_threshold,
     )
     per_item = (
         edges.select(F.col("a").alias("item"), F.col("n"), F.col("wa").alias("wins"))
@@ -168,40 +178,33 @@ def bradley_terry(
         .groupBy("item")
         .agg(F.sum("n").alias("n_comparisons"), F.sum("wins").alias("wins"))
     )
-    from .._cache import register_cache
-
-    if driver_threshold:
-        # persist the edge aggregate once, then a plain count (limit-based
-        # probing re-runs the upstream aggregate incrementally — the
-        # dedup_clusters lesson)
-        edges = register_cache(edges)
-        if edges.count() <= int(driver_threshold):
-            erows = [(r["a"], r["b"], int(r["n"]), int(r["wa"])) for r in edges.collect()]
-            wins: dict = {}
-            ncmp: dict = {}
-            for a, b, n, wa in erows:
-                wins[a] = wins.get(a, 0) + wa
-                wins[b] = wins.get(b, 0) + (n - wa)
-                ncmp[a] = ncmp.get(a, 0) + n
-                ncmp[b] = ncmp.get(b, 0) + n
-            ps = {i: 1.0 for i in wins}
-            for _ in range(int(iterations)):
-                dn = {i: 0.0 for i in ps}
-                for a, b, n, _wa in erows:
-                    t = n / (ps[a] + ps[b])
-                    dn[a] += t
-                    dn[b] += t
-                ps = {i: (wins[i] / dn[i] if dn[i] > 0 else 0.0) for i in ps}
-            tp = sum(ps.values())
-            data = sorted(
-                (i, int(ncmp[i]), int(wins[i]),
-                 round(ps[i] / tp, round_to) if tp > 0 else 0.0)
-                for i in ps
-            )
-            out = sdf.sparkSession.createDataFrame(
-                data, "item string, n_comparisons bigint, wins bigint, score double"
-            )
-            return LazyFrame(out)
+    if small:
+        erows = [(r["a"], r["b"], int(r["n"]), int(r["wa"])) for r in edges.collect()]
+        wins: dict = {}
+        ncmp: dict = {}
+        for a, b, n, wa in erows:
+            wins[a] = wins.get(a, 0) + wa
+            wins[b] = wins.get(b, 0) + (n - wa)
+            ncmp[a] = ncmp.get(a, 0) + n
+            ncmp[b] = ncmp.get(b, 0) + n
+        ps = {i: 1.0 for i in wins}
+        for _ in range(int(iterations)):
+            dn = {i: 0.0 for i in ps}
+            for a, b, n, _wa in erows:
+                t = n / (ps[a] + ps[b])
+                dn[a] += t
+                dn[b] += t
+            ps = {i: (wins[i] / dn[i] if dn[i] > 0 else 0.0) for i in ps}
+        tp = sum(ps.values())
+        data = sorted(
+            (i, int(ncmp[i]), int(wins[i]),
+             round(ps[i] / tp, round_to) if tp > 0 else 0.0)
+            for i in ps
+        )
+        out = sdf.sparkSession.createDataFrame(
+            data, "item string, n_comparisons bigint, wins bigint, score double"
+        )
+        return LazyFrame(out)
     per_item = register_cache(per_item)
     p = per_item.select("item", F.lit(1.0).alias("p"))
     for _ in range(int(iterations)):

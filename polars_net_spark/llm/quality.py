@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 
+from .._bounded import ship
 from .._cache import register_cache
 
 __all__ = [
@@ -479,8 +480,7 @@ def bigram_logprob_frame(
         (r["w1"], r["w2"]): int(r["__bc__"]) for r in bi_vocab.collect()
     }
     n_f = float(n_total) if n_total else 1.0
-    # torrent-broadcast the two model tables once per executor instead of
-    # shipping closure-captured dicts with every serialized task launch.
+    # ship the two model tables to the workers (_bounded.ship).
     # DRIVER-MEMORY BOUND: the bigram table is capped at vocab_size rows,
     # but the unigram table is the full corpus vocabulary — it grows
     # ~O(corpus^beta) under Heaps' law (beta ~ 0.5), i.e. a 100 TB corpus
@@ -489,7 +489,9 @@ def bigram_logprob_frame(
     # broadcast hash relation; beyond it, shard the unigram floor lookup
     # or raise spark.driver.memory — the backoff floor is part of the
     # declared result, so it cannot be silently truncated.
-    bc_models = sdf.sparkSession.sparkContext.broadcast((uni_map, bi_map))
+    get_models = ship(
+        sdf.sparkSession.sparkContext, (uni_map, bi_map), "bigram_logprob_frame"
+    )
 
     # the kernel emits the raw log-prob SUM; the mean's division and
     # F.round stay Spark expressions so the rounding convention (HALF_UP)
@@ -499,7 +501,7 @@ def bigram_logprob_frame(
 
         import pyarrow as pa
 
-        uni_m, bi_m = bc_models.value
+        uni_m, bi_m = get_models()
         uget = uni_m.get
         bget = bi_m.get
         for batch in batches:

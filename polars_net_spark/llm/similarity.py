@@ -1,7 +1,7 @@
 """Similarity search over embedding columns (array<float>).
 
-- :func:`cosine_topk` — brute-force exact top-k: broadcast the (small) query
-  set against the corpus; one pass, no shuffle of the corpus.  The baseline
+- :func:`cosine_topk` — brute-force exact top-k: ship the (small) query
+  set to every corpus task; one pass, no shuffle of the corpus.  The baseline
   and the verifier for approximate methods.
 - :func:`lsh_bucket_topk` — random-hyperplane LSH: corpus and queries are
   bucketed by sign patterns; only same-bucket pairs are scored.  The scale
@@ -18,6 +18,7 @@ import math
 from pyspark.sql import Column, DataFrame as SparkDF, Window
 from pyspark.sql import functions as F
 
+from .._bounded import ship
 from ..frame import LazyFrame
 
 __all__ = [
@@ -76,7 +77,8 @@ def cosine_topk(
     when ids collide).
 
     method='numpy' (default for query sets up to ``broadcast_limit``): the
-    query matrix is broadcast; each executor scores its corpus batches with
+    query matrix is shipped to the workers (``_bounded.ship``); each
+    executor scores its corpus batches with
     one BLAS matmul and emits only its per-batch top-k per query, so the final
     global window ranks ≤ k·n_batches candidates instead of |corpus|·|queries|
     pairs.  Corpus is scanned once, never shuffled — the design that holds at
@@ -121,15 +123,24 @@ def cosine_topk(
     return LazyFrame(out)
 
 
+def _ship_matrix(sdf: SparkDF, id_col: str, vec_col: str, operator: str):
+    """Collect a bounded (id, vector) frame as ``(ids, M, norms)`` numpy
+    arrays — int64 ids, the float64 (n, d) matrix and its row L2 norms —
+    and ship the tuple (``_bounded.ship``); returns the worker getter."""
+    import numpy as np
+
+    rows = sdf.select(id_col, vec_col).collect()
+    ids = np.array([r[0] for r in rows], dtype=np.int64)
+    M = np.array([list(r[1]) for r in rows], dtype=np.float64)
+    norms = np.sqrt((M * M).sum(axis=1))
+    return ship(sdf.sparkSession.sparkContext, (ids, M, norms), operator)
+
+
 def _numpy_topk(c_sdf, q_sdf, k, vec_col, id_col, qid, round_to) -> LazyFrame:
     import numpy as np
     import pandas as pd
 
-    qrows = q_sdf.select(qid, vec_col).collect()
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    Q = np.array([list(r[1]) for r in qrows], dtype=np.float64)
-    q_norms = np.sqrt((Q * Q).sum(axis=1))
-    bc = c_sdf.sparkSession.sparkContext.broadcast((q_ids, Q, q_norms))
+    get_queries = _ship_matrix(q_sdf, qid, vec_col, "cosine_topk")
     # Corpus batches are scored in row chunks so the (rows x nq) score block
     # stays ~32 MB regardless of query-set size; in-place divide/round keeps
     # values bit-identical to round(dot / (cn*qn), r).  Emitting per-chunk
@@ -138,7 +149,7 @@ def _numpy_topk(c_sdf, q_sdf, k, vec_col, id_col, qid, round_to) -> LazyFrame:
     CHUNK_ELEMS = 4_000_000
 
     def gen(it):
-        q_ids_b, Qb, qn = bc.value
+        q_ids_b, Qb, qn = get_queries()
         nq = len(q_ids_b)
         chunk_rows = max(256, CHUNK_ELEMS // max(nq, 1))
         for pdf in it:
@@ -838,9 +849,9 @@ def embedding_threshold_join(
     :func:`~.dedup.embedding_near_dup_pairs`).
 
     method='numpy' (auto when the RIGHT side fits ``broadcast_limit``):
-    broadcast the right id/vector matrix; each executor scores its left
-    Arrow batches with chunked BLAS matmuls and emits only passing pairs —
-    left never shuffles, right ships once.
+    ship the right id/vector matrix to the workers (``_bounded.ship``);
+    each executor scores its left Arrow batches with chunked BLAS matmuls
+    and emits only passing pairs — left never shuffles.
 
     method='bucketed' (auto above the limit — the both-sides-huge path):
     shared random-hyperplane buckets on both frames, equi-join on
@@ -865,15 +876,11 @@ def embedding_threshold_join(
         import numpy as np
         import pandas as pd
 
-        rows = rsdf.select(right_id, vec_col).collect()
-        ids = np.array([r[0] for r in rows], dtype=np.int64)
-        M = np.array([list(r[1]) for r in rows], dtype=np.float64)
-        norms = np.sqrt((M * M).sum(axis=1))
-        bc = lsdf.sparkSession.sparkContext.broadcast((ids, M, norms))
+        get_right = _ship_matrix(rsdf, right_id, vec_col, "embedding_threshold_join")
         CHUNK = 8192
 
         def gen(it):
-            b_ids, b_M, b_norms = bc.value
+            b_ids, b_M, b_norms = get_right()
             n_r = b_ids.shape[0]
             for pdf in it:
                 if pdf.empty:
@@ -1179,13 +1186,6 @@ def pq_recall_frame(
 
 
 __all__.extend(["pq_init_codebooks", "pq_train", "pq_encode", "pq_topk", "pq_recall_frame"])
-
-
-def _cent_row_frame(spark, centroids):
-    """Coarse centroids as ONE broadcast row (array<array<double>>) — same
-    constant-plan-size rationale as _pq_cb_frame."""
-    cv = [[float(x) for x in c] for c in centroids]
-    return spark.createDataFrame([(cv,)], "__cent__ array<array<double>>")
 
 
 def _ivfpq_aux_frame(spark, centroids, codebooks):

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame as SparkDF, Window
 from pyspark.sql import functions as F
 
+from .._bounded import bounded, ship
 from ..frame import LazyFrame
 from ..session import scoped_checkpoint_dir
 
@@ -59,6 +60,23 @@ def build_vocab(
     return LazyFrame(out)
 
 
+def _ship_vocab(vdf: SparkDF, operator: str):
+    """Collect a (term, token_id) frame into the term -> token_id map the
+    encoders read (a duplicate term keeps its smallest id, null ids are
+    skipped) and ship it (``_bounded.ship``).  Returns ``(get_vmap,
+    tid_type)``: the worker-side getter and the id's SQL type, ``"int"``
+    unless token_id is ``bigint``."""
+    vmap: dict = {}
+    for r in vdf.select("term", "token_id").collect():
+        t, i = r["term"], r["token_id"]
+        if i is not None and (t not in vmap or i < vmap[t]):
+            vmap[t] = int(i)
+    tid_type = vdf.schema["token_id"].dataType.simpleString()
+    if tid_type not in ("int", "bigint"):
+        tid_type = "int"
+    return ship(vdf.sparkSession.sparkContext, vmap, operator), tid_type
+
+
 def encode_tokens_frame(
     frame: "LazyFrame | SparkDF",
     vocab: "LazyFrame | SparkDF",
@@ -81,14 +99,7 @@ def encode_tokens_frame(
     a user vocab resolves to its smallest token_id."""
     sdf = frame if isinstance(frame, SparkDF) else frame.spark
     vdf = vocab if isinstance(vocab, SparkDF) else vocab.spark
-    vmap: dict = {}
-    for r in vdf.select("term", "token_id").collect():
-        t, i = r["term"], r["token_id"]
-        if i is not None and (t not in vmap or i < vmap[t]):
-            vmap[t] = int(i)
-    tid_type = vdf.schema["token_id"].dataType.simpleString()
-    if tid_type not in ("int", "bigint"):
-        tid_type = "int"
+    get_vmap, tid_type = _ship_vocab(vdf, "encode_tokens_frame")
     from .._spread import spread_plain_scan
 
     staged = sdf.select(F.col(id_col).alias("__id__"), _words(text_col).alias("__ws__"))
@@ -96,16 +107,12 @@ def encode_tokens_frame(
     id_type = staged.schema["__id__"].dataType.simpleString()
     drop_oov = oov_id is None
     oov = None if drop_oov else int(oov_id)
-    # torrent-broadcast the vocab once per executor instead of shipping the
-    # closure-captured dict with every serialized task (it is the same
-    # bounded object either way, but a closure rides each task launch)
-    bc_vmap = sdf.sparkSession.sparkContext.broadcast(vmap)
 
     def _enc(batches):
         import pyarrow as pa
 
         elem = pa.int32() if tid_type == "int" else pa.int64()
-        vmap = bc_vmap.value
+        vmap = get_vmap()
         get = vmap.get
         for batch in batches:
             toks_in = batch.column(1).to_pylist()
@@ -184,7 +191,7 @@ def train_bpe(
     end_of_word: str = "</w>",
     checkpoint_every: int = 8,
     checkpoint_dir: str | None = None,
-    driver_threshold: int = 65_536,
+    driver_threshold: "int | None" = None,
 ) -> LazyFrame:
     """Byte-pair-encoding MERGE TABLE learned from the corpus: the standard
     BPE trainer (Sennrich et al. 2016) run distributed.  Returns
@@ -208,15 +215,17 @@ def train_bpe(
     pair's count falls below ``min_pair_count`` (merging hapax pairs only
     memorizes noise).
 
-    Driver fast-path (the bradley_terry pattern): after the one
-    corpus-sized word-count aggregate, when the DISTINCT vocabulary is ≤
-    ``driver_threshold`` rows the (word, cnt) table collects and the merge
-    loop runs in plain Python with identical semantics — num_merges
-    sequential Spark jobs over a small cached table are pure scheduler
-    overhead (measured 8.3 s → <1 s for 10 merges on a 31-word corpus).
-    Web-scale corpora (raw vocabularies of 10^8–10^9 words) exceed the
-    threshold and take the distributed loop; pass ``driver_threshold=0``
-    to force it.
+    Driver fast-path (the bradley_terry pattern): the word-count table is
+    persisted through the cache registry and counted once
+    (``_bounded.bounded``); when the DISTINCT vocabulary is ≤
+    ``driver_threshold`` rows (default ``None`` = ``_bounded.BOUND`` =
+    65,536) the table collects and the merge loop runs in plain Python
+    with identical semantics — num_merges sequential Spark jobs over a
+    small cached table are pure scheduler overhead (measured 8.3 s → <1 s
+    for 10 merges on a 31-word corpus).  Web-scale corpora (raw
+    vocabularies of 10^8–10^9 words) exceed the threshold and take the
+    distributed loop; pass ``driver_threshold=0`` to force it for any
+    non-empty corpus.
 
     Greedy left-to-right merge semantics within a word ("aaa" under (a,a)
     → ["aa","a"]), matching the reference implementation; ``end_of_word``
@@ -230,14 +239,12 @@ def train_bpe(
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    if driver_threshold:
-        wc.persist()
-        n_vocab = wc.count()  # the one corpus-sized job either way
-        if n_vocab <= int(driver_threshold):
-            rows = wc.collect()  # reads the cache
-            wc.unpersist()
-            merges = _train_bpe_driver(rows, num_merges, min_pair_count, end_of_word)
-            return LazyFrame(spark.createDataFrame(merges, schema=schema))
+    # the count is the one corpus-sized job either way, and both paths then
+    # read the registered cache
+    wc, _, small = bounded(wc, "train_bpe", driver_threshold)
+    if small:
+        merges = _train_bpe_driver(wc.collect(), num_merges, min_pair_count, end_of_word)
+        return LazyFrame(spark.createDataFrame(merges, schema=schema))
     # with-block: restore the previous checkpoint dir on ALL exit paths,
     # including a mid-merge exception (r7 ADVICE)
     with scoped_checkpoint_dir(spark.sparkContext, checkpoint_dir):
@@ -305,8 +312,6 @@ def train_bpe(
         vocab.unpersist()
         if prev is not None:
             prev.unpersist()
-        if driver_threshold:
-            wc.unpersist()
 
     out = spark.createDataFrame(merges, schema=schema)
     return LazyFrame(out)
@@ -327,7 +332,7 @@ def bpe_encode_frame(
     Scale design: the Python stage touches DISTINCT WORDS ONLY.  Words
     posexplode map-side, dedupe to the vocabulary, an Arrow-batched
     pandas_udf (never per-row Python) encodes each distinct word once with
-    the broadcast merge ranks, and the corpus reassembles through a plain
+    the shipped merge ranks, and the corpus reassembles through a plain
     word-keyed equi-join + one id-keyed shuffle (same shape as
     encode_tokens_frame).  Encoding work is O(vocab · merge depth), not
     O(corpus).
@@ -348,13 +353,13 @@ def bpe_encode_frame(
     mdf = merges if isinstance(merges, SparkDF) else merges.spark
     rank_rows = mdf.select("rank", "left", "right").collect()
     ranks = {(row["left"], row["right"]): int(row["rank"]) for row in rank_rows}
-    bc = sdf.sparkSession.sparkContext.broadcast(ranks)
+    get_ranks = ship(sdf.sparkSession.sparkContext, ranks, "bpe_encode_frame")
     eow = end_of_word
 
     # no type hints: `from __future__ import annotations` stringifies them
     # and pyspark's hint parser can't resolve the function-local pd import
     def _encode(words):
-        table = bc.value
+        table = get_ranks()
 
         def enc(word):
             # reference semantics: find the lowest-rank pair present, merge

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame as SparkDF, Window
 from pyspark.sql import functions as F
 
+from .._bounded import bounded
 from ..frame import LazyFrame
 
 __all__ = [
@@ -1284,8 +1285,6 @@ def _km_curve(
     )
     small = False
     if not keys:
-        from .._bounded import bounded
-
         grp, _n, small = bounded(grp, "survival_curve")
     if keys or small:
         wtot = Window.partitionBy(*keys)

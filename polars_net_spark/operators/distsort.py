@@ -58,6 +58,8 @@ import math
 from pyspark.sql import Column, DataFrame as SparkDF, Window
 from pyspark.sql import functions as F
 
+from .._bounded import bounded, record
+
 __all__ = [
     "with_range_buckets",
     "with_prefix_folds",
@@ -394,11 +396,9 @@ def cell_ranks(
     attach = ranked.select(
         *[F.col(c).alias(f"__cr_{c}__") for c in jcols], *out_cols
     )
-    if broadcast_threshold is not None:
-        n_cells = cells.count()
-        if n_cells <= int(broadcast_threshold):
-            attach = F.broadcast(attach)
-    else:
+    if broadcast_threshold is None or record(
+        "cell_ranks", cells.count(), broadcast_threshold
+    ):
         attach = F.broadcast(attach)
     cond = None
     for c in jcols:
@@ -527,7 +527,6 @@ def exact_quantiles(
     continuous (all-distinct) columns that are stay on distsort.
     """
     _check_probs(probs)
-    from .._bounded import bounded
 
     c = F.col(col).cast("double") if isinstance(col, str) else col.cast("double")
     base = sdf.select(c.alias("__v__")).filter(F.col("__v__").isNotNull())
@@ -563,7 +562,6 @@ def exact_quantiles_multi(
     and recorded as an ``exact_quantiles_multi`` decision.  Returns
     {name: [quantile per prob]}."""
     _check_probs(probs)
-    from .._bounded import record
     from .._cache import register_cache
 
     names = list(cols)

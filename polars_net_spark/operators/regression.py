@@ -12,6 +12,7 @@ import math
 from pyspark.sql import Column, DataFrame as SparkDF, Window
 from pyspark.sql import functions as F
 
+from .._bounded import bounded, record
 from ..frame import LazyFrame
 from ..session import scoped_checkpoint_dir
 
@@ -1319,7 +1320,7 @@ def ipf_weights(
     # and ROUNDING stay Spark expressions on the result frame, so the
     # output convention (F.round HALF_UP) is bit-identical.  The
     # distributed path remains for web-scale category grids.
-    if len(row_targets) * len(col_targets) <= 4096:
+    if record("ipf_weights", len(row_targets) * len(col_targets), 4096):
         erows = [
             (r["__r__"], r["__c__"], int(r["n"]), float(r["__tr__"]), float(r["__tc__"]))
             for r in cells.collect()
@@ -1916,7 +1917,6 @@ def median_ci(
     Output (1 row): n, median, ci_lo, ci_hi, z."""
     import math
 
-    from .._bounded import bounded
     from .distsort import with_bucket_offsets
 
     sdf = _sdf(frame)
@@ -3035,7 +3035,6 @@ def pettitt_test(
     (ties+1)/2) joined back on the value, then the U scan rides a second
     distsort pass keyed on time — no data-sized window, no self-join.
     Output (1 row): split_at, u_stat, k_stat, n, p_value."""
-    from .._bounded import bounded
     from .distsort import with_bucket_offsets
 
     sdf = _sdf(frame)

@@ -1,22 +1,47 @@
-"""Branch parity for the one bound guard (polars_net_spark._bounded).
+"""Branch parity for the one bound guard and the one ship helper
+(polars_net_spark._bounded).
 
-Each operator behind the guard runs twice on the same input: once with
-``_bounded.BOUND`` at its default (the single-task / driver path for these
-small inputs) and once forced to the distsort path.  Rows must be identical
+Each operator behind the guard runs twice on the same input: once with the
+bound at its default (the single-task / driver path for these small
+inputs) and once forced to the distributed path.  Rows must be identical
 after the operator's own rounding, an input that one path rejects must be
 rejected by the other, and each call must record exactly one decision with
 the path the rule implies.  The small-input tests elsewhere reach only the
-bounded path, so this module is what keeps the distsort side covered.
+bounded path, so this module is what keeps the distributed side covered.
+The same holds for the sites that ship a driver-side object to the
+workers: in the task closure by default, as a broadcast when
+``_bounded.SHIP_BYTES`` is forced to 0.
 """
 
 import math
+import pickle
 
 import pytest
+from pyspark import Broadcast
 
-from polars_net_spark import _bounded
+from polars_net_spark import _bounded, _cache, release_caches
+from polars_net_spark.llm.chunking import build_sft_examples
+from polars_net_spark.llm.dedup import (
+    containment_pairs,
+    dedup_clusters,
+    embedding_near_dup_pairs,
+)
+from polars_net_spark.llm.preference import bradley_terry
+from polars_net_spark.llm.quality import bigram_logprob_frame
+from polars_net_spark.llm.similarity import cosine_topk, embedding_threshold_join
+from polars_net_spark.llm.vocab import (
+    bpe_encode_frame,
+    build_vocab,
+    encode_tokens_frame,
+    train_bpe,
+)
 from polars_net_spark.operators.analytics import rmst, survival_curve
-from polars_net_spark.operators.distsort import exact_quantiles, exact_quantiles_multi
-from polars_net_spark.operators.regression import median_ci, pettitt_test
+from polars_net_spark.operators.distsort import (
+    cell_ranks,
+    exact_quantiles,
+    exact_quantiles_multi,
+)
+from polars_net_spark.operators.regression import ipf_weights, median_ci, pettitt_test
 
 NAN, INF = float("nan"), float("inf")
 DEFAULT_BOUND = _bounded.BOUND
@@ -102,7 +127,7 @@ def test_both_sides_of_the_bound_agree(spark, monkeypatch, op, fixture):
 
     assert rec_small["path"] == "bounded"
     assert rec_small["bound"] == DEFAULT_BOUND
-    assert rec_big["path"] == "distsort"
+    assert rec_big["path"] == "distributed"
     assert rec_big["bound"] == forced
     assert rec_small["n"] == rec_big["n"]
     assert big == small
@@ -136,8 +161,246 @@ def test_explicit_driver_threshold_still_wins(spark):
     assert [
         (d["operator"], d["path"], d["n"], d["bound"]) for d in _bounded.decisions()
     ] == [
-        ("exact_quantiles", "distsort", 10, 0),
-        ("exact_quantiles_multi", "distsort", 10, 5),
+        ("exact_quantiles", "distributed", 10, 0),
+        ("exact_quantiles_multi", "distributed", 10, 5),
         ("exact_quantiles_multi", "bounded", 3, 5),
-        ("pettitt_test", "distsort", 10, 0),
+        ("pettitt_test", "distributed", 10, 0),
     ]
+
+
+# ---------------------------------------------------------------------------
+# sites that keep their own decision and only record it
+
+
+def _records(operator):
+    return [d for d in _bounded.decisions() if d["operator"] == operator]
+
+
+def test_recorded_sites_log_one_decision_per_call(spark):
+    cells = spark.createDataFrame(
+        [("a", 1.0), ("a", 1.0), ("a", 2.0), ("b", 5.0)], "k string, v double"
+    )
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps"), (2, "the quick brown fox jumps over it"),
+         (3, "nothing in common here")],
+        "doc_id long, text string",
+    )
+    raking = spark.createDataFrame(
+        [("a", "x"), ("a", "y"), ("b", "x"), ("b", "y"), ("b", "y")], "r string, c string"
+    )
+    calls = [
+        ("cell_ranks", lambda: cell_ranks(cells, "v", "k", broadcast_threshold=2),
+         ("distributed", 3, 2)),
+        ("cell_ranks", lambda: cell_ranks(cells, "v", "k", broadcast_threshold=3),
+         ("bounded", 3, 3)),
+        ("containment_pairs",
+         lambda: containment_pairs(docs, threshold=0.5, prefix_order="df", max_gram_df=5),
+         ("bounded", 10, 2_000_000)),
+        ("ipf_weights",
+         lambda: ipf_weights(raking, "r", "c", {"a": 0.5, "b": 0.5}, {"x": 0.5, "y": 0.5}),
+         ("bounded", 4, 4096)),
+    ]
+    for operator, call, expected in calls:
+        _bounded.clear_decisions()
+        call().collect()
+        recs = _records(operator)
+        assert [(d["path"], d["n"], d["bound"]) for d in recs] == [expected], operator
+    _bounded.clear_decisions()
+
+
+# ---------------------------------------------------------------------------
+# ship: every site, closure and broadcast, before and after release
+
+_WORDS = "alpha beta gamma delta eps zeta eta theta iota kappa".split()
+DOCS = [
+    (i, " ".join(_WORDS[(i * k + k * k) % len(_WORDS)] for k in range(1 + i % 6)))
+    for i in range(40)
+]
+VECS = [
+    (i, [float((i * 7 + j * 3) % 5) + (0.0 if i % 3 else 1e-3 * j) for j in range(4)])
+    for i in range(30)
+]
+
+
+def _ship_sites(spark):
+    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
+    sft = spark.createDataFrame(
+        [(i, t, t[::-1]) for i, t in DOCS], "doc_id long, prompt string, response string"
+    )
+    vecs = spark.createDataFrame(VECS, "vec_id long, embedding array<double>")
+    vocab = build_vocab(docs, vocab_size=6)
+    merges = train_bpe(docs, num_merges=8)
+    return {
+        "encode_tokens_frame": lambda: encode_tokens_frame(docs, vocab),
+        "bpe_encode_frame": lambda: bpe_encode_frame(docs, merges),
+        "build_sft_examples": lambda: build_sft_examples(sft, vocab),
+        "bigram_logprob_frame": lambda: bigram_logprob_frame(docs, vocab_size=5),
+        "cosine_topk": lambda: cosine_topk(vecs, vecs.limit(7), k=3, method="numpy"),
+        "embedding_threshold_join": lambda: embedding_threshold_join(
+            vecs, vecs.limit(9), threshold=0.9, method="numpy"
+        ),
+        "embedding_near_dup_pairs": lambda: embedding_near_dup_pairs(
+            vecs, threshold=0.9, method="numpy"
+        ),
+    }
+
+
+SHIP_SITES = sorted(
+    [
+        "encode_tokens_frame",
+        "bpe_encode_frame",
+        "build_sft_examples",
+        "bigram_logprob_frame",
+        "cosine_topk",
+        "embedding_threshold_join",
+        "embedding_near_dup_pairs",
+    ]
+)
+
+
+def _broadcasts():
+    return sum(isinstance(h, Broadcast) for h in _cache._CACHES)
+
+
+def _ship_run(monkeypatch, ship_bytes, operator, build):
+    monkeypatch.setattr(_bounded, "SHIP_BYTES", ship_bytes)
+    release_caches()
+    _bounded.clear_decisions()
+    lf = build()
+    shipped = _broadcasts()
+    rows = _canon(lf.collect().rows())
+    recs = _records(operator)
+    assert len(recs) == 1, recs
+    release_caches()  # unpersists a broadcast: the plan fetches it again
+    assert _canon(lf.collect().rows()) == rows
+    return rows, recs[0], shipped
+
+
+@pytest.mark.parametrize("site", SHIP_SITES)
+def test_ship_paths_agree(spark, monkeypatch, site):
+    build = _ship_sites(spark)[site]
+    closure, rec_c, bc_c = _ship_run(monkeypatch, _bounded.SHIP_BYTES, site, build)
+    broadcast, rec_b, bc_b = _ship_run(monkeypatch, 0, site, build)
+    assert closure and closure == broadcast
+    assert (rec_c["path"], rec_c["bound"], bc_c) == ("bounded", 1 << 20, 0)
+    assert (rec_b["path"], rec_b["bound"], bc_b) == ("distributed", 0, 1)
+    assert 0 < rec_b["n"] and rec_c["n"] <= 1 << 20
+
+
+def test_ship_stops_measuring_past_the_bound(spark, monkeypatch):
+    obj = [str(i) for i in range(200_000)]
+    full = len(pickle.dumps(obj, protocol=pickle.HIGHEST_PROTOCOL))
+    monkeypatch.setattr(_bounded, "SHIP_BYTES", 1000)
+    _bounded.clear_decisions()
+    get = _bounded.ship(spark.sparkContext, obj, "probe")
+    (rec,) = _records("probe")
+    assert rec["path"] == "distributed" and 1000 < rec["n"] < full // 4
+    assert _broadcasts() >= 1 and get() == obj
+    release_caches()
+    _bounded.clear_decisions()
+
+
+def test_ship_measures_large_numpy_buffers(spark):
+    """Protocol-5 pickles hand large array buffers to the sink out of the
+    frame; both sides of the 1 MiB bound must be measured."""
+    import numpy as np
+
+    small, large = np.arange(100_000.0), np.arange(300_000.0)  # 0.8 / 2.4 MB
+    _bounded.clear_decisions()
+    for arr in (small, large):
+        assert np.array_equal(_bounded.ship(spark.sparkContext, (arr,), "probe")()[0], arr)
+    recs = _records("probe")
+    assert [d["path"] for d in recs] == ["bounded", "distributed"]
+    assert small.nbytes < recs[0]["n"] < small.nbytes + 1000
+    assert recs[1]["n"] > 1 << 20
+    release_caches()
+    _bounded.clear_decisions()
+
+
+def test_q161_shaped_vocab_ships_in_the_closure(spark, monkeypatch):
+    """A 50-term vocabulary rides in the task closure: one bounded decision,
+    nothing registered, no broadcast created."""
+    sc = spark.sparkContext
+    created = []
+    real = type(sc).broadcast
+    monkeypatch.setattr(
+        type(sc), "broadcast", lambda self, v: created.append(v) or real(self, v)
+    )
+    docs = spark.createDataFrame(
+        [(i, " ".join(f"w{(i * k) % 97}" for k in range(12))) for i in range(120)],
+        "doc_id long, text string",
+    )
+    vocab = build_vocab(docs, vocab_size=50)
+    release_caches()
+    _bounded.clear_decisions()
+    out = encode_tokens_frame(docs, vocab).collect()
+    assert out.height == 120
+    (rec,) = _records("encode_tokens_frame")
+    assert rec["path"] == "bounded" and rec["bound"] == 1 << 20
+    assert _cache.cached_count() == 0
+    assert created == []
+
+
+# ---------------------------------------------------------------------------
+# the driver-or-distributed iterative fits, both sides on the same inputs
+
+PAIRS = {
+    "empty": [],
+    "one_row": [(1, 2)],
+    "all_ties": [(1, 2)] * 5 + [(2, 1)] * 5,
+    "many": [(i % 150, (i * 7 + 3) % 150) for i in range(320) if i % 150 != (i * 7 + 3) % 150],
+}
+COMPARISONS = {
+    "empty": [],
+    "one_row": [("a", "b")],
+    "all_ties": [("a", "b"), ("b", "a"), ("b", "c"), ("c", "b"), ("a", "c"), ("c", "a")] * 4,
+    "many": [
+        (f"i{(i * 5) % 13}", f"i{(i * 3 + 1 + i % 4) % 13}")
+        for i in range(360)
+    ],
+}
+CORPORA = {
+    "empty": [],
+    "one_row": [(0, "low lower lowest")],
+    "all_ties": [(i, "abc def ghi") for i in range(3)],
+    "many": [(i, t) for i, t in DOCS * 8],
+}
+
+FITS = {
+    # name: (schema, fixtures, call(frame, **driver_threshold))
+    "dedup_clusters": (
+        "id_a long, id_b long",
+        PAIRS,
+        lambda d, **kw: dedup_clusters(d, **kw),
+    ),
+    "bradley_terry": (
+        "chosen string, rejected string",
+        COMPARISONS,
+        lambda d, **kw: bradley_terry(d, **kw),
+    ),
+    "train_bpe": (
+        "doc_id long, text string",
+        CORPORA,
+        lambda d, **kw: train_bpe(d, num_merges=6, **kw),
+    ),
+}
+
+
+@pytest.mark.parametrize("fixture", ["empty", "one_row", "all_ties", "many"])
+@pytest.mark.parametrize("operator", sorted(FITS))
+def test_driver_and_distributed_fits_agree(spark, operator, fixture):
+    schema, fixtures, call = FITS[operator]
+    data = fixtures[fixture]
+    sdf = spark.createDataFrame(data, schema)
+    # the public default keeps these inputs on the driver; 0 forces every
+    # non-empty input to the distributed path, the empty one needs -1
+    forced = {"driver_threshold": 0 if data else -1}
+    results = []
+    for kwargs, path in (({}, "bounded"), (forced, "distributed")):
+        _bounded.clear_decisions()
+        results.append(_canon(call(sdf, **kwargs).collect().rows()))
+        (rec,) = _records(operator)
+        assert rec["path"] == path
+    release_caches()
+    assert results[0] == results[1]
+    assert bool(results[0]) == bool(data)

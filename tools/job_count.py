@@ -1,6 +1,8 @@
 """Count Spark driver JOBS a gate submits (plus wall time): the direct
 evidence for driver-job-fusion optimizations, which never show in the final
-action's plan.
+action's plan.  Each gate's guard and ship decisions
+(``polars_net_spark._bounded.decisions()``) print next to its job count, so
+an A/B shows which path ran.
 
 Usage: python tools/job_count.py [-d SF_DIR] query [query ...]
 """
@@ -29,7 +31,7 @@ def main() -> None:
             i += 1
 
     import __spark_entry__ as e
-    from polars_net_spark import get_spark, release_caches
+    from polars_net_spark import _bounded, get_spark, release_caches
 
     spark = get_spark(app_name="job_count")
     sc = spark.sparkContext
@@ -42,14 +44,19 @@ def main() -> None:
         fn = qs[name]
         group = f"probe_{name}"
         sc.setJobGroup(group, name)
+        _bounded.clear_decisions()
         t0 = time.time()
         df = fn(spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
         dt = round(time.time() - t0, 3)
         sc.setJobGroup(None, None)
         jobs = sc.statusTracker().getJobIdsForGroup(group)
-        out[name] = {"jobs": len(jobs), "sec": dt}
-        print(f"{name}: {len(jobs)} jobs, {dt}s", file=sys.stderr)
+        paths = [
+            f"{d['operator']}={d['path']}(n={d['n']}, bound={d['bound']})"
+            for d in _bounded.decisions()
+        ]
+        out[name] = {"jobs": len(jobs), "sec": dt, "decisions": _bounded.decisions()}
+        print(f"{name}: {len(jobs)} jobs, {dt}s, {' '.join(paths) or '-'}", file=sys.stderr)
         release_caches()
     print(json.dumps(out))
 

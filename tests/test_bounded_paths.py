@@ -15,6 +15,7 @@ workers: in the task closure by default, as a broadcast when
 
 import math
 import pickle
+from functools import partial
 
 import pytest
 from pyspark import Broadcast
@@ -235,9 +236,9 @@ def _ship_sites(spark):
         "bpe_encode_frame": lambda: bpe_encode_frame(docs, merges),
         "build_sft_examples": lambda: build_sft_examples(sft, vocab),
         "bigram_logprob_frame": lambda: bigram_logprob_frame(docs, vocab_size=5),
-        "cosine_topk": lambda: cosine_topk(vecs, vecs.limit(7), k=3, method="numpy"),
+        "cosine_topk": lambda: cosine_topk(vecs, vecs.filter("vec_id < 7"), k=3, method="numpy"),
         "embedding_threshold_join": lambda: embedding_threshold_join(
-            vecs, vecs.limit(9), threshold=0.9, method="numpy"
+            vecs, vecs.filter("vec_id < 9"), threshold=0.9, method="numpy"
         ),
         "embedding_near_dup_pairs": lambda: embedding_near_dup_pairs(
             vecs, threshold=0.9, method="numpy"
@@ -245,17 +246,15 @@ def _ship_sites(spark):
     }
 
 
-SHIP_SITES = sorted(
-    [
-        "encode_tokens_frame",
-        "bpe_encode_frame",
-        "build_sft_examples",
-        "bigram_logprob_frame",
-        "cosine_topk",
-        "embedding_threshold_join",
-        "embedding_near_dup_pairs",
-    ]
-)
+SHIP_SITES = [
+    "bigram_logprob_frame",
+    "bpe_encode_frame",
+    "build_sft_examples",
+    "cosine_topk",
+    "embedding_near_dup_pairs",
+    "embedding_threshold_join",
+    "encode_tokens_frame",
+]
 
 
 def _broadcasts():
@@ -348,41 +347,26 @@ PAIRS = {
     "empty": [],
     "one_row": [(1, 2)],
     "all_ties": [(1, 2)] * 5 + [(2, 1)] * 5,
-    "many": [(i % 150, (i * 7 + 3) % 150) for i in range(320) if i % 150 != (i * 7 + 3) % 150],
+    "many": [(i % 150, (i * 7 + 3) % 150) for i in range(320)],
 }
 COMPARISONS = {
     "empty": [],
     "one_row": [("a", "b")],
     "all_ties": [("a", "b"), ("b", "a"), ("b", "c"), ("c", "b"), ("a", "c"), ("c", "a")] * 4,
-    "many": [
-        (f"i{(i * 5) % 13}", f"i{(i * 3 + 1 + i % 4) % 13}")
-        for i in range(360)
-    ],
+    "many": [(f"i{(i * 5) % 13}", f"i{(i * 3 + 1 + i % 4) % 13}") for i in range(360)],
 }
 CORPORA = {
     "empty": [],
     "one_row": [(0, "low lower lowest")],
     "all_ties": [(i, "abc def ghi") for i in range(3)],
-    "many": [(i, t) for i, t in DOCS * 8],
+    "many": DOCS * 8,
 }
 
 FITS = {
     # name: (schema, fixtures, call(frame, **driver_threshold))
-    "dedup_clusters": (
-        "id_a long, id_b long",
-        PAIRS,
-        lambda d, **kw: dedup_clusters(d, **kw),
-    ),
-    "bradley_terry": (
-        "chosen string, rejected string",
-        COMPARISONS,
-        lambda d, **kw: bradley_terry(d, **kw),
-    ),
-    "train_bpe": (
-        "doc_id long, text string",
-        CORPORA,
-        lambda d, **kw: train_bpe(d, num_merges=6, **kw),
-    ),
+    "dedup_clusters": ("id_a long, id_b long", PAIRS, dedup_clusters),
+    "bradley_terry": ("chosen string, rejected string", COMPARISONS, bradley_terry),
+    "train_bpe": ("doc_id long, text string", CORPORA, partial(train_bpe, num_merges=6)),
 }
 
 

@@ -18,28 +18,23 @@ expensive upstream the CollectLimit plan re-scans it, and the cached count
 costs the same single pass the consumer needs anyway.
 
 ``ship`` gets a driver-side object (a vocabulary dict, a model table, a
-matrix) to the worker code.  It measures the object's pickled size,
-stopping once the size passes ``SHIP_BYTES`` = 1 MiB.  At or below it the
-object travels in the task closure.  1 MiB is Spark's default
-``spark.broadcast.UDFCompressionThreshold``: a pickled Python command
-above it is broadcast by PySpark anyway, and unpickled again by every
-task, whereas an explicit broadcast is loaded once per worker.  So above
-1 MiB ``ship`` calls ``sc.broadcast`` and registers the handle with the
-cache registry: ``release_caches()`` / ``scoped_caches()`` unpersist it
-(never destroy it), so a released plan that runs again fetches the value
-from the driver again.  Either way the caller gets a zero-argument getter
-that the worker code calls.
+matrix) to the worker code as a broadcast, which each worker fetches once
+instead of unpickling it with every task.  The handle is registered with
+the cache registry, so ``release_caches()`` / ``scoped_caches()``
+unpersist it (never destroy it): a released plan that runs again fetches
+the value from the driver again.  The caller gets a zero-argument getter
+that the worker code calls.  Small objects are not sent in the task
+closure instead: no measured workload showed that path winning.
 
 Each decision is appended to a bounded in-memory record, read with
 ``decisions()``, as ``{operator, path, n, bound}``; ``path`` is
-``"bounded"`` (the single-task, driver-side or closure form) or
-``"distributed"``, and ``n`` is a row count, except for ``ship``, where it
-is bytes.
+``"bounded"`` (the single-task or driver-side form) or ``"distributed"``.
+A bound of 0 forces the distributed path for every input, the empty one
+included.
 """
 
 from __future__ import annotations
 
-import pickle
 from collections import deque
 from typing import Any, Callable, NamedTuple
 
@@ -48,17 +43,13 @@ from pyspark.sql import DataFrame as SparkDF
 from ._cache import _CACHES, register_cache
 
 __all__ = [
-    "BOUND", "SHIP_BYTES", "Guarded", "bounded", "ship", "record", "decisions",
+    "BOUND", "Guarded", "bounded", "ship", "record", "decisions",
     "clear_decisions",
 ]
 
 # rows one task may sort or the driver may collect: the same 65,536 that
 # bounds the train_bpe artifact
 BOUND = 65_536
-
-# pickled bytes an object may add to every task closure (see the module
-# docstring for why this is Spark's UDFCompressionThreshold)
-SHIP_BYTES = 1 << 20
 
 _DECISIONS: "deque[dict]" = deque(maxlen=1024)
 
@@ -79,36 +70,9 @@ def bounded(sdf: SparkDF, operator: str, bound: "int | None" = None) -> Guarded:
     return Guarded(cached, n, record(operator, n, bound))
 
 
-class _Oversize(Exception):
-    pass
-
-
-class _ByteCounter:
-    """A write-only pickle sink that counts bytes and gives up past ``limit``."""
-
-    def __init__(self, limit: int):
-        self.n, self.limit = 0, limit
-
-    def write(self, data) -> None:
-        self.n += memoryview(data).nbytes  # data may be a PickleBuffer
-        if self.n > self.limit:
-            raise _Oversize
-
-
-def ship(sc, obj: Any, operator: str) -> Callable[[], Any]:
-    """Return a zero-argument getter for ``obj`` that worker code calls.
-
-    Objects whose pickled size is at most ``SHIP_BYTES`` (read at call
-    time) ride in the task closure; larger ones are broadcast and the
-    handle is registered for ``release_caches()``."""
-    limit = SHIP_BYTES
-    sink = _ByteCounter(limit)
-    try:
-        pickle.Pickler(sink, protocol=pickle.HIGHEST_PROTOCOL).dump(obj)
-    except _Oversize:
-        pass
-    if record(operator, sink.n, limit):
-        return lambda: obj
+def ship(sc, obj: Any) -> Callable[[], Any]:
+    """Broadcast ``obj``, register the handle for ``release_caches()`` and
+    return a zero-argument getter for the worker code."""
     handle = sc.broadcast(obj)
     _CACHES.append(handle)
     return lambda: handle.value
@@ -120,9 +84,10 @@ def record(operator: str, n: int, bound: "int | None" = None) -> bool:
     ``operator`` and return whether ``n`` takes the bounded path.  For
     sites that count several inputs in one job, such as
     ``exact_quantiles_multi``'s per-column distinct counts, or whose size
-    is known without a job, such as ipf_weights' category grid."""
+    is known without a job, such as ipf_weights' category grid.  A bound
+    of 0 takes the distributed path even for ``n == 0``."""
     limit = BOUND if bound is None else int(bound)
-    small = n <= limit
+    small = limit != 0 and n <= limit
     _DECISIONS.append(
         {
             "operator": operator,

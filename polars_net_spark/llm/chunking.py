@@ -383,7 +383,7 @@ def build_sft_examples(
 
     sdf = frame if isinstance(frame, SparkDF) else frame.spark
     vdf = vocab if isinstance(vocab, SparkDF) else vocab.spark
-    get_vmap, tid_type = _ship_vocab(vdf, "build_sft_examples")
+    get_vmap, tid_type = _ship_vocab(vdf)
 
     def _w(c):
         w = F.split(F.lower(F.trim(F.coalesce(F.col(c), F.lit("")))), r"\s+")

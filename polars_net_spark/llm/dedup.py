@@ -635,11 +635,11 @@ def embedding_near_dup_pairs(
     """Embedding-cosine near-dup pairs (id_a < id_b, cosine >= threshold).
 
     method='numpy' (default when the table fits ``broadcast_limit`` rows):
-    ship the id/vector matrix (``_bounded.ship``), then every executor
-    scores its Arrow batches against it with one BLAS matmul and emits only
-    above-threshold pairs — the standard blocked all-pairs design.  Compute
-    is O(n²·d) either way, but the matmul path is ~10-50× faster than
-    per-pair expressions and shuffles nothing (output pairs only).
+    broadcast the id/vector matrix, then every executor scores its Arrow
+    batches against it with one BLAS matmul and emits only above-threshold
+    pairs — the standard blocked all-pairs design.  Compute is O(n²·d) either
+    way, but the matmul path is ~10-50× faster than per-pair expressions and
+    shuffles nothing (output pairs only).
 
     method='bucketed' (default ABOVE broadcast_limit — the 100 TB path):
     random-hyperplane LSH buckets (``num_planes``/``num_tables``, shared with
@@ -735,8 +735,8 @@ def _numpy_near_dup_pairs(sdf: SparkDF, vec_col, id_col, threshold, round_to) ->
 
     from .similarity import _ship_matrix
 
-    # the shipped side is bounded by the caller's broadcast_limit
-    get_matrix = _ship_matrix(sdf, id_col, vec_col, "embedding_near_dup_pairs")
+    # the broadcast side is bounded by the caller's broadcast_limit
+    get_matrix = _ship_matrix(sdf, id_col, vec_col)
     # Score the corpus in column chunks so peak per-task memory is one
     # (batch_rows x CHUNK) float64 block (~40 MB at 625x8192), not a full
     # (batch_rows x n) matrix — at broadcast_limit rows the unchunked block
@@ -860,8 +860,7 @@ def dedup_clusters(
     components are solved with a driver-side union-find over one collect —
     identical output (min reachable id), one job instead of rounds.  Above
     the threshold the distributed fixpoint runs unchanged.  Set
-    ``driver_threshold=0`` to force the distributed path for any non-empty
-    pair list.
+    ``driver_threshold=0`` to force the distributed path.
     """
     p = _sdf(pairs).select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     # strategy probe = count() of the cached edges frame.  This is not an

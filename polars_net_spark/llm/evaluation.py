@@ -963,6 +963,43 @@ def _grams_of(w, n: int):
     return g
 
 
+def _clipped_match(gh, gr):
+    """Clipped multiset overlap Σ_g min(count_h(g), count_r(g)) between two
+    gram-array columns, computed ROW-LOCALLY: both arrays merge into one
+    sorted (gram, h, r) struct array and a single run-length fold flushes
+    min(h_run, r_run) at each gram boundary — the rouge_n_frame technique
+    (zero Exchange, O((|h|+|r|)·log) per row).  Pass already-projected
+    columns: each side is referenced twice (transform + size at the call
+    sites), which keeps the CollapseProject barrier so Catalyst never
+    re-derives the gram arrays inside the lambdas."""
+    merged = F.array_sort(
+        F.concat(
+            F.transform(gh, lambda x: F.struct(x.alias("g"), F.lit(1).alias("h"), F.lit(0).alias("r"))),
+            F.transform(gr, lambda x: F.struct(x.alias("g"), F.lit(0).alias("h"), F.lit(1).alias("r"))),
+        )
+    )
+    return F.aggregate(
+        merged,
+        F.struct(
+            F.lit(None).cast("string").alias("prev"),
+            F.lit(0).alias("hc"), F.lit(0).alias("rc"), F.lit(0).alias("s"),
+        ),
+        lambda acc, x: F.when(
+            acc["prev"].isNull() | (x["g"] != acc["prev"]),
+            F.struct(
+                x["g"].alias("prev"), x["h"].alias("hc"), x["r"].alias("rc"),
+                (acc["s"] + F.least(acc["hc"], acc["rc"])).alias("s"),
+            ),
+        ).otherwise(
+            F.struct(
+                x["g"].alias("prev"), (acc["hc"] + x["h"]).alias("hc"),
+                (acc["rc"] + x["r"]).alias("rc"), acc["s"].alias("s"),
+            )
+        ),
+        lambda acc: (acc["s"] + F.least(acc["hc"], acc["rc"])).cast("long"),
+    )
+
+
 def _spread(sdf):
     """Repartition ONLY when the input is a plain scan chain with fewer
     partitions than the default parallelism — a single-file gate corpus
@@ -1211,6 +1248,45 @@ def rouge_n(
 
 
 __all__.extend(["bleu_corpus", "rouge_n"])
+
+
+def _char_grams(col_name: str, n: int):
+    """Character n-gram array of a string column by substring enumeration,
+    with the short-string guard: Spark's sequence(1, 0) DESCENDS ([1, 0]),
+    so a string shorter than n must return an empty array explicitly, not
+    ride greatest(len-n+1, 0) into spurious short grams (n=1 included:
+    an empty string would otherwise yield two '' grams)."""
+    return F.expr(
+        f"CASE WHEN char_length({col_name}) >= {n} THEN "
+        f"transform(sequence(1, char_length({col_name}) - {n} + 1), "
+        f"i -> substr({col_name}, i, {n})) "
+        f"ELSE array() END"
+    ).cast("array<string>")
+
+
+def _char_codes(col_name: str):
+    """Array of per-character codepoints (int) for a string column: ONE
+    split pass, not a substr per position.  Empty strings guard to an
+    empty array (split('', '') returns [''], whose ascii() of 0 would
+    fabricate a phantom character)."""
+    return F.expr(
+        f"CASE WHEN char_length({col_name}) > 0 THEN "
+        f"transform(split({col_name}, ''), ch -> ascii(ch)) "
+        f"ELSE array() END"
+    ).cast("array<int>")
+
+
+def _long_grams(codes, n: int):
+    """Packed-long character n-grams from a codepoint array: gram value =
+    Σ_j code_j·256^j over the n codes — EXACT (injective) for codepoints
+    < 256 at fixed n (n ≤ 7 keeps the value under 2^56).  Built by the
+    shifted-slice zip_with chain (the _grams_of construction) — integer
+    ops only, zero string allocation."""
+    ln = F.greatest(F.size(codes) - (n - 1), F.lit(0))
+    g = F.transform(F.slice(codes, 1, ln), lambda x: x.cast("long"))
+    for j in range(1, n):
+        g = F.zip_with(g, F.slice(codes, 1 + j, ln), lambda a, b: a * 256 + b)
+    return g
 
 
 def _clip_long(gh, gr):

@@ -146,7 +146,7 @@ def bradley_terry(
     result, an order of magnitude less wall (the dedup_clusters
     driver-path pattern, through ``_bounded.bounded``).  The distributed
     path remains for web-scale item spaces; set ``driver_threshold=0`` to
-    force it for any non-empty input.
+    force it.
 
     Output: (item, n_comparisons, wins, score) — score descending is the
     preference ranking."""

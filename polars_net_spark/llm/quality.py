@@ -480,7 +480,7 @@ def bigram_logprob_frame(
         (r["w1"], r["w2"]): int(r["__bc__"]) for r in bi_vocab.collect()
     }
     n_f = float(n_total) if n_total else 1.0
-    # ship the two model tables to the workers (_bounded.ship).
+    # broadcast the two model tables (_bounded.ship).
     # DRIVER-MEMORY BOUND: the bigram table is capped at vocab_size rows,
     # but the unigram table is the full corpus vocabulary — it grows
     # ~O(corpus^beta) under Heaps' law (beta ~ 0.5), i.e. a 100 TB corpus
@@ -489,9 +489,7 @@ def bigram_logprob_frame(
     # broadcast hash relation; beyond it, shard the unigram floor lookup
     # or raise spark.driver.memory — the backoff floor is part of the
     # declared result, so it cannot be silently truncated.
-    get_models = ship(
-        sdf.sparkSession.sparkContext, (uni_map, bi_map), "bigram_logprob_frame"
-    )
+    get_models = ship(sdf.sparkSession.sparkContext, (uni_map, bi_map))
 
     # the kernel emits the raw log-prob SUM; the mean's division and
     # F.round stay Spark expressions so the rounding convention (HALF_UP)

@@ -1,7 +1,7 @@
 """Similarity search over embedding columns (array<float>).
 
-- :func:`cosine_topk` — brute-force exact top-k: ship the (small) query
-  set to every corpus task; one pass, no shuffle of the corpus.  The baseline
+- :func:`cosine_topk` — brute-force exact top-k: broadcast the (small) query
+  set against the corpus; one pass, no shuffle of the corpus.  The baseline
   and the verifier for approximate methods.
 - :func:`lsh_bucket_topk` — random-hyperplane LSH: corpus and queries are
   bucketed by sign patterns; only same-bucket pairs are scored.  The scale
@@ -77,8 +77,7 @@ def cosine_topk(
     when ids collide).
 
     method='numpy' (default for query sets up to ``broadcast_limit``): the
-    query matrix is shipped to the workers (``_bounded.ship``); each
-    executor scores its corpus batches with
+    query matrix is broadcast; each executor scores its corpus batches with
     one BLAS matmul and emits only its per-batch top-k per query, so the final
     global window ranks ≤ k·n_batches candidates instead of |corpus|·|queries|
     pairs.  Corpus is scanned once, never shuffled — the design that holds at
@@ -123,24 +122,24 @@ def cosine_topk(
     return LazyFrame(out)
 
 
-def _ship_matrix(sdf: SparkDF, id_col: str, vec_col: str, operator: str):
+def _ship_matrix(sdf: SparkDF, id_col: str, vec_col: str):
     """Collect a bounded (id, vector) frame as ``(ids, M, norms)`` numpy
     arrays — int64 ids, the float64 (n, d) matrix and its row L2 norms —
-    and ship the tuple (``_bounded.ship``); returns the worker getter."""
+    and broadcast the tuple (``_bounded.ship``); returns the worker getter."""
     import numpy as np
 
     rows = sdf.select(id_col, vec_col).collect()
     ids = np.array([r[0] for r in rows], dtype=np.int64)
     M = np.array([list(r[1]) for r in rows], dtype=np.float64)
     norms = np.sqrt((M * M).sum(axis=1))
-    return ship(sdf.sparkSession.sparkContext, (ids, M, norms), operator)
+    return ship(sdf.sparkSession.sparkContext, (ids, M, norms))
 
 
 def _numpy_topk(c_sdf, q_sdf, k, vec_col, id_col, qid, round_to) -> LazyFrame:
     import numpy as np
     import pandas as pd
 
-    get_queries = _ship_matrix(q_sdf, qid, vec_col, "cosine_topk")
+    get_queries = _ship_matrix(q_sdf, qid, vec_col)
     # Corpus batches are scored in row chunks so the (rows x nq) score block
     # stays ~32 MB regardless of query-set size; in-place divide/round keeps
     # values bit-identical to round(dot / (cn*qn), r).  Emitting per-chunk
@@ -849,9 +848,9 @@ def embedding_threshold_join(
     :func:`~.dedup.embedding_near_dup_pairs`).
 
     method='numpy' (auto when the RIGHT side fits ``broadcast_limit``):
-    ship the right id/vector matrix to the workers (``_bounded.ship``);
-    each executor scores its left Arrow batches with chunked BLAS matmuls
-    and emits only passing pairs — left never shuffles.
+    broadcast the right id/vector matrix; each executor scores its left
+    Arrow batches with chunked BLAS matmuls and emits only passing pairs —
+    left never shuffles, right ships once.
 
     method='bucketed' (auto above the limit — the both-sides-huge path):
     shared random-hyperplane buckets on both frames, equi-join on
@@ -876,7 +875,7 @@ def embedding_threshold_join(
         import numpy as np
         import pandas as pd
 
-        get_right = _ship_matrix(rsdf, right_id, vec_col, "embedding_threshold_join")
+        get_right = _ship_matrix(rsdf, right_id, vec_col)
         CHUNK = 8192
 
         def gen(it):
@@ -1186,6 +1185,13 @@ def pq_recall_frame(
 
 
 __all__.extend(["pq_init_codebooks", "pq_train", "pq_encode", "pq_topk", "pq_recall_frame"])
+
+
+def _cent_row_frame(spark, centroids):
+    """Coarse centroids as ONE broadcast row (array<array<double>>) — same
+    constant-plan-size rationale as _pq_cb_frame."""
+    cv = [[float(x) for x in c] for c in centroids]
+    return spark.createDataFrame([(cv,)], "__cent__ array<array<double>>")
 
 
 def _ivfpq_aux_frame(spark, centroids, codebooks):

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame as SparkDF, Window
 from pyspark.sql import functions as F
 
 from .._bounded import bounded, ship
+from .._cache import scoped_caches
 from ..frame import LazyFrame
 from ..session import scoped_checkpoint_dir
 
@@ -60,10 +61,10 @@ def build_vocab(
     return LazyFrame(out)
 
 
-def _ship_vocab(vdf: SparkDF, operator: str):
+def _ship_vocab(vdf: SparkDF):
     """Collect a (term, token_id) frame into the term -> token_id map the
     encoders read (a duplicate term keeps its smallest id, null ids are
-    skipped) and ship it (``_bounded.ship``).  Returns ``(get_vmap,
+    skipped) and broadcast it (``_bounded.ship``).  Returns ``(get_vmap,
     tid_type)``: the worker-side getter and the id's SQL type, ``"int"``
     unless token_id is ``bigint``."""
     vmap: dict = {}
@@ -74,7 +75,7 @@ def _ship_vocab(vdf: SparkDF, operator: str):
     tid_type = vdf.schema["token_id"].dataType.simpleString()
     if tid_type not in ("int", "bigint"):
         tid_type = "int"
-    return ship(vdf.sparkSession.sparkContext, vmap, operator), tid_type
+    return ship(vdf.sparkSession.sparkContext, vmap), tid_type
 
 
 def encode_tokens_frame(
@@ -99,7 +100,7 @@ def encode_tokens_frame(
     a user vocab resolves to its smallest token_id."""
     sdf = frame if isinstance(frame, SparkDF) else frame.spark
     vdf = vocab if isinstance(vocab, SparkDF) else vocab.spark
-    get_vmap, tid_type = _ship_vocab(vdf, "encode_tokens_frame")
+    get_vmap, tid_type = _ship_vocab(vdf)
     from .._spread import spread_plain_scan
 
     staged = sdf.select(F.col(id_col).alias("__id__"), _words(text_col).alias("__ws__"))
@@ -224,8 +225,7 @@ def train_bpe(
     small cached table are pure scheduler overhead (measured 8.3 s → <1 s
     for 10 merges on a 31-word corpus).  Web-scale corpora (raw
     vocabularies of 10^8–10^9 words) exceed the threshold and take the
-    distributed loop; pass ``driver_threshold=0`` to force it for any
-    non-empty corpus.
+    distributed loop; pass ``driver_threshold=0`` to force it.
 
     Greedy left-to-right merge semantics within a word ("aaa" under (a,a)
     → ["aa","a"]), matching the reference implementation; ``end_of_word``
@@ -239,79 +239,84 @@ def train_bpe(
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    # the count is the one corpus-sized job either way, and both paths then
-    # read the registered cache
-    wc, _, small = bounded(wc, "train_bpe", driver_threshold)
-    if small:
-        merges = _train_bpe_driver(wc.collect(), num_merges, min_pair_count, end_of_word)
-        return LazyFrame(spark.createDataFrame(merges, schema=schema))
-    # with-block: restore the previous checkpoint dir on ALL exit paths,
-    # including a mid-merge exception (r7 ADVICE)
-    with scoped_checkpoint_dir(spark.sparkContext, checkpoint_dir):
-        # initial symbols: characters + the end-of-word marker.  Spark's split
-        # keeps trailing empties (limit -1) and "(?!^)" matches at end-of-string,
-        # so drop empty symbols explicitly.
-        chars = F.filter(F.split(F.col("word"), "(?!^)"), lambda s: F.length(s) > 0)
-        vocab = wc.select(
-            "cnt", F.concat(chars, F.array(F.lit(end_of_word))).alias("sym")
-        ).persist()
+    # the scope releases the registered word-count cache on return: the
+    # merge table is a local list and never reads it
+    with scoped_caches():
+        # the count is the one corpus-sized job either way, and both paths
+        # then read the registered cache
+        wc, _, small = bounded(wc, "train_bpe", driver_threshold)
+        if small:
+            merges = _train_bpe_driver(wc.collect(), num_merges, min_pair_count, end_of_word)
+            return LazyFrame(spark.createDataFrame(merges, schema=schema))
+        # with-block: restore the previous checkpoint dir on ALL exit paths,
+        # including a mid-merge exception (r7 ADVICE)
+        with scoped_checkpoint_dir(spark.sparkContext, checkpoint_dir):
+            # initial symbols: characters + the end-of-word marker.  Spark's split
+            # keeps trailing empties (limit -1) and "(?!^)" matches at end-of-string,
+            # so drop empty symbols explicitly.
+            chars = F.filter(F.split(F.col("word"), "(?!^)"), lambda s: F.length(s) > 0)
+            vocab = wc.select(
+                "cnt", F.concat(chars, F.array(F.lit(end_of_word))).alias("sym")
+            ).persist()
 
-        merges: list[tuple[int, str, str, int]] = []
-        prev = None
-        for r in range(int(num_merges)):
-            sym = F.col("sym")
-            lefts = F.slice(sym, 1, F.size(sym) - 1)
-            rights = F.slice(sym, 2, F.size(sym) - 1)
-            pairs = (
-                vocab.filter(F.size(sym) >= 2)
-                .select(
-                    "cnt",
-                    F.explode(
-                        F.zip_with(lefts, rights, lambda a, b: F.struct(a.alias("l"), b.alias("r")))
-                    ).alias("p"),
+            merges: list[tuple[int, str, str, int]] = []
+            prev = None
+            for r in range(int(num_merges)):
+                sym = F.col("sym")
+                lefts = F.slice(sym, 1, F.size(sym) - 1)
+                rights = F.slice(sym, 2, F.size(sym) - 1)
+                pairs = (
+                    vocab.filter(F.size(sym) >= 2)
+                    .select(
+                        "cnt",
+                        F.explode(
+                            F.zip_with(
+                                lefts, rights, lambda a, b: F.struct(a.alias("l"), b.alias("r"))
+                            )
+                        ).alias("p"),
+                    )
+                    .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
+                    .agg(F.sum("cnt").alias("c"))
                 )
-                .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-                .agg(F.sum("cnt").alias("c"))
-            )
-            # the argmax collect doubles as the job that fills vocab's cache —
-            # ONE job per iteration, no separate materialization pass
-            best = pairs.orderBy(F.col("c").desc(), F.col("l"), F.col("r")).first()
+                # the argmax collect doubles as the job that fills vocab's cache —
+                # ONE job per iteration, no separate materialization pass
+                best = pairs.orderBy(F.col("c").desc(), F.col("l"), F.col("r")).first()
+                if prev is not None:
+                    prev.unpersist()  # safe: vocab's cache is now populated
+                    prev = None
+                if best is None or best["c"] < min_pair_count:
+                    break
+                l, rr, c = best["l"], best["r"], int(best["c"])
+                merges.append((r, l, rr, c))
+                merged = l + rr
+                # greedy left-to-right fold: pop-and-replace when the running tail
+                # is `l` and the next symbol is `r`
+                fold = F.aggregate(
+                    sym,
+                    F.array().cast("array<string>"),
+                    lambda acc, s: F.when(
+                        (F.size(acc) > 0)
+                        & (F.element_at(acc, -1) == F.lit(l))
+                        & (s == F.lit(rr)),
+                        F.concat(
+                            F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(merged))
+                        ),
+                    ).otherwise(F.concat(acc, F.array(s))),
+                )
+                staged = vocab.select("cnt", fold.alias("sym"))
+                if checkpoint_every and (r + 1) % int(checkpoint_every) == 0:
+                    # lineage cut; both checkpoint flavors also store the data, so
+                    # no extra persist on these iterations
+                    new_vocab = (
+                        staged.checkpoint(eager=False) if checkpoint_dir is not None
+                        else staged.localCheckpoint(eager=False)
+                    )
+                else:
+                    new_vocab = staged.persist()
+                prev, vocab = vocab, new_vocab
+            vocab.unpersist()
             if prev is not None:
-                prev.unpersist()  # safe: vocab's cache is now populated
-                prev = None
-            if best is None or best["c"] < min_pair_count:
-                break
-            l, rr, c = best["l"], best["r"], int(best["c"])
-            merges.append((r, l, rr, c))
-            merged = l + rr
-            # greedy left-to-right fold: pop-and-replace when the running tail
-            # is `l` and the next symbol is `r`
-            fold = F.aggregate(
-                sym,
-                F.array().cast("array<string>"),
-                lambda acc, s: F.when(
-                    (F.size(acc) > 0)
-                    & (F.element_at(acc, -1) == F.lit(l))
-                    & (s == F.lit(rr)),
-                    F.concat(
-                        F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(merged))
-                    ),
-                ).otherwise(F.concat(acc, F.array(s))),
-            )
-            staged = vocab.select("cnt", fold.alias("sym"))
-            if checkpoint_every and (r + 1) % int(checkpoint_every) == 0:
-                # lineage cut; both checkpoint flavors also store the data, so
-                # no extra persist on these iterations
-                new_vocab = (
-                    staged.checkpoint(eager=False) if checkpoint_dir is not None
-                    else staged.localCheckpoint(eager=False)
-                )
-            else:
-                new_vocab = staged.persist()
-            prev, vocab = vocab, new_vocab
-        vocab.unpersist()
-        if prev is not None:
-            prev.unpersist()
+                prev.unpersist()
 
     out = spark.createDataFrame(merges, schema=schema)
     return LazyFrame(out)
@@ -332,7 +337,7 @@ def bpe_encode_frame(
     Scale design: the Python stage touches DISTINCT WORDS ONLY.  Words
     posexplode map-side, dedupe to the vocabulary, an Arrow-batched
     pandas_udf (never per-row Python) encodes each distinct word once with
-    the shipped merge ranks, and the corpus reassembles through a plain
+    the broadcast merge ranks, and the corpus reassembles through a plain
     word-keyed equi-join + one id-keyed shuffle (same shape as
     encode_tokens_frame).  Encoding work is O(vocab · merge depth), not
     O(corpus).
@@ -353,7 +358,7 @@ def bpe_encode_frame(
     mdf = merges if isinstance(merges, SparkDF) else merges.spark
     rank_rows = mdf.select("rank", "left", "right").collect()
     ranks = {(row["left"], row["right"]): int(row["rank"]) for row in rank_rows}
-    get_ranks = ship(sdf.sparkSession.sparkContext, ranks, "bpe_encode_frame")
+    get_ranks = ship(sdf.sparkSession.sparkContext, ranks)
     eow = end_of_word
 
     # no type hints: `from __future__ import annotations` stringifies them

@@ -8,13 +8,12 @@ after the operator's own rounding, an input that one path rejects must be
 rejected by the other, and each call must record exactly one decision with
 the path the rule implies.  The small-input tests elsewhere reach only the
 bounded path, so this module is what keeps the distributed side covered.
-The same holds for the sites that ship a driver-side object to the
-workers: in the task closure by default, as a broadcast when
-``_bounded.SHIP_BYTES`` is forced to 0.
+The sites that ship a driver-side object to the workers each register one
+broadcast, and a plan collected again after ``release_caches()`` gives the
+same rows.
 """
 
 import math
-import pickle
 from functools import partial
 
 import pytest
@@ -121,8 +120,8 @@ def test_both_sides_of_the_bound_agree(spark, monkeypatch, op, fixture):
     sdf = spark.createDataFrame(data, "t double, e int, v double")
     if fixture == "repartitioned":
         sdf = sdf.repartition(7)
-    # 0 sends every non-empty input to distsort; the empty input needs -1
-    forced = 0 if data else -1
+    # a bound of 0 sends every input to distsort, the empty one included
+    forced = 0
     small, rec_small = _run(monkeypatch, DEFAULT_BOUND, operator, call, sdf)
     big, rec_big = _run(monkeypatch, forced, operator, call, sdf)
 
@@ -210,7 +209,7 @@ def test_recorded_sites_log_one_decision_per_call(spark):
 
 
 # ---------------------------------------------------------------------------
-# ship: every site, closure and broadcast, before and after release
+# ship: every site registers one broadcast, before and after release
 
 _WORDS = "alpha beta gamma delta eps zeta eta theta iota kappa".split()
 DOCS = [
@@ -261,83 +260,17 @@ def _broadcasts():
     return sum(isinstance(h, Broadcast) for h in _cache._CACHES)
 
 
-def _ship_run(monkeypatch, ship_bytes, operator, build):
-    monkeypatch.setattr(_bounded, "SHIP_BYTES", ship_bytes)
-    release_caches()
-    _bounded.clear_decisions()
-    lf = build()
-    shipped = _broadcasts()
-    rows = _canon(lf.collect().rows())
-    recs = _records(operator)
-    assert len(recs) == 1, recs
-    release_caches()  # unpersists a broadcast: the plan fetches it again
-    assert _canon(lf.collect().rows()) == rows
-    return rows, recs[0], shipped
-
-
 @pytest.mark.parametrize("site", SHIP_SITES)
-def test_ship_paths_agree(spark, monkeypatch, site):
+def test_ship_sites_release_and_rerun(spark, site):
     build = _ship_sites(spark)[site]
-    closure, rec_c, bc_c = _ship_run(monkeypatch, _bounded.SHIP_BYTES, site, build)
-    broadcast, rec_b, bc_b = _ship_run(monkeypatch, 0, site, build)
-    assert closure and closure == broadcast
-    assert (rec_c["path"], rec_c["bound"], bc_c) == ("bounded", 1 << 20, 0)
-    assert (rec_b["path"], rec_b["bound"], bc_b) == ("distributed", 0, 1)
-    assert 0 < rec_b["n"] and rec_c["n"] <= 1 << 20
-
-
-def test_ship_stops_measuring_past_the_bound(spark, monkeypatch):
-    obj = [str(i) for i in range(200_000)]
-    full = len(pickle.dumps(obj, protocol=pickle.HIGHEST_PROTOCOL))
-    monkeypatch.setattr(_bounded, "SHIP_BYTES", 1000)
-    _bounded.clear_decisions()
-    get = _bounded.ship(spark.sparkContext, obj, "probe")
-    (rec,) = _records("probe")
-    assert rec["path"] == "distributed" and 1000 < rec["n"] < full // 4
-    assert _broadcasts() >= 1 and get() == obj
     release_caches()
-    _bounded.clear_decisions()
-
-
-def test_ship_measures_large_numpy_buffers(spark):
-    """Protocol-5 pickles hand large array buffers to the sink out of the
-    frame; both sides of the 1 MiB bound must be measured."""
-    import numpy as np
-
-    small, large = np.arange(100_000.0), np.arange(300_000.0)  # 0.8 / 2.4 MB
-    _bounded.clear_decisions()
-    for arr in (small, large):
-        assert np.array_equal(_bounded.ship(spark.sparkContext, (arr,), "probe")()[0], arr)
-    recs = _records("probe")
-    assert [d["path"] for d in recs] == ["bounded", "distributed"]
-    assert small.nbytes < recs[0]["n"] < small.nbytes + 1000
-    assert recs[1]["n"] > 1 << 20
-    release_caches()
-    _bounded.clear_decisions()
-
-
-def test_q161_shaped_vocab_ships_in_the_closure(spark, monkeypatch):
-    """A 50-term vocabulary rides in the task closure: one bounded decision,
-    nothing registered, no broadcast created."""
-    sc = spark.sparkContext
-    created = []
-    real = type(sc).broadcast
-    monkeypatch.setattr(
-        type(sc), "broadcast", lambda self, v: created.append(v) or real(self, v)
-    )
-    docs = spark.createDataFrame(
-        [(i, " ".join(f"w{(i * k) % 97}" for k in range(12))) for i in range(120)],
-        "doc_id long, text string",
-    )
-    vocab = build_vocab(docs, vocab_size=50)
-    release_caches()
-    _bounded.clear_decisions()
-    out = encode_tokens_frame(docs, vocab).collect()
-    assert out.height == 120
-    (rec,) = _records("encode_tokens_frame")
-    assert rec["path"] == "bounded" and rec["bound"] == 1 << 20
-    assert _cache.cached_count() == 0
-    assert created == []
+    lf = build()
+    assert _broadcasts() == 1
+    rows = _canon(lf.collect().rows())
+    assert rows
+    release_caches()  # unpersists the broadcast: the plan fetches it again
+    assert _broadcasts() == 0
+    assert _canon(lf.collect().rows()) == rows
 
 
 # ---------------------------------------------------------------------------
@@ -377,12 +310,17 @@ def test_driver_and_distributed_fits_agree(spark, operator, fixture):
     data = fixtures[fixture]
     sdf = spark.createDataFrame(data, schema)
     # the public default keeps these inputs on the driver; 0 forces every
-    # non-empty input to the distributed path, the empty one needs -1
-    forced = {"driver_threshold": 0 if data else -1}
+    # input to the distributed path, the empty one included
     results = []
-    for kwargs, path in (({}, "bounded"), (forced, "distributed")):
+    for kwargs, path in (({}, "bounded"), ({"driver_threshold": 0}, "distributed")):
         _bounded.clear_decisions()
-        results.append(_canon(call(sdf, **kwargs).collect().rows()))
+        before = _cache.cached_count()
+        lf = call(sdf, **kwargs)
+        if operator == "train_bpe":
+            # the merge table is a local list: the word-count cache is
+            # released before train_bpe returns
+            assert _cache.cached_count() == before
+        results.append(_canon(lf.collect().rows()))
         (rec,) = _records(operator)
         assert rec["path"] == path
     release_caches()

@@ -1,6 +1,6 @@
 """Count Spark driver JOBS a gate submits (plus wall time): the direct
 evidence for driver-job-fusion optimizations, which never show in the final
-action's plan.  Each gate's guard and ship decisions
+action's plan.  Each gate's guard decisions
 (``polars_net_spark._bounded.decisions()``) print next to its job count, so
 an A/B shows which path ran.
 

@@ -42,10 +42,7 @@ from pyspark.sql import DataFrame as SparkDF
 
 from ._cache import _CACHES, register_cache
 
-__all__ = [
-    "BOUND", "Guarded", "bounded", "ship", "record", "decisions",
-    "clear_decisions",
-]
+__all__ = ["BOUND", "Guarded", "bounded", "ship", "record", "decisions", "clear_decisions"]
 
 # rows one task may sort or the driver may collect: the same 65,536 that
 # bounds the train_bpe artifact

@@ -1187,13 +1187,6 @@ def pq_recall_frame(
 __all__.extend(["pq_init_codebooks", "pq_train", "pq_encode", "pq_topk", "pq_recall_frame"])
 
 
-def _cent_row_frame(spark, centroids):
-    """Coarse centroids as ONE broadcast row (array<array<double>>) — same
-    constant-plan-size rationale as _pq_cb_frame."""
-    cv = [[float(x) for x in c] for c in centroids]
-    return spark.createDataFrame([(cv,)], "__cent__ array<array<double>>")
-
-
 def _ivfpq_aux_frame(spark, centroids, codebooks):
     """Coarse centroids AND PQ codebooks as ONE broadcast row.  One frame
     instead of two halves the broadcast-build jobs per action, and sharing

@@ -70,7 +70,15 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> LazyFrame:
     probe) are memoized per session: 280 queries x ~1-3 table loads each
     was ~35 s of pure loader overhead across the suite.  The memoized
     LazyFrame wraps an immutable DataFrame, so sharing it across queries
-    is safe — every operator derives new frames."""
+    is safe — every operator derives new frames.
+
+    ``get_spark`` also turns off PySpark's DataFrame debugging context
+    (``spark.python.sql.dataFrameDebugging.enabled=false``), which skips a
+    Python call-site capture on every Column call.  That conf is static:
+    Spark rejects a ``spark.conf.set`` of it at runtime, so unlike the
+    runtime confs below ``_t`` cannot apply it to a session the driver
+    built itself.  Such a session keeps the capture unless its builder
+    set the conf."""
     # The driver passes its own SparkSession; these are all runtime-settable
     # and make its runs match our tuned sessions.
     skey = _session_key(spark)

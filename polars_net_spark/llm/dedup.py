@@ -21,6 +21,12 @@ from .._cache import register_cache
 from ..frame import LazyFrame
 from ..session import scoped_checkpoint_dir
 
+# containment_pairs broadcasts its (gram, df) table when the estimated
+# bytes of that table, taken as if every gram occurrence were distinct,
+# fit under this bound.  32 MiB is about the former bound of 2M
+# occurrences at 16 bytes per hashed row (8-byte gram, 8-byte df).
+_DF_BROADCAST_BYTES = 32 << 20
+
 __all__ = [
     "dedup_exact",
     "dedup_clusters",
@@ -1408,17 +1414,25 @@ def containment_pairs(
 
     @functools.cache
     def _broadcast_df() -> bool:
-        # the gram-df table is bounded by distinct grams <= total gram
-        # occurrences; when that bound (read off the cached gram table, one
-        # cache-read aggregate, run at most once per call) fits comfortably
+        # the gram-df table has at most one (gram, df) row per gram
+        # occurrence; when those rows' bytes (read off the cached gram
+        # table, one cache-read aggregate, run at most once per call) fit
         # in a broadcast relation, broadcasting it removes the gram-keyed
         # exchange of the full postings stream (the cell_ranks
         # broadcast_threshold convention — measured 2.33 s -> 1.38 s on the
-        # candidate pass at sf0.1).  Above the bound the plain shuffle join
-        # stands: at corpus scale the gram-df table is corpus-sized and
-        # must never be broadcast.
-        occ_row = grams.agg(F.sum(F.size("grams")).alias("o")).first()
-        return record("containment_pairs", int(occ_row["o"] or 0), 2_000_000)
+        # candidate pass at sf0.1).  Bytes, not occurrences: a few long
+        # string grams can outweigh millions of hashed ones.  Above the
+        # bound the plain shuffle join stands: at corpus scale the gram-df
+        # table is corpus-sized and must never be broadcast.
+        gram_bytes = (
+            F.size("grams") * 8 if gram_hash
+            else F.octet_length(F.array_join("grams", ""))
+        )
+        est = grams.agg(
+            F.sum(F.size("grams")).alias("occ"), F.sum(gram_bytes).alias("gram_bytes")
+        ).first()
+        n_bytes = int(est["gram_bytes"] or 0) + 8 * int(est["occ"] or 0)
+        return record("containment_pairs", n_bytes, _DF_BROADCAST_BYTES)
 
     def _df_attach(tbl):
         return F.broadcast(tbl) if _broadcast_df() else tbl

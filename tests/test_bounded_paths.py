@@ -21,7 +21,9 @@ from pyspark import Broadcast
 
 from polars_net_spark import _bounded, _cache, release_caches
 from polars_net_spark.llm.chunking import build_sft_examples
+from polars_net_spark.llm import dedup
 from polars_net_spark.llm.dedup import (
+    _DF_BROADCAST_BYTES,
     containment_pairs,
     dedup_clusters,
     embedding_near_dup_pairs,
@@ -195,7 +197,8 @@ def test_recorded_sites_log_one_decision_per_call(spark):
          ("bounded", 3, 3)),
         ("containment_pairs",
          lambda: containment_pairs(docs, threshold=0.5, prefix_order="df", max_gram_df=5),
-         ("bounded", 10, 2_000_000)),
+         # 10 hashed gram occurrences, 8 bytes of gram and 8 of df each
+         ("bounded", 160, _DF_BROADCAST_BYTES)),
         ("ipf_weights",
          lambda: ipf_weights(raking, "r", "c", {"a": 0.5, "b": 0.5}, {"x": 0.5, "y": 0.5}),
          ("bounded", 4, 4096)),
@@ -205,6 +208,37 @@ def test_recorded_sites_log_one_decision_per_call(spark):
         call().collect()
         recs = _records(operator)
         assert [(d["path"], d["n"], d["bound"]) for d in recs] == [expected], operator
+    _bounded.clear_decisions()
+
+
+def test_containment_broadcast_is_bounded_by_bytes(spark, monkeypatch):
+    """Few but long string grams: 10 occurrences of 3,002-byte grams.  The
+    recorded size is their bytes plus 8 per df, so a byte bound below it
+    takes the shuffle side (no broadcast hint in the plan) although the
+    occurrence count is tiny, and both sides give the same pairs."""
+    words = [c * 1000 for c in "abcdefgh"]
+    docs = spark.createDataFrame(
+        [(1, " ".join(words[:5])), (2, " ".join(words[:6])), (3, " ".join(words[3:]))],
+        "doc_id long, text string",
+    )
+    n_bytes = 10 * 3002 + 10 * 8
+
+    def run():
+        _bounded.clear_decisions()
+        sdf = containment_pairs(docs, threshold=0.5, prefix_order="df", gram_hash=False).spark
+        rows = sorted(tuple(r) for r in sdf.collect())
+        hinted = "strategy=broadcast" in sdf._jdf.queryExecution().analyzed().toString()
+        (rec,) = _records("containment_pairs")
+        return rows, hinted, (rec["path"], rec["n"], rec["bound"])
+
+    wide = run()
+    assert wide[1:] == (True, ("bounded", n_bytes, _DF_BROADCAST_BYTES))
+    monkeypatch.setattr(dedup, "_DF_BROADCAST_BYTES", n_bytes - 1)
+    narrow = run()
+    assert narrow[1:] == (False, ("distributed", n_bytes, n_bytes - 1))
+    assert narrow[0] == wide[0]
+    assert (1, 2, 1.0) in wide[0]
+    release_caches()
     _bounded.clear_decisions()
 
 

@@ -16,15 +16,15 @@ point (tests, bench, __spark_entry__) gets the same scale-aware defaults:
   method so that it records the Python call site: about four extra py4j
   round trips, a walk of the Python stack and an ``import IPython``
   attempt per call.  Every expression this engine builds pays that.
-  Measured on a 4-core VM with pyspark 4.1.2: ~1.4 ms per wrapped call on,
-  ~0.4 ms off, and the first call of a process ~0.4 s slower on (the
-  IPython import).  What is lost: the Python call site in the
-  ``== DataFrame ==`` section Spark adds to runtime error messages (a
-  division by zero under ANSI names ``"__truediv__" was called from
-  my_script.py:14`` on, a JVM frame off).  Analysis errors are unchanged:
-  a missing column still raises ``AnalysisException`` with
-  ``UNRESOLVED_COLUMN.WITH_SUGGESTION``.  To get
-  the call sites back, build the session with
+  Measured on a 4-core VM with pyspark 4.1.2: each wrapped call took
+  0.7-1.4 ms longer with it on (2-3x its cost off), and the first call of
+  a process ~0.4 s longer (the IPython import).  What is lost: the Python
+  call site in the ``== DataFrame ==`` section Spark adds to runtime error
+  messages (a division by zero under ANSI names ``"__truediv__" was
+  called from my_script.py:14`` on, a JVM frame off).  Analysis errors
+  are unchanged: a missing column still raises ``AnalysisException`` with
+  ``UNRESOLVED_COLUMN.WITH_SUGGESTION``.  To get the call sites back,
+  build the session with
   ``get_spark(extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"})``.
   The conf is static: it can only be set when the session is built, and
   PySpark reads it once per Python process.
@@ -59,7 +59,8 @@ def get_spark(
     The session is built with PySpark's DataFrame debugging context off
     (``spark.python.sql.dataFrameDebugging.enabled=false``): with it on,
     every Column call records its Python call site, which cost ~1 ms of
-    extra py4j round trips per call when measured (module docstring).
+    py4j round trips and stack walking per call when measured (module
+    docstring).
     This drops only the Python file and line from the ``== DataFrame ==``
     section of runtime error messages.  Pass
     ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``

@@ -20,8 +20,8 @@ import pytest
 from pyspark import Broadcast
 
 from polars_net_spark import _bounded, _cache, release_caches
-from polars_net_spark.llm.chunking import build_sft_examples
 from polars_net_spark.llm import dedup
+from polars_net_spark.llm.chunking import build_sft_examples
 from polars_net_spark.llm.dedup import (
     _DF_BROADCAST_BYTES,
     containment_pairs,

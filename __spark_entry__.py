@@ -5481,7 +5481,9 @@ def _q173(spark, sf_dir):
     (F.session_window, 30-min gap) per user under availableNow complete
     mode — the stateful session operator itself, not the batch lag+cumsum
     emulation (q37).  An event at exactly start+gap opens a NEW session
-    (half-open windows), which the oracle replicates as diff >= 1800s."""
+    (half-open windows), which the oracle replicates as an exact microsecond
+    gap >= 1800 s (counting second-boundary crossings would open a session
+    early on sub-second timestamps)."""
     import os
 
     src_dir = _stream_stage_dir(sf_dir, "events")
@@ -5517,7 +5519,7 @@ _q173_sql = """
 WITH l AS (
   SELECT user_id, ts, value,
          CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-               OR date_diff('second', lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id), ts) >= 1800
+               OR epoch_us(ts) - epoch_us(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) >= 1800 * 1000000
               THEN 1 ELSE 0 END AS ns
   FROM events),
 s AS (

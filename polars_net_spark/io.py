@@ -269,13 +269,14 @@ def scan_ipc(path: str, spark: SparkSession | None = None) -> LazyFrame:
 
 
 def from_arrow(table, spark: SparkSession | None = None) -> DataFrame:
-    """Arrow table/batch → DataFrame (io.rs:216-269 zero-copy import)."""
+    """Arrow table/batch → DataFrame (io.rs:216-269 zero-copy import).  The
+    Spark types come from the Arrow schema, so a 64-bit int next to a null
+    stays an exact bigint."""
     import pyarrow as pa
 
     if isinstance(table, pa.RecordBatch):
         table = pa.Table.from_batches([table])
-    s = _spark(spark)
-    return DataFrame(LazyFrame(s.createDataFrame(table.to_pandas())))
+    return DataFrame(LazyFrame(_spark(spark).createDataFrame(table)))
 
 
 def from_batches(batches: Iterable, spark: SparkSession | None = None) -> DataFrame:
@@ -398,11 +399,9 @@ def from_dict(
     lengths = {len(v) for v in data.values()}
     if len(lengths) != 1:
         raise ValueError(f"columns differ in length: { {k: len(v) for k, v in data.items()} }")
-    rows = list(zip(*[data[n] for n in names]))
-    import pandas as pd
+    import pyarrow as pa
 
-    pdf = pd.DataFrame(rows, columns=names)
-    return DataFrame(LazyFrame(_spark(spark).createDataFrame(pdf)))
+    return from_arrow(pa.table({n: list(data[n]) for n in names}), spark)
 
 
 def from_dicts(
@@ -412,9 +411,8 @@ def from_dicts(
     null)."""
     if not data:
         raise ValueError("from_dicts needs at least one row")
-    import pandas as pd
-
-    return DataFrame(LazyFrame(_spark(spark).createDataFrame(pd.DataFrame(list(data)))))
+    keys = dict.fromkeys(k for row in data for k in row)  # first-seen order
+    return from_dict({k: [row.get(k) for row in data] for k in keys}, spark)
 
 
 # -- JDBC (reference scanDb/ReadDb, Polars.FSharp/Types.fs:1342-1363) ----------

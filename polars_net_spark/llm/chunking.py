@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from .._arrow import map_batches
 from .splits import hash_bucket
 
 __all__ = ["chunk_documents", "pack_sequences", "mask_tokens_frame", "flatten_chat_frame", "length_bucket_batches"]
@@ -178,8 +179,6 @@ def mask_tokens_frame(
     def _mask(batches):
         from hashlib import md5 as _md5
 
-        import pyarrow as pa
-
         sep = "\x1f"
         for batch in batches:
             dids = batch.column(1).to_pylist()
@@ -213,18 +212,16 @@ def mask_tokens_frame(
                 targ.append([w for w, m in zip(toks, masked) if m])
                 n_tok.append(n)
                 n_msk.append(nm)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(0),
-                    pa.array(corr, type=pa.string()),
-                    pa.array(targ, type=pa.list_(pa.string())),
-                    pa.array(n_tok, type=pa.int64()),
-                    pa.array(n_msk, type=pa.int64()),
-                ],
-                ["__mt_id__", "corrupted", "targets", "n_tokens", "n_masked"],
-            )
+            yield {
+                "__mt_id__": batch.column(0),
+                "corrupted": corr,
+                "targets": targ,
+                "n_tokens": n_tok,
+                "n_masked": n_msk,
+            }
 
-    masked_df = staged.mapInArrow(
+    masked_df = map_batches(
+        staged,
         _mask,
         f"__mt_id__ {id_type}, corrupted string, targets array<string>, "
         "n_tokens bigint, n_masked bigint",
@@ -401,9 +398,8 @@ def build_sft_examples(
     mask = int(mask_label)
 
     def _enc(batches):
-        import pyarrow as pa
+        import numpy as np
 
-        elem = pa.int32() if tid_type == "int" else pa.int64()
         get = get_vmap().get
         for batch in batches:
             pws = batch.column(1).to_pylist()
@@ -422,19 +418,16 @@ def build_sft_examples(
                 ids_out.append(seq)
                 lbl_out.append([mask] * n_p + seq[n_p:])
                 np_out.append(n_p)
-            idx = pa.array(keep, type=pa.int32())
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(0).take(idx),
-                    pa.array(ids_out, type=pa.list_(elem)),
-                    pa.array(lbl_out, type=pa.list_(elem)),
-                    pa.array([len(s) for s in ids_out], type=pa.int64()),
-                    pa.array(np_out, type=pa.int64()),
-                ],
-                ["__id__", "input_ids", "labels", "n_tokens", "n_prompt_tokens"],
-            )
+            yield {
+                "__id__": batch.column(0).take(np.array(keep, dtype=np.int64)),
+                "input_ids": ids_out,
+                "labels": lbl_out,
+                "n_tokens": [len(s) for s in ids_out],
+                "n_prompt_tokens": np_out,
+            }
 
-    out = staged.mapInArrow(
+    out = map_batches(
+        staged,
         _enc,
         f"__id__ {id_type}, input_ids array<{tid_type}>, "
         f"labels array<{tid_type}>, n_tokens bigint, n_prompt_tokens bigint",

@@ -16,6 +16,7 @@ import functools
 from pyspark.sql import Column, DataFrame as SparkDF, Window
 from pyspark.sql import functions as F
 
+from .._arrow import map_batches
 from .._bounded import bounded, record
 from .._cache import register_cache
 from ..frame import LazyFrame
@@ -362,7 +363,6 @@ def minhash_lsh_pairs(
 
     def _sig_batches(batches):
         import numpy as np
-        import pyarrow as pa
 
         ks = np.arange(num, dtype=np.uint64)
         for batch in batches:
@@ -382,14 +382,9 @@ def minhash_lsh_pairs(
                     .min(axis=1)
                 )
                 sigs.append(m.tolist())
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(sigs, type=pa.list_(pa.int64()))],
-                ["id", "sig"],
-            )
+            yield {"id": ids, "sig": sigs}
 
-    sig_df = hashed.mapInArrow(
-        _sig_batches, f"id {id_type}, sig array<bigint>"
-    )
+    sig_df = map_batches(hashed, _sig_batches, f"id {id_type}, sig array<bigint>")
 
     # band entries carry only (id, band, bucket) — no arrays — and are
     # persisted so the bucket self-join reads them twice for free
@@ -485,7 +480,6 @@ def simhash_signatures(
         import hashlib
 
         import numpy as np
-        import pyarrow as pa
 
         shifts = np.arange(bits_, dtype=np.uint64)
         bitvals = (np.uint64(1) << shifts)
@@ -516,12 +510,9 @@ def simhash_signatures(
                 )
                 pos = (2 * set_counts - h.size) > 0
                 sims[i] = bitvals[pos].sum()
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(sims.view(np.int64), type=pa.int64())],
-                ["__id__", "simhash"],
-            )
+            yield {"__id__": ids, "simhash": sims.view(np.int64)}
 
-    out = staged.mapInArrow(_sig, f"__id__ {id_type}, simhash bigint").select(
+    out = map_batches(staged, _sig, f"__id__ {id_type}, simhash bigint").select(
         F.col("__id__").alias(id_col), "simhash"
     )
     return LazyFrame(out)
@@ -698,7 +689,8 @@ def _bucketed_near_dup_pairs(
 ) -> LazyFrame:
     """Hyperplane-bucketed near-dup pairs: the large-n route.
 
-    One bucket-assignment pass (mapInPandas, numpy matmul per Arrow batch),
+    One bucket-assignment pass (``_arrow.map_batches``, numpy matmul per
+    Arrow batch),
     a self equi-join on (table, bucket) — hash join, never a cross join —
     then exact cosine verification of the surviving candidates with pure
     Column expressions.  Shuffle volume = num_tables × corpus (bucket
@@ -737,9 +729,8 @@ def _bucketed_near_dup_pairs(
 
 def _numpy_near_dup_pairs(sdf: SparkDF, vec_col, id_col, threshold, round_to) -> LazyFrame:
     import numpy as np
-    import pandas as pd
 
-    from .similarity import _ship_matrix
+    from .similarity import _batch_matrix, _ship_matrix
 
     # the broadcast side is bounded by the caller's broadcast_limit
     get_matrix = _ship_matrix(sdf, id_col, vec_col)
@@ -751,15 +742,13 @@ def _numpy_near_dup_pairs(sdf: SparkDF, vec_col, id_col, threshold, round_to) ->
     # column-expression oracle.
     CHUNK = 8192
 
-    def gen(it):
+    def gen(batches):
         b_ids, b_M, b_norms = get_matrix()
         n = b_ids.shape[0]
-        for pdf in it:
-            if pdf.empty:
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            ids_a = pdf[id_col].to_numpy(dtype=np.int64)
-            Ma = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            na = np.sqrt((Ma * Ma).sum(axis=1))
+            ids_a, Ma, na = _batch_matrix(batch, id_col, vec_col)
             for s in range(0, n, CHUNK):
                 e = min(s + CHUNK, n)
                 S = Ma @ b_M[s:e].T
@@ -768,19 +757,15 @@ def _numpy_near_dup_pairs(sdf: SparkDF, vec_col, id_col, threshold, round_to) ->
                 ia, ib = np.where(S >= threshold)
                 mask = ids_a[ia] < b_ids[s:e][ib]
                 if mask.any():
-                    yield pd.DataFrame(
-                        {
-                            "id_a": ids_a[ia][mask],
-                            "id_b": b_ids[s:e][ib][mask],
-                            "cosine": S[ia, ib][mask],
-                        }
-                    )
+                    yield {
+                        "id_a": ids_a[ia][mask],
+                        "id_b": b_ids[s:e][ib][mask],
+                        "cosine": S[ia, ib][mask],
+                    }
 
     par = sdf.sparkSession.sparkContext.defaultParallelism
-    out = (
-        sdf.select(id_col, vec_col)
-        .repartition(par)
-        .mapInPandas(gen, "id_a long, id_b long, cosine double")
+    out = map_batches(
+        sdf.select(id_col, vec_col).repartition(par), gen, "id_a long, id_b long, cosine double"
     )
     return LazyFrame(out)
 
@@ -1774,7 +1759,6 @@ def winnowing_fingerprints(
 
     def _fp_batches(batches):
         import numpy as np
-        import pyarrow as pa
 
         for batch in batches:
             ids = batch.column(0)
@@ -1798,17 +1782,10 @@ def winnowing_fingerprints(
                 u = vals[np.argsort(idx, kind="stable")]
                 fps_out.append(u.tolist())
                 nfp_out.append(u.size)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids,
-                    pa.array(fps_out, type=pa.list_(pa.int64())),
-                    pa.array(nfp_out, type=pa.int64()),
-                ],
-                ["id", "fingerprints", "n_fp"],
-            )
+            yield {"id": ids, "fingerprints": fps_out, "n_fp": nfp_out}
 
-    out = base.mapInArrow(
-        _fp_batches, f"id {id_type}, fingerprints array<bigint>, n_fp bigint"
+    out = map_batches(
+        base, _fp_batches, f"id {id_type}, fingerprints array<bigint>, n_fp bigint"
     )
     return LazyFrame(out)
 

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame as SparkDF, Window
 from pyspark.sql import functions as F
 
+from .._arrow import map_batches
 from ..frame import LazyFrame
 
 __all__ = ["calibration_report", "roc_auc", "prf1_report", "expected_calibration_error", "ndcg_at_k", "average_precision", "calibrate_isotonic", "apply_isotonic", "mrr_at_k", "recall_at_k", "classification_loss", "lift_table"]
@@ -1017,17 +1018,15 @@ def bleu_corpus(
     # codegen).  Tuple grams hash-count identically to the concat_ws
     # string grams (words are \s+-split, so joining is injective).
     maxn = int(max_n)
+    names = (
+        ["nd", "hl", "rl"]
+        + [f"m{n}" for n in range(1, maxn + 1)]
+        + [f"h{n}" for n in range(1, maxn + 1)]
+    )
 
     def _partials(batches):
         from collections import Counter
 
-        import pyarrow as pa
-
-        fields = (
-            ["nd", "hl", "rl"]
-            + [f"m{n}" for n in range(1, maxn + 1)]
-            + [f"h{n}" for n in range(1, maxn + 1)]
-        )
         for batch in batches:
             whs = batch.column(0).to_pylist()
             wrs = batch.column(1).to_pylist()
@@ -1043,17 +1042,10 @@ def bleu_corpus(
                     hh[n] += sum(gh.values())
                     m[n] += sum((gh & gr).values())
             vals = [len(whs), hl, rl] + m[1:] + hh[1:]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([v], type=pa.int64()) for v in vals], fields
-            )
+            yield {f: [v] for f, v in zip(names, vals)}
 
-    schema = ", ".join(
-        f"{f} bigint"
-        for f in ["nd", "hl", "rl"]
-        + [f"m{n}" for n in range(1, maxn + 1)]
-        + [f"h{n}" for n in range(1, maxn + 1)]
-    )
-    parts = base.select("__wh__", "__wr__").mapInArrow(_partials, schema)
+    schema = ", ".join(f"{f} bigint" for f in names)
+    parts = map_batches(base.select("__wh__", "__wr__"), _partials, schema)
     aggs = [
         F.sum("nd").alias("nd"),
         F.sum("hl").alias("hl"),
@@ -1141,8 +1133,6 @@ def rouge_n(
     def _partials(batches):
         from collections import Counter
 
-        import pyarrow as pa
-
         for batch in batches:
             whs = batch.column(0).to_pylist()
             wrs = batch.column(1).to_pylist()
@@ -1160,19 +1150,17 @@ def rouge_n(
                 if rt_i > 0:
                     mac_s += m_i / rt_i
                     mac_c += 1
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([len(whs)], type=pa.int64()),
-                    pa.array([m_t], type=pa.int64()),
-                    pa.array([rt_t], type=pa.int64()),
-                    pa.array([ht_t], type=pa.int64()),
-                    pa.array([mac_s], type=pa.float64()),
-                    pa.array([mac_c], type=pa.int64()),
-                ],
-                ["nd", "m", "rt", "ht", "mac_s", "mac_c"],
-            )
+            yield {
+                "nd": [len(whs)],
+                "m": [m_t],
+                "rt": [rt_t],
+                "ht": [ht_t],
+                "mac_s": [mac_s],
+                "mac_c": [mac_c],
+            }
 
-    parts = base.select("__wh__", "__wr__").mapInArrow(
+    parts = map_batches(
+        base.select("__wh__", "__wr__"),
         _partials,
         "nd bigint, m bigint, rt bigint, ht bigint, mac_s double, mac_c bigint",
     )
@@ -1309,10 +1297,15 @@ def chrf_corpus(
     # code units == codepoints, and its string fallback used codepoint
     # substr); totals stay char_length arithmetic (len(str) = codepoints).
     maxn = int(max_n)
+    names = (
+        ["nd"]
+        + [f"m{n}" for n in range(1, maxn + 1)]
+        + [f"h{n}" for n in range(1, maxn + 1)]
+        + [f"r{n}" for n in range(1, maxn + 1)]
+    )
 
     def _partials(batches):
         import numpy as np
-        import pyarrow as pa
         from numpy.lib.stride_tricks import sliding_window_view
 
         def clipped(gh, gr):
@@ -1341,12 +1334,6 @@ def chrf_corpus(
             w = np.ascontiguousarray(sliding_window_view(c, n))
             return w.view([("", c.dtype)] * n).reshape(-1)
 
-        out_fields = (
-            ["nd"]
-            + [f"m{n}" for n in range(1, maxn + 1)]
-            + [f"h{n}" for n in range(1, maxn + 1)]
-            + [f"r{n}" for n in range(1, maxn + 1)]
-        )
         for batch in batches:
             hyps = batch.column(0).to_pylist()
             refs = batch.column(1).to_pylist()
@@ -1370,24 +1357,11 @@ def chrf_corpus(
                         m[n] += clipped(packed(hc, n), packed(rc, n))
                     else:
                         m[n] += clipped(windows(hcp, n), windows(rcp, n))
-            vals = (
-                [len(hyps)]
-                + m[1:]
-                + ht[1:]
-                + rt[1:]
-            )
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([v], type=pa.int64()) for v in vals], out_fields
-            )
+            vals = [len(hyps)] + m[1:] + ht[1:] + rt[1:]
+            yield {f: [v] for f, v in zip(names, vals)}
 
-    schema = ", ".join(
-        f"{f} bigint"
-        for f in ["nd"]
-        + [f"m{n}" for n in range(1, maxn + 1)]
-        + [f"h{n}" for n in range(1, maxn + 1)]
-        + [f"r{n}" for n in range(1, maxn + 1)]
-    )
-    parts = base.select("__h__", "__r__").mapInArrow(_partials, schema)
+    schema = ", ".join(f"{f} bigint" for f in names)
+    parts = map_batches(base.select("__h__", "__r__"), _partials, schema)
     aggs = [F.sum("nd").alias("nd")]
     for n in range(1, max_n + 1):
         aggs.append(F.sum(f"m{n}").alias(f"m{n}"))

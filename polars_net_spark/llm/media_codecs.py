@@ -6,7 +6,7 @@ stay honestly stubbed in multimodal.py — but BMP (24-bpp uncompressed), PPM
 decoders: real pixel arrays, real sample arrays, real aHash fingerprints.
 
 Everything here is plain-Python per payload; the distributed entry point is
-``multimodal.decode_media_features`` (mapInPandas, Arrow batches).
+``multimodal.decode_media_features`` (``_arrow.map_batches``, Arrow batches).
 """
 
 from __future__ import annotations

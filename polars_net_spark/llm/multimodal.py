@@ -4,26 +4,24 @@ Decode status (this container has no PIL/opencv/ffmpeg):
 - REAL decode for uncompressed formats via pure stdlib/numpy
   (media_codecs.py): BMP 24-bpp + P6 PPM → pixels, mean RGB, 64-bit aHash
   perceptual fingerprint; PCM WAV → samples, rate, duration, RMS.  Entry
-  point: :func:`decode_media_features` (mapInPandas).
+  point: :func:`decode_media_features` (``_arrow.map_batches``).
 - Compressed formats (JPEG/PNG/GIF/MP4) stay honestly STUBBED — they return
   status='unsupported:<mime>' (decode_media_features) or raise
   NotImplementedError (_decode_image / sample_video_frames); no fake numbers.
 
 Pattern: media rows are wide (binary payload) → always process via
-mapInPandas so batches stream through Python without materializing a
-partition, and repartition by a size-balanced key before heavy UDFs.
+``_arrow.map_batches`` so Arrow batches stream through Python without
+materializing a partition, and repartition by a size-balanced key before
+heavy UDFs.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame as SparkDF
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .._arrow import map_batches, nan_as_null
 from ..frame import LazyFrame
 
 __all__ = [
@@ -95,7 +93,7 @@ def extract_image_features(
     feature_dim: int = 8,
     use_fake_decoder: bool = True,
 ) -> LazyFrame:
-    """Feature extraction over binary payloads via mapInPandas (Arrow batches).
+    """Feature extraction over binary payloads via ``_arrow.map_batches``.
 
     With use_fake_decoder=True (default — container has no media libs) the
     'features' are a deterministic function of the bytes (normalized byte
@@ -104,29 +102,30 @@ def extract_image_features(
     """
     sdf = frame._sdf if isinstance(frame, LazyFrame) else frame
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out_rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    out_rows.append((mid, 0, [0] * 16, [0.0] * feature_dim))
-                    continue
-                if not use_fake_decoder:
-                    _decode_image(bytes(payload))  # raises NotImplementedError
-                b = bytes(payload)
+    def _batches(batches):
+        for batch in batches:
+            n_bytes, hists, feats = [], [], []
+            for payload in batch.column(1).to_pylist():
+                if payload is not None and not use_fake_decoder:
+                    _decode_image(payload)  # raises NotImplementedError
+                b = payload or b""  # a null payload featurizes as empty
                 hist = [0] * 16
                 for byte in b:
                     hist[byte >> 4] += 1
                 total = max(len(b), 1)
-                feats = [
-                    float(sum(hist[i::feature_dim])) / total for i in range(feature_dim)
-                ]
-                out_rows.append((mid, len(b), hist, feats))
-            yield pd.DataFrame(
-                out_rows, columns=["media_id", "n_bytes", "byte_histogram", "features"]
-            )
+                n_bytes.append(len(b))
+                hists.append(hist)
+                feats.append(
+                    [float(sum(hist[i::feature_dim])) / total for i in range(feature_dim)]
+                )
+            yield {
+                "media_id": batch.column(0),
+                "n_bytes": n_bytes,
+                "byte_histogram": hists,
+                "features": feats,
+            }
 
-    out = sdf.select(id_col, payload_col).mapInPandas(_batches, IMAGE_FEATURE_SCHEMA)
+    out = map_batches(sdf.select(id_col, payload_col), _batches, IMAGE_FEATURE_SCHEMA)
     return LazyFrame(out)
 
 
@@ -154,7 +153,7 @@ def decode_media_features(
     id_col: str = "media_id",
 ) -> LazyFrame:
     """REAL media decode for uncompressed formats, distributed via
-    mapInPandas (Arrow batches, no partition materialization).
+    ``_arrow.map_batches`` (Arrow batches, no partition materialization).
 
     BMP (24-bpp) and P6 PPM decode to actual pixel arrays → width/height,
     per-channel means, and a 64-bit aHash perceptual fingerprint (the
@@ -163,24 +162,24 @@ def decode_media_features(
     duration/RMS.  Compressed formats (JPEG/PNG/GIF/MP4) need PIL/ffmpeg —
     absent in this container — and return status='unsupported:<mime>' rather
     than fake numbers; rows never error the job (status='error:...' carries
-    malformed payloads).  See media_codecs.py for the decoders.
+    malformed payloads).  A float that comes out NaN (an empty WAV's
+    ``rms``) is null.  See media_codecs.py for the decoders.
     """
     from . import media_codecs as mc
 
     sdf = frame._sdf if isinstance(frame, LazyFrame) else frame
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _batches(batches):
         cols = [f.name for f in MEDIA_FEATURE_SCHEMA.fields]
-        for pdf in it:
+        for batch in batches:
             rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
+            for mid, b in zip(batch.column(0).to_pylist(), batch.column(1).to_pylist()):
                 base = dict.fromkeys(cols)
                 base["media_id"] = mid
-                if payload is None:
+                if b is None:
                     base["status"] = "error:null payload"
                     rows.append(base)
                     continue
-                b = bytes(payload)
                 mime = mc.sniff_mime(b)
                 base["mime"] = mime
                 try:
@@ -208,9 +207,12 @@ def decode_media_features(
                 except Exception as exc:  # malformed payload must not kill the job
                     base["status"] = f"error:{type(exc).__name__}: {exc}"[:200]
                 rows.append(base)
-            yield pd.DataFrame(rows, columns=cols)
+            out = {c: [r[c] for r in rows] for c in cols}
+            out["mean_rgb"] = nan_as_null(out["mean_rgb"])
+            out["rms"] = nan_as_null(out["rms"])
+            yield out
 
-    out = sdf.select(id_col, payload_col).mapInPandas(_batches, MEDIA_FEATURE_SCHEMA)
+    out = map_batches(sdf.select(id_col, payload_col), _batches, MEDIA_FEATURE_SCHEMA)
     return LazyFrame(out)
 
 
@@ -232,8 +234,8 @@ def image_near_dup_pairs(
     land in every band at once.  Verification is exact (``bit_count(xor)``),
     so precision is 1 — banding only affects recall.  Only decodable payloads
     (BMP/PPM here) participate; at 100 TB the hash computation is one
-    mapInPandas corpus pass and the join touches 16-bit-bucket candidates,
-    never all pairs.
+    ``_arrow.map_batches`` corpus pass and the join touches 16-bit-bucket
+    candidates, never all pairs.
     """
     feats = decode_media_features(frame, payload_col=payload_col, id_col=id_col)
     hashed = feats._sdf.filter(F.col("ahash").isNotNull()).select("media_id", "ahash")
@@ -281,13 +283,11 @@ def sample_video_frames(
     the batch (ffmpeg is not in this environment — the Spark-side shape is
     identical either way).
 
-    mapInPandas one->many: each sampled frame becomes a row
+    ``_arrow.map_batches`` one->many: each sampled frame becomes a row
     (media_id, frame_idx, ts_ms, height, width, ahash, thumb bytes) —
     ``every`` keeps every k-th frame, ``fps`` derives ts_ms, ``thumb``
     resizes (nearest-neighbour numpy) to a fixed small size whose raw RGB
     bytes downstream ops treat as an opaque feature payload."""
-    import pandas as pd
-
     from .media_codecs import ahash64, resize_nearest, sniff_mime, split_ppm_stream
 
     sdf = frame._sdf if hasattr(frame, "_sdf") else frame
@@ -298,12 +298,13 @@ def sample_video_frames(
     th = thumb
 
     def gen(batches):
-        for pdf in batches:
+        names = [id_col, "frame_idx", "ts_ms", "height", "width", "ahash", "thumb"]
+        for batch in batches:
             rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
+            ids = batch.column(id_col).to_pylist()
+            for mid, b in zip(ids, batch.column(payload_col).to_pylist()):
+                if b is None:
                     continue
-                b = bytes(payload)
                 if not b.startswith(b"P6"):
                     raise NotImplementedError(
                         f"media {mid}: compressed video ({sniff_mime(b)}) needs "
@@ -325,12 +326,9 @@ def sample_video_frames(
                         )
                     )
             if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[id_col, "frame_idx", "ts_ms", "height", "width", "ahash", "thumb"],
-                )
+                yield dict(zip(names, zip(*rows)))
 
-    return LazyFrame(sdf.mapInPandas(gen, schema=schema))
+    return LazyFrame(map_batches(sdf, gen, schema))
 
 
 def _to_signed64(v: int) -> int:

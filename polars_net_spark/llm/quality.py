@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 
+from .._arrow import map_batches
 from .._bounded import ship
 from .._cache import register_cache
 
@@ -497,8 +498,6 @@ def bigram_logprob_frame(
     def _score(batches):
         from math import log10
 
-        import pyarrow as pa
-
         uni_m, bi_m = get_models()
         uget = uni_m.get
         bget = bi_m.get
@@ -522,21 +521,11 @@ def bigram_logprob_frame(
                         s += log10(0.4 * uget(w2, 1) / n_f)
                 sums.append(s)
                 nbg.append(n - 1)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(0),
-                    pa.array(nbg, type=pa.int64()),
-                    pa.array(sums, type=pa.float64()),
-                ],
-                ["id", "n_bigrams", "__s__"],
-            )
+            yield {"id": batch.column(0), "n_bigrams": nbg, "__s__": sums}
 
     id_type = staged.schema["id"].dataType.simpleString()
     out = (
-        staged.mapInArrow(
-            _score,
-            f"id {id_type}, n_bigrams bigint, __s__ double",
-        )
+        map_batches(staged, _score, f"id {id_type}, n_bigrams bigint, __s__ double")
         .select(
             F.col("id").alias(id_col),
             "n_bigrams",

@@ -18,7 +18,9 @@ import math
 from pyspark.sql import Column, DataFrame as SparkDF, Window
 from pyspark.sql import functions as F
 
+from .._arrow import map_batches, nan_as_null
 from .._bounded import ship
+from .._cache import register_cache, scoped_caches
 from ..frame import LazyFrame
 
 __all__ = [
@@ -135,28 +137,36 @@ def _ship_matrix(sdf: SparkDF, id_col: str, vec_col: str):
     return ship(sdf.sparkSession.sparkContext, (ids, M, norms))
 
 
+def _batch_matrix(batch, id_col: str, vec_col: str):
+    """An Arrow batch's ``(ids, M, norms)`` in :func:`_ship_matrix`'s layout;
+    a null id or vector raises."""
+    import numpy as np
+
+    ids = batch.column(id_col).to_numpy().astype(np.int64)
+    M = np.stack(batch.column(vec_col).to_numpy(zero_copy_only=False)).astype(np.float64)
+    return ids, M, np.sqrt((M * M).sum(axis=1))
+
+
 def _numpy_topk(c_sdf, q_sdf, k, vec_col, id_col, qid, round_to) -> LazyFrame:
     import numpy as np
-    import pandas as pd
 
     get_queries = _ship_matrix(q_sdf, qid, vec_col)
     # Corpus batches are scored in row chunks so the (rows x nq) score block
     # stays ~32 MB regardless of query-set size; in-place divide/round keeps
     # values bit-identical to round(dot / (cn*qn), r).  Emitting per-chunk
     # top-k (instead of per-batch) only adds candidates — the final global
-    # window still yields the exact top-k.
+    # window still yields the exact top-k.  A zero-norm vector scores NaN,
+    # emitted as null so the cosine-desc window ranks it last.
     CHUNK_ELEMS = 4_000_000
 
-    def gen(it):
+    def gen(batches):
         q_ids_b, Qb, qn = get_queries()
         nq = len(q_ids_b)
         chunk_rows = max(256, CHUNK_ELEMS // max(nq, 1))
-        for pdf in it:
-            if pdf.empty:
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            C = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            cn = np.sqrt((C * C).sum(axis=1))
+            c_ids, C, cn = _batch_matrix(batch, id_col, vec_col)
             for s in range(0, C.shape[0], chunk_rows):
                 e = min(s + chunk_rows, C.shape[0])
                 ids_c, cn_c = c_ids[s:e], cn[s:e]
@@ -181,19 +191,17 @@ def _numpy_topk(c_sdf, q_sdf, k, vec_col, id_col, qid, round_to) -> LazyFrame:
                     out_q.append(np.full(order.size, q_ids_b[j], dtype=np.int64))
                     out_c.append(vi[order])
                     out_s.append(vs[order])
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        "corpus_id": np.concatenate(out_c),
-                        "cosine": np.concatenate(out_s),
-                    }
-                )
+                yield {
+                    "query_id": np.concatenate(out_q),
+                    "corpus_id": np.concatenate(out_c),
+                    "cosine": nan_as_null(np.concatenate(out_s)),
+                }
 
     par = c_sdf.sparkSession.sparkContext.defaultParallelism
-    cand = (
-        c_sdf.select(id_col, vec_col)
-        .repartition(par)
-        .mapInPandas(gen, "query_id long, corpus_id long, cosine double")
+    cand = map_batches(
+        c_sdf.select(id_col, vec_col).repartition(par),
+        gen,
+        "query_id long, corpus_id long, cosine double",
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("corpus_id").asc())
     out = (
@@ -247,21 +255,23 @@ def hyperplane_buckets(
     each worker regenerates them locally from the first batch's vector length
     — no driver-side dim probe, no broadcast, no eager job.  Bucket signs come
     from one numpy matmul per Arrow batch (expression-per-plane codegen was
-    the bottleneck at higher table counts)."""
+    the bottleneck at higher table counts).  NaN vector elements come back
+    null."""
     import numpy as np
 
     fixed_dim = dim
 
-    def gen(it):
-        import pandas as pd
-
+    def gen(batches):
         P = None
         pw = (2 ** np.arange(num_planes)).astype(np.int64)
-        for pdf in it:
-            if pdf.empty:
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
                 continue
+            vecs = batch.column(vec_col)
+            V = np.stack(vecs.to_numpy(zero_copy_only=False)).astype(np.float64)  # (n, dim)
             if P is None:
-                d = fixed_dim if fixed_dim is not None else len(pdf[vec_col].iloc[0])
+                d = fixed_dim if fixed_dim is not None else V.shape[1]
                 P = np.array(
                     [
                         [_hyperplane(d, seed=t * 1000 + i) for i in range(num_planes)]
@@ -269,25 +279,23 @@ def hyperplane_buckets(
                     ],
                     dtype=np.float64,
                 )  # (tables, planes, dim)
-            V = np.array([list(v) for v in pdf[vec_col]], dtype=np.float64)  # (n, dim)
             # signs: (n, tables, planes) → bucket id per table
             dots = np.einsum("nd,tpd->ntp", V, P)
             bkts = ((dots >= 0) * pw).sum(axis=2)  # (n, tables)
-            yield pd.DataFrame(
-                {
-                    out_id: pdf[id_col].to_numpy().repeat(num_tables),
-                    out_vec: [list(v) for v in pdf[vec_col] for _ in range(num_tables)],
-                    "table": np.tile(np.arange(num_tables), len(pdf)),
-                    "bucket": bkts.reshape(-1),
-                }
-            )
+            rep = np.repeat(np.arange(n), num_tables)
+            yield {
+                out_id: batch.column(id_col).take(rep),
+                out_vec: nan_as_null(vecs.to_pylist()).take(rep),
+                "table": np.tile(np.arange(num_tables), n),
+                "bucket": bkts.reshape(-1),
+            }
 
     vec_type = dict(sdf.dtypes)[vec_col]
     par = sdf.sparkSession.sparkContext.defaultParallelism
-    return (
-        sdf.select(id_col, vec_col)
-        .repartition(par)
-        .mapInPandas(gen, f"{out_id} long, {out_vec} {vec_type}, table int, bucket long")
+    return map_batches(
+        sdf.select(id_col, vec_col).repartition(par),
+        gen,
+        f"{out_id} long, {out_vec} {vec_type}, table int, bucket long",
     )
 
 
@@ -861,9 +869,6 @@ def embedding_threshold_join(
     """
     from pyspark.sql import DataFrame as SparkDF
 
-    from .._cache import register_cache
-    from ..frame import LazyFrame
-
     lsdf = left if isinstance(left, SparkDF) else left.spark
     rsdf = right if isinstance(right, SparkDF) else right.spark
     out_l = left_id if left_id != right_id else left_id + "_left"
@@ -873,20 +878,17 @@ def embedding_threshold_join(
         method = "numpy" if n <= broadcast_limit else "bucketed"
     if method == "numpy":
         import numpy as np
-        import pandas as pd
 
         get_right = _ship_matrix(rsdf, right_id, vec_col)
         CHUNK = 8192
 
-        def gen(it):
+        def gen(batches):
             b_ids, b_M, b_norms = get_right()
             n_r = b_ids.shape[0]
-            for pdf in it:
-                if pdf.empty:
+            for batch in batches:
+                if batch.num_rows == 0:
                     continue
-                ids_a = pdf[left_id].to_numpy(dtype=np.int64)
-                Ma = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                na = np.sqrt((Ma * Ma).sum(axis=1))
+                ids_a, Ma, na = _batch_matrix(batch, left_id, vec_col)
                 for s in range(0, n_r, CHUNK):
                     e = min(s + CHUNK, n_r)
                     S = Ma @ b_M[s:e].T
@@ -894,16 +896,10 @@ def embedding_threshold_join(
                     np.round(S, round_to, out=S)
                     ia, ib = np.where(S >= threshold)
                     if len(ia):
-                        yield pd.DataFrame(
-                            {
-                                out_l: ids_a[ia],
-                                out_r: b_ids[s:e][ib],
-                                "cosine": S[ia, ib],
-                            }
-                        )
+                        yield {out_l: ids_a[ia], out_r: b_ids[s:e][ib], "cosine": S[ia, ib]}
 
         schema = f"{out_l} long, {out_r} long, cosine double"
-        return LazyFrame(lsdf.select(left_id, vec_col).mapInPandas(gen, schema))
+        return LazyFrame(map_batches(lsdf.select(left_id, vec_col), gen, schema))
     if method != "bucketed":
         raise ValueError(f"unknown method {method!r}")
     lb = register_cache(
@@ -1594,15 +1590,13 @@ def embedding_covariance(
 ) -> LazyFrame:
     """Full d×d covariance matrix of an embedding column as (i, j, cov)
     rows (population covariance, the PCA/whitening input) — computed from
-    Arrow-batched partial sufficient statistics: each pandas batch folds
+    Arrow-batched partial sufficient statistics: each Arrow batch folds
     to ONE row (n, Σx, vec(ΣxxT)) via numpy BLAS, so the corpus never
     explodes d² element rows and the combine stage handles #batches rows,
     not #vectors.  The partial (i,j) sums then reduce in-plan (posexplode
     → index-keyed sum) and cov = E[xy] − E[x]E[y] assembles with two tiny
     broadcast joins on the component index.  Deterministic layout:
     i ≤ j (upper triangle).  Rows with null/odd-length vectors drop."""
-    import pandas as pd
-
     sdf = _sdf(frame)
     vecs = sdf.filter(F.col(vec_col).isNotNull()).select(
         F.col(vec_col).alias("__v__")
@@ -1612,27 +1606,26 @@ def embedding_covariance(
         raise ValueError("embedding_covariance: no non-null vectors")
     d = int(dim_row["d"])
 
-    def partials(it):
+    def partials(batches):
         import numpy as np
 
-        for pdf in it:
-            arrs = [v for v in pdf["__v__"] if v is not None and len(v) == d]
+        for batch in batches:
+            vs = batch.column(0).to_numpy(zero_copy_only=False)
+            arrs = [v for v in vs if v is not None and len(v) == d]
             if not arrs:
                 continue
-            x = np.asarray([np.asarray(a, dtype=np.float64) for a in arrs])
-            yield pd.DataFrame(
-                {
-                    "n": [int(x.shape[0])],
-                    "s": [x.sum(axis=0).tolist()],
-                    "ss": [(x.T @ x).reshape(-1).tolist()],
-                }
-            )
+            x = np.asarray(arrs, dtype=np.float64)
+            # NaN partial sums go out null; the sums below skip them
+            yield {
+                "n": [x.shape[0]],
+                "s": nan_as_null([x.sum(axis=0).tolist()]),
+                "ss": nan_as_null([(x.T @ x).reshape(-1).tolist()]),
+            }
 
-    parts = vecs.mapInPandas(
-        partials, "n long, s array<double>, ss array<double>"
-    )
-    parts.persist()
-    try:
+    with scoped_caches():
+        parts = register_cache(
+            map_batches(vecs, partials, "n long, s array<double>, ss array<double>")
+        )
         tot = parts.agg(F.sum("n").alias("n")).collect()[0]
         n = int(tot["n"] or 0)
         if n < 1:
@@ -1671,8 +1664,6 @@ def embedding_covariance(
         # materialize before releasing the partials cache: the result is
         # 1-2 orders smaller than one corpus re-scan
         out = out.localCheckpoint(eager=True)
-    finally:
-        parts.unpersist()
     return LazyFrame(out)
 
 

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame as SparkDF, Window
 from pyspark.sql import functions as F
 
+from .._arrow import map_batches
 from .._bounded import bounded, ship
 from .._cache import scoped_caches
 from ..frame import LazyFrame
@@ -110,9 +111,8 @@ def encode_tokens_frame(
     oov = None if drop_oov else int(oov_id)
 
     def _enc(batches):
-        import pyarrow as pa
+        import numpy as np
 
-        elem = pa.int32() if tid_type == "int" else pa.int64()
         vmap = get_vmap()
         get = vmap.get
         for batch in batches:
@@ -130,18 +130,14 @@ def encode_tokens_frame(
                     seq = [get(t, oov) for t in toks]
                 keep.append(j)
                 seqs.append(seq)
-            idx = pa.array(keep, type=pa.int32())
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(0).take(idx),
-                    pa.array(seqs, type=pa.list_(elem)),
-                    pa.array([len(s) for s in seqs], type=pa.int32()),
-                ],
-                ["__id__", "token_ids", "n_tokens"],
-            )
+            yield {
+                "__id__": batch.column(0).take(np.array(keep, dtype=np.int64)),
+                "token_ids": seqs,
+                "n_tokens": [len(s) for s in seqs],
+            }
 
-    out = staged.mapInArrow(
-        _enc, f"__id__ {id_type}, token_ids array<{tid_type}>, n_tokens int"
+    out = map_batches(
+        staged, _enc, f"__id__ {id_type}, token_ids array<{tid_type}>, n_tokens int"
     ).select(F.col("__id__").alias(id_col), "token_ids", "n_tokens")
     return LazyFrame(out)
 
@@ -474,7 +470,6 @@ def feature_hash_frame(
         from hashlib import md5 as _md5
 
         import numpy as np
-        import pyarrow as pa
 
         seed_b = seed_s.encode("utf-8")
         for batch in batches:
@@ -501,17 +496,10 @@ def feature_hash_frame(
                 nz = np.nonzero(acc)[0]
                 idx_out.append([int(i) for i in nz])
                 val_out.append([float(acc[i]) for i in nz])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids,
-                    pa.array(idx_out, type=pa.list_(pa.int32())),
-                    pa.array(val_out, type=pa.list_(pa.float64())),
-                ],
-                ["__id__", "indices", "values"],
-            )
+            yield {"__id__": ids, "indices": idx_out, "values": val_out}
 
-    out = staged.mapInArrow(
-        _fh, f"__id__ {id_type}, indices array<int>, values array<double>"
+    out = map_batches(
+        staged, _fh, f"__id__ {id_type}, indices array<int>, values array<double>"
     ).select(F.col("__id__").alias(id_col), "indices", "values")
     return LazyFrame(out)
 

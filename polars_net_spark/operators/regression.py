@@ -12,6 +12,7 @@ import math
 from pyspark.sql import Column, DataFrame as SparkDF, Window
 from pyspark.sql import functions as F
 
+from .._arrow import map_batches
 from .._bounded import bounded, record
 from ..frame import LazyFrame
 from ..session import scoped_checkpoint_dir
@@ -3524,14 +3525,8 @@ def permutation_test(
         from hashlib import md5 as _md5
 
         import numpy as np
-        import pyarrow as pa
 
         prefixes = [f"{seed_s}|{b}|".encode("utf-8") for b in range(nperm)]
-        fields = (
-            ["sa", "na", "sb", "nb", "st", "ct"]
-            + [f"s{b}" for b in range(nperm)]
-            + [f"c{b}" for b in range(nperm)]
-        )
         for batch in batches:
             ids = batch.column(0).to_pylist()
             vs = np.asarray(batch.column(1), dtype=np.float64)
@@ -3548,21 +3543,14 @@ def permutation_test(
             nb_v = int(len(ids) - na)
             sarr = coins.T @ vs
             carr = coins.sum(axis=0)
-            vals = (
-                [
-                    (sa, pa.float64()),
-                    (na, pa.int64()),
-                    (sb_v, pa.float64()),
-                    (nb_v, pa.int64()),
-                    (float(vs.sum()), pa.float64()),
-                    (len(ids), pa.int64()),
-                ]
-                + [(float(x), pa.float64()) for x in sarr]
-                + [(int(x), pa.int64()) for x in carr]
-            )
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([v_], type=t_) for v_, t_ in vals], fields
-            )
+            cols = {
+                "sa": [sa], "na": [na], "sb": [sb_v], "nb": [nb_v],
+                "st": [float(vs.sum())], "ct": [len(ids)],
+            }
+            for b in range(nperm):
+                cols[f"s{b}"] = [float(sarr[b])]
+                cols[f"c{b}"] = [int(carr[b])]
+            yield cols
 
     schema = (
         "sa double, na bigint, sb double, nb bigint, st double, ct bigint, "
@@ -3570,7 +3558,7 @@ def permutation_test(
         + ", "
         + ", ".join(f"c{b} bigint" for b in range(nperm))
     )
-    parts = base.mapInArrow(_partials, schema)
+    parts = map_batches(base, _partials, schema)
     aggs = [
         F.sum("sa").alias("sa"),
         F.sum("na").alias("na"),

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame as SparkDF
 from pyspark.sql import functions as F
 
+from .._arrow import map_batches
 from ..frame import LazyFrame
 
 __all__ = ["distinct_sketches", "rollup_sketches", "sketch_estimate"]
@@ -101,8 +102,8 @@ def kmv_distinct(
     values exist).  Standard error ≈ 1/√(k−2) (~6% at k=256).
 
     Unkeyed path is CONSTANT-MEMORY and shuffle-light: an Arrow-batched
-    mapInPandas emits each batch's k smallest unique hashes (vectorized
-    numpy, never per-row Python), the ≤ batches·k survivors dedupe and
+    ``_arrow.map_batches`` kernel emits each batch's k smallest unique
+    hashes (vectorized numpy, never per-row Python), the ≤ batches·k survivors dedupe and
     TakeOrdered to the global bottom-k, and one 1-row aggregate finishes —
     raw values never shuffle, which is the whole point at 100 TB.
 
@@ -137,18 +138,16 @@ def kmv_distinct(
         )
         return LazyFrame(out)
 
-    import pandas as pd
-
     def kmin(batches):
         import numpy as np
 
-        for pdf in batches:
-            vals = np.unique(pdf["__h__"].to_numpy())  # sorted unique
-            yield pd.DataFrame({"__h__": vals[:kk]})
+        for batch in batches:
+            # sorted unique
+            vals = np.unique(batch.column(0).to_numpy(zero_copy_only=False))
+            yield {"__h__": vals[:kk]}
 
     cand = (
-        base.select(h.alias("__h__"))
-        .mapInPandas(kmin, "__h__ string")
+        map_batches(base.select(h.alias("__h__")), kmin, "__h__ string")
         .distinct()
         .orderBy("__h__")
         .limit(kk)
@@ -316,8 +315,8 @@ def kmv_jaccard(
 
     Deterministic (same data + seed + k → same estimate on any engine).
     The bottom-k signatures build with EVERY buffer bounded by O(k), at
-    any data size and any Arrow batch count: a mapInPandas task streams
-    its partition's batches keeping only a RUNNING bottom-k of unique
+    any data size and any Arrow batch count: a ``_arrow.map_batches``
+    task streams its partition's batches keeping only a RUNNING bottom-k of unique
     hashes per group (vectorized numpy; ≤ 2k strings per group live at
     any merge step — never a batch's or partition's full distinct set),
     so each task emits ≤ |groups|·k rows; the final per-group merge then
@@ -355,15 +354,16 @@ def kmv_jaccard(
     base = sdf.filter(F.col(value_col).isNotNull()).select(
         tag.alias("__g__"), h.alias("__h__")
     ).filter(F.col("__g__").isNotNull())
-    import pandas as pd
 
     def kmin(batches):
         import numpy as np
 
         acc = {}  # group -> sorted unique bottom-k ndarray (≤ k strings)
-        for pdf in batches:
-            for grp, sub in pdf.groupby("__g__", sort=False):
-                vals = np.unique(sub["__h__"].to_numpy())[:kk]
+        for batch in batches:
+            gs = batch.column(0).to_numpy(zero_copy_only=False)
+            hs = batch.column(1).to_numpy(zero_copy_only=False)
+            for grp in dict.fromkeys(gs):
+                vals = np.unique(hs[gs == grp])[:kk]
                 prev = acc.get(grp)
                 acc[grp] = (
                     vals
@@ -371,10 +371,10 @@ def kmv_jaccard(
                     else np.unique(np.concatenate([prev, vals]))[:kk]
                 )
         for grp, vals in acc.items():
-            yield pd.DataFrame({"__g__": grp, "__h__": vals})
+            yield {"__g__": [grp] * len(vals), "__h__": vals}
 
     lvl2 = (
-        base.mapInPandas(kmin, "__g__ string, __h__ string")
+        map_batches(base, kmin, "__g__ string, __h__ string")
         .groupBy("__g__")
         .agg(F.slice(F.array_sort(F.collect_set("__h__")), 1, kk).alias("__s__"))
     )

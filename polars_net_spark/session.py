@@ -8,7 +8,9 @@ point (tests, bench, __spark_entry__) gets the same scale-aware defaults:
 - AQE on (runtime re-planning, skew-join splitting, partition coalescing)
 - shuffle partitions sized for the local core count (overridden by env); on a
   real cluster this should be ~2-3x total cores — callers pass it in.
-- Arrow enabled for every Python boundary crossing (pandas_udf, toPandas).
+- Arrow enabled for every Python boundary crossing (pandas_udf, toPandas);
+  kernels that build their own output batches go through
+  ``_arrow.map_batches``, which types them from the Spark schema.
 - UTC session timezone so timestamp semantics are deterministic.
 - PySpark's DataFrame debugging context off
   (``spark.python.sql.dataFrameDebugging.enabled=false``).  When it is on,

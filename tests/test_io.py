@@ -292,3 +292,22 @@ def test_scan_csv_bad_lines_policies(spark, tmp_path):
     ).collect().rows()
     bad = [r for r in kept if r[2] is not None]
     assert len(bad) == 1 and bad[0][2].startswith("notanint")
+
+
+def test_ingestion_keeps_int64_next_to_null(spark):
+    """A 64-bit int sharing a column with a null stays an exact bigint on
+    every ingestion path (through pandas the column became float64)."""
+    import pyarrow as pa
+
+    big = 7891116539625076632
+    frames = [
+        pl.from_dict({"a": [big, None]}, spark=spark),
+        pl.from_dicts([{"a": big}, {"a": None, "b": "x"}], spark=spark),
+        pl.from_arrow(pa.table({"a": [big, None]}), spark=spark),
+    ]
+    for df in frames:
+        assert df.lazy().spark.schema["a"].dataType.simpleString() == "bigint"
+        assert [r[0] for r in df.rows()] == [big, None]
+    # a key first seen in a later row is kept, in first-seen order
+    assert frames[1].columns == ["a", "b"]
+    assert frames[1].rows() == [(big, None), (None, "x")]

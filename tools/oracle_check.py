@@ -11,13 +11,16 @@ query, same shape as the driver's CORRECTNESS_r{N}.json — so the complete
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, whichever copy that is
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -123,7 +126,7 @@ def main() -> None:
     if not only:  # full sweep -> committed artifact
         import json
 
-        with open("/root/repo/CORRECTNESS_local.json", "w") as f:
+        with open(os.path.join(ROOT, "CORRECTNESS_local.json"), "w") as f:
             json.dump(record, f, indent=2)
         print(f"wrote CORRECTNESS_local.json ({len(record)} queries)")
     print(f"\n{n_pass} ok, {n_fail} fail")

@@ -12368,13 +12368,14 @@ FROM est
 
 
 def _q349(spark, sf_dir):
-    """Connected components by monotone min-label propagation
-    (operators/graph.py connected_components) on an events-derived
-    island graph (edges only within 20-vertex residue islands), reported
-    as component sizes: per round one union + min aggregate over
-    vertex-keyed equi-joins, checkpoint-truncated lineage; the oracle
-    unrolls 6 MATERIALIZED rounds past the fixpoint (extra rounds are
-    no-ops — the k_core convention)."""
+    """Connected components with min-id labels (operators/graph.py
+    connected_components) on an events-derived island graph (edges only
+    within 20-vertex residue islands), reported as component sizes.  The
+    canonical edge list is under the bound, so the components come from
+    union-find in driver memory (above it, a min-label loop with path
+    halving).  The oracle unrolls 6 MATERIALIZED rounds of plain min-label
+    propagation past the fixpoint (extra rounds are no-ops — the k_core
+    convention); both reach the same min-id labels."""
     from polars_net_spark.operators.graph import connected_components
 
     ev = _t(spark, sf_dir, "events").spark

@@ -133,7 +133,9 @@ def mask_tokens_frame(
     from md5(seed||d||'\\x1f'||i), so the same (seed, corpus) masks the same
     positions on any engine and any partitioning — reproducible training
     data, oracle-checkable.  Start rate is ``mask_rate / span_len`` so the
-    EXPECTED masked fraction stays ~mask_rate for any span length.
+    EXPECTED masked fraction stays ~mask_rate for any span length.  A null
+    id draws no position (md5 over a null is null in SQL): its row comes
+    out with every token kept and no targets.
 
     Map-only at any scale; the draw/span/corrupt math runs as ONE hashlib
     mapInArrow kernel over the JVM-split words (exact \\s+ parity).  The
@@ -196,15 +198,17 @@ def mask_tokens_frame(
                     n_tok.append(0)
                     n_msk.append(0)
                     continue
-                prefix = _md5((seed_s + did + sep).encode("utf-8"))
                 masked = [False] * n
-                for i in range(n):
-                    h = prefix.copy()
-                    h.update(str(i).encode("ascii"))
-                    if int(h.hexdigest()[:8], 16) < threshold:
-                        hi = i + span if i + span < n else n
-                        for j in range(i, hi):
-                            masked[j] = True
+                # a null id draws no position: md5 over a null is null in SQL
+                if did is not None:
+                    prefix = _md5((seed_s + did + sep).encode("utf-8"))
+                    for i in range(n):
+                        h = prefix.copy()
+                        h.update(str(i).encode("ascii"))
+                        if int(h.hexdigest()[:8], 16) < threshold:
+                            hi = i + span if i + span < n else n
+                            for j in range(i, hi):
+                                masked[j] = True
                 nm = sum(masked)
                 corr.append(
                     " ".join(mt if m else w for w, m in zip(toks, masked))

@@ -20,7 +20,7 @@ from .._arrow import map_batches
 from .._bounded import bounded, record
 from .._cache import register_cache
 from ..frame import LazyFrame
-from ..session import scoped_checkpoint_dir
+from ..operators.graph import _min_id_components
 
 # containment_pairs broadcasts its (gram, df) table when the estimated
 # bytes of that table, taken as if every gram occurrence were distinct,
@@ -770,40 +770,6 @@ def _numpy_near_dup_pairs(sdf: SparkDF, vec_col, id_col, threshold, round_to) ->
     return LazyFrame(out)
 
 
-def _driver_union_find(edges: SparkDF, active: SparkDF) -> SparkDF:
-    """Small-graph path for :func:`dedup_clusters`: collect the (bounded,
-    cached) edge list + active endpoints, run union-find keeping the SMALLER
-    root as parent (so every component's root is its minimum id — the exact
-    labels the distributed fixpoint converges to), return an
-    (id, cluster_id) frame."""
-    from pyspark.sql import types as T
-
-    act = {r[0] for r in active.collect()}
-    parent: dict = {}
-
-    def find(x):
-        r = x
-        while parent.get(r, r) != r:
-            r = parent[r]
-        while parent.get(x, x) != x:  # path compression
-            parent[x], x = r, parent[x]
-        return r
-
-    for row in edges.collect():
-        a, b = row[0], row[1]
-        if a in act and b in act:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-    rows = [(i, find(i)) for i in act]
-    id_type = active.schema.fields[0].dataType
-    schema = T.StructType(
-        [T.StructField("id", id_type), T.StructField("cluster_id", id_type)]
-    )
-    return active.sparkSession.createDataFrame(rows, schema)
-
-
 def dedup_clusters(
     pairs: "LazyFrame | SparkDF",
     id_a: str = "id_a",
@@ -824,10 +790,12 @@ def dedup_clusters(
     singletons — docs in no pair become their own cluster.  Output columns:
     (<id name>, cluster_id).
 
-    This is an inherently iterative fixpoint (like GraphFrames'
-    connectedComponents): min-label propagation with path-halving, which
-    converges in O(log diameter) rounds — near-dup graphs are
-    small-diameter, so typically 3-5 rounds.  Each round is two
+    The components come from the min-id engine that
+    ``operators.graph.connected_components`` shares
+    (``graph._min_id_components``).  Above the bound it is an iterative
+    fixpoint (like GraphFrames' connectedComponents): min-label propagation
+    with path-halving, which converges in O(log diameter) rounds — near-dup
+    graphs are small-diameter, so typically 3-5 rounds.  Each round is two
     key-partitioned shuffles (neighbor min + label-of-label) and ends in a
     checkpoint: without lineage truncation the logical plan doubles per
     round (labels feeds both joins) and Catalyst planning blows the driver
@@ -861,7 +829,7 @@ def dedup_clusters(
     # read.  limit-based probing is wrong here — CollectLimit's incremental
     # partition scanning re-runs the expensive upstream stages several times
     # (measured 6.8s vs 0.2s on a 512-edge graph).
-    edges, _, small = bounded(
+    guarded = bounded(
         p.union(p.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct(),
         "dedup_clusters",
         2 * driver_threshold,
@@ -871,7 +839,7 @@ def dedup_clusters(
     # of corpus size (at 100 TB that's the difference between iterating over
     # duplicates and iterating over everything); singletons join back at the
     # end as their own cluster
-    active = edges.select(F.col("src").alias("id")).distinct()
+    active = guarded.frame.select(F.col("src").alias("id")).distinct()
     if vertices is not None:
         out_name = vertex_id or id_a
         verts = _sdf(vertices).select(F.col(out_name).alias("id")).distinct()
@@ -881,53 +849,9 @@ def dedup_clusters(
     else:
         out_name = id_a
         verts = None
-    if small:
-        clustered = _driver_union_find(edges, active)
-        if verts is not None:
-            clustered = verts.join(clustered, "id", "left").select(
-                "id", F.coalesce("cluster_id", "id").alias("cluster_id")
-            )
-        return LazyFrame(clustered.select(F.col("id").alias(out_name), "cluster_id"))
-
-    # no checkpoint on the seed: round 1's checkpoint truncates the lineage,
-    # and the edge staging is already persisted via the cache registry
-    labels = active.select("id", F.col("id").alias("lbl"))
-
-    if checkpoint_dir is not None:
-
-        def _ckpt(df):
-            return df.checkpoint()  # reliable: blocks survive executor loss
-    else:
-
-        def _ckpt(df):
-            return df.localCheckpoint()
-
-    # with-block: restore the previous checkpoint dir on ALL exit paths —
-    # convergence, non-convergence raise, or a mid-round failure (r7 ADVICE)
-    with scoped_checkpoint_dir(_sdf(pairs).sparkSession.sparkContext, checkpoint_dir):
-        for _ in range(max_iter):
-            nmin = (
-                edges.join(labels, edges["src"] == labels["id"])
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.min("lbl").alias("nlbl"))
-            )
-            parent = labels.select(F.col("id").alias("p_id"), F.col("lbl").alias("plbl"))
-            stage = (
-                labels.join(nmin, "id", "left")
-                .join(parent, F.col("lbl") == F.col("p_id"), "left")
-                .select("id", "lbl", F.least("lbl", "nlbl", "plbl").alias("new_lbl"))
-            )
-            stage = _ckpt(stage)
-            changed = stage.filter(F.col("new_lbl") != F.col("lbl")).count()
-            labels = stage.select("id", F.col("new_lbl").alias("lbl"))
-            if changed == 0:
-                break
-        else:
-            raise RuntimeError(
-                f"dedup_clusters did not converge in {max_iter} rounds; "
-                "raise max_iter (graph has a very long path)"
-            )
-    clustered = labels.select("id", F.col("lbl").alias("cluster_id"))
+    clustered = _min_id_components(
+        guarded, active, "dedup_clusters", max_iter, checkpoint_dir
+    ).select("id", F.col("component").alias("cluster_id"))
     if verts is not None:
         clustered = verts.join(clustered, "id", "left").select(
             "id", F.coalesce("cluster_id", "id").alias("cluster_id")

@@ -132,7 +132,8 @@ def _ship_matrix(sdf: SparkDF, id_col: str, vec_col: str):
 
     rows = sdf.select(id_col, vec_col).collect()
     ids = np.array([r[0] for r in rows], dtype=np.int64)
-    M = np.array([list(r[1]) for r in rows], dtype=np.float64)
+    # an empty frame ships a (0, 0) matrix: the kernels then score nothing
+    M = np.array([list(r[1]) for r in rows] or np.empty((0, 0)), dtype=np.float64)
     norms = np.sqrt((M * M).sum(axis=1))
     return ship(sdf.sparkSession.sparkContext, (ids, M, norms))
 
@@ -162,6 +163,8 @@ def _numpy_topk(c_sdf, q_sdf, k, vec_col, id_col, qid, round_to) -> LazyFrame:
     def gen(batches):
         q_ids_b, Qb, qn = get_queries()
         nq = len(q_ids_b)
+        if nq == 0:
+            return
         chunk_rows = max(256, CHUNK_ELEMS // max(nq, 1))
         for batch in batches:
             if batch.num_rows == 0:

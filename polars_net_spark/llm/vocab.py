@@ -246,7 +246,7 @@ def train_bpe(
             return LazyFrame(spark.createDataFrame(merges, schema=schema))
         # with-block: restore the previous checkpoint dir on ALL exit paths,
         # including a mid-merge exception (r7 ADVICE)
-        with scoped_checkpoint_dir(spark.sparkContext, checkpoint_dir):
+        with scoped_checkpoint_dir(spark.sparkContext, checkpoint_dir) as ckpt:
             # initial symbols: characters + the end-of-word marker.  Spark's split
             # keeps trailing empties (limit -1) and "(?!^)" matches at end-of-string,
             # so drop empty symbols explicitly.
@@ -303,10 +303,7 @@ def train_bpe(
                 if checkpoint_every and (r + 1) % int(checkpoint_every) == 0:
                     # lineage cut; both checkpoint flavors also store the data, so
                     # no extra persist on these iterations
-                    new_vocab = (
-                        staged.checkpoint(eager=False) if checkpoint_dir is not None
-                        else staged.localCheckpoint(eager=False)
-                    )
+                    new_vocab = ckpt(staged, eager=False)
                 else:
                     new_vocab = staged.persist()
                 prev, vocab = vocab, new_vocab

@@ -1,14 +1,21 @@
-"""Minimal distributed graph ops beyond connected components (which lives in
-llm/dedup.py as dedup_clusters): fixed-iteration PageRank.
+"""Graph operators over an edge list: PageRank, label propagation,
+triangle counts, the degree report, k-core peeling, connected components
+and multi-source BFS distances.
 
-PageRank here is the bounded-round variant: ``iterations`` is explicit, each
-round is one (src-keyed) join + one (dst-keyed) aggregate — the standard
-power-iteration plan shape.  A fixed round count keeps the computation
-deterministic and closed-form (the oracle replicates it as chained CTEs);
-for convergence-driven runs loop externally and diff successive ranks.
-Lineage is checkpoint-truncated per round like dedup_clusters (plans double
-per round otherwise); pass ``checkpoint_dir=`` for reliable checkpoints that
-survive executor loss on a real cluster.
+Every undirected operator reads its edges through ``_undirected`` (null
+endpoints and self-loops drop, duplicates and reversals collapse).  The
+fixed-round operators (pagerank, label_propagation) are closed-form, so
+the oracle replays them as chained CTEs; the fixpoint operators (k_core,
+connected_components, bfs_distances) are monotone and raise at
+``max_rounds`` rather than return a truncated answer.
+
+Min-id connected components have one engine, ``_min_id_components``,
+shared with ``llm.dedup.dedup_clusters``: a bounded edge list is solved by
+union-find in driver memory, a larger one by a distributed min-label loop
+with path halving.  Iterative loops cut their lineage with the checkpoint
+function ``session.scoped_checkpoint_dir`` hands out: local by default,
+reliable when ``checkpoint_dir=`` names a path (blocks then survive
+executor loss on a real cluster).
 """
 
 from __future__ import annotations
@@ -16,10 +23,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame as SparkDF
 from pyspark.sql import functions as F
 
+from .._bounded import Guarded, bounded
 from ..frame import LazyFrame
 from ..session import scoped_checkpoint_dir
 
 __all__ = ["pagerank"]
+
+
+def _undirected(esdf: SparkDF, src: str, dst: str) -> SparkDF:
+    """The undirected edge set as ``(a, b)`` with ``a < b``: null endpoints
+    and self-loops drop, duplicates and reversed duplicates collapse."""
+    return (
+        esdf.filter(F.col(src).isNotNull() & F.col(dst).isNotNull() & (F.col(src) != F.col(dst)))
+        .select(F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b"))
+        .distinct()
+    )
 
 
 def pagerank(
@@ -53,24 +71,15 @@ def pagerank(
     as dedup_clusters.
     """
     esdf = edges if isinstance(edges, SparkDF) else edges.spark
-    if checkpoint_dir is not None:
-
-        def _ckpt(df, eager=True):
-            return df.checkpoint(eager=eager)
-    else:
-
-        def _ckpt(df, eager=True):
-            return df.localCheckpoint(eager=eager)
-
     # with-block: restore the previous checkpoint dir on ALL exit paths,
-    # including a mid-iteration exception (r7 ADVICE)
-    with scoped_checkpoint_dir(esdf.sparkSession.sparkContext, checkpoint_dir):
+    # including a mid-iteration exception
+    with scoped_checkpoint_dir(esdf.sparkSession.sparkContext, checkpoint_dir) as ckpt:
         e = esdf.select(F.col(src).alias("s"), F.col(dst).alias("d")).distinct()
         verts = e.select(F.col("s").alias("v")).union(e.select(F.col("d").alias("v"))).distinct()
         if vertices is not None:
             vsdf = vertices if isinstance(vertices, SparkDF) else vertices.spark
             verts = verts.union(vsdf.select(F.col(vertex_id).alias("v"))).distinct()
-        verts = _ckpt(verts, eager=False)
+        verts = ckpt(verts, eager=False)
         n = verts.count()
         deg = e.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
         ranks = verts.select("v", (F.lit(1.0) / n).alias("r"))
@@ -91,7 +100,7 @@ def pagerank(
                 )
             )
             if (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
-                ranks = _ckpt(ranks)
+                ranks = ckpt(ranks)
         out = ranks.select(F.col("v").alias(vertex_id), F.round("r", round_to).alias("rank"))
     return LazyFrame(out)
 
@@ -121,14 +130,7 @@ def triangle_count(
     wedge self-join, one (lo, hi)-keyed closing join — all equi-joins,
     all map-side combinable aggregates."""
     esdf = edges if isinstance(edges, SparkDF) else edges.spark
-    canon = (
-        esdf.filter(F.col(src).isNotNull() & F.col(dst).isNotNull() & (F.col(src) != F.col(dst)))
-        .select(
-            F.least(src, dst).alias("a"),
-            F.greatest(src, dst).alias("b"),
-        )
-        .distinct()
-    )
+    canon = _undirected(esdf, src, dst)
     deg = (
         canon.select(F.col("a").alias("v"))
         .union(canon.select(F.col("b").alias("v")))
@@ -204,24 +206,9 @@ def label_propagation(
     checkpoint-truncated like pagerank (same ``checkpoint_dir`` semantics).
     Output: (id, label)."""
     esdf = edges if isinstance(edges, SparkDF) else edges.spark
-    if checkpoint_dir is not None:
-
-        def _ckpt(df):
-            return df.checkpoint(eager=True)
-    else:
-
-        def _ckpt(df):
-            return df.localCheckpoint(eager=True)
-
     # with-block: restore the previous checkpoint dir on ALL exit paths
-    with scoped_checkpoint_dir(esdf.sparkSession.sparkContext, checkpoint_dir):
-        canon = (
-            esdf.filter(
-                F.col(src).isNotNull() & F.col(dst).isNotNull() & (F.col(src) != F.col(dst))
-            )
-            .select(F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b"))
-            .distinct()
-        )
+    with scoped_checkpoint_dir(esdf.sparkSession.sparkContext, checkpoint_dir) as ckpt:
+        canon = _undirected(esdf, src, dst)
         adj = canon.select(F.col("a").alias("v"), F.col("b").alias("n")).union(
             canon.select(F.col("b").alias("v"), F.col("a").alias("n"))
         )
@@ -238,7 +225,7 @@ def label_propagation(
                 .alias("lab")
             )
             if (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
-                labels = _ckpt(labels)
+                labels = ckpt(labels)
         out = labels.select(F.col("v").alias("id"), F.col("lab").alias("label"))
     return LazyFrame(out)
 
@@ -266,13 +253,7 @@ def degree_report(
     mean_degree, max_degree, assortativity (null on degree-regular
     graphs, where the correlation is undefined)."""
     esdf = edges if isinstance(edges, SparkDF) else edges.spark
-    canon = (
-        esdf.filter(
-            F.col(src).isNotNull() & F.col(dst).isNotNull() & (F.col(src) != F.col(dst))
-        )
-        .select(F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b"))
-        .distinct()
-    )
+    canon = _undirected(esdf, src, dst)
     deg = (
         canon.select(F.col("a").alias("v"))
         .union(canon.select(F.col("b").alias("v")))
@@ -343,24 +324,8 @@ def k_core(
     if checkpoint_every < 1:
         raise ValueError("checkpoint_every must be >= 1")
     esdf = edges if isinstance(edges, SparkDF) else edges.spark
-    if checkpoint_dir is not None:
-
-        def _ckpt(df):
-            return df.checkpoint(eager=True)
-    else:
-
-        def _ckpt(df):
-            return df.localCheckpoint(eager=True)
-
-    with scoped_checkpoint_dir(esdf.sparkSession.sparkContext, checkpoint_dir):
-        e = (
-            esdf.filter(
-                F.col(src).isNotNull() & F.col(dst).isNotNull()
-                & (F.col(src) != F.col(dst))
-            )
-            .select(F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b"))
-            .distinct()
-        )
+    with scoped_checkpoint_dir(esdf.sparkSession.sparkContext, checkpoint_dir) as ckpt:
+        e = _undirected(esdf, src, dst)
         e.persist()
         converged = False
         for r in range(int(max_rounds)):
@@ -382,7 +347,7 @@ def k_core(
                 bad.withColumnRenamed("v", "a"), "a", "left_anti"
             ).join(bad.withColumnRenamed("v", "b"), "b", "left_anti")
             if (r + 1) % checkpoint_every == 0:
-                nxt = _ckpt(nxt)
+                nxt = ckpt(nxt)
             nxt.persist()
             nxt.count()  # materialize past `bad` before releasing caches
             bad.unpersist()
@@ -402,7 +367,7 @@ def k_core(
         )
         # materialize before releasing the loop frame's cache: the lazy
         # result would otherwise recompute the whole peel from source
-        out = _ckpt(out)
+        out = ckpt(out)
         e.unpersist()
     return LazyFrame(out)
 
@@ -410,110 +375,132 @@ def k_core(
 __all__.append("k_core")
 
 
+def _driver_union_find(edges: SparkDF, active: SparkDF) -> SparkDF:
+    """The bounded side of :func:`_min_id_components`: collect the cached
+    edge list and the active vertices, run union-find keeping the SMALLER
+    root as parent (so every component's root is its minimum id, the exact
+    labels the distributed loop converges to) and return an
+    ``(id, component)`` frame."""
+    from pyspark.sql import types as T
+
+    act = {r[0] for r in active.collect()}
+    parent: dict = {}
+
+    def find(x):
+        r = x
+        while parent.get(r, r) != r:
+            r = parent[r]
+        while parent.get(x, x) != x:  # path compression
+            parent[x], x = r, parent[x]
+        return r
+
+    for row in edges.collect():
+        a, b = row[0], row[1]
+        if a in act and b in act:
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                lo, hi = (ra, rb) if ra < rb else (rb, ra)
+                parent[hi] = lo
+    rows = [(i, find(i)) for i in act]
+    id_type = active.schema.fields[0].dataType
+    schema = T.StructType(
+        [T.StructField("id", id_type), T.StructField("component", id_type)]
+    )
+    return active.sparkSession.createDataFrame(rows, schema)
+
+
+def _min_id_components(
+    edges: Guarded,
+    active: SparkDF,
+    operator: str,
+    max_rounds: int,
+    checkpoint_dir: "str | None",
+) -> SparkDF:
+    """Min-id connected components of the ``active`` vertices (one ``id``
+    column) over ``edges``, a guarded frame of directed ``(src, dst)`` rows
+    holding both directions of every edge.  Edges with an endpoint outside
+    ``active`` take no part.  Returns ``(id, component)`` with component
+    = the minimum id reachable from ``id``.
+
+    Below the bound the components are solved by union-find in driver
+    memory over one collect: exact, so ``max_rounds`` never applies.
+    Above it, a distributed min-label loop with path halving: each round
+    takes the least of a vertex's own label, its neighbours' labels and its
+    label's label, which shortens paths geometrically, so rounds grow with
+    the log of the diameter.  A round is two key-partitioned shuffles and
+    an eager checkpoint (without the lineage cut the plan doubles per round
+    and planning exhausts the driver heap within ~10 rounds).  Raises
+    RuntimeError naming ``operator`` after ``max_rounds`` rounds without
+    convergence rather than return wrong labels."""
+    if edges.small:
+        return _driver_union_find(edges.frame, active)
+    e = edges.frame
+    # no checkpoint on the seed: round 1's checkpoint cuts the lineage,
+    # and the edges are already cached by the guard
+    labels = active.select("id", F.col("id").alias("lbl"))
+    # with-block: restore the previous checkpoint dir on ALL exit paths,
+    # convergence, the non-convergence raise or a mid-round failure
+    with scoped_checkpoint_dir(e.sparkSession.sparkContext, checkpoint_dir) as ckpt:
+        for _ in range(int(max_rounds)):
+            nmin = (
+                e.join(labels, e["src"] == labels["id"])
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.min("lbl").alias("nlbl"))
+            )
+            parent = labels.select(F.col("id").alias("p_id"), F.col("lbl").alias("plbl"))
+            stage = ckpt(
+                labels.join(nmin, "id", "left")
+                .join(parent, F.col("lbl") == F.col("p_id"), "left")
+                .select("id", "lbl", F.least("lbl", "nlbl", "plbl").alias("new_lbl"))
+            )
+            changed = stage.filter(F.col("new_lbl") != F.col("lbl")).count()
+            labels = stage.select("id", F.col("new_lbl").alias("lbl"))
+            if changed == 0:
+                break
+        else:
+            raise RuntimeError(
+                f"{operator} did not converge in {max_rounds} rounds; raise its "
+                "round limit (the graph has a very long path)"
+            )
+    return labels.select("id", F.col("lbl").alias("component"))
+
+
 def connected_components(
     edges: "LazyFrame | SparkDF",
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 20,
-    checkpoint_every: int = 4,
     checkpoint_dir: str | None = None,
 ) -> LazyFrame:
-    """Connected components by MIN-LABEL propagation: every vertex starts
-    as its own component id and repeatedly takes the minimum label among
-    itself and its neighbors until nothing changes — the entity-
-    resolution / "how many disjoint clusters does this graph have"
+    """Connected components with min-id labels: every vertex gets the
+    minimum vertex id of its component as ``component``.  This is the
+    entity-resolution / "how many disjoint clusters does this graph have"
     primitive beside label_propagation's modular communities (which uses
     the MODE and can split a connected graph; this one never does).
 
-    The iteration is MONOTONE (labels only decrease toward the component
-    minimum), so the fixpoint is unique and an oracle unrolling at least
-    as many rounds as convergence took replays it exactly, extra rounds
-    being no-ops (the k_core convention).  Convergence takes at most the
-    graph diameter in rounds — fine for the short-diameter graphs entity
-    resolution produces; for chain-like graphs prefer dedup_clusters'
-    union-find path.
+    Edges are undirected: null endpoints and self-loops drop, duplicates
+    and reversals collapse.  The vertex set is the edge endpoints.
+    Output: (id, component).
 
-    Scale shape: per round ONE union + min-aggregate over the (vertex-
-    keyed) label frame joined to the edge list on each endpoint — plain
-    equi-joins, map-side-combining min — plus an anti-join emptiness
-    probe as the stop condition; lineage checkpoint-truncated every
-    ``checkpoint_every`` rounds.  Edges are undirected (loops drop,
-    duplicates collapse).  Raises RuntimeError if ``max_rounds`` is hit
-    before the fixpoint.  Output: (id, component) with component = min
-    vertex id of the component."""
-    if checkpoint_every < 1:
-        raise ValueError("checkpoint_every must be >= 1")
+    Scale shape: the canonical edge list is cached in both directions and
+    counted once against ``_bounded.BOUND`` (the decision is recorded as
+    ``connected_components``).  A bounded edge list is solved by union-find
+    in driver memory: one count and two collects, whatever the diameter.
+    A larger one runs the distributed min-label loop with path halving
+    that llm.dedup.dedup_clusters shares: two key-partitioned shuffles and
+    a checkpoint per round, rounds logarithmic in the diameter.  ``max_rounds`` applies
+    only to that loop, which raises RuntimeError when it is reached before
+    the fixpoint; the driver path is exact and never truncates.
+    ``checkpoint_dir`` makes the loop's checkpoints reliable, as in
+    dedup_clusters."""
     esdf = edges if isinstance(edges, SparkDF) else edges.spark
-    if checkpoint_dir is not None:
-
-        def _ckpt(df):
-            return df.checkpoint(eager=True)
-    else:
-
-        def _ckpt(df):
-            return df.localCheckpoint(eager=True)
-
-    with scoped_checkpoint_dir(esdf.sparkSession.sparkContext, checkpoint_dir):
-        e = (
-            esdf.filter(
-                F.col(src).isNotNull() & F.col(dst).isNotNull()
-                & (F.col(src) != F.col(dst))
-            )
-            .select(F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b"))
-            .distinct()
-        )
-        e.persist()
-        labels = (
-            e.select(F.col("a").alias("v"))
-            .unionAll(e.select(F.col("b").alias("v")))
-            .distinct()
-            .select("v", F.col("v").alias("c"))
-        )
-        labels.persist()
-        cached = labels  # the actually-persisted frame behind `labels`
-        converged = False
-        for r in range(int(max_rounds)):
-            # own-label rows ride the union FLAGGED, so the round's previous
-            # label falls out of the same min-aggregate — the r12 shape
-            # re-joined nxt to labels on v every round just to ask "did
-            # anything change" (one data-sized join + sort per round, gone)
-            nxt = (
-                labels.select("v", "c", F.lit(True).alias("__own__"))
-                .unionAll(
-                    labels.join(e, labels["v"] == e["a"], "inner")
-                    .select(F.col("b").alias("v"), "c", F.lit(False).alias("__own__"))
-                )
-                .unionAll(
-                    labels.join(e, labels["v"] == e["b"], "inner")
-                    .select(F.col("a").alias("v"), "c", F.lit(False).alias("__own__"))
-                )
-                .groupBy("v")
-                .agg(
-                    F.min("c").alias("c"),
-                    F.min(F.when(F.col("__own__"), F.col("c"))).alias("__prev__"),
-                )
-            )
-            if (r + 1) % checkpoint_every == 0:
-                nxt = _ckpt(nxt)
-            nxt.persist()
-            done = nxt.filter(F.col("c") != F.col("__prev__")).isEmpty()
-            cached.unpersist()
-            cached = nxt
-            labels = nxt.select("v", "c")
-            if done:
-                converged = True
-                break
-        if not converged:
-            cached.unpersist()
-            e.unpersist()
-            raise RuntimeError(
-                f"connected_components did not converge within "
-                f"max_rounds={max_rounds}"
-            )
-        out = labels.select(F.col("v").alias("id"), F.col("c").alias("component"))
-        out = _ckpt(out)
-        cached.unpersist()
-        e.unpersist()
+    e = _undirected(esdf, src, dst)
+    directed = e.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
+        e.select(F.col("b").alias("src"), F.col("a").alias("dst"))
+    )
+    guarded = bounded(directed, "connected_components")
+    active = guarded.frame.select(F.col("src").alias("id")).distinct()
+    out = _min_id_components(guarded, active, "connected_components", max_rounds, checkpoint_dir)
     return LazyFrame(out)
 
 
@@ -553,24 +540,8 @@ def bfs_distances(
     if checkpoint_every < 1:
         raise ValueError("checkpoint_every must be >= 1")
     esdf = edges if isinstance(edges, SparkDF) else edges.spark
-    if checkpoint_dir is not None:
-
-        def _ckpt(df):
-            return df.checkpoint(eager=True)
-    else:
-
-        def _ckpt(df):
-            return df.localCheckpoint(eager=True)
-
-    with scoped_checkpoint_dir(esdf.sparkSession.sparkContext, checkpoint_dir):
-        e = (
-            esdf.filter(
-                F.col(src).isNotNull() & F.col(dst).isNotNull()
-                & (F.col(src) != F.col(dst))
-            )
-            .select(F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b"))
-            .distinct()
-        )
+    with scoped_checkpoint_dir(esdf.sparkSession.sparkContext, checkpoint_dir) as ckpt:
+        e = _undirected(esdf, src, dst)
         e.persist()
         spark = esdf.sparkSession
         svals = [(s,) for s in sources]
@@ -584,11 +555,9 @@ def bfs_distances(
         converged = False
         for r in range(int(max_rounds)):
             # own-distance rows ride the union FLAGGED so the previous
-            # distance falls out of the same min-aggregate — the old shape
-            # re-joined nxt to dist every round just for the "did anything
-            # change" probe (the connected_components r13 fuse; a newly
-            # reached vertex has no own row, so __prev__ NULL ⇔ the left
-            # join's p.d-is-null case)
+            # distance falls out of the same min-aggregate, with no re-join
+            # of nxt to dist for the "did anything change" probe (a newly
+            # reached vertex has no own row, so __prev__ is NULL)
             nxt = (
                 dist.select("v", "d", F.lit(True).alias("__own__"))
                 .unionAll(
@@ -608,7 +577,7 @@ def bfs_distances(
                 )
             )
             if (r + 1) % checkpoint_every == 0:
-                nxt = _ckpt(nxt)
+                nxt = ckpt(nxt)
             nxt.persist()
             done = nxt.filter(
                 F.col("__prev__").isNull() | (F.col("d") != F.col("__prev__"))
@@ -626,7 +595,7 @@ def bfs_distances(
                 f"bfs_distances did not converge within max_rounds={max_rounds}"
             )
         out = dist.select(F.col("v").alias("id"), F.col("d").alias("distance"))
-        out = _ckpt(out)
+        out = ckpt(out)
         cached.unpersist()
         e.unpersist()
     return LazyFrame(out)

@@ -1378,19 +1378,10 @@ def ipf_weights(
             F.round(F.col("__m__"), round_to).alias("mass"),
         )
         return LazyFrame(out)
-    if checkpoint_dir is not None:
-
-        def _ckpt(df):
-            return df.checkpoint(eager=True)
-    else:
-
-        def _ckpt(df):
-            return df.localCheckpoint(eager=True)
-
     # with-block so the previous checkpoint dir is restored even when an
-    # iteration raises (r7 ADVICE: manual __enter__/__exit__ leaked the
-    # redirected dir on any mid-loop exception)
-    with scoped_checkpoint_dir(sdf.sparkSession.sparkContext, checkpoint_dir):
+    # iteration raises (a manual __enter__/__exit__ leaked the redirected
+    # dir on any mid-loop exception)
+    with scoped_checkpoint_dir(sdf.sparkSession.sparkContext, checkpoint_dir) as ckpt:
         ntot = cells.agg(F.sum("n").alias("__N__"))
         cur = cells.join(F.broadcast(ntot)).withColumn(
             "__m__", F.col("n") / F.col("__N__")
@@ -1405,7 +1396,7 @@ def ipf_weights(
                 "__m__", F.col("__m__") * F.col("__tc__") / F.col("__cs__")
             ).drop("__cs__")
             if (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
-                cur = _ckpt(cur)
+                cur = ckpt(cur)
         out = cur.select(
             F.col("__r__").alias(row_col),
             F.col("__c__").alias(col_col),

@@ -143,6 +143,13 @@ class scoped_checkpoint_dir:
     ``checkpoint_dir=`` argument never silently redirects other code's
     reliable checkpoints in the same session.
 
+    The block gets the one checkpoint policy of the iterative operators:
+    ``with scoped_checkpoint_dir(sc, path) as ckpt`` binds
+    ``ckpt(df, eager=True)``, a reliable ``df.checkpoint(eager)`` whose
+    blocks survive executor loss when ``path`` is given, and
+    ``df.localCheckpoint(eager)`` (executor memory, single-node grade)
+    when it is None.
+
     If no directory was set before, there is no public API to unset one,
     so the new directory remains after exit (documented residual).  A
     checkpoint deferred with ``eager=False`` that materializes after exit
@@ -158,7 +165,8 @@ class scoped_checkpoint_dir:
         if self._path is not None:
             self._prev = self._sc.getCheckpointDir()
             self._sc.setCheckpointDir(self._path)
-        return self
+            return lambda df, eager=True: df.checkpoint(eager=eager)
+        return lambda df, eager=True: df.localCheckpoint(eager=eager)
 
     def __exit__(self, *exc):
         if self._path is not None and self._prev is not None:

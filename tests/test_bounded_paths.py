@@ -38,6 +38,7 @@ from polars_net_spark.llm.vocab import (
     train_bpe,
 )
 from polars_net_spark.operators.analytics import rmst, survival_curve
+from polars_net_spark.operators.graph import connected_components
 from polars_net_spark.operators.distsort import (
     cell_ranks,
     exact_quantiles,
@@ -72,6 +73,59 @@ FIXTURES = {
 PROBS = [0.0, 0.1, 0.25, 0.5, 0.9, 1.0]
 
 
+def _islands_and_chain():
+    """26 ten-id islands (ids 0..259, some split into several components,
+    edges in both orientations) beside a 40-edge chain 1000..1040 whose
+    minimum sits at one end: 301 vertices, the chain the longest path."""
+    rows = []
+    for g in range(26):
+        base = g * 10
+        for i in range(10):
+            j = (i * 7 + 3) % 10
+            if i != j:
+                rows.append((base + j, base + i) if i % 3 else (base + i, base + j))
+    return rows + [(1040 - i, 1039 - i) for i in range(40)]
+
+
+# connected_components' edge lists: fixture -> (DDL, rows)
+EDGES = {
+    "empty": ("src long, dst long", []),
+    "one_edge": ("src long, dst long", [(7, 3)]),
+    "self_loops": ("src long, dst long", [(3, 3), (5, 5), (3, 3)]),
+    "null_endpoints": (
+        "src long, dst long", [(1, None), (None, 2), (None, None), (4, 3), (None, 4)]
+    ),
+    "duplicates": (
+        "src long, dst long", [(1, 2), (2, 1), (1, 2), (3, 2), (2, 3), (9, 8), (8, 9)]
+    ),
+    "string_ids": (
+        "src string, dst string", [("b", "a"), ("c", "b"), ("x", "y"), ("y", "y"), ("é", "z")]
+    ),
+    "islands_and_chain": ("src long, dst long", _islands_and_chain()),
+}
+
+
+def _min_id_labels(rows):
+    """Reference components: (vertex, minimum id of its component) over the
+    non-null, non-loop edges, by graph search."""
+    adj: dict = {}
+    for a, b in rows:
+        if a is not None and b is not None and a != b:
+            adj.setdefault(a, set()).add(b)
+            adj.setdefault(b, set()).add(a)
+    label: dict = {}
+    for v in sorted(adj):
+        if v in label:
+            continue
+        stack = [v]  # sorted order: v is its component's minimum
+        while stack:
+            u = stack.pop()
+            if u not in label:
+                label[u] = v
+                stack.extend(adj[u])
+    return [(v, c) for v, c in label.items()]
+
+
 def _rows(lf):
     return lf.collect().rows()
 
@@ -91,7 +145,16 @@ OPERATORS = {
         lambda d: [exact_quantiles_multi(d, {"t": "t"}, PROBS)["t"]],
     ),
     "pettitt_test": ("pettitt_test", lambda d: _rows(pettitt_test(d, "t", "v"))),
+    # above the 41 rounds a plain min-label loop needs on the 40-edge chain
+    "connected_components": (
+        "connected_components", lambda d: _rows(connected_components(d, max_rounds=64))
+    ),
 }
+SIDES = [
+    (op, fixture)
+    for op in sorted(OPERATORS)
+    for fixture in sorted(EDGES if op == "connected_components" else FIXTURES)
+]
 
 
 def _canon(rows):
@@ -114,15 +177,18 @@ def _run(monkeypatch, bound, operator, call, sdf):
     return result, recs[0]
 
 
-@pytest.mark.parametrize("fixture", sorted(FIXTURES))
-@pytest.mark.parametrize("op", sorted(OPERATORS))
+@pytest.mark.parametrize("op,fixture", SIDES)
 def test_both_sides_of_the_bound_agree(spark, monkeypatch, op, fixture):
     operator, call = OPERATORS[op]
-    data = FIXTURES[fixture]
-    sdf = spark.createDataFrame(data, "t double, e int, v double")
+    if op == "connected_components":
+        ddl, data = EDGES[fixture]
+    else:
+        ddl, data = "t double, e int, v double", FIXTURES[fixture]
+    sdf = spark.createDataFrame(data, ddl)
     if fixture == "repartitioned":
         sdf = sdf.repartition(7)
-    # a bound of 0 sends every input to distsort, the empty one included
+    # a bound of 0 sends every input to the distributed path, the empty
+    # one included
     forced = 0
     small, rec_small = _run(monkeypatch, DEFAULT_BOUND, operator, call, sdf)
     big, rec_big = _run(monkeypatch, forced, operator, call, sdf)
@@ -133,6 +199,8 @@ def test_both_sides_of_the_bound_agree(spark, monkeypatch, op, fixture):
     assert rec_big["bound"] == forced
     assert rec_small["n"] == rec_big["n"]
     assert big == small
+    if op == "connected_components":
+        assert small == ("rows", _canon(_min_id_labels(data)))
 
 
 def test_decision_record_is_bounded(spark):

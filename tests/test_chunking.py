@@ -91,6 +91,27 @@ class TestMaskTokens:
         assert out[2][1] == "" and out[2][3] == 0
         assert out[3][1] is None and out[3][3] == 0
 
+    def test_null_id_masks_nothing(self, spark):
+        """md5 over a null id is null in SQL, so a null-id row draws no
+        position; the other rows are unchanged by its presence."""
+        import polars_net_spark as pl
+        from polars_net_spark.llm import mask_tokens_frame
+
+        rows = [(1, "the cat sat on the mat the cat"), (None, "the cat sat on a mat"),
+                (3, "a b c d e f g h")]
+        ddl = "doc_id long, text string"
+
+        def run(data):
+            lf = pl.LazyFrame(spark.createDataFrame(data, ddl))
+            return sorted(mask_tokens_frame(lf, mask_rate=0.5, span_len=2, seed="r4")
+                          .collect().rows(), key=repr)
+
+        with_null = run(rows)
+        assert (None, "the cat sat on a mat", [], 6, 0) in with_null
+        without = run([r for r in rows if r[0] is not None])
+        assert [r for r in with_null if r[0] is not None] == without
+        assert any(r[4] > 0 for r in without)  # the other rows do get masked
+
     def test_span_extension_and_guards(self, spark):
         import polars_net_spark as pl
         from polars_net_spark.llm import mask_tokens_frame

@@ -4,6 +4,7 @@ import math
 
 import pytest
 
+from polars_net_spark import _bounded
 from polars_net_spark.operators.analytics import gumbel_fit
 from polars_net_spark.operators.graph import connected_components
 from polars_net_spark.operators.mleval import confusion_report
@@ -153,9 +154,23 @@ class TestConnectedComponents:
         out = rows(connected_components(e, max_rounds=20))
         assert all(c == 0 for _, c in out) and len(out) == 13
 
-    def test_max_rounds_raises(self, spark):
+    def test_max_rounds_raises(self, spark, monkeypatch):
+        # the round limit guards the distributed loop only: force it
+        monkeypatch.setattr(_bounded, "BOUND", 0)
         e = spark.createDataFrame(
             [(i, i + 1) for i in range(30)], "src int, dst int"
         )
-        with pytest.raises(RuntimeError, match="converge"):
+        with pytest.raises(RuntimeError, match="connected_components did not converge"):
             connected_components(e, max_rounds=2)
+
+    def test_bounded_side_is_exact_at_any_round_limit(self, spark):
+        # the same 31-vertex chain below the bound: union-find in driver
+        # memory, which max_rounds never truncates
+        e = spark.createDataFrame(
+            [(i, i + 1) for i in range(30)], "src int, dst int"
+        )
+        _bounded.clear_decisions()
+        out = sorted(rows(connected_components(e, max_rounds=2)))
+        assert out == [(i, 0) for i in range(31)]
+        (rec,) = [d for d in _bounded.decisions() if d["operator"] == "connected_components"]
+        assert (rec["path"], rec["n"]) == ("bounded", 60)

@@ -5383,7 +5383,8 @@ def _q171(spark, sf_dir):
     # is caught by the offset emission by construction
     # pinned to the direct row-level plan (levers OFF) — since r11 the
     # public default is distinct_values=True + length_band=True (the
-    # measured scale-safe plan, SLOPE_LEVERS_r10/r11); the gate keeps the
+    # measured scale-safe plan: 1.72x and 1.99x wall on 10x data in two
+    # sf0.1 -> sf1 runs); the gate keeps the
     # original plan so its oracle record stays comparable across rounds
     out = fuzzy_join(
         left, right, on="name", max_distance=2, block_chars=12,

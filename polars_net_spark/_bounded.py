@@ -40,7 +40,7 @@ from typing import Any, Callable, NamedTuple
 
 from pyspark.sql import DataFrame as SparkDF
 
-from ._cache import _CACHES, register_cache
+from ._cache import register_broadcast, register_cache
 
 __all__ = ["BOUND", "Guarded", "bounded", "ship", "record", "decisions", "clear_decisions"]
 
@@ -70,8 +70,7 @@ def bounded(sdf: SparkDF, operator: str, bound: "int | None" = None) -> Guarded:
 def ship(sc, obj: Any) -> Callable[[], Any]:
     """Broadcast ``obj``, register the handle for ``release_caches()`` and
     return a zero-argument getter for the worker code."""
-    handle = sc.broadcast(obj)
-    _CACHES.append(handle)
+    handle = register_broadcast(sc, obj)
     return lambda: handle.value
 
 

@@ -1347,10 +1347,6 @@ class LazyFrame:
     def fetch(self, n: int) -> "DataFrame":
         return self.limit(n).collect()
 
-    # -- cache --------------------------------------------------------------
-    def cache(self) -> "LazyFrame":
-        return LazyFrame(self._sdf.cache())
-
     def repartition(self, n: int | None = None, *by: str) -> "LazyFrame":
         if by:
             cols_ = [F.col(c) for c in by]
@@ -1420,12 +1416,9 @@ class LazyFrame:
         Catalyst recomputes the lineage per action."""
         from pyspark import StorageLevel
 
-        from ._cache import _CACHES
+        from ._cache import register_cache
 
-        level = getattr(StorageLevel, storage_level)
-        sdf = self._sdf.persist(level)
-        _CACHES.append(sdf)  # registry tracks it; register_cache would re-persist
-        return LazyFrame(sdf)
+        return LazyFrame(register_cache(self._sdf, getattr(StorageLevel, storage_level)))
 
     cache = persist
 

@@ -47,7 +47,8 @@ def _staged_words(sdf: SparkDF, text_col: str, id_col: str) -> SparkDF:
     — the one corpus scan every word-level consumer below shares.  Without
     the staging cache each consumer (vocab agg, per-doc counts, the
     empty-doc re-attach) re-scans and re-splits the corpus; see
-    ``_grams_frame`` and NOTES_r2 for the measured 9x cost of that."""
+    ``_grams_frame``.  Measured on q67 at sf0.1: 11.4 s unstaged, 1.25 s
+    staged (9x)."""
     from .._cache import register_cache
 
     par = sdf.sparkSession.sparkContext.defaultParallelism

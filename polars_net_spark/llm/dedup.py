@@ -730,7 +730,7 @@ def _bucketed_near_dup_pairs(
 def _numpy_near_dup_pairs(sdf: SparkDF, vec_col, id_col, threshold, round_to) -> LazyFrame:
     import numpy as np
 
-    from .similarity import _batch_matrix, _ship_matrix
+    from .similarity import _batch_matrix, _ship_matrix, _vectors
 
     # the broadcast side is bounded by the caller's broadcast_limit
     get_matrix = _ship_matrix(sdf, id_col, vec_col)
@@ -765,7 +765,7 @@ def _numpy_near_dup_pairs(sdf: SparkDF, vec_col, id_col, threshold, round_to) ->
 
     par = sdf.sparkSession.sparkContext.defaultParallelism
     out = map_batches(
-        sdf.select(id_col, vec_col).repartition(par), gen, "id_a long, id_b long, cosine double"
+        _vectors(sdf, id_col, vec_col).repartition(par), gen, "id_a long, id_b long, cosine double"
     )
     return LazyFrame(out)
 

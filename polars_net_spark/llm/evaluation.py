@@ -1290,9 +1290,9 @@ def chrf_corpus(
     # mapInArrow emitting per-batch integer partial sums (nd, m_n, h_n,
     # r_n), reduced by a tiny sum aggregate.  The r11 Catalyst version
     # computed the same integers through array_sort + aggregate() folds,
-    # but higher-order functions have no codegen — CHRF_PROFILE_r11
-    # measured the interpreted sort (4.1 s) + fold lambda (6.1 s) as the
-    # whole cost at sf1.  Gram windows are CODEPOINT windows exactly as
+    # but higher-order functions have no codegen — a lineage decomposition
+    # at sf1 (50k docs, 32 cores) measured the interpreted sort (4.1 s) +
+    # fold lambda (6.1 s) as nearly all of a 14.2 s wall.  Gram windows are CODEPOINT windows exactly as
     # before (the expression version's Latin-1 fast path only fired when
     # code units == codepoints, and its string fallback used codepoint
     # substr); totals stay char_length arithmetic (len(str) = codepoints).

@@ -124,13 +124,19 @@ def cosine_topk(
     return LazyFrame(out)
 
 
+def _vectors(sdf: SparkDF, id_col: str, vec_col: str) -> SparkDF:
+    """The ``(id, vector)`` rows a vector kernel reads: a null vector drops,
+    as in embedding_covariance and kmeans_report."""
+    return sdf.select(id_col, vec_col).filter(F.col(vec_col).isNotNull())
+
+
 def _ship_matrix(sdf: SparkDF, id_col: str, vec_col: str):
     """Collect a bounded (id, vector) frame as ``(ids, M, norms)`` numpy
     arrays — int64 ids, the float64 (n, d) matrix and its row L2 norms —
     and broadcast the tuple (``_bounded.ship``); returns the worker getter."""
     import numpy as np
 
-    rows = sdf.select(id_col, vec_col).collect()
+    rows = _vectors(sdf, id_col, vec_col).collect()
     ids = np.array([r[0] for r in rows], dtype=np.int64)
     # an empty frame ships a (0, 0) matrix: the kernels then score nothing
     M = np.array([list(r[1]) for r in rows] or np.empty((0, 0)), dtype=np.float64)
@@ -139,8 +145,8 @@ def _ship_matrix(sdf: SparkDF, id_col: str, vec_col: str):
 
 
 def _batch_matrix(batch, id_col: str, vec_col: str):
-    """An Arrow batch's ``(ids, M, norms)`` in :func:`_ship_matrix`'s layout;
-    a null id or vector raises."""
+    """An Arrow batch of :func:`_vectors` rows as ``(ids, M, norms)`` in
+    :func:`_ship_matrix`'s layout; a null id raises."""
     import numpy as np
 
     ids = batch.column(id_col).to_numpy().astype(np.int64)
@@ -202,7 +208,7 @@ def _numpy_topk(c_sdf, q_sdf, k, vec_col, id_col, qid, round_to) -> LazyFrame:
 
     par = c_sdf.sparkSession.sparkContext.defaultParallelism
     cand = map_batches(
-        c_sdf.select(id_col, vec_col).repartition(par),
+        _vectors(c_sdf, id_col, vec_col).repartition(par),
         gen,
         "query_id long, corpus_id long, cosine double",
     )
@@ -296,7 +302,7 @@ def hyperplane_buckets(
     vec_type = dict(sdf.dtypes)[vec_col]
     par = sdf.sparkSession.sparkContext.defaultParallelism
     return map_batches(
-        sdf.select(id_col, vec_col).repartition(par),
+        _vectors(sdf, id_col, vec_col).repartition(par),
         gen,
         f"{out_id} long, {out_vec} {vec_type}, table int, bucket long",
     )
@@ -902,7 +908,7 @@ def embedding_threshold_join(
                         yield {out_l: ids_a[ia], out_r: b_ids[s:e][ib], "cosine": S[ia, ib]}
 
         schema = f"{out_l} long, {out_r} long, cosine double"
-        return LazyFrame(map_batches(lsdf.select(left_id, vec_col), gen, schema))
+        return LazyFrame(map_batches(_vectors(lsdf, left_id, vec_col), gen, schema))
     if method != "bucketed":
         raise ValueError(f"unknown method {method!r}")
     lb = register_cache(
@@ -1781,8 +1787,8 @@ def kmeans_report(
     sdf = _sdf(corpus).select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
     ).filter(F.col("v").isNotNull())
-    sdf = sdf.persist()
-    try:
+    with scoped_caches():
+        sdf = register_cache(sdf)
         init = sdf.orderBy("id").limit(k).select("v").collect()
         if len(init) < k:
             raise ValueError(f"kmeans_report: fewer than k={k} vectors")
@@ -1852,15 +1858,10 @@ def kmeans_report(
             "inertia",
             F.element_at(nmap, F.col("cid").cast("int")).alias("centroid_norm"),
         )
-        from ..frame import LazyFrame as _LF
-
         # the returned plan references only centroid LITERALS + the raw
-        # source, so releasing the persisted base below is safe — the
+        # source, so the scope's release of the cached base is safe — the
         # caller's collect re-derives the final assignment from source
-        res = _LF(out)
-    finally:
-        sdf.unpersist()
-    return res
+        return LazyFrame(out)
 
 
 __all__.append("kmeans_report")

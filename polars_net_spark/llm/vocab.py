@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from .._arrow import map_batches
 from .._bounded import bounded, ship
-from .._cache import scoped_caches
+from .._cache import register_cache, replace_cache, scoped_caches
 from ..frame import LazyFrame
 from ..session import scoped_checkpoint_dir
 
@@ -251,18 +251,18 @@ def train_bpe(
             # keeps trailing empties (limit -1) and "(?!^)" matches at end-of-string,
             # so drop empty symbols explicitly.
             chars = F.filter(F.split(F.col("word"), "(?!^)"), lambda s: F.length(s) > 0)
-            vocab = wc.select(
-                "cnt", F.concat(chars, F.array(F.lit(end_of_word))).alias("sym")
-            ).persist()
+            vocab = register_cache(
+                wc.select("cnt", F.concat(chars, F.array(F.lit(end_of_word))).alias("sym"))
+            )
+            sym = F.col("sym")
+            lefts = F.slice(sym, 1, F.size(sym) - 1)
+            rights = F.slice(sym, 2, F.size(sym) - 1)
 
-            merges: list[tuple[int, str, str, int]] = []
-            prev = None
-            for r in range(int(num_merges)):
-                sym = F.col("sym")
-                lefts = F.slice(sym, 1, F.size(sym) - 1)
-                rights = F.slice(sym, 2, F.size(sym) - 1)
+            def argmax(v: SparkDF):
+                """The most frequent adjacent pair of ``v``; its one job
+                reads every row, so it also fills ``v``'s cache."""
                 pairs = (
-                    vocab.filter(F.size(sym) >= 2)
+                    v.filter(F.size(sym) >= 2)
                     .select(
                         "cnt",
                         F.explode(
@@ -274,16 +274,15 @@ def train_bpe(
                     .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
                     .agg(F.sum("cnt").alias("c"))
                 )
-                # the argmax collect doubles as the job that fills vocab's cache —
-                # ONE job per iteration, no separate materialization pass
-                best = pairs.orderBy(F.col("c").desc(), F.col("l"), F.col("r")).first()
-                if prev is not None:
-                    prev.unpersist()  # safe: vocab's cache is now populated
-                    prev = None
-                if best is None or best["c"] < min_pair_count:
+                return pairs.orderBy(F.col("c").desc(), F.col("l"), F.col("r")).first()
+
+            merges: list[tuple[int, str, str, int]] = []
+            best = argmax(vocab) if num_merges > 0 else None
+            while best is not None and best["c"] >= min_pair_count:
+                l, rr = best["l"], best["r"]
+                merges.append((len(merges), l, rr, int(best["c"])))
+                if len(merges) == int(num_merges):
                     break
-                l, rr, c = best["l"], best["r"], int(best["c"])
-                merges.append((r, l, rr, c))
                 merged = l + rr
                 # greedy left-to-right fold: pop-and-replace when the running tail
                 # is `l` and the next symbol is `r`
@@ -300,16 +299,14 @@ def train_bpe(
                     ).otherwise(F.concat(acc, F.array(s))),
                 )
                 staged = vocab.select("cnt", fold.alias("sym"))
-                if checkpoint_every and (r + 1) % int(checkpoint_every) == 0:
-                    # lineage cut; both checkpoint flavors also store the data, so
-                    # no extra persist on these iterations
-                    new_vocab = ckpt(staged, eager=False)
-                else:
-                    new_vocab = staged.persist()
-                prev, vocab = vocab, new_vocab
-            vocab.unpersist()
-            if prev is not None:
-                prev.unpersist()
+                # lineage cut; both checkpoint flavors also store the data,
+                # so a checkpoint round persists nothing on top
+                stored = bool(checkpoint_every) and len(merges) % int(checkpoint_every) == 0
+                # the next argmax is the ONE job per merge: it fills the new
+                # vocab before the previous one is released
+                vocab, best = replace_cache(
+                    vocab, ckpt(staged, eager=False) if stored else staged, argmax, stored
+                )
 
     out = spark.createDataFrame(merges, schema=schema)
     return LazyFrame(out)

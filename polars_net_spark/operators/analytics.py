@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame as SparkDF, Window
 from pyspark.sql import functions as F
 
 from .._bounded import bounded
+from .._cache import register_cache, scoped_caches
 from ..frame import LazyFrame
 
 __all__ = [
@@ -599,7 +600,6 @@ def with_rank_normalized(
     keys = [by] if isinstance(by, str) else list(by or [])
     v = F.col(value_col)
     if not keys:
-        from .._cache import register_cache
         from .distsort import with_bucket_offsets, with_prefix_offsets
 
         d = (
@@ -857,7 +857,6 @@ def weighted_quantiles(
     sdf = _sdf(frame)
     v = F.col(value_col).cast("double")
     w = F.col(weight_col).cast("double")
-    from .._cache import register_cache
 
     g = register_cache(
         sdf.filter(v.isNotNull() & w.isNotNull() & (w > 0))
@@ -1002,7 +1001,6 @@ def gini_coefficient(
             F.count(F.lit(1)).alias("n"),
         )
     else:
-        from .._cache import register_cache
         from .distsort import with_bucket_offsets
 
         d = register_cache(
@@ -1320,7 +1318,6 @@ def _km_curve(
             ).alias("survival"),
         )
         return out, True
-    from .._cache import register_cache
     from .distsort import with_bucket_offsets, with_prefix_offsets
 
     d3, gb, tot = with_bucket_offsets(grp, "t", {"dc": F.col("d") + F.col("c")})
@@ -1848,7 +1845,6 @@ def abc_analysis(
         raise ValueError("thresholds must satisfy 0 < t1 < t2 <= 1")
     sdf = _sdf(frame)
     v = F.col(value_col).cast("double")
-    from .._cache import register_cache
 
     keys = register_cache(
         sdf.filter(v.isNotNull())
@@ -1900,7 +1896,6 @@ def pareto_front(
     x = F.col(x_col).cast("double")
     y = F.col(y_col).cast("double")
     base = sdf.filter(x.isNotNull() & y.isNotNull())
-    from .._cache import register_cache
 
     gx = register_cache(
         base.groupBy(x.alias("__x__")).agg(F.max(y).alias("__ym__"))
@@ -2276,7 +2271,6 @@ def lorenz_curve(
     neg = base.filter(F.col("__v__") < 0).limit(1).count()
     if neg:
         raise ValueError("lorenz_curve requires non-negative values")
-    from .._cache import register_cache
 
     dv = register_cache(
         base.groupBy("__v__").agg(
@@ -2408,7 +2402,6 @@ def log_rank_test(
         )
     g1 = sorted(probe)[0]
     is1 = (F.col("__g__") == F.lit(g1)).cast("long")
-    from .._cache import register_cache
 
     cells = register_cache(
         base.groupBy("__t__").agg(
@@ -3034,7 +3027,6 @@ def quantile_compare(
     g = F.col(group_col)
     a_flag = (g == F.lit(group_a)).cast("long")
     b_flag = (g == F.lit(group_b)).cast("long")
-    from .._cache import register_cache
 
     base = register_cache(
         sdf.filter(v.isNotNull() & (g.isin([group_a, group_b])))
@@ -3272,11 +3264,10 @@ def weibull_fit(
     all_cells = sdf.filter(v.isNotNull()).groupBy(v.alias("__v__")).agg(
         F.count(F.lit(1)).alias("__c__")
     )
-    all_cells = all_cells.persist()
-    # n<3 raises and with_range_buckets/with_prefix_offsets can fail on
-    # degenerate input — the finally keeps those paths from leaking the
-    # cached frame (the cox_ph precedent)
-    try:
+    with scoped_caches():
+        # the scope also releases the cells when n<3 raises or the distsort
+        # helpers fail on degenerate input
+        all_cells = register_cache(all_cells)
         nexc_row = all_cells.agg(
             F.sum(F.when(F.col("__v__") <= 0, F.col("__c__"))).alias("x")
         ).collect()[0]
@@ -3311,8 +3302,6 @@ def weibull_fit(
             F.sum(F.col("__x__") * F.col("__y__")).alias("sxy"),
             F.sum(F.col("__y__") ** 2).alias("syy"),
         ).collect()[0]
-    finally:
-        all_cells.unpersist()
     sx, sy, sxx, sxy, syy = (
         float(m[k]) for k in ("sx", "sy", "sxx", "sxy", "syy")
     )
@@ -3427,8 +3416,8 @@ def eb_shrunk_rates(
         .groupBy(F.col(key_col).alias("__k__"))
         .agg(F.count(F.lit(1)).alias("__n__"), F.sum(y).alias("__s__"))
     )
-    per_key = per_key.persist()
-    try:
+    with scoped_caches():
+        per_key = register_cache(per_key)
         mom = per_key.filter(F.col("__n__") >= min_trials).agg(
             F.count(F.lit(1)).alias("k"),
             F.avg(F.col("__s__") / F.col("__n__")).alias("m"),
@@ -3461,10 +3450,7 @@ def eb_shrunk_rates(
         )
         # alpha/beta are plain Python literals, so the returned plan only
         # references per_key's lineage — safe to release the cache here
-        res = LazyFrame(out)
-    finally:
-        per_key.unpersist()
-    return res
+        return LazyFrame(out)
 
 
 __all__.append("eb_shrunk_rates")
@@ -3605,7 +3591,6 @@ def quantile_normalize(
         F.col(id_col).alias("__id__"),
         v.alias("__v__"),
     )
-    from .._cache import register_cache
 
     base = register_cache(base)
     sizes = base.groupBy("__g__").count().select(

@@ -24,10 +24,15 @@ from pyspark.sql import DataFrame as SparkDF
 from pyspark.sql import functions as F
 
 from .._bounded import Guarded, bounded
+from .._cache import full_count, register_cache, replace_cache, scoped_caches
 from ..frame import LazyFrame
 from ..session import scoped_checkpoint_dir
 
 __all__ = ["pagerank"]
+
+# k_core and bfs_distances store every fourth round's state as a checkpoint,
+# which cuts the plan lineage that otherwise grows with every round
+_CHECKPOINT_EVERY = 4
 
 
 def _undirected(esdf: SparkDF, src: str, dst: str) -> SparkDF:
@@ -295,7 +300,6 @@ def k_core(
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 30,
-    checkpoint_every: int = 4,
     checkpoint_dir: str | None = None,
 ) -> LazyFrame:
     """k-core decomposition membership: iteratively peel every vertex with
@@ -314,20 +318,17 @@ def k_core(
     TWO left_anti equi-joins against the (small, shrinking) peel set; a
     driver count() per round is the loop condition — bounded by the round
     count, which is at most the graph's degeneracy ordering depth (tiny
-    for real graphs: web/social cores converge in < 20 rounds).  Lineage
-    checkpoint-truncated like pagerank; same ``checkpoint_dir`` contract.
+    for real graphs: web/social cores converge in < 20 rounds).  Every
+    ``_CHECKPOINT_EVERY``-th round's edge set is a checkpoint, which cuts
+    the lineage; ``checkpoint_dir`` makes it reliable, as in pagerank.
     Raises RuntimeError if ``max_rounds`` is hit before the fixpoint so a
     truncated answer can never masquerade as the core.  Output:
     (id, degree) of surviving vertices — degree WITHIN the k-core."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    if checkpoint_every < 1:
-        raise ValueError("checkpoint_every must be >= 1")
     esdf = edges if isinstance(edges, SparkDF) else edges.spark
-    with scoped_checkpoint_dir(esdf.sparkSession.sparkContext, checkpoint_dir) as ckpt:
-        e = _undirected(esdf, src, dst)
-        e.persist()
-        converged = False
+    with scoped_caches(), scoped_checkpoint_dir(esdf.sparkSession.sparkContext, checkpoint_dir) as ckpt:
+        e = register_cache(_undirected(esdf, src, dst))
         for r in range(int(max_rounds)):
             deg = (
                 e.select(F.col("a").alias("v"))
@@ -335,26 +336,19 @@ def k_core(
                 .groupBy("v")
                 .agg(F.count(F.lit(1)).alias("c"))
             )
-            # persist the peel set: isEmpty() materializes it here, and the
-            # two anti-joins below then reuse the cached rows instead of
-            # re-running the degree shuffle inside their own lineage
-            bad = deg.filter(F.col("c") < F.lit(int(k))).select("v").persist()
-            if bad.isEmpty():
-                bad.unpersist()
-                converged = True
-                break
-            nxt = e.join(
-                bad.withColumnRenamed("v", "a"), "a", "left_anti"
-            ).join(bad.withColumnRenamed("v", "b"), "b", "left_anti")
-            if (r + 1) % checkpoint_every == 0:
-                nxt = ckpt(nxt)
-            nxt.persist()
-            nxt.count()  # materialize past `bad` before releasing caches
-            bad.unpersist()
-            e.unpersist()
-            e = nxt
-        if not converged:
-            e.unpersist()
+            with scoped_caches():
+                # cached peel set: isEmpty() materializes it here, and the
+                # two anti-joins below then reuse the cached rows instead of
+                # re-running the degree shuffle inside their own lineage
+                bad = register_cache(deg.filter(F.col("c") < F.lit(int(k))).select("v"))
+                if bad.isEmpty():
+                    break
+                nxt = e.join(
+                    bad.withColumnRenamed("v", "a"), "a", "left_anti"
+                ).join(bad.withColumnRenamed("v", "b"), "b", "left_anti")
+                stored = (r + 1) % _CHECKPOINT_EVERY == 0
+                e, _ = replace_cache(e, ckpt(nxt) if stored else nxt, stored=stored)
+        else:
             raise RuntimeError(
                 f"k_core did not converge within max_rounds={max_rounds}"
             )
@@ -365,10 +359,9 @@ def k_core(
             .agg(F.count(F.lit(1)).cast("long").alias("degree"))
             .select(F.col("v").alias("id"), "degree")
         )
-        # materialize before releasing the loop frame's cache: the lazy
-        # result would otherwise recompute the whole peel from source
+        # materialize before the scope releases the loop frame's cache: the
+        # lazy result would otherwise recompute the whole peel from source
         out = ckpt(out)
-        e.unpersist()
     return LazyFrame(out)
 
 
@@ -513,7 +506,6 @@ def bfs_distances(
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 20,
-    checkpoint_every: int = 4,
     checkpoint_dir: str | None = None,
 ) -> LazyFrame:
     """Multi-source BFS hop distances: dist(v) = fewest undirected hops
@@ -532,28 +524,26 @@ def bfs_distances(
     incident edges) — a missing seed row would read as a silently
     dropped input.  Scale shape: per round one union + min aggregate
     over the reached set joined to the edge list on each endpoint
-    (plain equi-joins, map-side-combining min) + an emptiness probe as
-    the stop condition; lineage checkpoint-truncated.  Output: (id,
+    (plain equi-joins, map-side-combining min) + a count of the changed rows
+    as the stop condition; lineage checkpoint-truncated every
+    ``_CHECKPOINT_EVERY`` rounds, as in k_core.  Output: (id,
     distance)."""
     if not sources:
         raise ValueError("sources must be non-empty")
-    if checkpoint_every < 1:
-        raise ValueError("checkpoint_every must be >= 1")
     esdf = edges if isinstance(edges, SparkDF) else edges.spark
-    with scoped_checkpoint_dir(esdf.sparkSession.sparkContext, checkpoint_dir) as ckpt:
-        e = _undirected(esdf, src, dst)
-        e.persist()
-        spark = esdf.sparkSession
-        svals = [(s,) for s in sources]
-        dist = (
-            spark.createDataFrame(svals, ["v"])
+    spark = esdf.sparkSession
+    changed = F.col("__prev__").isNull() | (F.col("d") != F.col("__prev__"))
+    with scoped_caches(), scoped_checkpoint_dir(spark.sparkContext, checkpoint_dir) as ckpt:
+        e = register_cache(_undirected(esdf, src, dst))
+        # the loop state: (v, d) plus, after round one, each vertex's
+        # previous distance __prev__
+        state = register_cache(
+            spark.createDataFrame([(s,) for s in sources], ["v"])
             .distinct()
             .select("v", F.lit(0).cast("long").alias("d"))
         )
-        dist.persist()
-        cached = dist  # the actually-persisted frame behind `dist`
-        converged = False
         for r in range(int(max_rounds)):
+            dist = state.select("v", "d")
             # own-distance rows ride the union FLAGGED so the previous
             # distance falls out of the same min-aggregate, with no re-join
             # of nxt to dist for the "did anything change" probe (a newly
@@ -576,28 +566,20 @@ def bfs_distances(
                     F.min(F.when(F.col("__own__"), F.col("d"))).alias("__prev__"),
                 )
             )
-            if (r + 1) % checkpoint_every == 0:
-                nxt = ckpt(nxt)
-            nxt.persist()
-            done = nxt.filter(
-                F.col("__prev__").isNull() | (F.col("d") != F.col("__prev__"))
-            ).isEmpty()
-            cached.unpersist()
-            cached = nxt
-            dist = nxt.select("v", "d")
-            if done:
-                converged = True
+            stored = (r + 1) % _CHECKPOINT_EVERY == 0
+            # the probe counts the changed rows: it reads every partition,
+            # so the round is fully cached before the previous one goes
+            state, n_changed = replace_cache(
+                state, ckpt(nxt) if stored else nxt,
+                lambda df: full_count(df.filter(changed)), stored,
+            )
+            if n_changed == 0:
                 break
-        if not converged:
-            cached.unpersist()
-            e.unpersist()
+        else:
             raise RuntimeError(
                 f"bfs_distances did not converge within max_rounds={max_rounds}"
             )
-        out = dist.select(F.col("v").alias("id"), F.col("d").alias("distance"))
-        out = ckpt(out)
-        cached.unpersist()
-        e.unpersist()
+        out = ckpt(state.select(F.col("v").alias("id"), F.col("d").alias("distance")))
     return LazyFrame(out)
 
 

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from .._arrow import map_batches
 from .._bounded import bounded, record
+from .._cache import register_cache, scoped_caches
 from ..frame import LazyFrame
 from ..session import scoped_checkpoint_dir
 
@@ -406,7 +407,6 @@ def mann_whitney_u(
     base = sdf.filter(g.isin([group_a, group_b]) & v.isNotNull()).select(
         g.alias("__g__"), v.alias("__v__")
     )
-    from .._cache import register_cache
     from .distsort import with_bucket_offsets
 
     # avg_rank of a tie group of size t after c earlier rows = c + (t+1)/2,
@@ -491,7 +491,6 @@ def spearman_corr(
             avg_rank(F.col("__b__")).alias("__rb__"),
         )
     else:
-        from .._cache import register_cache
         from .distsort import with_bucket_offsets
 
         base = register_cache(base)
@@ -607,7 +606,6 @@ def ks_test(
     Output: d, z (= D·√(n_a·n_b/(n_a+n_b)), the statistic the asymptotic
     Kolmogorov p-value is computed from, null if either sample is empty),
     n_a, n_b.  Nulls are excluded; rows in neither group are ignored."""
-    from .._cache import register_cache
     from .distsort import with_bucket_offsets
 
     sdf = _sdf(frame)
@@ -1293,7 +1291,6 @@ def ipf_weights(
         [(k, float(v) / ct_tot) for k, v in sorted(col_targets.items())],
         "__c__ string, __tc__ double",
     )
-    from .._cache import register_cache
 
     # persist the DATA-SIZED cell aggregate: every round's two marginal
     # broadcast subqueries and the final action re-evaluate their whole
@@ -2112,8 +2109,8 @@ def mann_kendall(
         t.alias("__t__"), v.alias("__v__")
     )
     cells = base.groupBy("__t__", "__v__").agg(F.count(F.lit(1)).alias("n"))
-    cells.persist()
-    try:
+    with scoped_caches():
+        cells = register_cache(cells)
         a = cells.select(
             F.col("__t__").alias("at"), F.col("__v__").alias("av"),
             F.col("n").alias("an"),
@@ -2150,8 +2147,6 @@ def mann_kendall(
 
         tt, tv = _tie_terms("__t__"), _tie_terms("__v__")
         n = int(cells.agg(F.sum("n")).collect()[0][0] or 0)
-    finally:
-        cells.unpersist()
     if n < 3:
         raise ValueError("mann_kendall needs at least 3 observations")
     s = float(s_row["s"])
@@ -2384,8 +2379,8 @@ def jackknife_ratio_ci(
         .groupBy(cluster_col)
         .agg(F.sum(nv).alias("__n__"), F.sum(dv).alias("__d__"))
     )
-    per.persist()
-    try:
+    with scoped_caches():
+        per = register_cache(per)
         tot = per.agg(
             F.sum("__n__").alias("tn"),
             F.sum("__d__").alias("td"),
@@ -2402,8 +2397,6 @@ def jackknife_ratio_ci(
             F.sum(loo ** 2).alias("sr2"),
             F.count(F.when(F.col("__d__") == td, 1)).alias("degenerate"),
         ).collect()[0]
-    finally:
-        per.unpersist()
     if int(red["degenerate"]) > 0:
         raise ValueError(
             "jackknife_ratio_ci: a single cluster holds the entire "
@@ -2464,8 +2457,8 @@ def huber_fit(
     base = sdf.filter(x.isNotNull() & yv.isNotNull()).select(
         x.alias("__x__"), yv.alias("__y__")
     )
-    base.persist()
-    try:
+    with scoped_caches():
+        base = register_cache(base)
         a = b = None
         n = None
         for _ in range(int(iterations)):
@@ -2492,8 +2485,6 @@ def huber_fit(
                 raise ValueError("huber_fit: zero x-variance")
             b = (m["sw"] * m["swxy"] - m["swx"] * m["swy"]) / det
             a = (m["swy"] - b * m["swx"]) / m["sw"]
-    finally:
-        base.unpersist()
     spark = sdf.sparkSession
     out = spark.createDataFrame(
         [(round(b, round_to), round(a, round_to), n, int(iterations),
@@ -2614,8 +2605,8 @@ def fe_regression(
         yv.isNotNull() & xv.isNotNull() & F.col(unit_col).isNotNull()
         & (F.lit(True) if time_col is None else F.col(time_col).isNotNull())
     ).select(*cols)
-    base.persist()
-    try:
+    with scoped_caches():
+        base = register_cache(base)
         g = base.agg(
             F.count(F.lit(1)).alias("n"),
             F.avg("__y__").alias("gy"),
@@ -2671,8 +2662,6 @@ def fe_regression(
             F.sum(xdm ** 2).alias("sxx"),
             F.sum(ydm ** 2).alias("syy"),
         ).collect()[0]
-    finally:
-        base.unpersist()
     sxx = float(m["sxx"] or 0)
     if sxx <= 0:
         raise ValueError("fe_regression: no within-variation in x")
@@ -2939,7 +2928,6 @@ def energy_distance(
     base = sdf.filter(v.isNotNull() & g.isin([group_a, group_b]))
     isa = (g == F.lit(group_a)).cast("long")
     isb = (g == F.lit(group_b)).cast("long")
-    from .._cache import register_cache
 
     cells = register_cache(
         base.groupBy(v.alias("__v__")).agg(
@@ -3032,14 +3020,16 @@ def pettitt_test(
     sdf = _sdf(frame)
     t = F.col(time_col).cast("double")
     v = F.col(value_col).cast("double")
-    series, n_series, small = bounded(
-        sdf.filter(t.isNotNull() & v.isNotNull())
-        .groupBy(t.alias("__t__"))
-        .agg(F.avg(v).alias("__v__")),
-        "pettitt_test",
-        driver_threshold,
-    )
-    try:
+    # both paths build their one-row result on the driver, so the scope
+    # releases every cache before either returns
+    with scoped_caches():
+        series, n_series, small = bounded(
+            sdf.filter(t.isNotNull() & v.isNotNull())
+            .groupBy(t.alias("__t__"))
+            .agg(F.avg(v).alias("__v__")),
+            "pettitt_test",
+            driver_threshold,
+        )
         # DRIVER PATH: the U scan runs over DISTINCT TIMES, so after the one
         # data-sized time-collapse the series is a bounded artifact for any
         # realistic calendar granularity.  Collect it once and run the rank
@@ -3053,7 +3043,6 @@ def pettitt_test(
         if small:
             if n_series < 3:
                 raise ValueError("pettitt_test needs at least 3 distinct times")
-            import math
             from collections import Counter
 
             def _order(x: float) -> tuple:
@@ -3095,7 +3084,6 @@ def pettitt_test(
                 "p_value double",
             )
             return LazyFrame(out)
-        from .._cache import register_cache
 
         cells = register_cache(
             series.groupBy("__v__").agg(F.count(F.lit(1)).alias("__c__"))
@@ -3136,12 +3124,8 @@ def pettitt_test(
                 )
             ).alias("b")
         ).collect()[0]["b"]
-        import math
-
         k_stat = abs(float(best["u"]))
         p = min(1.0, 2.0 * math.exp(-6.0 * k_stat * k_stat / (n ** 3 + n ** 2)))
-    finally:
-        series.unpersist()
     spark = sdf.sparkSession
     out = spark.createDataFrame(
         [(
@@ -3184,7 +3168,6 @@ def best_split(
     x = F.col(feature_col).cast("double")
     y = F.col(label_col).cast("double")
     base = sdf.filter(x.isNotNull() & y.isNotNull())
-    from .._cache import register_cache
 
     cells = register_cache(
         base.groupBy(x.alias("__x__")).agg(
@@ -3289,9 +3272,8 @@ def cox_ph(
     cells = base.groupBy(t.alias("__t__"), x.alias("__x__")).agg(
         F.count(F.lit(1)).alias("__c__"), F.sum(e).alias("__d__")
     )
-    cells = cells.persist()
-    bucketed = None
-    try:
+    with scoped_caches():
+        cells = register_cache(cells)
         meta = cells.agg(
             F.sum("__c__").alias("n"),
             F.sum("__d__").alias("nd"),
@@ -3303,7 +3285,7 @@ def cox_ph(
         if int(meta["nx"]) < 2:
             raise ValueError("cox_ph: covariate has no variation")
         bucketed, gb = with_range_buckets(cells, "__t__")
-        bucketed = bucketed.persist()
+        bucketed = register_cache(bucketed)
         bucketed.count()  # materialize once; every round reuses it
         w = Window.partitionBy(gb).orderBy("__t__").rowsBetween(
             Window.unboundedPreceding, 0
@@ -3311,17 +3293,17 @@ def cox_ph(
 
         def score_info(beta: float):
             eb = F.exp(F.col("__x__") * F.lit(beta)) * F.col("__c__")
-            # per-round persist: the offsets aggregate AND the final U/I
-            # reduce both read the per-time table — unpersisted, each round
+            # per-round cache: the offsets aggregate AND the final U/I
+            # reduce both read the per-time table — uncached, each round
             # ran the exp-weighted combine over the cell table twice
-            per_t = bucketed.groupBy("__t__", gb).agg(
-                F.sum(eb).alias("__a0__"),
-                F.sum(F.col("__x__") * eb).alias("__a1__"),
-                F.sum(F.col("__x__") ** 2 * eb).alias("__a2__"),
-                F.sum("__d__").alias("__dd__"),
-                F.sum(F.col("__d__") * F.col("__x__")).alias("__sx__"),
-            ).persist()
-            try:
+            with scoped_caches():
+                per_t = register_cache(bucketed.groupBy("__t__", gb).agg(
+                    F.sum(eb).alias("__a0__"),
+                    F.sum(F.col("__x__") * eb).alias("__a1__"),
+                    F.sum(F.col("__x__") ** 2 * eb).alias("__a2__"),
+                    F.sum("__d__").alias("__dd__"),
+                    F.sum(F.col("__d__") * F.col("__x__")).alias("__sx__"),
+                ))
                 offs, tot = with_prefix_offsets(
                     per_t, gb,
                     {
@@ -3338,8 +3320,6 @@ def cox_ph(
                     (F.col("__sx__") - F.col("__dd__") * s1 / s0).alias("__u__"),
                     (F.col("__dd__") * (s2 / s0 - (s1 / s0) ** 2)).alias("__i__"),
                 ).agg(F.sum("__u__").alias("u"), F.sum("__i__").alias("i")).collect()[0]
-            finally:
-                per_t.unpersist()
             return float(r["u"]), float(r["i"])
 
         beta = 0.0
@@ -3351,12 +3331,6 @@ def cox_ph(
         _, info = score_info(beta)
         if info <= 0:
             raise ValueError("cox_ph: singular information matrix")
-    finally:
-        if bucketed is not None:
-            bucketed.unpersist()
-        cells.unpersist()
-    import math
-
     se = 1.0 / math.sqrt(info)
     spark = sdf.sparkSession
     out = spark.createDataFrame(
@@ -3410,7 +3384,6 @@ def cramer_von_mises(
     base = sdf.filter(v.isNotNull() & g.isin([group_a, group_b]))
     isa = (g == F.lit(group_a)).cast("long")
     isb = (g == F.lit(group_b)).cast("long")
-    from .._cache import register_cache
 
     cells = register_cache(
         base.groupBy(v.alias("__v__")).agg(
@@ -4132,10 +4105,8 @@ def logistic_fit(
     base = sdf.filter(x.isNotNull() & F.col(y_col).isNotNull()).select(
         x.alias("__x__"), yv.alias("__y__")
     )
-    base = base.persist()
-    import math
-
-    try:
+    with scoped_caches():
+        base = register_cache(base)
         a = b = 0.0
         n = npos = None
         for _ in range(int(rounds)):
@@ -4186,8 +4157,6 @@ def logistic_fit(
         se_a = math.sqrt(h11 / det)
         se_b = math.sqrt(h00 / det)
         ll = float(r["ll"])
-    finally:
-        base.unpersist()
     spark = sdf.sparkSession
     out = spark.createDataFrame(
         [(
@@ -4442,7 +4411,6 @@ def cochran_q(
         )
         .agg(F.max((y != 0).cast("double")).alias("__y__"))
     )
-    from .._cache import register_cache
 
     cells = register_cache(cells)
     k_val = cells.select(F.countDistinct("__t__").alias("k")).first()["k"]
@@ -4558,7 +4526,6 @@ def kruskal_wallis(
     base = sdf.filter(v.isNotNull() & g.isNotNull()).select(
         g.alias("__g__"), v.alias("__v__")
     )
-    from .._cache import register_cache
     from .distsort import with_bucket_offsets
 
     vcells = register_cache(
@@ -4944,7 +4911,6 @@ def friedman_test(
         .groupBy(F.col(block_col).alias("__b__"), F.col(treatment_col).alias("__t__"))
         .agg(F.avg(v).alias("__v__"))
     )
-    from .._cache import register_cache
 
     cells = register_cache(cells)
     k_val = cells.select(F.countDistinct("__t__").alias("k")).first()["k"]
@@ -5024,7 +4990,6 @@ def wilcoxon_signed_rank(
         .filter(F.col("__d__") != 0)
         .select(F.abs("__d__").alias("__a__"), (F.col("__d__") > 0).alias("__pos__"))
     )
-    from .._cache import register_cache
     from .distsort import with_bucket_offsets
 
     base = register_cache(base)
@@ -5178,8 +5143,6 @@ def anderson_darling(
     a2, a2_star, mean, sd, n."""
     from .distsort import with_bucket_offsets
 
-    from .._cache import register_cache
-
     sdf = _sdf(frame)
     v = F.col(value_col).cast("double")
     # persisted: the moments reduce, the boundary sketch, the offsets
@@ -5249,8 +5212,6 @@ def brunner_munzel(
     prefix offset per group (≤ nbuckets rows) — no single-partition
     window on either ranking.  Output (1 row): w, df,
     p_hat, mean_rank_a, mean_rank_b, n_a, n_b."""
-    from .._cache import register_cache
-
     sdf = _sdf(frame)
     v = F.col(value_col).cast("double")
     g = F.col(group_col)

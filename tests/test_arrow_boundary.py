@@ -255,9 +255,13 @@ def _canon(v):
 
 
 def run_case(spark, name, inp):
+    return run_rows(spark, name, _inputs(_ops()[name][0])[inp])
+
+
+def run_rows(spark, name, rows):
     family, fn = _ops()[name]
     ddl, _ = FAMILIES[family]
-    frame = LazyFrame(spark.createDataFrame(_inputs(family)[inp], ddl).coalesce(1))
+    frame = LazyFrame(spark.createDataFrame(rows, ddl).coalesce(1))
     try:
         rows = fn(frame, spark).spark.collect()
     except Exception:  # where Spark wraps the error varies from run to run
@@ -282,6 +286,20 @@ def expected():
 @pytest.mark.parametrize("name,inp", _cases())
 def test_boundary_operator_outputs(spark, expected, name, inp):
     assert run_case(spark, name, inp) == expected[f"{name}/{inp}"]
+
+
+@pytest.mark.parametrize("name", [
+    "cosine_topk", "lsh_bucket_topk", "threshold_join_numpy", "threshold_join_bucketed",
+    "near_dup_numpy", "near_dup_bucketed",
+])
+def test_null_vector_drops(spark, name):
+    """A null vector among valid ones drops, as embedding_covariance and
+    kmeans_report drop it: the rows equal those of the input without it."""
+    rows = _inputs("vec")["mixed"]
+    with_null = rows[:3] + [(99, None)] + rows[3:]
+    got = run_rows(spark, name, with_null)
+    assert got != "raises"
+    assert got == run_rows(spark, name, rows)
 
 
 def test_media_hashes_exact_next_to_nulls(expected):

@@ -18,7 +18,8 @@ dedup/ANN workload linearly instead of quadratically:
     pair count grows N², which measures the data artifact, not the join.
     (r10 used a plain Caesar rotation, which wraps at 26 — the 100-replica
     sf10 corpus contained ~4 true copies of every doc and the r10 probe's
-    q30/q197/q212 ratios measured that; see OUTLIER_DIAG_r11.json.)
+    q30/q197/q212 ratios measured that: q30 pairs grew 320x on 10x data,
+    2,560 -> 819,328.)
   - embeddings.embedding: replica i flips component signs by a deterministic
     per-replica ±1 mask.  cosine(s.u, s.v) == cosine(u, v), so within-replica
     geometry (and every LSH/top-k result shape) is preserved exactly, while
@@ -79,7 +80,7 @@ def main() -> None:
                 # a 100x tiling got IDENTICAL text and every doc gained ~4
                 # true copies — the r10 sf10 probe then measured that
                 # duplicate-dense corpus (q30 pairs 320x at 10x data), not
-                # the operators (OUTLIER_DIAG_r11.json).  The 12 units of
+                # the operators.  The 12 units of
                 # Z26* x 26 shifts give 312 distinct bijections that all
                 # preserve byte count / word lengths / punctuation.
                 lo = "abcdefghijklmnopqrstuvwxyz"

@@ -43,6 +43,7 @@ from polars_net_spark.llm import (
 )
 from polars_net_spark.llm.similarity import sq8_recall_frame
 from polars_net_spark.operators.joins_ext import range_join, salted_join
+from polars_net_spark.session import _preinit_case_mapping
 
 STOPWORDS_SQL = "('the','a','an','and','or','of','to','in','is','it','that','for','on','with','as','at','by','be','this')"
 
@@ -78,7 +79,13 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> LazyFrame:
     Spark rejects a ``spark.conf.set`` of it at runtime, so unlike the
     runtime confs below ``_t`` cannot apply it to a session the driver
     built itself.  Such a session keeps the capture unless its builder
-    set the conf."""
+    set the conf.
+
+    A session ``get_spark`` did not build gets the case-mapping pre-init
+    (``session._preinit_case_mapping``) at its first sighting here, so
+    Spark's code-point title-case table builds on a spare core while the
+    first gate runs instead of inside the first ``lower``/``upper``/
+    ``initcap`` it executes."""
     # The driver passes its own SparkSession; these are all runtime-settable
     # and make its runs match our tuned sessions.
     skey = _session_key(spark)
@@ -90,6 +97,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> LazyFrame:
         for k in stale:
             del _T_MEMO[k]
         _T_CONF_DONE.intersection_update({skey})
+        _preinit_case_mapping(spark)
         try:
             spark.conf.set("spark.sql.session.timeZone", "UTC")
             spark.conf.set("spark.sql.ansi.enabled", "false")  # polars: /0 is data, not an error

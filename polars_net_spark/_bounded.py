@@ -12,10 +12,12 @@ driver, a large one runs them as Spark jobs.
 
 ``bounded`` makes that decision the same way at every site: persist the
 input through ``register_cache`` (so the count and every later pass share
-one materialisation), count it once, and compare the count with
-``BOUND``.  There is deliberately no ``limit(BOUND + 1)`` probe: on an
-expensive upstream the CollectLimit plan re-scans it, and the cached count
-costs the same single pass the consumer needs anyway.
+one materialisation), count it once with ``full_count`` (one job that
+fills every cached partition; ``DataFrame.count()`` on a freshly persisted
+frame runs two or three), and compare the count with ``BOUND``.  There is
+deliberately no ``limit(BOUND + 1)`` probe: on an expensive upstream the
+CollectLimit plan re-scans it, and the cached count costs the same single
+pass the consumer needs anyway.
 
 ``ship`` gets a driver-side object (a vocabulary dict, a model table, a
 matrix) to the worker code as a broadcast, which each worker fetches once
@@ -40,7 +42,7 @@ from typing import Any, Callable, NamedTuple
 
 from pyspark.sql import DataFrame as SparkDF
 
-from ._cache import register_broadcast, register_cache
+from ._cache import full_count, register_broadcast, register_cache
 
 __all__ = ["BOUND", "Guarded", "bounded", "ship", "record", "decisions", "clear_decisions"]
 
@@ -63,7 +65,7 @@ def bounded(sdf: SparkDF, operator: str, bound: "int | None" = None) -> Guarded:
     ``bound`` defaults to the module's ``BOUND`` read at call time, so a
     test can force either side by setting ``_bounded.BOUND``."""
     cached = register_cache(sdf)
-    n = cached.count()
+    n = full_count(cached)
     return Guarded(cached, n, record(operator, n, bound))
 
 

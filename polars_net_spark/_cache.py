@@ -54,8 +54,16 @@ def full_count(sdf: SparkDF) -> int:
     """``sdf``'s row count from ONE job that reads every partition.
     ``DataFrame.count()`` aggregates through a shuffle, which adaptive
     execution runs as a second job, and ``isEmpty()`` may stop after the
-    first partition."""
-    return sdf._jdf.queryExecution().toRdd().count()
+    first partition.
+
+    The job projects no columns, so no row is converted for the count.  A
+    persisted ``sdf`` is still built in full: the cache stores every
+    column of every partition whatever the reading scan selects.  Measured
+    on a freshly persisted 600,000-row, 16-column lineitem at local[4]:
+    one job either way, median 1.53-1.62 s with no columns against
+    1.69-1.91 s with all of them (``DataFrame.count()``: three jobs,
+    1.75-1.87 s)."""
+    return sdf.select()._jdf.queryExecution().toRdd().count()
 
 
 def replace_cache(

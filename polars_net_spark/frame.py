@@ -699,7 +699,7 @@ class LazyFrame:
             vals = sorted(
                 r[0] for r in sdf.select(c).distinct().collect() if r[0] is not None
             )
-            has_null = sdf.select(c).where(F.col(c).isNull()).limit(1).count() > 0
+            has_null = not sdf.select(c).where(F.col(c).isNull()).isEmpty()
             keep = vals[1:] if drop_first else vals
             for v in keep:
                 out_cols.append(
@@ -863,9 +863,9 @@ class LazyFrame:
 
         if validate != "m:m":
             def _assert_unique(sdf, keys, side):
-                dup = (
+                dup = not (
                     sdf.groupBy(*[F.col(k) for k in keys])
-                    .count().filter(F.col("count") > 1).limit(1).count()
+                    .count().filter(F.col("count") > 1).isEmpty()
                 )
                 if dup:
                     raise ValueError(

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from .._arrow import map_batches
 from .._bounded import bounded, record
-from .._cache import register_cache
+from .._cache import full_count, register_cache
 from ..frame import LazyFrame
 from ..operators.graph import _min_id_components
 
@@ -654,7 +654,7 @@ def embedding_near_dup_pairs(
     count, not a full scan."""
     sdf = _sdf(frame)
     if method == "auto":
-        n = size_hint if size_hint is not None else sdf.limit(broadcast_limit + 1).count()
+        n = size_hint if size_hint is not None else full_count(sdf.limit(broadcast_limit + 1))
         method = "numpy" if n <= broadcast_limit else "bucketed"
     if method == "numpy":
         return _numpy_near_dup_pairs(sdf, vec_col, id_col, threshold, round_to)

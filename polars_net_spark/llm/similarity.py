@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from .._arrow import map_batches, nan_as_null
 from .._bounded import ship
-from .._cache import register_cache, scoped_caches
+from .._cache import full_count, register_cache, scoped_caches
 from ..frame import LazyFrame
 
 __all__ = [
@@ -92,7 +92,7 @@ def cosine_topk(
     c_sdf = _sdf(corpus)
     q_sdf = _sdf(queries)
     if method == "auto":
-        n = size_hint if size_hint is not None else q_sdf.limit(broadcast_limit + 1).count()
+        n = size_hint if size_hint is not None else full_count(q_sdf.limit(broadcast_limit + 1))
         method = "numpy" if n <= broadcast_limit else "expr"
     if method == "numpy":
         return _numpy_topk(c_sdf, q_sdf, k, vec_col, id_col, qid, round_to)
@@ -883,7 +883,7 @@ def embedding_threshold_join(
     out_l = left_id if left_id != right_id else left_id + "_left"
     out_r = right_id if left_id != right_id else right_id + "_right"
     if method == "auto":
-        n = rsdf.limit(broadcast_limit + 1).count()
+        n = full_count(rsdf.limit(broadcast_limit + 1))
         method = "numpy" if n <= broadcast_limit else "bucketed"
     if method == "numpy":
         import numpy as np

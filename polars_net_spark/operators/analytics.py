@@ -2268,8 +2268,7 @@ def lorenz_curve(
     sdf = _sdf(frame)
     v = F.col(value_col).cast("double")
     base = sdf.filter(v.isNotNull()).select(v.alias("__v__"))
-    neg = base.filter(F.col("__v__") < 0).limit(1).count()
-    if neg:
+    if not base.filter(F.col("__v__") < 0).isEmpty():
         raise ValueError("lorenz_curve requires non-negative values")
 
     dv = register_cache(

@@ -453,7 +453,7 @@ def _order_statistics(
         return _interpolate(
             cum[-1], probs, lambda k: float(pairs[bisect.bisect_right(cum, k)][0])
         )
-    if dv.filter(F.isnan("__v__")).limit(1).count():
+    if not dv.filter(F.isnan("__v__")).isEmpty():
         return _percentile_fallback(sdf, c, probs)
     offs, bcol, totals = with_bucket_offsets(
         dv, "__v__", {"c": F.col("__cnt__")}, nbuckets=nbuckets

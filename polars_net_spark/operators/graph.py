@@ -446,7 +446,7 @@ def _min_id_components(
                 .join(parent, F.col("lbl") == F.col("p_id"), "left")
                 .select("id", "lbl", F.least("lbl", "nlbl", "plbl").alias("new_lbl"))
             )
-            changed = stage.filter(F.col("new_lbl") != F.col("lbl")).count()
+            changed = full_count(stage.filter(F.col("new_lbl") != F.col("lbl")))
             labels = stage.select("id", F.col("new_lbl").alias("lbl"))
             if changed == 0:
                 break

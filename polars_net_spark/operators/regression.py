@@ -4422,7 +4422,7 @@ def cochran_q(
         .filter(F.col("__kt__") == k_val)
     )
     complete = cells.join(blocks.select("__b__", "__r__"), "__b__")
-    if blocks.limit(1).count() == 0:
+    if blocks.isEmpty():
         raise ValueError(
             "cochran_q: no complete blocks — every block is missing at "
             "least one of the k treatments (k is fixed from the full "
@@ -4920,7 +4920,7 @@ def friedman_test(
     complete = cells.join(
         sizes.filter(F.col("__kt__") == k_val).select("__b__"), "__b__"
     )
-    if complete.limit(1).count() == 0:
+    if complete.isEmpty():
         raise ValueError(
             "friedman_test: no complete blocks — every block is missing at "
             "least one of the k treatments (k is fixed from the full cell "

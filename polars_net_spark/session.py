@@ -30,6 +30,24 @@ point (tests, bench, __spark_entry__) gets the same scale-aware defaults:
   ``get_spark(extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"})``.
   The conf is static: it can only be set when the session is built, and
   PySpark reads it once per Python process.
+- Spark's code-point case-mapping tables built on a spare core as soon as
+  a session exists (``_preinit_case_mapping``).  With ICU case mapping on
+  (Spark's default, kept), every ``lower``/``upper``/``initcap`` enters
+  ``org.apache.spark.sql.catalyst.util.CollationAwareUTF8String``, ASCII
+  input included.  Its static initializer title-cases every code point
+  from 0 to 1,114,111 through ICU to build a one-to-many lookup table:
+  1.4-1.8 s in a fresh JVM (4-core VM, Spark 4.1.2), paid by whichever
+  query maps case first.  ICU itself is not the cost: a first
+  ``UCharacter.toLowerCase`` takes 0.02 s.  A daemon thread loads
+  that class while set-up and the first queries run; the JVM's class
+  initialization lock makes a task that reaches the class mid-build wait
+  for that one build, so the output is Spark's own, only computed
+  earlier.  Rejected: ``spark.sql.icu.caseMappings.enabled=false`` skips
+  the class but changes ``initcap`` on 11 of 24 adversarial strings
+  (lone "ß" gives "ß", not "Ss"; "ﬁne" stays "ﬁne", not "Fine");
+  initializing the class synchronously in ``get_spark`` adds ~1.5 s to
+  every session's set-up, so it moves the cost without removing it; a
+  warm-up query in a benchmark helps no user's first query.
 """
 
 from __future__ import annotations
@@ -39,6 +57,55 @@ import os
 from pyspark.sql import SparkSession
 
 __all__ = ["get_spark", "stop_spark"]
+
+# the class whose static initializer builds Spark's code-point title-case
+# table (module docstring)
+_CASE_MAPPING_CLASS = "org.apache.spark.sql.catalyst.util.CollationAwareUTF8String"
+
+# the one case-mapping pre-init per JVM: the gateway JVM view it was started
+# for, its thread, and the thread's outcome (None or the exception raised)
+_PREINIT_JVM = None
+_PREINIT_THREAD = None
+_PREINIT_ERROR: "Exception | None" = None
+
+
+def _preinit_case_mapping(spark: SparkSession) -> None:
+    """Start initializing Spark's case-mapping class on a daemon thread,
+    at most once per JVM, and return at once (module docstring).
+
+    PySpark's JVM outlives ``spark.stop()``, so the guard is the JVM view
+    of the gateway, not the session.  The thread is a
+    ``pyspark.InheritableThread``, PySpark's way to call the JVM from a
+    Python thread under pinned-thread mode.  A failure is stored in
+    ``_PREINIT_ERROR`` and otherwise ignored: the class then initializes at
+    its first use, as it would without the pre-init.
+
+    Scope: in local mode the driver JVM is the executor, so every task
+    finds the table built.  On a cluster each executor JVM still builds it
+    at its first case mapping."""
+    global _PREINIT_JVM, _PREINIT_THREAD, _PREINIT_ERROR
+    try:
+        jvm = spark.sparkContext._jvm
+        # unlocked: two racing callers start two threads at worst, and the
+        # second one's Class.forName waits for the same initialization
+        if jvm is _PREINIT_JVM:
+            return
+        _PREINIT_JVM, _PREINIT_ERROR = jvm, None
+
+        def load() -> None:
+            global _PREINIT_ERROR
+            try:
+                jvm.java.lang.Class.forName(_CASE_MAPPING_CLASS)
+            except Exception as exc:  # the cost is then paid at first use
+                _PREINIT_ERROR = exc
+
+        from pyspark import InheritableThread
+
+        thread = InheritableThread(target=load, name="case-mapping-preinit", daemon=True)
+        thread.start()
+        _PREINIT_THREAD = thread
+    except Exception as exc:
+        _PREINIT_ERROR = exc
 
 
 def get_spark(
@@ -66,7 +133,11 @@ def get_spark(
     This drops only the Python file and line from the ``== DataFrame ==``
     section of runtime error messages.  Pass
     ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
-    to keep it; ``extra_conf`` is applied after the defaults, so it wins."""
+    to keep it; ``extra_conf`` is applied after the defaults, so it wins.
+
+    A session it builds starts ``_preinit_case_mapping`` before returning:
+    a daemon thread builds Spark's case-mapping table while the caller
+    goes on (module docstring)."""
     active = SparkSession.getActiveSession()
     if active is not None:
         try:
@@ -127,6 +198,7 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    _preinit_case_mapping(spark)
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

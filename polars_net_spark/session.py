@@ -54,6 +54,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import InheritableThread
 from pyspark.sql import SparkSession
 
 __all__ = ["get_spark", "stop_spark"]
@@ -98,8 +99,6 @@ def _preinit_case_mapping(spark: SparkSession) -> None:
                 jvm.java.lang.Class.forName(_CASE_MAPPING_CLASS)
             except Exception as exc:  # the cost is then paid at first use
                 _PREINIT_ERROR = exc
-
-        from pyspark import InheritableThread
 
         thread = InheritableThread(target=load, name="case-mapping-preinit", daemon=True)
         thread.start()

@@ -13,6 +13,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 import polars_net_spark as pls
 from polars_net_spark import col, lit, when
@@ -49,7 +50,7 @@ STOPWORDS_SQL = "('the','a','an','and','or','of','to','in','is','it','that','for
 
 
 _T_CONF_DONE: "set[str]" = set()
-_T_MEMO: "dict[tuple[str, str, str], LazyFrame]" = {}
+_T_MEMO: "dict[tuple[str, str, str], LazyFrame | StructType]" = {}
 
 
 def _session_key(spark) -> str:
@@ -79,7 +80,11 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> LazyFrame:
     Spark rejects a ``spark.conf.set`` of it at runtime, so unlike the
     runtime confs below ``_t`` cannot apply it to a session the driver
     built itself.  Such a session keeps the capture unless its builder
-    set the conf.
+    set the conf.  The same holds for ``get_spark``'s generated-class cache
+    size (``spark.sql.codegen.cache.maxEntries``): it is static, and Spark
+    builds the cache once per JVM, so it cannot be applied at run time.  A
+    session the driver built keeps Spark's 100 entries, and recompiles
+    most of a re-run plan's classes, unless its builder set the conf.
 
     A session ``get_spark`` did not build gets the case-mapping pre-init
     (``session._preinit_case_mapping``) at its first sighting here, so
@@ -4609,6 +4614,18 @@ def _stream_stage_dir(sf_dir: str, table: str = "events") -> str:
     return src_dir
 
 
+def _raw_schema(spark, sf_dir: str, table: str) -> StructType:
+    """The schema Spark infers for ``<sf_dir>/<table>.parquet``, the
+    streaming file sources' declared schema.  Inference is one Spark job,
+    so the schema is memoized in ``_T_MEMO`` next to ``_t``'s scans, keyed
+    by session: a new session evicts it."""
+    key = (_session_key(spark), sf_dir, f"{table}.parquet schema")
+    hit = _T_MEMO.get(key)
+    if hit is None:
+        hit = _T_MEMO[key] = spark.read.parquet(f"{sf_dir}/{table}.parquet").schema
+    return hit
+
+
 def _stream_gate_conf(spark, n: int = 8):
     """State-store sizing for the streaming gates: Structured Streaming
     allocates ONE state-store instance per shuffle partition per stateful
@@ -4637,10 +4654,8 @@ def _q151(spark, sf_dir):
     memory sink.  With one availableNow batch nothing is late, so the
     result is deterministic and the DuckDB oracle replicates it as a plain
     time-bucket GROUP BY — the gate hash-verifies a real streaming query."""
-    import os
-
     src_dir = _stream_stage_dir(sf_dir, "events")
-    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    schema = _raw_schema(spark, sf_dir, "events")
     stream = (
         spark.readStream.schema(schema).parquet(src_dir)
         # watermarks need TIMESTAMP (tz-aware); session tz is UTC so the
@@ -4941,10 +4956,8 @@ def _q159(spark, sf_dir):
     above the staged file count so all data lands in ONE micro-batch —
     no cross-batch state eviction, so the pair set is deterministic and the
     DuckDB oracle is a plain interval self-join."""
-    import os
-
     src_dir = _stream_stage_dir(sf_dir, "events")
-    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    schema = _raw_schema(spark, sf_dir, "events")
 
     def _stream():
         return (
@@ -5493,10 +5506,8 @@ def _q173(spark, sf_dir):
     (half-open windows), which the oracle replicates as an exact microsecond
     gap >= 1800 s (counting second-boundary crossings would open a session
     early on sub-second timestamps)."""
-    import os
-
     src_dir = _stream_stage_dir(sf_dir, "events")
-    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    schema = _raw_schema(spark, sf_dir, "events")
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 100000)
@@ -5910,12 +5921,10 @@ def _q186(spark, sf_dir):
     (q54's exact operator) applied to a DOCUMENT STREAM — map-only Column
     math, so append mode is deterministic and the batch oracle (q54's SQL)
     hash-verifies the streaming run row-for-row."""
-    import os
-
     from polars_net_spark.llm import gopher_quality_frame
 
     src_dir = _stream_stage_dir(sf_dir, "documents")
-    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
+    schema = _raw_schema(spark, sf_dir, "documents")
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 100000)
@@ -5951,12 +5960,10 @@ def _q208(spark, sf_dir):
     survives is arrival order, WHAT content survives is not.  availableNow
     single batch; production runs put an ingest-time watermark on the stream
     and use dropDuplicatesWithinWatermark to bound state."""
-    import os
-
     from polars_net_spark.llm import content_fingerprint
 
     src_dir = _stream_stage_dir(sf_dir, "documents")
-    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
+    schema = _raw_schema(spark, sf_dir, "documents")
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 100000)
@@ -7146,7 +7153,8 @@ def _q223(spark, sf_dir):
     import os
 
     src_dir = _stream_stage_dir(sf_dir, "events")
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    schema = _raw_schema(spark, sf_dir, "events")
+    ev = spark.read.schema(schema).parquet(os.path.join(sf_dir, "events.parquet"))
     row = ev.agg(
         F.min(F.col("value").cast("double")).alias("mn"),
         F.max(F.col("value").cast("double")).alias("mx"),
@@ -7168,7 +7176,6 @@ def _q223(spark, sf_dir):
         .groupBy(bin_of(F.col("value")).alias("bin"))
         .agg((F.count(F.lit(1)) / F.lit(float(n_ref))).alias("p_ref"))
     )
-    schema = ev.schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 100000)
@@ -8999,9 +9006,12 @@ def _q267(spark, sf_dir):
 
     tag = hashlib.md5(f"{sf_dir}|events4".encode()).hexdigest()[:8]
     src_dir = os.path.join(tempfile.gettempdir(), f"stream_src_events4_{tag}")
+    schema = _raw_schema(spark, sf_dir, "events")
     if not os.path.exists(os.path.join(src_dir, "_SUCCESS")):
-        spark.read.parquet(ev_path).repartition(4).write.mode("overwrite").parquet(src_dir)
-    schema = spark.read.parquet(ev_path).schema
+        (
+            spark.read.schema(schema).parquet(ev_path).repartition(4)
+            .write.mode("overwrite").parquet(src_dir)
+        )
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 2)
@@ -10114,9 +10124,12 @@ def _q294(spark, sf_dir):
     ev_path = os.path.join(sf_dir, "events.parquet")
     tag = hashlib.md5(f"{sf_dir}|events5".encode()).hexdigest()[:8]
     src_dir = os.path.join(tempfile.gettempdir(), f"stream_src_events5_{tag}")
+    schema = _raw_schema(spark, sf_dir, "events")
     if not os.path.exists(os.path.join(src_dir, "_SUCCESS")):
-        spark.read.parquet(ev_path).repartition(4).write.mode("overwrite").parquet(src_dir)
-    schema = spark.read.parquet(ev_path).schema
+        (
+            spark.read.schema(schema).parquet(ev_path).repartition(4)
+            .write.mode("overwrite").parquet(src_dir)
+        )
 
     def _fn(key, pdfs, state):
         import pandas as pd
@@ -10397,10 +10410,8 @@ def _q301(spark, sf_dir):
     per event type, availableNow to a memory sink.  Completes the window
     palette beside tumbling (q151) and session (q173) windows; the DuckDB
     oracle expands each row into its two slide buckets."""
-    import os
-
     src_dir = _stream_stage_dir(sf_dir, "events")
-    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    schema = _raw_schema(spark, sf_dir, "events")
     stream = (
         spark.readStream.schema(schema).parquet(src_dir)
         .withColumn("ts", F.col("ts").cast("timestamp"))
@@ -11387,10 +11398,8 @@ def _q328(spark, sf_dir):
     nation dim on a derived key -> per-nation revenue aggregate, complete
     mode under availableNow.  The static side needs no state store or
     watermark — it is a map-side hash join on every micro-batch."""
-    import os
-
     src_dir = _stream_stage_dir(sf_dir, "events")
-    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    schema = _raw_schema(spark, sf_dir, "events")
     nation = _t(spark, sf_dir, "nation").spark.select(
         F.col("n_nationkey"), F.col("n_name")
     )
@@ -13240,10 +13249,9 @@ def _q361(spark, sf_dir):
     OR cts ≤ maxTs − 2h − 1min — the oracle is then a plain batch left
     join."""
     import datetime as _dt
-    import os
 
     src_dir = _stream_stage_dir(sf_dir, "events")
-    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    schema = _raw_schema(spark, sf_dir, "events")
 
     def _stream():
         return (
@@ -13945,10 +13953,9 @@ def _q373(spark, sf_dir):
     timestamp ≤ maxTs − 2h − 1min — the oracle is then a plain batch
     FULL join."""
     import datetime as _dt
-    import os
 
     src_dir = _stream_stage_dir(sf_dir, "events")
-    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    schema = _raw_schema(spark, sf_dir, "events")
 
     def _stream():
         return (
@@ -14622,9 +14629,12 @@ def _q389(spark, sf_dir):
     ev_path = os.path.join(sf_dir, "events.parquet")
     tag = hashlib.md5(f"{sf_dir}|events4".encode()).hexdigest()[:8]
     src_dir = os.path.join(tempfile.gettempdir(), f"stream_src_events4_{tag}")
+    schema = _raw_schema(spark, sf_dir, "events")
     if not os.path.exists(os.path.join(src_dir, "_SUCCESS")):
-        spark.read.parquet(ev_path).repartition(4).write.mode("overwrite").parquet(src_dir)
-    schema = spark.read.parquet(ev_path).schema
+        (
+            spark.read.schema(schema).parquet(ev_path).repartition(4)
+            .write.mode("overwrite").parquet(src_dir)
+        )
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 2)
@@ -15249,7 +15259,7 @@ def _q402(spark, sf_dir):
 
     import hashlib, tempfile
 
-    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    schema = _raw_schema(spark, sf_dir, "events")
 
     def _slice_dir(tag_expr: str, name: str) -> str:
         tag = hashlib.md5(f"{sf_dir}|{name}".encode()).hexdigest()[:8]
@@ -15257,7 +15267,7 @@ def _q402(spark, sf_dir):
         done = os.path.join(d, "_SUCCESS")
         if not os.path.exists(done):
             (
-                spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+                spark.read.schema(schema).parquet(os.path.join(sf_dir, "events.parquet"))
                 .filter(F.expr(tag_expr))
                 .coalesce(1)
                 .write.mode("overwrite")

@@ -48,6 +48,26 @@ point (tests, bench, __spark_entry__) gets the same scale-aware defaults:
   initializing the class synchronously in ``get_spark`` adds ~1.5 s to
   every session's set-up, so it moves the cost without removing it; a
   warm-up query in a benchmark helps no user's first query.
+- Spark's generated-class cache sized to the engine's working set
+  (``spark.sql.codegen.cache.maxEntries`` = ``_CODEGEN_CACHE_ENTRIES``).
+  Janino compiles every whole-stage and expression class at run time,
+  and Spark keeps the classes in one JVM-wide cache keyed by their
+  source, of 100 entries by default.  One pass over the 403 driver
+  gates compiles 4,739 distinct classes at sf0.01 and 4,747 at sf0.1
+  (4-core VM, Spark 4.1.2, local[4]), so with 100 entries a session that
+  re-runs a plan recompiles it almost every time.  A second pass at
+  sf0.01 compiled 6,991 classes (~15 s of Janino) with 100 entries and
+  139 with 8192, and took 73.7 s instead of 95.7 s.  8192 is the next
+  power of two above the working set.  The cap stays finite: code with
+  inlined literals is unique per literal, so an unbounded cache grows
+  without limit in a long session.  The cost is Metaspace, as cached
+  classes stay loaded: 258 MB used after the two passes against 221 MB
+  with 100 entries.  The conf is static: Spark builds the cache once per
+  JVM, from the conf of the session that first generates code, so it is
+  set when the session is built.
+  ``extra_conf={"spark.sql.codegen.cache.maxEntries": ...}`` overrides
+  it.  It changes only which compiled classes are reused: plans, outputs
+  and job counts stay the same.
 """
 
 from __future__ import annotations
@@ -58,6 +78,9 @@ from pyspark import InheritableThread
 from pyspark.sql import SparkSession
 
 __all__ = ["get_spark", "stop_spark"]
+
+# Spark's generated-class cache size (module docstring); Spark's own is 100
+_CODEGEN_CACHE_ENTRIES = 8192
 
 # the class whose static initializer builds Spark's code-point title-case
 # table (module docstring)
@@ -134,6 +157,10 @@ def get_spark(
     ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
     to keep it; ``extra_conf`` is applied after the defaults, so it wins.
 
+    It also keeps up to ``_CODEGEN_CACHE_ENTRIES`` compiled classes instead
+    of Spark's 100, so a re-run plan reuses its generated code (module
+    docstring).
+
     A session it builds starts ``_preinit_case_mapping`` before returning:
     a daemon thread builds Spark's case-mapping table while the caller
     goes on (module docstring)."""
@@ -191,6 +218,9 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         # static: no per-Column call-site capture (see module docstring)
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # static: one compiled class per distinct generated source (module
+        # docstring)
+        .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.warehouse.dir", "/tmp/spark-warehouse")
     )

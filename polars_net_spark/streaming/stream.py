@@ -308,9 +308,10 @@ def streaming_upsert_sink(
     winner (version stamp + change id, here ts + event id); payload columns
     travel inside max_by's value struct and are never compared, so maps and
     other unorderable types are fine.  Each batch writes a NEW versioned
-    snapshot dir ``v<batch_id>`` built from the latest snapshot with version
-    < batch_id plus the batch's winners — a retried batch re-reads the same
-    parent snapshot and overwrites its own output (idempotent recovery).
+    snapshot dir ``v<batch_id>``: one per-key aggregate over the latest
+    snapshot with version < batch_id plus the batch's rows — a retried batch
+    re-reads the same parent snapshot and overwrites its own output
+    (idempotent recovery).
     Read the converged table with :func:`read_upsert_target`.  At 100 TB
     swap the snapshot rewrite for a storage layer with real MERGE
     (Delta/Iceberg); the foreachBatch shape and winner logic are identical.
@@ -330,6 +331,10 @@ def streaming_upsert_sink(
     order = [order_by] + list(tie_cols or [])
     payload = [c for c in sdf.columns if c not in key_list]
 
+    # a snapshot's schema is the rows'; Spark reads a declared file schema
+    # with every field nullable, as its parquet writer stored it
+    snapshot_schema = sdf.select(*key_list, *payload).schema
+
     def _winner(df):
         val = F.struct(*[F.col(c) for c in payload])
         ordc = F.struct(*[F.col(c) for c in order])
@@ -342,13 +347,18 @@ def streaming_upsert_sink(
 
     def _apply(batch_df, batch_id: int):
         spark = batch_df.sparkSession
-        w = _winner(batch_df)
+        rows = batch_df.select(*key_list, *payload)
         versions = _snapshot_versions(spark, target_dir)
         prior = [v for v in versions if v < int(batch_id)]
         if prior:
-            cur = spark.read.parquet(f"{target_dir.rstrip('/')}/v{max(prior)}")
-            w = _winner(cur.select(*key_list, *payload).unionByName(w))
-        w.write.mode("overwrite").parquet(
+            # one aggregate over parent + batch: per-key max_by is
+            # associative, so the winners are the two-step ones; the
+            # declared schema skips parquet's schema-inference job
+            parent = spark.read.schema(snapshot_schema).parquet(
+                f"{target_dir.rstrip('/')}/v{max(prior)}"
+            )
+            rows = parent.unionByName(rows)
+        _winner(rows).write.mode("overwrite").parquet(
             f"{target_dir.rstrip('/')}/v{int(batch_id)}"
         )
         # prune superseded snapshots (all but the newest `keep`, which now

@@ -103,3 +103,31 @@ def test_session_built_elsewhere_gets_preinit_at_first_table_load(
     finally:
         # ``_t``'s first sighting sizes shuffles to the default parallelism
         spark.conf.set("spark.sql.shuffle.partitions", partitions)
+
+
+# --- the generated-class cache ---------------------------------------------
+
+CODEGEN_CACHE = "spark.sql.codegen.cache.maxEntries"
+
+
+def test_session_sizes_the_codegen_cache(spark):
+    from polars_net_spark import session
+
+    assert spark.conf.get(CODEGEN_CACHE) == str(session._CODEGEN_CACHE_ENTRIES)
+    assert session._CODEGEN_CACHE_ENTRIES > 100  # Spark's default
+
+
+def test_rerun_plans_compile_nothing(spark):
+    # each query compiles its own classes (the literal is inlined in the
+    # generated source); together they overflow Spark's default of 100
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source
+    compiles = metrics.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def run():
+        before = compiles.getCount()
+        for i in range(60):
+            spark.range(1).selectExpr(f"id * 7919 + {i} AS x").collect()
+        return compiles.getCount() - before
+
+    assert run() > 100
+    assert run() == 0

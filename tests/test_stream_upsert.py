@@ -102,3 +102,39 @@ class TestStreamingUpsert:
             ("u1", dt.datetime(2024, 1, 1, 0, 5), 4, "d"),
             ("u2", dt.datetime(2024, 1, 1, 0, 1), 3, "c"),
         ]
+
+    def test_one_aggregate_and_no_schema_job_per_batch(self, spark, tmp_path):
+        # 3 micro-batches, the last two over a parent snapshot: each batch
+        # is one aggregate + write, and the parent is read with the rows'
+        # schema instead of a schema-inference job.  Jobs are counted from
+        # every thread: the micro-batches run on the stream's own thread.
+        src, schema = _stage(spark, str(tmp_path), 3)
+        ctx = spark.sparkContext._jsc.sc()
+
+        def newest_job():
+            ctx.listenerBus().waitUntilEmpty()
+            it = ctx.statusStore().jobsList(None).iterator()  # newest first
+            return it.next().jobId() if it.hasNext() else -1
+
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        target = os.path.join(str(tmp_path), "target_jobs")
+        before = newest_job()
+        q = streaming_upsert_sink(
+            stream, target, keys="u", order_by="ts", tie_cols=["eid"],
+            checkpoint=os.path.join(str(tmp_path), "ckpt_jobs"),
+        )
+        q.awaitTermination(120)
+        q.stop()
+        jobs = newest_job() - before
+        assert q.lastProgress["batchId"] == 2  # batches 0, 1 and 2 ran
+        # per batch: the aggregate's shuffle-map job and the write job
+        assert jobs == 2 * 3
+        out = sorted(read_upsert_target(spark, target).collect().rows())
+        assert out == [
+            ("u1", dt.datetime(2024, 1, 1, 0, 5), 4, "d"),
+            ("u2", dt.datetime(2024, 1, 1, 0, 1), 3, "c"),
+        ]

@@ -4626,26 +4626,40 @@ def _raw_schema(spark, sf_dir: str, table: str) -> StructType:
     return hit
 
 
-def _stream_gate_conf(spark, n: int = 8):
-    """State-store sizing for the streaming gates: Structured Streaming
-    allocates ONE state-store instance per shuffle partition per stateful
-    operator, and availableNow micro-batch fixed overhead scales with the
-    store count, not the data.  The gates keep a few hundred state keys, so
-    8 stores are plenty at gate scale (32 → 8 measured ≈11.5 s → ≈7.3 s
-    across the four gates); on a production stream you size this UP with
-    key cardinality × throughput.  Restores the session conf on exit."""
-    from contextlib import contextmanager
+def _drain_stream_gate(spark, start, timeout: int = 120) -> None:
+    """Run a streaming gate's query: ``start()`` starts it through one of
+    ``polars_net_spark.streaming.stream``'s sinks (so through
+    ``start_stream``); the gate waits for the end of its availableNow
+    trigger, then stops it.
 
-    @contextmanager
-    def _ctx():
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
+    State-store sizing: Structured Streaming allocates ONE state-store
+    instance per shuffle partition per stateful operator, and availableNow
+    micro-batch fixed overhead scales with the store count, not the data.
+    The gates keep a few hundred state keys, so 8 stores are plenty at gate
+    scale (32 → 8 measured ≈11.5 s → ≈7.3 s across the four gates); on a
+    production stream you size this UP with key cardinality × throughput.
+    The session's shuffle partitions are restored on exit."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        q = start()
+        q.awaitTermination(timeout)
+        q.stop()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
 
-    return _ctx()
+
+def _memory_stream_gate(spark, sdf, name: str, output_mode: str, timeout: int = 120):
+    """Run a streaming gate's query into the memory sink ``name`` and return
+    the sink's table.  An append-mode memory sink accumulates across runs in
+    one session, so the sink's view is dropped first."""
+    from polars_net_spark.streaming import StreamingFrame
+
+    spark.catalog.dropTempView(name)
+    _drain_stream_gate(
+        spark, lambda: StreamingFrame(sdf).write_memory(name, output_mode), timeout
+    )
+    return spark.table(name)
 
 
 def _q151(spark, sf_dir):
@@ -4668,14 +4682,7 @@ def _q151(spark, sf_dir):
             F.count("*").cast("long").alias("n"),
         )
     )
-    with _stream_gate_conf(spark):
-        q = (
-            stream.writeStream.format("memory").queryName("q151_win")
-            .outputMode("complete").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(120)
-        q.stop()
-    return spark.table("q151_win").select(
+    return _memory_stream_gate(spark, stream, "q151_win", "complete").select(
         F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("win_start"),
         "event_type", "sum_v", "n",
     )
@@ -5003,19 +5010,7 @@ def _q159(spark, sf_dir):
         (F.unix_micros(F.col("bts")) - F.unix_micros(F.col("cts"))).alias("lag_us"),
         F.round("value", 6).alias("purchase_value"),
     )
-    # append-mode memory sink ACCUMULATES across runs in one session — reset
-    try:
-        spark.catalog.dropTempView("q159_ssjoin")
-    except Exception:
-        pass
-    with _stream_gate_conf(spark):
-        q = (
-            out.writeStream.format("memory").queryName("q159_ssjoin")
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(180)
-        q.stop()
-    return spark.table("q159_ssjoin")
+    return _memory_stream_gate(spark, out, "q159_ssjoin", "append", timeout=180)
 
 
 _q159_sql = """
@@ -5516,18 +5511,7 @@ def _q173(spark, sf_dir):
         .groupBy(F.session_window("ts", "30 minutes").alias("w"), F.col("user_id"))
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 6).alias("sum_v"))
     )
-    try:
-        spark.catalog.dropTempView("q173_sessions")
-    except Exception:
-        pass
-    with _stream_gate_conf(spark):
-        q = (
-            stream.writeStream.format("memory").queryName("q173_sessions")
-            .outputMode("complete").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(120)
-        q.stop()
-    return spark.table("q173_sessions").select(
+    return _memory_stream_gate(spark, stream, "q173_sessions", "complete").select(
         F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
         "user_id",
         F.col("n").cast("long").alias("n"),
@@ -5933,18 +5917,7 @@ def _q186(spark, sf_dir):
     scored = gopher_quality_frame(stream, min_stop_hits=1).spark.withColumn(
         "passes", F.col("passes").cast("long")
     )
-    try:
-        spark.catalog.dropTempView("q186_stream_quality")
-    except Exception:
-        pass
-    with _stream_gate_conf(spark):
-        q = (
-            scored.writeStream.format("memory").queryName("q186_stream_quality")
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(120)
-        q.stop()
-    return spark.table("q186_stream_quality")
+    return _memory_stream_gate(spark, scored, "q186_stream_quality", "append")
 
 
 _q186_sql = _q54_sql
@@ -5971,18 +5944,7 @@ def _q208(spark, sf_dir):
         .select(content_fingerprint(F.col("text")).alias("fp"))
         .dropDuplicates(["fp"])
     )
-    try:
-        spark.catalog.dropTempView("q208_stream_dedup")
-    except Exception:
-        pass
-    with _stream_gate_conf(spark):
-        q = (
-            stream.writeStream.format("memory").queryName("q208_stream_dedup")
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(120)
-        q.stop()
-    return spark.table("q208_stream_dedup")
+    return _memory_stream_gate(spark, stream, "q208_stream_dedup", "append")
 
 
 _q208_sql = """
@@ -7190,20 +7152,9 @@ def _q223(spark, sf_dir):
             F.first("p_ref").alias("p_ref"),
         )
     )
-    try:
-        spark.catalog.dropTempView("q223_stream_drift")
-    except Exception:
-        pass
-    with _stream_gate_conf(spark):
-        q = (
-            stream.writeStream.format("memory").queryName("q223_stream_drift")
-            .outputMode("complete").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(120)
-        q.stop()
+    sink = _memory_stream_gate(spark, stream, "q223_stream_drift", "complete")
     from pyspark.sql import Window
 
-    sink = spark.table("q223_stream_drift")
     wtot = Window.partitionBy("w")
     eps = F.lit(1e-6)
     p_cur = F.greatest(F.col("n_cur") / F.sum("n_cur").over(wtot), eps)
@@ -8999,6 +8950,7 @@ def _q267(spark, sf_dir):
     from polars_net_spark.streaming.stream import (
         read_upsert_target,
         streaming_upsert_sink,
+        upsert_snapshot_schema,
     )
 
     ev_path = os.path.join(sf_dir, "events.parquet")
@@ -9020,14 +8972,17 @@ def _q267(spark, sf_dir):
     )
     target = tempfile.mkdtemp(prefix="q267_upsert_")
     ckpt = tempfile.mkdtemp(prefix="q267_ckpt_")
-    with _stream_gate_conf(spark):
-        q = streaming_upsert_sink(
+    _drain_stream_gate(
+        spark,
+        lambda: streaming_upsert_sink(
             stream, target, keys="user_id", order_by="ts",
             tie_cols=["event_id"], checkpoint=ckpt,
-        )
-        q.awaitTermination(180)
-        q.stop()
-    out = read_upsert_target(spark, target).spark
+        ),
+        timeout=180,
+    )
+    out = read_upsert_target(
+        spark, target, upsert_snapshot_schema(stream, "user_id")
+    ).spark
     return out.select(
         "user_id",
         F.col("ts").alias("last_ts"),
@@ -10159,17 +10114,7 @@ def _q294(spark, sf_dir):
         group_by=["user_id"],
         output_mode="append",
     )
-    with _stream_gate_conf(spark):
-        q = (
-            emitted._sdf.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        q.stop()
+    _drain_stream_gate(spark, lambda: emitted.write_parquet(out_dir, ckpt), timeout=180)
     res = spark.read.parquet(out_dir)
     final = res.groupBy("user_id").agg(
         F.max_by(F.struct("n", "total"), "n").alias("s")
@@ -10425,14 +10370,7 @@ def _q301(spark, sf_dir):
             F.count("*").cast("long").alias("n"),
         )
     )
-    with _stream_gate_conf(spark):
-        q = (
-            stream.writeStream.format("memory").queryName("q301_slide")
-            .outputMode("complete").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(120)
-        q.stop()
-    return spark.table("q301_slide").select(
+    return _memory_stream_gate(spark, stream, "q301_slide", "complete").select(
         F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("win_start"),
         "event_type", "sum_v", "n",
     )
@@ -11414,14 +11352,7 @@ def _q328(spark, sf_dir):
             F.count(F.lit(1)).cast("long").alias("n"),
         )
     )
-    with _stream_gate_conf(spark):
-        q = (
-            stream.writeStream.format("memory").queryName("q328_enrich")
-            .outputMode("complete").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(120)
-        q.stop()
-    return spark.table("q328_enrich")
+    return _memory_stream_gate(spark, stream, "q328_enrich", "complete")
 
 
 _q328_sql = """
@@ -13298,17 +13229,7 @@ def _q361(spark, sf_dir):
         ),
         F.col("cts"),
     )
-    try:
-        spark.catalog.dropTempView("q361_outer_join")
-    except Exception:
-        pass
-    with _stream_gate_conf(spark):
-        q = (
-            out.writeStream.format("memory").queryName("q361_outer_join")
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(180)
-        q.stop()
+    _memory_stream_gate(spark, out, "q361_outer_join", "append", timeout=180)
     mx = (
         spark.read.schema(schema).parquet(src_dir)
         .filter(F.col("user_id") % 10 == 1)
@@ -14003,17 +13924,7 @@ def _q373(spark, sf_dir):
         F.col("cts"),
         F.col("bts"),
     )
-    try:
-        spark.catalog.dropTempView("q373_full_outer_join")
-    except Exception:
-        pass
-    with _stream_gate_conf(spark):
-        q = (
-            out.writeStream.format("memory").queryName("q373_full_outer_join")
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(180)
-        q.stop()
+    _memory_stream_gate(spark, out, "q373_full_outer_join", "append", timeout=180)
     # the engine's global watermark is the MIN of the per-input watermarks
     # (each side advances off its own max event time), so the provably-
     # flushed band must key off the SLOWER side's max — q361's single-side
@@ -14654,13 +14565,14 @@ def _q389(spark, sf_dir):
     st.close()
     conn.close()
     ckpt = tempfile.mkdtemp(prefix="q389_ckpt_")
-    with _stream_gate_conf(spark):
-        q = streaming_jdbc_sink(
+    _drain_stream_gate(
+        spark,
+        lambda: streaming_jdbc_sink(
             stream, url, "q389_sink", checkpoint=ckpt,
             properties={"driver": drv}, num_partitions=4,
-        )
-        q.awaitTermination(180)
-        q.stop()
+        ),
+        timeout=180,
+    )
     back = (
         spark.read.format("jdbc").option("url", url)
         .option("dbtable", "q389_sink").option("driver", drv).load()
@@ -15294,18 +15206,7 @@ def _q402(spark, sf_dir):
     merged = sa.unionByName(sb).dropDuplicatesWithinWatermark(["event_id"]).select(
         "event_id", "event_type"
     )
-    try:
-        spark.catalog.dropTempView("q402_stream_union")
-    except Exception:
-        pass
-    with _stream_gate_conf(spark):
-        q = (
-            merged.writeStream.format("memory").queryName("q402_stream_union")
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(120)
-        q.stop()
-    return spark.table("q402_stream_union")
+    return _memory_stream_gate(spark, merged, "q402_stream_union", "append")
 
 
 _q402_sql = """

@@ -9,14 +9,34 @@ and session aggregations, stateful processing, and batch-callback sinks.
 Scale notes: every aggregation here is keyed (hash-partitioned state), the
 watermark bounds state size, and ``foreach_batch`` receives DataFrames (never
 driver-side rows).
+
+Every query starts through :func:`start_stream`.  Structured Streaming
+commits each micro-batch through its checkpoint: offset, commit and source
+logs and state-store delta files are each written to a temp file and
+renamed into place.  Spark's default checkpoint manager renames through
+Hadoop ``FileContext``, and on the local filesystem without the native
+``libhadoop`` library ``FileContext`` resolves every rename's source and
+target by forking a ``readlink`` process.  When the
+checkpoint resolves to the ``file`` scheme, :func:`start_stream` starts the
+query with Spark's ``FileSystemBasedCheckpointFileManager`` instead, which
+renames through ``FileSystem.rename`` and forks nothing.  On the local
+filesystem both managers make the same non-atomic "does the target exist?"
+check before an atomic rename(2), so nothing is weakened.  Other schemes
+keep Spark's default: on HDFS ``FileContext``'s rename-with-overwrite is
+atomic, while the FileSystem manager would silently keep an existing
+target.
 """
 
 from __future__ import annotations
 
+import threading
+import time
 from typing import Any, Callable, Mapping, Sequence
+from urllib.parse import urlsplit
 
 from pyspark.sql import Column, DataFrame as SparkDF, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from .._fmt import duration_to_interval
 from ..exprs import Expr, _c
@@ -29,6 +49,77 @@ __all__ = [
     "scan_stream_rate",
     "streaming_jdbc_sink",
 ]
+
+_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+_FS_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+# one start at a time, so no start reads another's temporary manager class
+_START_LOCK = threading.Lock()
+# a query's status message until its stream thread has built the sources
+_INIT_MESSAGES = ("Initializing StreamExecution", "Initializing sources")
+_INIT_WAIT_S = 30.0
+
+
+def _local_checkpoint(location: "str | None", default_fs: "str | None") -> bool:
+    """Whether a checkpoint at ``location`` lives on the ``file`` scheme: its
+    own URI scheme, or ``default_fs``'s when it has none or is None (Spark
+    makes a temp checkpoint).  A pure URI check; no filesystem is built."""
+    scheme = urlsplit(location).scheme if location else ""
+    if not scheme:
+        scheme = urlsplit(default_fs or "file:///").scheme
+    return scheme.lower() == "file"
+
+
+def start_stream(
+    writer: DataStreamWriter,
+    checkpoint: "str | None" = None,
+    trigger: "Mapping[str, Any] | None" = None,
+) -> StreamingQuery:
+    """Start ``writer``'s query; every query the engine starts goes through
+    here.  The trigger defaults to ``availableNow``.  Pass the checkpoint as
+    ``checkpoint``, not as a writer option: its scheme is read from it.
+
+    The effective checkpoint is ``checkpoint``, else the session's
+    ``spark.sql.streaming.checkpointLocation`` root, else Spark's temp
+    checkpoint; one without a scheme resolves against ``fs.defaultFS``.
+    When it is on the ``file`` scheme (why only ``file``: see the module
+    docstring), ``spark.sql.streaming.checkpointFileManagerClass`` is set
+    to Spark's FileSystem-based manager for the start and unset after it.
+    The offset and commit logs are built inside ``start()``, and the
+    query's cloned session, which writes the state stores, keeps the
+    manager.  The sources' metadata logs are built on the stream thread
+    after ``start()`` returns, so the start also waits, at most
+    ``_INIT_WAIT_S``, until the query's status leaves its initializing
+    messages.  A manager class the user set in the session is left alone.
+    A lock serializes the starts made here, so none sees another's
+    temporary value; a ``writeStream.start()`` made elsewhere on the same
+    session while one runs would see it too."""
+    if checkpoint:
+        writer = writer.option("checkpointLocation", checkpoint)
+    writer = writer.trigger(**(trigger or {"availableNow": True}))
+    spark = writer._spark
+    with _START_LOCK:
+        location = checkpoint or spark.conf.get("spark.sql.streaming.checkpointLocation", None)
+        default_fs = spark.conf.get("fs.defaultFS", None) or (
+            spark._jsc.hadoopConfiguration().get("fs.defaultFS")
+        )
+        if spark.conf.get(_MANAGER_CONF, None) or not _local_checkpoint(location, default_fs):
+            return writer.start()
+        spark.conf.set(_MANAGER_CONF, _FS_MANAGER)
+        try:
+            q = writer.start()
+            deadline = time.monotonic() + _INIT_WAIT_S
+            while (
+                q.isActive
+                and q.status["message"] in _INIT_MESSAGES
+                and time.monotonic() < deadline
+            ):
+                time.sleep(0.002)
+            return q
+        finally:
+            spark.conf.unset(_MANAGER_CONF)
 
 
 def _spark(spark: SparkSession | None) -> SparkSession:
@@ -235,25 +326,17 @@ class StreamingFrame:
         trigger: Mapping[str, Any] | None = None,
         output_mode: str = "append",
     ):
-        w = (
-            self._sdf.writeStream.format("parquet")
-            .option("path", path)
-            .option("checkpointLocation", checkpoint)
-            .outputMode(output_mode)
-        )
-        return w.trigger(**(trigger or {"availableNow": True})).start()
+        w = self._sdf.writeStream.format("parquet").option("path", path).outputMode(output_mode)
+        return start_stream(w, checkpoint, trigger)
 
     def write_memory(self, table_name: str, output_mode: str = "append", trigger=None):
         w = self._sdf.writeStream.format("memory").queryName(table_name).outputMode(output_mode)
-        return w.trigger(**(trigger or {"availableNow": True})).start()
+        return start_stream(w, trigger=trigger)
 
     def foreach_batch(self, fn: Callable[[SparkDF, int], None], checkpoint: str | None = None, trigger=None):
         """Batch-callback sink — the streaming twin of the reference's
         map_batches/export_batches sink (io.rs:567-657)."""
-        w = self._sdf.writeStream.foreachBatch(fn)
-        if checkpoint:
-            w = w.option("checkpointLocation", checkpoint)
-        return w.trigger(**(trigger or {"availableNow": True})).start()
+        return start_stream(self._sdf.writeStream.foreachBatch(fn), checkpoint, trigger)
 
 
 class StreamingGroupBy:
@@ -330,10 +413,7 @@ def streaming_upsert_sink(
     key_list = [keys] if isinstance(keys, str) else list(keys)
     order = [order_by] + list(tie_cols or [])
     payload = [c for c in sdf.columns if c not in key_list]
-
-    # a snapshot's schema is the rows'; Spark reads a declared file schema
-    # with every field nullable, as its parquet writer stored it
-    snapshot_schema = sdf.select(*key_list, *payload).schema
+    snapshot_schema = upsert_snapshot_schema(sdf, key_list)
 
     def _winner(df):
         val = F.struct(*[F.col(c) for c in payload])
@@ -376,20 +456,29 @@ def streaming_upsert_sink(
                     True,
                 )
 
-    writer = sdf.writeStream.foreachBatch(_apply)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.trigger(**(trigger or {"availableNow": True})).start()
+    return start_stream(sdf.writeStream.foreachBatch(_apply), checkpoint, trigger)
 
 
-def read_upsert_target(spark: SparkSession, target_dir: str) -> LazyFrame:
+def upsert_snapshot_schema(stream: "StreamingFrame | SparkDF", keys: "Sequence[str] | str"):
+    """The schema of :func:`streaming_upsert_sink`'s snapshots for ``stream``
+    and ``keys``: the keys, then every other column.  Spark reads a declared
+    file schema with every field nullable, as its parquet writer stored it."""
+    sdf = stream._sdf if isinstance(stream, StreamingFrame) else stream
+    key_list = [keys] if isinstance(keys, str) else list(keys)
+    return sdf.select(*key_list, *[c for c in sdf.columns if c not in key_list]).schema
+
+
+def read_upsert_target(spark: SparkSession, target_dir: str, schema=None) -> LazyFrame:
     """The converged table from :func:`streaming_upsert_sink` — the highest
     versioned snapshot (discovered via the Hadoop FileSystem API, so remote
-    stores work)."""
+    stores work).  With ``schema`` (:func:`upsert_snapshot_schema`) the read
+    submits no job; without it parquet infers the schema from the footers
+    in one job."""
     vs = _snapshot_versions(spark, target_dir)
     if not vs:
         raise ValueError(f"no snapshots under {target_dir}")
-    return LazyFrame(spark.read.parquet(f"{target_dir.rstrip('/')}/v{max(vs)}"))
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return LazyFrame(reader.parquet(f"{target_dir.rstrip('/')}/v{max(vs)}"))
 
 
 def streaming_jdbc_sink(
@@ -511,7 +600,4 @@ def streaming_jdbc_sink(
             num_partitions=num_partitions,
         )
 
-    writer = sdf.writeStream.foreachBatch(_apply)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.trigger(**(trigger or {"availableNow": True})).start()
+    return start_stream(sdf.writeStream.foreachBatch(_apply), checkpoint, trigger)

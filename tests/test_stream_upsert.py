@@ -9,6 +9,7 @@ import pytest
 from polars_net_spark.streaming.stream import (
     read_upsert_target,
     streaming_upsert_sink,
+    upsert_snapshot_schema,
 )
 
 
@@ -138,3 +139,34 @@ class TestStreamingUpsert:
             ("u1", dt.datetime(2024, 1, 1, 0, 5), 4, "d"),
             ("u2", dt.datetime(2024, 1, 1, 0, 1), 3, "c"),
         ]
+
+
+def test_read_with_snapshot_schema_submits_no_job(spark, tmp_path):
+    # the schema the sink writes its snapshots with: no footer-inference job
+    # before the action; without it parquet infers the schema in one job
+    src, schema = _stage(spark, str(tmp_path), 2)
+    stream = spark.readStream.schema(schema).parquet(src).select("v", "ts", "u", "eid")
+    target = os.path.join(str(tmp_path), "target_schema")
+    q = streaming_upsert_sink(
+        stream, target, keys="u", order_by="ts", tie_cols=["eid"],
+        checkpoint=os.path.join(str(tmp_path), "ckpt_schema"),
+    )
+    q.awaitTermination(120)
+    q.stop()
+    ctx = spark.sparkContext._jsc.sc()
+
+    def newest_job():
+        ctx.listenerBus().waitUntilEmpty()
+        it = ctx.statusStore().jobsList(None).iterator()  # newest first
+        return it.next().jobId() if it.hasNext() else -1
+
+    before = newest_job()
+    declared = read_upsert_target(spark, target, upsert_snapshot_schema(stream, "u"))
+    assert newest_job() == before
+    inferred = read_upsert_target(spark, target)
+    assert newest_job() == before + 1
+    assert declared.columns == inferred.columns == ["u", "v", "ts", "eid"]
+    assert sorted(declared.collect().rows()) == sorted(inferred.collect().rows()) == [
+        ("u1", "d", dt.datetime(2024, 1, 1, 0, 5), 4),
+        ("u2", "c", dt.datetime(2024, 1, 1, 0, 1), 3),
+    ]

@@ -1,7 +1,9 @@
 """Structured Streaming: file source → watermark → windowed/session aggs →
 memory/foreachBatch sinks, driven end-to-end with availableNow triggers."""
 
+import ast
 import datetime as dt
+import os
 import time
 
 import pytest
@@ -9,6 +11,7 @@ import pytest
 import polars_net_spark as pl
 from polars_net_spark import col
 from polars_net_spark.streaming import scan_stream_parquet
+from polars_net_spark.streaming import stream as stream_mod
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -363,3 +366,225 @@ def test_stream_static_join_drift(spark, tmp_path):
         for r in spark.table("drift_out").collect()
     }
     assert got == {(0, 0): (2, 0.5), (0, 1): (1, 0.5), (6, 1): (1, 0.5)}
+
+
+# --- one start path and the local checkpoint manager ------------------------
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_FC_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileContextBasedCheckpointFileManager"
+)
+
+
+def _starts_outside_helper():
+    """``.start()`` calls on a ``writeStream`` chain, and functions that name
+    ``writeStream`` and call ``.start()``, outside ``stream.start_stream``."""
+    files = [os.path.join(ROOT, "__spark_entry__.py"), os.path.join(ROOT, "bench.py")]
+    for sub in ("polars_net_spark", "tools", "examples"):
+        for root, _, names in os.walk(os.path.join(ROOT, sub)):
+            files += [os.path.join(root, n) for n in names if n.endswith(".py")]
+    found = []
+    for path in files:
+        with open(path, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read())
+        rel = os.path.relpath(path, ROOT).replace(os.sep, "/")
+        for node in ast.walk(tree):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "start"
+            ):
+                continue
+            chain = node.func.value
+            while isinstance(chain, (ast.Attribute, ast.Call)):
+                if isinstance(chain, ast.Attribute) and chain.attr == "writeStream":
+                    found.append((rel, node.lineno))
+                    break
+                chain = chain.func if isinstance(chain, ast.Call) else chain.value
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            if rel == "polars_net_spark/streaming/stream.py" and fn.name == "start_stream":
+                continue
+            names_ws = any(
+                isinstance(n, ast.Attribute) and n.attr == "writeStream" for n in ast.walk(fn)
+            )
+            starts = [
+                n.lineno
+                for n in ast.walk(fn)
+                if isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr == "start"
+            ]
+            if names_ws and starts:
+                found += [(rel, ln) for ln in starts]
+    return sorted(set(found))
+
+
+def test_every_stream_starts_through_the_helper():
+    assert _starts_outside_helper() == []
+
+
+def test_checkpoint_scheme_decision():
+    local = stream_mod._local_checkpoint
+    assert local("file:/x", None)
+    assert local("file:///x/y", "hdfs://nn:8020")
+    assert local("/x", "file:///")
+    assert local("/x", None)
+    assert local(None, "file:///")  # Spark's temp checkpoint
+    assert not local("hdfs://nn/x", "file:///")
+    assert not local("s3a://b/x", "file:///")
+    assert not local("/x", "hdfs://nn:8020")
+    assert not local(None, "hdfs://nn:8020")
+
+
+def _windowed(spark, src):
+    return (
+        spark.readStream.schema(SCHEMA).parquet(src)
+        .withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "30 minutes").alias("w"), "user")
+        .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
+    )
+
+
+def _memory_writer(spark, src, name):
+    return _windowed(spark, src).writeStream.format("memory").queryName(name).outputMode("complete")
+
+
+def _offset_log_manager(q):
+    return q._jsq.streamingQuery().offsetLog().fileManager().getClass().getName()
+
+
+def _source_log_manager(q):
+    # the file source builds its metadata log on the stream thread, after
+    # start() has returned; the log is a private field of the source
+    src = q._jsq.streamingQuery().sources().apply(0)
+    field = src.getClass().getDeclaredField("metadataLog")
+    field.setAccessible(True)
+    return field.get(src).fileManager().getClass().getName()
+
+
+def _table(spark, name):
+    return sorted(
+        (r["w"]["start"], r["user"], r["s"], r["n"]) for r in spark.table(name).collect()
+    )
+
+
+_BASE = dt.datetime(2024, 1, 1, 10, 0)
+_PARTS = [
+    [(_BASE, "a", 1.0), (_BASE + dt.timedelta(minutes=40), "b", 2.0)],
+    [(_BASE + dt.timedelta(minutes=10), "a", 4.0), (_BASE + dt.timedelta(minutes=50), "b", 8.0)],
+    [(_BASE + dt.timedelta(minutes=20), "a", 16.0), (_BASE + dt.timedelta(hours=2), "a", 32.0)],
+]
+
+
+def _one_shot(spark, tmp_path):
+    src = str(tmp_path / "all_src")
+    for part in _PARTS:
+        _write_batch(spark, src, part)
+    _await(stream_mod.start_stream(_memory_writer(spark, src, "ckpt_one_shot")))
+    return _table(spark, "ckpt_one_shot")
+
+
+def test_local_checkpoint_uses_filesystem_manager_and_restores_conf(spark, tmp_path):
+    src = str(tmp_path / "src")
+    _write_batch(spark, src, _PARTS[0])
+    assert spark.conf.get(stream_mod._MANAGER_CONF, None) is None
+    q = stream_mod.start_stream(
+        _memory_writer(spark, src, "ckpt_fs"), checkpoint=str(tmp_path / "ck")
+    )
+    _await(q)
+    assert _offset_log_manager(q) == stream_mod._FS_MANAGER
+    assert _source_log_manager(q) == stream_mod._FS_MANAGER
+    assert spark.conf.get(stream_mod._MANAGER_CONF, None) is None
+    # a manager class the user set is kept, for the query and the session
+    spark.conf.set(stream_mod._MANAGER_CONF, _FC_MANAGER)
+    try:
+        q = stream_mod.start_stream(
+            _memory_writer(spark, src, "ckpt_user"), checkpoint=str(tmp_path / "ck_user")
+        )
+        _await(q)
+        assert _offset_log_manager(q) == _source_log_manager(q) == _FC_MANAGER
+        assert spark.conf.get(stream_mod._MANAGER_CONF) == _FC_MANAGER
+    finally:
+        spark.conf.unset(stream_mod._MANAGER_CONF)
+
+
+def test_stateful_query_resumes_from_local_checkpoint(spark, tmp_path):
+    # one batch per run; the state of batches 0 and 1 is read back from the
+    # checkpoint by each restart, and the result is the one-shot run's
+    src, ckpt = str(tmp_path / "src"), "file:" + str(tmp_path / "ck")
+    for i, part in enumerate(_PARTS):
+        _write_batch(spark, src, part)
+        q = stream_mod.start_stream(_memory_writer(spark, src, "ckpt_resume"), checkpoint=ckpt)
+        _await(q)
+        assert q.lastProgress["batchId"] == i
+    assert _table(spark, "ckpt_resume") == _one_shot(spark, tmp_path)
+
+
+def test_filecontext_checkpoint_resumes_under_filesystem_manager(spark, tmp_path):
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ck")
+    _write_batch(spark, src, _PARTS[0])
+    _write_batch(spark, src, _PARTS[1])
+    # written by Spark's default manager: a start that bypasses the helper
+    q = (
+        _memory_writer(spark, src, "ckpt_migrate")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    _await(q)
+    assert _offset_log_manager(q) == _FC_MANAGER
+    _write_batch(spark, src, _PARTS[2])
+    q = stream_mod.start_stream(_memory_writer(spark, src, "ckpt_migrate"), checkpoint=ckpt)
+    _await(q)
+    assert _offset_log_manager(q) == stream_mod._FS_MANAGER
+    assert q.lastProgress["batchId"] == 1
+    assert _table(spark, "ckpt_migrate") == _one_shot(spark, tmp_path)
+
+
+def test_a_start_inside_another_start_gets_the_manager(spark, tmp_path):
+    # the second start begins while the first holds the temporary conf and
+    # calls the writer's start() only after the first has ended; without
+    # the start lock it would take the conf for a user's and start after
+    # the first start's unset, under Spark's default manager
+    import threading
+
+    from pyspark.sql.streaming import DataStreamWriter
+
+    class SlowStart(DataStreamWriter):
+        def start(self, *args, **kwargs):
+            time.sleep(0.5)
+            return super().start(*args, **kwargs)
+
+    src = str(tmp_path / "src")
+    _write_batch(spark, src, _PARTS[0])
+    managers, errors = {}, []
+
+    def run(i, writer):
+        try:
+            q = stream_mod.start_stream(writer, checkpoint=str(tmp_path / f"ck{i}"))
+            _await(q)
+            managers[i] = _offset_log_manager(q)
+        except Exception as exc:  # reported by the assertion below
+            errors.append(exc)
+
+    first = threading.Thread(target=run, args=(0, _memory_writer(spark, src, "ckpt_first")))
+    slow = SlowStart(_windowed(spark, src))
+    second = threading.Thread(
+        target=run,
+        args=(1, slow.format("memory").queryName("ckpt_second").outputMode("complete")),
+    )
+    first.start()
+    deadline = time.monotonic() + 60
+    while spark.conf.get(stream_mod._MANAGER_CONF, None) is None and first.is_alive():
+        assert time.monotonic() < deadline
+        time.sleep(0.001)
+    second.start()
+    first.join(timeout=120)
+    second.join(timeout=120)
+    assert not first.is_alive() and not second.is_alive()
+    assert errors == []
+    assert managers == {0: stream_mod._FS_MANAGER, 1: stream_mod._FS_MANAGER}
+    assert spark.conf.get(stream_mod._MANAGER_CONF, None) is None

@@ -4,6 +4,12 @@ action's plan.  Each gate's guard decisions
 (``polars_net_spark._bounded.decisions()``) print next to its job count, so
 an A/B shows which path ran.
 
+Jobs are counted from Spark's status store: every job submitted between the
+gate's start and end, whatever thread submitted it (a streaming gate's
+micro-batches run on the stream's own thread under the stream's job
+group).  Each call runs under a fresh job group, so a gate named twice
+reports each run's own count.
+
 Usage: python tools/job_count.py [-d SF_DIR] query [query ...]
 """
 
@@ -38,25 +44,34 @@ def main() -> None:
     spark.range(1).count()
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
 
+    ctx = sc._jsc.sc()
+
+    def newest_job() -> int:
+        # after every event posted so far is in the store; newest job first
+        ctx.listenerBus().waitUntilEmpty()
+        it = ctx.statusStore().jobsList(None).iterator()
+        return it.next().jobId() if it.hasNext() else -1
+
     qs = e.queries()
     out = {}
-    for name in names:
+    for i, name in enumerate(names):
         fn = qs[name]
-        group = f"probe_{name}"
-        sc.setJobGroup(group, name)
+        sc.setJobGroup(f"probe_{i}_{name}", name)
         _bounded.clear_decisions()
+        before = newest_job()
         t0 = time.time()
         df = fn(spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
         dt = round(time.time() - t0, 3)
         sc.setJobGroup(None, None)
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        jobs = newest_job() - before
         paths = [
             f"{d['operator']}={d['path']}(n={d['n']}, bound={d['bound']})"
             for d in _bounded.decisions()
         ]
-        out[name] = {"jobs": len(jobs), "sec": dt, "decisions": _bounded.decisions()}
-        print(f"{name}: {len(jobs)} jobs, {dt}s, {' '.join(paths) or '-'}", file=sys.stderr)
+        key = name if name not in out else f"{name}#{i}"
+        out[key] = {"jobs": jobs, "sec": dt, "decisions": _bounded.decisions()}
+        print(f"{name}: {jobs} jobs, {dt}s, {' '.join(paths) or '-'}", file=sys.stderr)
         release_caches()
     print(json.dumps(out))
 

@@ -809,9 +809,7 @@ def _q31(spark, sf_dir):
 
 def _q32(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings")
-    # explicit method: the gate corpus is known-small, so no auto-probe job
-    # runs before the main query
-    return embedding_near_dup_pairs(e, threshold=0.45, method="numpy").spark
+    return embedding_near_dup_pairs(e, threshold=0.45).spark
 
 
 _q32_sql = """
@@ -828,7 +826,7 @@ WHERE round(list_dot_product(a.v, b.v) /
 def _q33(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings")
     q = LazyFrame(e._sdf.filter(F.col("vec_id") < 10))
-    out = cosine_topk(e, q, k=5, method="numpy")
+    out = cosine_topk(e, q, k=5)
     return out._sdf.withColumn("rank", F.col("rank").cast("long"))
 
 
@@ -5821,9 +5819,7 @@ def _q183(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings").spark
     left = emb.filter(F.col("vec_id") % 2 == 0)
     right = emb.filter(F.col("vec_id") % 2 == 1)
-    return embedding_threshold_join(
-        left, right, threshold=0.45, method="numpy"
-    ).spark
+    return embedding_threshold_join(left, right, threshold=0.45).spark
 
 
 _q183_sql = """
@@ -10107,15 +10103,16 @@ def _q294(spark, sf_dir):
     )
     out_dir = tempfile.mkdtemp(prefix="q294_out_")
     ckpt = tempfile.mkdtemp(prefix="q294_ckpt_")
+    out_schema = "user_id long, n long, total double"
     emitted = StreamingFrame(stream).apply_in_pandas_with_state(
         _fn,
-        "user_id long, n long, total double",
+        out_schema,
         "cnt long, tot double",
         group_by=["user_id"],
         output_mode="append",
     )
     _drain_stream_gate(spark, lambda: emitted.write_parquet(out_dir, ckpt), timeout=180)
-    res = spark.read.parquet(out_dir)
+    res = spark.read.schema(out_schema).parquet(out_dir)
     final = res.groupBy("user_id").agg(
         F.max_by(F.struct("n", "total"), "n").alias("s")
     )
@@ -15285,817 +15282,417 @@ FROM w
 )
 
 
+# every gate: name -> (builder, DuckDB oracle SQL), in run order
+_GATES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]] = {
+    "q01_pricing_summary": (_q01, _q01_sql),
+    "q02_filter_pushdown": (_q02, _q02_sql),
+    "q03_top_orders": (_q03, _q03_sql),
+    "q04_priority_semi": (_q04, _q04_sql),
+    "q05_region_revenue": (_q05, _q05_sql),
+    "q06_forecast_revenue": (_q06, _q06_sql),
+    "q07_cust_order_counts": (_q07, _q07_sql),
+    "q08_anti_no_orders": (_q08, _q08_sql),
+    "q09_cross_region_nation": (_q09, _q09_sql),
+    "q10_distinct_flags": (_q10, _q10_sql),
+    "q11_topk_price": (_q11, _q11_sql),
+    "q12_group_having": (_q12, _q12_sql),
+    "q13_case_bands": (_q13, _q13_sql),
+    "q14_concat_diagonal": (_q14, _q14_sql),
+    "q15_pivot_flags": (_q15, _q15_sql),
+    "q16_running_total": (_q16, _q16_sql),
+    "q17_lag_diff": (_q17, _q17_sql),
+    "q18_rolling_avg7": (_q18, _q18_sql),
+    "q19_rolling_7d": (_q19, _q19_sql),
+    "q20_hourly_events": (_q20, _q20_sql),
+    "q21_asof_orders_events": (_q21, _q21_sql),
+    "q22_quantiles": (_q22, _q22_sql),
+    "q23_string_funcs": (_q23, _q23_sql),
+    "q24_date_parts": (_q24, _q24_sql),
+    "q25_list_ops": (_q25, _q25_sql),
+    "q26_struct_ops": (_q26, _q26_sql),
+    "q27_cast_clean": (_q27, _q27_sql),
+    "q28_wordcount": (_q28, _q28_sql),
+    "q29_dedup_exact": (_q29, _q29_sql),
+    "q30_ngram_jaccard": (_q30, _NGRAM_PAIRS_SQL),
+    "q31_minhash_lsh": (_q31, _NGRAM_PAIRS_SQL),
+    "q32_embedding_pairs": (_q32, _q32_sql),
+    "q33_cosine_topk": (_q33, _q33_sql),
+    "q34_text_metrics": (_q34, _q34_sql),
+    "q35_fingerprint": (_q35, _q35_sql),
+    "q36_simhash": (_q36, _q36_sql),
+    "q37_sessionize": (_q37, _q37_sql),
+    "q38_lsh_topk": (_q38, _q38_sql),
+    "q39_rollup": (_q39, _q39_sql),
+    "q40_cube": (_q40, _q40_sql),
+    "q41_fill_values": (_q41, _q41_sql),
+    "q42_explode_pos": (_q42, _q42_sql),
+    "q43_concat_horizontal": (_q43, _q43_sql),
+    "q44_sql_correlated": (_q44, _q44_sql),
+    "q45_selector_numeric": (_q45, _q45_sql),
+    "q46_describe": (_q46, _q46_sql),
+    "q47_vectorized_udf": (_q47, _q47_sql),
+    "q48_asof_forward": (_q48, _q48_sql),
+    "q49_window_rank": (_q49, _q49_sql),
+    "q50_string_agg": (_q50, _q50_sql),
+    "q51_dedup_clusters": (_q51, _q51_sql),
+    "q52_ivf_topk": (_q52, _q52_sql),
+    "q53_dedup_fuzzy": (_q53, _q53_sql),
+    "q54_gopher_quality": (_q54, _q54_sql),
+    "q55_repetition": (_q55, _q55_sql),
+    "q56_tfidf": (_q56, _q56_sql),
+    "q57_bm25": (_q57, _q57_sql),
+    "q58_pii_scrub": (_q58, _q58_sql),
+    "q59_range_join": (_q59, _q59_sql),
+    "q60_salted_join": (_q60, _q60_sql),
+    "q61_approx_distinct": (_q61, _q61_sql),
+    "q62_sq8_recall": (_q62, _q62_sql),
+    "q63_multimodal": (_q63, _q63_sql),
+    "q64_hash_splits": (_q64, _q64_sql),
+    "q65_chunking": (_q65, _q65_sql),
+    "q66_seq_packing": (_q66, _q66_sql),
+    "q67_decontam": (_q67, _q67_sql),
+    "q68_source_cap": (_q68, _q68_sql),
+    "q69_stratified_sample": (_q69, _q69_sql),
+    "q70_oov_rate": (_q70, _q70_sql),
+    "q71_mixture_sample": (_q71, _q71_sql),
+    "q72_unigram_logprob": (_q72, _q72_sql),
+    "q73_line_dedup": (_q73, _q73_sql),
+    "q74_merge_upsert": (_q74, _q74_sql),
+    "q75_cut_qcut": (_q75, _q75_sql),
+    "q76_value_counts": (_q76, _q76_sql),
+    "q77_pct_change": (_q77, _q77_sql),
+    "q78_rolling_quantile": (_q78, _q78_sql),
+    "q79_interpolate": (_q79, _q79_sql),
+    "q80_ewm_mean": (_q80, _q80_sql),
+    "q81_ewm_var_std": (_q81, _q81_sql),
+    "q82_distinct_flags": (_q82, _q82_sql),
+    "q83_mode": (_q83, _q83_sql),
+    "q84_map_groups": (_q84, _q84_sql),
+    "q85_stats_agg": (_q85, _q85_sql),
+    "q86_rle_peaks": (_q86, _q86_sql),
+    "q87_product": (_q87, _q87_sql),
+    "q88_join_where": (_q88, _q88_sql),
+    "q89_replace_listops": (_q89, _q89_sql),
+    "q90_group_head_tail": (_q90, _q90_sql),
+    "q91_dup_spans": (_q91, _q91_sql),
+    "q92_span_removal": (_q92, _q92_sql),
+    "q93_blocklist": (_q93, _q93_sql),
+    "q94_dt_extras": (_q94, _q94_sql),
+    "q95_str_extras": (_q95, _q95_sql),
+    "q96_horizontal": (_q96, _q96_sql),
+    "q97_semdedup": (_q97, _q97_sql),
+    "q98_upsample": (_q98, _q98_sql),
+    "q99_rolling_frame": (_q99, _q99_sql),
+    "q100_to_dummies": (_q100, _q100_sql),
+    "q101_ewm_mean_by": (_q101, _q101_sql),
+    "q102_rolling_std_var": (_q102, _q102_sql),
+    "q103_bin_namespace": (_q103, _q103_sql),
+    "q104_str_matches": (_q104, _q104_sql),
+    "q105_month_bounds": (_q105, _q105_sql),
+    "q106_topk_agg": (_q106, _q106_sql),
+    "q107_hist": (_q107, _q107_sql),
+    "q108_datetime_range": (_q108, _q108_sql),
+    "q109_math_extras": (_q109, _q109_sql),
+    "q110_nullsafe_strparts": (_q110, _q110_sql),
+    "q111_linear_quality": (_q111, _q111_sql),
+    "q112_token_budget_cap": (_q112, _q112_sql),
+    "q113_json_path": (_q113, _q113_sql),
+    "q114_embedding_utils": (_q114, _q114_sql),
+    "q115_update_overlay": (_q115, _q115_sql),
+    "q116_rank_methods": (_q116, _q116_sql),
+    "q117_int_dynamic": (_q117, _q117_sql),
+    "q118_cum_prod": (_q118, _q118_sql),
+    "q119_clean_text": (_q119, _q119_sql),
+    "q120_cond_agg": (_q120, _q120_sql),
+    "q121_epoch_listpos": (_q121, _q121_sql),
+    "q122_frame_aggs": (_q122, _q122_sql),
+    "q123_term_df": (_q123, _q123_sql),
+    "q124_winsorize": (_q124, _q124_sql),
+    "q125_str_many": (_q125, _q125_sql),
+    "q126_list_sets": (_q126, _q126_sql),
+    "q127_pipeline_e2e": (_q127, _q127_sql),
+    "q128_sliding_windows": (_q128, _q128_sql),
+    "q129_asof_nearest": (_q129, _q129_sql),
+    "q130_align_concat": (_q130, _q130_sql),
+    "q131_cut_labels": (_q131, _q131_sql),
+    "q132_shift_fill": (_q132, _q132_sql),
+    "q133_interpolate_by": (_q133, _q133_sql),
+    "q134_merge_sorted": (_q134, _q134_sql),
+    "q135_dot_gather_every": (_q135, _q135_sql),
+    "q136_topk_by": (_q136, _q136_sql),
+    "q137_str_extras": (_q137, _q137_sql),
+    "q138_math_extras": (_q138, _q138_sql),
+    "q139_list_extras": (_q139, _q139_sql),
+    "q140_physical_shrink": (_q140, _q140_sql),
+    "q141_url_curation": (_q141, _q141_sql),
+    "q142_business_days_nulljoin": (_q142, _q142_sql),
+    "q143_rolling_moments": (_q143, _q143_sql),
+    "q144_temperature_shuffle": (_q144, _q144_sql),
+    "q145_unique_none_tostruct": (_q145, _q145_sql),
+    "q146_bigram_lm": (_q146, _q146_sql),
+    "q147_mask_tokens": (_q147, _q147_sql),
+    "q148_pipeline_prep": (_q148, _q148_sql),
+    "q149_named_aggs_boolagg": (_q149, _q149_sql),
+    "q150_chat_flatten": (_q150, _q150_sql),
+    "q151_streaming_window": (_q151, _q151_sql),
+    "q152_video_frames": (_q152, _q152_sql),
+    "q153_corpus_stats": (_q153, _q153_sql),
+    "q154_simhash_pairs": (_q154, _q154_sql),
+    "q155_preference_pairs": (_q155, _q155_sql),
+    "q156_epoch_oversample": (_q156, _q156_sql),
+    "q157_negative_sampling": (_q157, _q157_sql),
+    "q158_length_batches": (_q158, _q158_sql),
+    "q159_stream_stream_join": (_q159, _q159_sql),
+    "q160_sort_by_agg": (_q160, _q160_sql),
+    "q161_vocab_encode": (_q161, _q161_sql),
+    "q162_sentences": (_q162, _q162_sql),
+    "q163_zorder_key": (_q163, _q163_sql),
+    "q164_dedup_against": (_q164, _q164_sql),
+    "q165_ols_by_key": (_q165, _q165_sql),
+    "q166_key_skew": (_q166, _q166_sql),
+    "q167_outlier_flags": (_q167, _q167_sql),
+    "q168_find_gaps": (_q168, _q168_sql),
+    "q169_cohort_retention": (_q169, _q169_sql),
+    "q170_funnel": (_q170, _q170_sql),
+    "q171_fuzzy_join": (_q171, _q171_sql),
+    "q172_scd2": (_q172, _q172_sql),
+    "q173_stream_sessions": (_q173, _q173_sql),
+    "q174_pagerank": (_q174, _q174_sql),
+    "q175_weighted_sample": (_q175, _q175_sql),
+    "q176_corr_matrix": (_q176, _q176_sql),
+    "q177_rolling_corr": (_q177, _q177_sql),
+    "q178_seasonal_decompose": (_q178, _q178_sql),
+    "q179_acf": (_q179, _q179_sql),
+    "q180_cusum": (_q180, _q180_sql),
+    "q181_trimmed_mean": (_q181, _q181_sql),
+    "q182_overlap_join": (_q182, _q182_sql),
+    "q183_embedding_join": (_q183, _q183_sql),
+    "q184_rank_normalize": (_q184, _q184_sql),
+    "q185_tfidf_pairs": (_q185, _q185_sql),
+    "q186_stream_quality": (_q186, _q186_sql),
+    "q187_decimal_exact": (_q187, _q187_sql),
+    "q188_debounce": (_q188, _q188_sql),
+    "q189_bootstrap_ci": (_q189, _q189_sql),
+    "q190_welch_ttest": (_q190, _q190_sql),
+    "q191_chi2": (_q191, _q191_sql),
+    "q192_mann_whitney": (_q192, _q192_sql),
+    "q193_calibration": (_q193, _q193_sql),
+    "q194_roc_auc": (_q194, _q194_sql),
+    "q195_prf1": (_q195, _q195_sql),
+    "q196_auc_by_key": (_q196, _q196_sql),
+    "q197_containment": (_q197, _q197_sql),
+    "q198_ece": (_q198, _q198_sql),
+    "q199_ndcg": (_q199, _q199_sql),
+    "q200_spearman": (_q200, _q200_sql),
+    "q201_avg_precision": (_q201, _q201_sql),
+    "q202_mrr": (_q202, _q202_sql),
+    "q203_recall_at_k": (_q203, _q203_sql),
+    "q204_cohens_kappa": (_q204, _q204_sql),
+    "q205_corpus_divergence": (_q205, _q205_sql),
+    "q206_word_entropy": (_q206, _q206_sql),
+    "q207_histogram": (_q207, _q207_sql),
+    "q208_stream_dedup": (_q208, _q208_sql),
+    "q209_bpe_train": (_q209, _q209_sql),
+    "q210_bpe_encode": (_q210, _q210_sql),
+    "q211_pq_adc": (_q211, _q211_sql),
+    "q212_dedup_keep_best": (_q212, _q212_sql),
+    "q213_sft_examples": (_q213, _q213_sql),
+    "q214_containment_df_prefix": (_q214, _q214_sql),
+    "q215_psi_drift": (_q215, _q215_sql),
+    "q216_class_loss": (_q216, _q216_sql),
+    "q217_fleiss_kappa": (_q217, _q217_sql),
+    "q218_k_anonymity": (_q218, _q218_sql),
+    "q219_readability": (_q219, _q219_sql),
+    "q220_ks_test": (_q220, _q220_sql),
+    "q221_gini": (_q221, _q221_sql),
+    "q222_benford": (_q222, _q222_sql),
+    "q223_stream_drift": (_q223, _q223_sql),
+    "q224_scaled": (_q224, _q224_sql),
+    "q225_l_diversity": (_q225, _q225_sql),
+    "q226_rrf_fusion": (_q226, _q226_sql),
+    "q227_prop_ztest": (_q227, _q227_sql),
+    "q228_survival": (_q228, _q228_sql),
+    "q229_twa": (_q229, _q229_sql),
+    "q230_lift": (_q230, _q230_sql),
+    "q231_pmi": (_q231, _q231_sql),
+    "q232_target_encode": (_q232, _q232_sql),
+    "q233_feature_hash": (_q233, _q233_sql),
+    "q234_validate": (_q234, _q234_sql),
+    "q235_ivfpq": (_q235, _q235_sql),
+    "q236_embedding_drift": (_q236, _q236_sql),
+    "q237_markov": (_q237, _q237_sql),
+    "q238_conformal": (_q238, _q238_sql),
+    "q239_sessionize": (_q239, _q239_sql),
+    "q240_basket_rules": (_q240, _q240_sql),
+    "q241_cuped": (_q241, _q241_sql),
+    "q242_triangles": (_q242, _q242_sql),
+    "q243_rouge1": (_q243, _q243_sql),
+    "q244_edit_distance": (_q244, _q244_sql),
+    "q245_srm": (_q245, _q245_sql),
+    "q246_mahalanobis": (_q246, _q246_sql),
+    "q247_attribution": (_q247, _q247_sql),
+    "q248_rake": (_q248, _q248_sql),
+    "q249_profile": (_q249, _q249_sql),
+    "q250_weighted_quantile": (_q250, _q250_sql),
+    "q251_label_propagation": (_q251, _q251_sql),
+    "q252_holt": (_q252, _q252_sql),
+    "q253_grouping_sets": (_q253, _q253_sql),
+    "q254_rfm": (_q254, _q254_sql),
+    "q255_woe_iv": (_q255, _q255_sql),
+    "q256_abc": (_q256, _q256_sql),
+    "q257_pareto_front": (_q257, _q257_sql),
+    "q258_frame_diff": (_q258, _q258_sql),
+    "q259_multilabel": (_q259, _q259_sql),
+    "q260_did": (_q260, _q260_sql),
+    "q261_bh_adjust": (_q261, _q261_sql),
+    "q262_funnel_timing": (_q262, _q262_sql),
+    "q263_mmr_rerank": (_q263, _q263_sql),
+    "q264_cohort_value": (_q264, _q264_sql),
+    "q265_ratio_ttest": (_q265, _q265_sql),
+    "q266_concentration": (_q266, _q266_sql),
+    "q267_stream_upsert": (_q267, _q267_sql),
+    "q268_forecast_accuracy": (_q268, _q268_sql),
+    "q269_fk_integrity": (_q269, _q269_sql),
+    "q270_theil_sen": (_q270, _q270_sql),
+    "q271_pop_report": (_q271, _q271_sql),
+    "q272_freq_sequences": (_q272, _q272_sql),
+    "q273_ipf_raking": (_q273, _q273_sql),
+    "q274_kendall_tau": (_q274, _q274_sql),
+    "q275_cramers_v": (_q275, _q275_sql),
+    "q276_odds_ratio": (_q276, _q276_sql),
+    "q277_mcnemar": (_q277, _q277_sql),
+    "q278_cohens_d": (_q278, _q278_sql),
+    "q279_brier_decomposition": (_q279, _q279_sql),
+    "q280_lorenz": (_q280, _q280_sql),
+    "q281_kmv_distinct": (_q281, _q281_sql),
+    "q282_kmv_grouped": (_q282, _q282_sql),
+    "q283_cms_freq": (_q283, _q283_sql),
+    "q284_mad_outliers": (_q284, _q284_sql),
+    "q285_log_rank": (_q285, _q285_sql),
+    "q286_zipf_fit": (_q286, _q286_sql),
+    "q287_profile_diff": (_q287, _q287_sql),
+    "q288_holt_forecast": (_q288, _q288_sql),
+    "q289_bradley_terry": (_q289, _q289_sql),
+    "q290_anova": (_q290, _q290_sql),
+    "q291_info_gain": (_q291, _q291_sql),
+    "q292_degree_report": (_q292, _q292_sql),
+    "q293_msprt": (_q293, _q293_sql),
+    "q294_stream_stateful": (_q294, _q294_sql),
+    "q295_rollup_merge": (_q295, _q295_sql),
+    "q296_dp_counts": (_q296, _q296_sql),
+    "q297_collapse_rare": (_q297, _q297_sql),
+    "q298_rows_diff": (_q298, _q298_sql),
+    "q299_dup_stats": (_q299, _q299_sql),
+    "q300_neyman": (_q300, _q300_sql),
+    "q301_stream_sliding": (_q301, _q301_sql),
+    "q302_median_ci": (_q302, _q302_sql),
+    "q303_ca_trend": (_q303, _q303_sql),
+    "q304_auc": (_q304, _q304_sql),
+    "q305_reliability_bins": (_q305, _q305_sql),
+    "q306_calibration": (_q306, _q306_sql),
+    "q307_gains_chart": (_q307, _q307_sql),
+    "q308_theil": (_q308, _q308_sql),
+    "q309_weighted_quantiles": (_q309, _q309_sql),
+    "q310_rmst": (_q310, _q310_sql),
+    "q311_group_auc": (_q311, _q311_sql),
+    "q312_avg_precision": (_q312, _q312_sql),
+    "q313_heaps_law": (_q313, _q313_sql),
+    "q314_interarrival": (_q314, _q314_sql),
+    "q315_krippendorff": (_q315, _q315_sql),
+    "q316_wasserstein": (_q316, _q316_sql),
+    "q317_diversity": (_q317, _q317_sql),
+    "q318_ngram_coverage": (_q318, _q318_sql),
+    "q319_nelson_aalen": (_q319, _q319_sql),
+    "q320_dup_rate": (_q320, _q320_sql),
+    "q321_mann_kendall": (_q321, _q321_sql),
+    "q322_ipw_ate": (_q322, _q322_sql),
+    "q323_power_mde": (_q323, _q323_sql),
+    "q324_jackknife_ratio": (_q324, _q324_sql),
+    "q325_leakage_safe_split": (_q325, _q325_sql),
+    "q326_strip_boilerplate": (_q326, _q326_sql),
+    "q327_fertility": (_q327, _q327_sql),
+    "q328_stream_enrich": (_q328, _q328_sql),
+    "q329_k_core": (_q329, _q329_sql),
+    "q330_c_index": (_q330, _q330_sql),
+    "q331_qq_drift": (_q331, _q331_sql),
+    "q332_embedding_cov": (_q332, _q332_sql),
+    "q333_qini": (_q333, _q333_sql),
+    "q334_huber": (_q334, _q334_sql),
+    "q335_poisson_rate": (_q335, _q335_sql),
+    "q336_strip_markup": (_q336, _q336_sql),
+    "q337_script_detect": (_q337, _q337_sql),
+    "q338_fe_regression": (_q338, _q338_sql),
+    "q339_changepoint": (_q339, _q339_sql),
+    "q340_cox_ph": (_q340, _q340_sql),
+    "q341_levene": (_q341, _q341_sql),
+    "q342_jarque_bera": (_q342, _q342_sql),
+    "q343_energy_dist": (_q343, _q343_sql),
+    "q344_pettitt": (_q344, _q344_sql),
+    "q345_best_split": (_q345, _q345_sql),
+    "q346_confusion": (_q346, _q346_sql),
+    "q347_gumbel": (_q347, _q347_sql),
+    "q348_kmv_jaccard": (_q348, _q348_sql),
+    "q349_components": (_q349, _q349_sql),
+    "q350_bleu": (_q350, _q350_sql),
+    "q351_rouge": (_q351, _q351_sql),
+    "q352_cvm": (_q352, _q352_sql),
+    "q353_perm_test": (_q353, _q353_sql),
+    "q354_kmeans": (_q354, _q354_sql),
+    "q355_stickiness": (_q355, _q355_sql),
+    "q356_power_users": (_q356, _q356_sql),
+    "q357_chrf": (_q357, _q357_sql),
+    "q358_bfs": (_q358, _q358_sql),
+    "q359_weibull": (_q359, _q359_sql),
+    "q360_chapman": (_q360, _q360_sql),
+    "q361_stream_outer_join": (_q361, _q361_sql),
+    "q362_partial_corr": (_q362, _q362_sql),
+    "q363_dist_compare": (_q363, _q363_sql),
+    "q364_negbin": (_q364, _q364_sql),
+    "q365_eb_rates": (_q365, _q365_sql),
+    "q366_rdd": (_q366, _q366_sql),
+    "q367_strat_ate": (_q367, _q367_sql),
+    "q368_kish_wmean": (_q368, _q368_sql),
+    "q369_yules_k": (_q369, _q369_sql),
+    "q370_holt_winters": (_q370, _q370_sql),
+    "q371_mediation": (_q371, _q371_sql),
+    "q372_logistic": (_q372, _q372_sql),
+    "q373_stream_full_outer": (_q373, _q373_sql),
+    "q374_lins_ccc": (_q374, _q374_sql),
+    "q375_bland_altman": (_q375, _q375_sql),
+    "q376_grubbs": (_q376, _q376_sql),
+    "q377_icc": (_q377, _q377_sql),
+    "q378_cochran_q": (_q378, _q378_sql),
+    "q379_durbin_watson": (_q379, _q379_sql),
+    "q380_kruskal": (_q380, _q380_sql),
+    "q381_breusch_pagan": (_q381, _q381_sql),
+    "q382_granger": (_q382, _q382_sql),
+    "q383_ljung_box": (_q383, _q383_sql),
+    "q384_holm": (_q384, _q384_sql),
+    "q385_jaro_winkler": (_q385, _q385_sql),
+    "q386_quantile_normalize": (_q386, _q386_sql),
+    "q387_page_hinkley": (_q387, _q387_sql),
+    "q388_hurst": (_q388, _q388_sql),
+    "q389_stream_jdbc": (_q389, _q389_sql),
+    "q390_cell_ranks": (_q390, _q390_sql),
+    "q391_friedman": (_q391, _q391_sql),
+    "q392_wilcoxon": (_q392, _q392_sql),
+    "q393_tost": (_q393, _q393_sql),
+    "q394_by_adjust": (_q394, _q394_sql),
+    "q395_anderson_darling": (_q395, _q395_sql),
+    "q396_random_projection": (_q396, _q396_sql),
+    "q397_theta_forecast": (_q397, _q397_sql),
+    "q398_brunner_munzel": (_q398, _q398_sql),
+    "q399_winnowing": (_q399, _q399_sql),
+    "q400_fellegi_sunter": (_q400, _q400_sql),
+    "q401_fs_em": (_q401, _q401_sql),
+    "q402_stream_union_dedup": (_q402, _q402_sql),
+    "q403_fs_full_loop": (_q403, _q403_sql),
+}
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "q01_pricing_summary": _q01,
-        "q02_filter_pushdown": _q02,
-        "q03_top_orders": _q03,
-        "q04_priority_semi": _q04,
-        "q05_region_revenue": _q05,
-        "q06_forecast_revenue": _q06,
-        "q07_cust_order_counts": _q07,
-        "q08_anti_no_orders": _q08,
-        "q09_cross_region_nation": _q09,
-        "q10_distinct_flags": _q10,
-        "q11_topk_price": _q11,
-        "q12_group_having": _q12,
-        "q13_case_bands": _q13,
-        "q14_concat_diagonal": _q14,
-        "q15_pivot_flags": _q15,
-        "q16_running_total": _q16,
-        "q17_lag_diff": _q17,
-        "q18_rolling_avg7": _q18,
-        "q19_rolling_7d": _q19,
-        "q20_hourly_events": _q20,
-        "q21_asof_orders_events": _q21,
-        "q22_quantiles": _q22,
-        "q23_string_funcs": _q23,
-        "q24_date_parts": _q24,
-        "q25_list_ops": _q25,
-        "q26_struct_ops": _q26,
-        "q27_cast_clean": _q27,
-        "q28_wordcount": _q28,
-        "q29_dedup_exact": _q29,
-        "q30_ngram_jaccard": _q30,
-        "q31_minhash_lsh": _q31,
-        "q32_embedding_pairs": _q32,
-        "q33_cosine_topk": _q33,
-        "q34_text_metrics": _q34,
-        "q35_fingerprint": _q35,
-        "q36_simhash": _q36,
-        "q37_sessionize": _q37,
-        "q38_lsh_topk": _q38,
-        "q39_rollup": _q39,
-        "q40_cube": _q40,
-        "q41_fill_values": _q41,
-        "q42_explode_pos": _q42,
-        "q43_concat_horizontal": _q43,
-        "q44_sql_correlated": _q44,
-        "q45_selector_numeric": _q45,
-        "q46_describe": _q46,
-        "q47_vectorized_udf": _q47,
-        "q48_asof_forward": _q48,
-        "q49_window_rank": _q49,
-        "q50_string_agg": _q50,
-        "q51_dedup_clusters": _q51,
-        "q52_ivf_topk": _q52,
-        "q53_dedup_fuzzy": _q53,
-        "q54_gopher_quality": _q54,
-        "q55_repetition": _q55,
-        "q56_tfidf": _q56,
-        "q57_bm25": _q57,
-        "q58_pii_scrub": _q58,
-        "q59_range_join": _q59,
-        "q60_salted_join": _q60,
-        "q61_approx_distinct": _q61,
-        "q62_sq8_recall": _q62,
-        "q63_multimodal": _q63,
-        "q64_hash_splits": _q64,
-        "q65_chunking": _q65,
-        "q66_seq_packing": _q66,
-        "q67_decontam": _q67,
-        "q68_source_cap": _q68,
-        "q69_stratified_sample": _q69,
-        "q70_oov_rate": _q70,
-        "q71_mixture_sample": _q71,
-        "q72_unigram_logprob": _q72,
-        "q73_line_dedup": _q73,
-        "q74_merge_upsert": _q74,
-        "q75_cut_qcut": _q75,
-        "q76_value_counts": _q76,
-        "q77_pct_change": _q77,
-        "q78_rolling_quantile": _q78,
-        "q79_interpolate": _q79,
-        "q80_ewm_mean": _q80,
-        "q81_ewm_var_std": _q81,
-        "q82_distinct_flags": _q82,
-        "q83_mode": _q83,
-        "q84_map_groups": _q84,
-        "q85_stats_agg": _q85,
-        "q86_rle_peaks": _q86,
-        "q87_product": _q87,
-        "q88_join_where": _q88,
-        "q89_replace_listops": _q89,
-        "q90_group_head_tail": _q90,
-        "q91_dup_spans": _q91,
-        "q92_span_removal": _q92,
-        "q93_blocklist": _q93,
-        "q94_dt_extras": _q94,
-        "q95_str_extras": _q95,
-        "q96_horizontal": _q96,
-        "q97_semdedup": _q97,
-        "q98_upsample": _q98,
-        "q99_rolling_frame": _q99,
-        "q100_to_dummies": _q100,
-        "q101_ewm_mean_by": _q101,
-        "q102_rolling_std_var": _q102,
-        "q103_bin_namespace": _q103,
-        "q104_str_matches": _q104,
-        "q105_month_bounds": _q105,
-        "q106_topk_agg": _q106,
-        "q107_hist": _q107,
-        "q108_datetime_range": _q108,
-        "q109_math_extras": _q109,
-        "q110_nullsafe_strparts": _q110,
-        "q111_linear_quality": _q111,
-        "q112_token_budget_cap": _q112,
-        "q113_json_path": _q113,
-        "q114_embedding_utils": _q114,
-        "q115_update_overlay": _q115,
-        "q116_rank_methods": _q116,
-        "q117_int_dynamic": _q117,
-        "q118_cum_prod": _q118,
-        "q119_clean_text": _q119,
-        "q120_cond_agg": _q120,
-        "q121_epoch_listpos": _q121,
-        "q122_frame_aggs": _q122,
-        "q123_term_df": _q123,
-        "q124_winsorize": _q124,
-        "q125_str_many": _q125,
-        "q126_list_sets": _q126,
-        "q127_pipeline_e2e": _q127,
-        "q128_sliding_windows": _q128,
-        "q129_asof_nearest": _q129,
-        "q130_align_concat": _q130,
-        "q131_cut_labels": _q131,
-        "q132_shift_fill": _q132,
-        "q133_interpolate_by": _q133,
-        "q134_merge_sorted": _q134,
-        "q135_dot_gather_every": _q135,
-        "q136_topk_by": _q136,
-        "q137_str_extras": _q137,
-        "q138_math_extras": _q138,
-        "q139_list_extras": _q139,
-        "q140_physical_shrink": _q140,
-        "q141_url_curation": _q141,
-        "q142_business_days_nulljoin": _q142,
-        "q143_rolling_moments": _q143,
-        "q144_temperature_shuffle": _q144,
-        "q145_unique_none_tostruct": _q145,
-        "q146_bigram_lm": _q146,
-        "q147_mask_tokens": _q147,
-        "q148_pipeline_prep": _q148,
-        "q149_named_aggs_boolagg": _q149,
-        "q150_chat_flatten": _q150,
-        "q151_streaming_window": _q151,
-        "q152_video_frames": _q152,
-        "q153_corpus_stats": _q153,
-        "q154_simhash_pairs": _q154,
-        "q155_preference_pairs": _q155,
-        "q156_epoch_oversample": _q156,
-        "q157_negative_sampling": _q157,
-        "q158_length_batches": _q158,
-        "q159_stream_stream_join": _q159,
-        "q160_sort_by_agg": _q160,
-        "q161_vocab_encode": _q161,
-        "q162_sentences": _q162,
-        "q163_zorder_key": _q163,
-        "q164_dedup_against": _q164,
-        "q165_ols_by_key": _q165,
-        "q166_key_skew": _q166,
-        "q167_outlier_flags": _q167,
-        "q168_find_gaps": _q168,
-        "q169_cohort_retention": _q169,
-        "q170_funnel": _q170,
-        "q171_fuzzy_join": _q171,
-        "q172_scd2": _q172,
-        "q173_stream_sessions": _q173,
-        "q174_pagerank": _q174,
-        "q175_weighted_sample": _q175,
-        "q176_corr_matrix": _q176,
-        "q177_rolling_corr": _q177,
-        "q178_seasonal_decompose": _q178,
-        "q179_acf": _q179,
-        "q180_cusum": _q180,
-        "q181_trimmed_mean": _q181,
-        "q182_overlap_join": _q182,
-        "q183_embedding_join": _q183,
-        "q184_rank_normalize": _q184,
-        "q185_tfidf_pairs": _q185,
-        "q186_stream_quality": _q186,
-        "q187_decimal_exact": _q187,
-        "q188_debounce": _q188,
-        "q189_bootstrap_ci": _q189,
-        "q190_welch_ttest": _q190,
-        "q191_chi2": _q191,
-        "q192_mann_whitney": _q192,
-        "q193_calibration": _q193,
-        "q194_roc_auc": _q194,
-        "q195_prf1": _q195,
-        "q196_auc_by_key": _q196,
-        "q197_containment": _q197,
-        "q198_ece": _q198,
-        "q199_ndcg": _q199,
-        "q200_spearman": _q200,
-        "q201_avg_precision": _q201,
-        "q202_mrr": _q202,
-        "q203_recall_at_k": _q203,
-        "q204_cohens_kappa": _q204,
-        "q205_corpus_divergence": _q205,
-        "q206_word_entropy": _q206,
-        "q207_histogram": _q207,
-        "q208_stream_dedup": _q208,
-        "q209_bpe_train": _q209,
-        "q210_bpe_encode": _q210,
-        "q211_pq_adc": _q211,
-        "q212_dedup_keep_best": _q212,
-        "q213_sft_examples": _q213,
-        "q214_containment_df_prefix": _q214,
-        "q215_psi_drift": _q215,
-        "q216_class_loss": _q216,
-        "q217_fleiss_kappa": _q217,
-        "q218_k_anonymity": _q218,
-        "q219_readability": _q219,
-        "q220_ks_test": _q220,
-        "q221_gini": _q221,
-        "q222_benford": _q222,
-        "q223_stream_drift": _q223,
-        "q224_scaled": _q224,
-        "q225_l_diversity": _q225,
-        "q226_rrf_fusion": _q226,
-        "q227_prop_ztest": _q227,
-        "q228_survival": _q228,
-        "q229_twa": _q229,
-        "q230_lift": _q230,
-        "q231_pmi": _q231,
-        "q232_target_encode": _q232,
-        "q233_feature_hash": _q233,
-        "q234_validate": _q234,
-        "q235_ivfpq": _q235,
-        "q236_embedding_drift": _q236,
-        "q237_markov": _q237,
-        "q238_conformal": _q238,
-        "q239_sessionize": _q239,
-        "q240_basket_rules": _q240,
-        "q241_cuped": _q241,
-        "q242_triangles": _q242,
-        "q243_rouge1": _q243,
-        "q244_edit_distance": _q244,
-        "q245_srm": _q245,
-        "q246_mahalanobis": _q246,
-        "q247_attribution": _q247,
-        "q248_rake": _q248,
-        "q249_profile": _q249,
-        "q250_weighted_quantile": _q250,
-        "q251_label_propagation": _q251,
-        "q252_holt": _q252,
-        "q253_grouping_sets": _q253,
-        "q254_rfm": _q254,
-        "q255_woe_iv": _q255,
-        "q256_abc": _q256,
-        "q257_pareto_front": _q257,
-        "q258_frame_diff": _q258,
-        "q259_multilabel": _q259,
-        "q260_did": _q260,
-        "q261_bh_adjust": _q261,
-        "q262_funnel_timing": _q262,
-        "q263_mmr_rerank": _q263,
-        "q264_cohort_value": _q264,
-        "q265_ratio_ttest": _q265,
-        "q266_concentration": _q266,
-        "q267_stream_upsert": _q267,
-        "q268_forecast_accuracy": _q268,
-        "q269_fk_integrity": _q269,
-        "q270_theil_sen": _q270,
-        "q271_pop_report": _q271,
-        "q272_freq_sequences": _q272,
-        "q273_ipf_raking": _q273,
-        "q274_kendall_tau": _q274,
-        "q275_cramers_v": _q275,
-        "q276_odds_ratio": _q276,
-        "q277_mcnemar": _q277,
-        "q278_cohens_d": _q278,
-        "q279_brier_decomposition": _q279,
-        "q280_lorenz": _q280,
-        "q281_kmv_distinct": _q281,
-        "q282_kmv_grouped": _q282,
-        "q283_cms_freq": _q283,
-        "q284_mad_outliers": _q284,
-        "q285_log_rank": _q285,
-        "q286_zipf_fit": _q286,
-        "q287_profile_diff": _q287,
-        "q288_holt_forecast": _q288,
-        "q289_bradley_terry": _q289,
-        "q290_anova": _q290,
-        "q291_info_gain": _q291,
-        "q292_degree_report": _q292,
-        "q293_msprt": _q293,
-        "q294_stream_stateful": _q294,
-        "q295_rollup_merge": _q295,
-        "q296_dp_counts": _q296,
-        "q297_collapse_rare": _q297,
-        "q298_rows_diff": _q298,
-        "q299_dup_stats": _q299,
-        "q300_neyman": _q300,
-        "q301_stream_sliding": _q301,
-        "q302_median_ci": _q302,
-        "q303_ca_trend": _q303,
-        "q304_auc": _q304,
-        "q305_reliability_bins": _q305,
-        "q306_calibration": _q306,
-        "q307_gains_chart": _q307,
-        "q308_theil": _q308,
-        "q309_weighted_quantiles": _q309,
-        "q310_rmst": _q310,
-        "q311_group_auc": _q311,
-        "q312_avg_precision": _q312,
-        "q313_heaps_law": _q313,
-        "q314_interarrival": _q314,
-        "q315_krippendorff": _q315,
-        "q316_wasserstein": _q316,
-        "q317_diversity": _q317,
-        "q318_ngram_coverage": _q318,
-        "q319_nelson_aalen": _q319,
-        "q320_dup_rate": _q320,
-        "q321_mann_kendall": _q321,
-        "q322_ipw_ate": _q322,
-        "q323_power_mde": _q323,
-        "q324_jackknife_ratio": _q324,
-        "q325_leakage_safe_split": _q325,
-        "q326_strip_boilerplate": _q326,
-        "q327_fertility": _q327,
-        "q328_stream_enrich": _q328,
-        "q329_k_core": _q329,
-        "q330_c_index": _q330,
-        "q331_qq_drift": _q331,
-        "q332_embedding_cov": _q332,
-        "q333_qini": _q333,
-        "q334_huber": _q334,
-        "q335_poisson_rate": _q335,
-        "q336_strip_markup": _q336,
-        "q337_script_detect": _q337,
-        "q338_fe_regression": _q338,
-        "q339_changepoint": _q339,
-        "q340_cox_ph": _q340,
-        "q341_levene": _q341,
-        "q342_jarque_bera": _q342,
-        "q343_energy_dist": _q343,
-        "q344_pettitt": _q344,
-        "q345_best_split": _q345,
-        "q346_confusion": _q346,
-        "q347_gumbel": _q347,
-        "q348_kmv_jaccard": _q348,
-        "q349_components": _q349,
-        "q350_bleu": _q350,
-        "q351_rouge": _q351,
-        "q352_cvm": _q352,
-        "q353_perm_test": _q353,
-        "q354_kmeans": _q354,
-        "q355_stickiness": _q355,
-        "q356_power_users": _q356,
-        "q357_chrf": _q357,
-        "q358_bfs": _q358,
-        "q359_weibull": _q359,
-        "q360_chapman": _q360,
-        "q361_stream_outer_join": _q361,
-        "q362_partial_corr": _q362,
-        "q363_dist_compare": _q363,
-        "q364_negbin": _q364,
-        "q365_eb_rates": _q365,
-        "q366_rdd": _q366,
-        "q367_strat_ate": _q367,
-        "q368_kish_wmean": _q368,
-        "q369_yules_k": _q369,
-        "q370_holt_winters": _q370,
-        "q371_mediation": _q371,
-        "q372_logistic": _q372,
-        "q373_stream_full_outer": _q373,
-        "q374_lins_ccc": _q374,
-        "q375_bland_altman": _q375,
-        "q376_grubbs": _q376,
-        "q377_icc": _q377,
-        "q378_cochran_q": _q378,
-        "q379_durbin_watson": _q379,
-        "q380_kruskal": _q380,
-        "q381_breusch_pagan": _q381,
-        "q382_granger": _q382,
-        "q383_ljung_box": _q383,
-        "q384_holm": _q384,
-        "q385_jaro_winkler": _q385,
-        "q386_quantile_normalize": _q386,
-        "q387_page_hinkley": _q387,
-        "q388_hurst": _q388,
-        "q389_stream_jdbc": _q389,
-        "q390_cell_ranks": _q390,
-        "q391_friedman": _q391,
-        "q392_wilcoxon": _q392,
-        "q393_tost": _q393,
-        "q394_by_adjust": _q394,
-        "q395_anderson_darling": _q395,
-        "q396_random_projection": _q396,
-        "q397_theta_forecast": _q397,
-        "q398_brunner_munzel": _q398,
-        "q399_winnowing": _q399,
-        "q400_fellegi_sunter": _q400,
-        "q401_fs_em": _q401,
-        "q402_stream_union_dedup": _q402,
-        "q403_fs_full_loop": _q403,
-    }
+    return {name: fn for name, (fn, _) in _GATES.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        "q01_pricing_summary": _q01_sql,
-        "q02_filter_pushdown": _q02_sql,
-        "q03_top_orders": _q03_sql,
-        "q04_priority_semi": _q04_sql,
-        "q05_region_revenue": _q05_sql,
-        "q06_forecast_revenue": _q06_sql,
-        "q07_cust_order_counts": _q07_sql,
-        "q08_anti_no_orders": _q08_sql,
-        "q09_cross_region_nation": _q09_sql,
-        "q10_distinct_flags": _q10_sql,
-        "q11_topk_price": _q11_sql,
-        "q12_group_having": _q12_sql,
-        "q13_case_bands": _q13_sql,
-        "q14_concat_diagonal": _q14_sql,
-        "q15_pivot_flags": _q15_sql,
-        "q16_running_total": _q16_sql,
-        "q17_lag_diff": _q17_sql,
-        "q18_rolling_avg7": _q18_sql,
-        "q19_rolling_7d": _q19_sql,
-        "q20_hourly_events": _q20_sql,
-        "q21_asof_orders_events": _q21_sql,
-        "q22_quantiles": _q22_sql,
-        "q23_string_funcs": _q23_sql,
-        "q24_date_parts": _q24_sql,
-        "q25_list_ops": _q25_sql,
-        "q26_struct_ops": _q26_sql,
-        "q27_cast_clean": _q27_sql,
-        "q28_wordcount": _q28_sql,
-        "q29_dedup_exact": _q29_sql,
-        "q30_ngram_jaccard": _NGRAM_PAIRS_SQL,
-        "q31_minhash_lsh": _NGRAM_PAIRS_SQL,
-        "q32_embedding_pairs": _q32_sql,
-        "q33_cosine_topk": _q33_sql,
-        "q34_text_metrics": _q34_sql,
-        "q35_fingerprint": _q35_sql,
-        "q37_sessionize": _q37_sql,
-        "q39_rollup": _q39_sql,
-        "q40_cube": _q40_sql,
-        "q41_fill_values": _q41_sql,
-        "q42_explode_pos": _q42_sql,
-        "q43_concat_horizontal": _q43_sql,
-        "q44_sql_correlated": _q44_sql,
-        "q45_selector_numeric": _q45_sql,
-        "q46_describe": _q46_sql,
-        "q47_vectorized_udf": _q47_sql,
-        "q48_asof_forward": _q48_sql,
-        "q49_window_rank": _q49_sql,
-        "q50_string_agg": _q50_sql,
-        "q51_dedup_clusters": _q51_sql,
-        "q52_ivf_topk": _q52_sql,
-        "q53_dedup_fuzzy": _q53_sql,
-        "q36_simhash": _q36_sql,
-        "q38_lsh_topk": _q38_sql,
-        "q54_gopher_quality": _q54_sql,
-        "q55_repetition": _q55_sql,
-        "q56_tfidf": _q56_sql,
-        "q57_bm25": _q57_sql,
-        "q58_pii_scrub": _q58_sql,
-        "q59_range_join": _q59_sql,
-        "q60_salted_join": _q60_sql,
-        "q61_approx_distinct": _q61_sql,
-        "q62_sq8_recall": _q62_sql,
-        "q63_multimodal": _q63_sql,
-        "q64_hash_splits": _q64_sql,
-        "q65_chunking": _q65_sql,
-        "q66_seq_packing": _q66_sql,
-        "q67_decontam": _q67_sql,
-        "q68_source_cap": _q68_sql,
-        "q69_stratified_sample": _q69_sql,
-        "q70_oov_rate": _q70_sql,
-        "q71_mixture_sample": _q71_sql,
-        "q72_unigram_logprob": _q72_sql,
-        "q73_line_dedup": _q73_sql,
-        "q74_merge_upsert": _q74_sql,
-        "q75_cut_qcut": _q75_sql,
-        "q76_value_counts": _q76_sql,
-        "q77_pct_change": _q77_sql,
-        "q78_rolling_quantile": _q78_sql,
-        "q79_interpolate": _q79_sql,
-        "q80_ewm_mean": _q80_sql,
-        "q81_ewm_var_std": _q81_sql,
-        "q82_distinct_flags": _q82_sql,
-        "q83_mode": _q83_sql,
-        "q84_map_groups": _q84_sql,
-        "q85_stats_agg": _q85_sql,
-        "q86_rle_peaks": _q86_sql,
-        "q87_product": _q87_sql,
-        "q88_join_where": _q88_sql,
-        "q89_replace_listops": _q89_sql,
-        "q90_group_head_tail": _q90_sql,
-        "q91_dup_spans": _q91_sql,
-        "q92_span_removal": _q92_sql,
-        "q93_blocklist": _q93_sql,
-        "q94_dt_extras": _q94_sql,
-        "q95_str_extras": _q95_sql,
-        "q96_horizontal": _q96_sql,
-        "q97_semdedup": _q97_sql,
-        "q98_upsample": _q98_sql,
-        "q99_rolling_frame": _q99_sql,
-        "q100_to_dummies": _q100_sql,
-        "q101_ewm_mean_by": _q101_sql,
-        "q102_rolling_std_var": _q102_sql,
-        "q103_bin_namespace": _q103_sql,
-        "q104_str_matches": _q104_sql,
-        "q105_month_bounds": _q105_sql,
-        "q106_topk_agg": _q106_sql,
-        "q107_hist": _q107_sql,
-        "q108_datetime_range": _q108_sql,
-        "q109_math_extras": _q109_sql,
-        "q110_nullsafe_strparts": _q110_sql,
-        "q111_linear_quality": _q111_sql,
-        "q112_token_budget_cap": _q112_sql,
-        "q113_json_path": _q113_sql,
-        "q114_embedding_utils": _q114_sql,
-        "q115_update_overlay": _q115_sql,
-        "q116_rank_methods": _q116_sql,
-        "q117_int_dynamic": _q117_sql,
-        "q118_cum_prod": _q118_sql,
-        "q119_clean_text": _q119_sql,
-        "q120_cond_agg": _q120_sql,
-        "q121_epoch_listpos": _q121_sql,
-        "q122_frame_aggs": _q122_sql,
-        "q123_term_df": _q123_sql,
-        "q124_winsorize": _q124_sql,
-        "q125_str_many": _q125_sql,
-        "q126_list_sets": _q126_sql,
-        "q127_pipeline_e2e": _q127_sql,
-        "q128_sliding_windows": _q128_sql,
-        "q129_asof_nearest": _q129_sql,
-        "q130_align_concat": _q130_sql,
-        "q131_cut_labels": _q131_sql,
-        "q132_shift_fill": _q132_sql,
-        "q133_interpolate_by": _q133_sql,
-        "q134_merge_sorted": _q134_sql,
-        "q135_dot_gather_every": _q135_sql,
-        "q136_topk_by": _q136_sql,
-        "q137_str_extras": _q137_sql,
-        "q138_math_extras": _q138_sql,
-        "q139_list_extras": _q139_sql,
-        "q140_physical_shrink": _q140_sql,
-        "q141_url_curation": _q141_sql,
-        "q142_business_days_nulljoin": _q142_sql,
-        "q143_rolling_moments": _q143_sql,
-        "q144_temperature_shuffle": _q144_sql,
-        "q145_unique_none_tostruct": _q145_sql,
-        "q146_bigram_lm": _q146_sql,
-        "q147_mask_tokens": _q147_sql,
-        "q148_pipeline_prep": _q148_sql,
-        "q149_named_aggs_boolagg": _q149_sql,
-        "q150_chat_flatten": _q150_sql,
-        "q151_streaming_window": _q151_sql,
-        "q152_video_frames": _q152_sql,
-        "q153_corpus_stats": _q153_sql,
-        "q154_simhash_pairs": _q154_sql,
-        "q155_preference_pairs": _q155_sql,
-        "q156_epoch_oversample": _q156_sql,
-        "q157_negative_sampling": _q157_sql,
-        "q158_length_batches": _q158_sql,
-        "q159_stream_stream_join": _q159_sql,
-        "q160_sort_by_agg": _q160_sql,
-        "q161_vocab_encode": _q161_sql,
-        "q162_sentences": _q162_sql,
-        "q163_zorder_key": _q163_sql,
-        "q164_dedup_against": _q164_sql,
-        "q165_ols_by_key": _q165_sql,
-        "q166_key_skew": _q166_sql,
-        "q167_outlier_flags": _q167_sql,
-        "q168_find_gaps": _q168_sql,
-        "q169_cohort_retention": _q169_sql,
-        "q170_funnel": _q170_sql,
-        "q171_fuzzy_join": _q171_sql,
-        "q172_scd2": _q172_sql,
-        "q173_stream_sessions": _q173_sql,
-        "q174_pagerank": _q174_sql,
-        "q175_weighted_sample": _q175_sql,
-        "q176_corr_matrix": _q176_sql,
-        "q177_rolling_corr": _q177_sql,
-        "q178_seasonal_decompose": _q178_sql,
-        "q179_acf": _q179_sql,
-        "q180_cusum": _q180_sql,
-        "q181_trimmed_mean": _q181_sql,
-        "q182_overlap_join": _q182_sql,
-        "q183_embedding_join": _q183_sql,
-        "q184_rank_normalize": _q184_sql,
-        "q185_tfidf_pairs": _q185_sql,
-        "q186_stream_quality": _q186_sql,
-        "q187_decimal_exact": _q187_sql,
-        "q188_debounce": _q188_sql,
-        "q189_bootstrap_ci": _q189_sql,
-        "q190_welch_ttest": _q190_sql,
-        "q191_chi2": _q191_sql,
-        "q192_mann_whitney": _q192_sql,
-        "q193_calibration": _q193_sql,
-        "q194_roc_auc": _q194_sql,
-        "q195_prf1": _q195_sql,
-        "q196_auc_by_key": _q196_sql,
-        "q197_containment": _q197_sql,
-        "q198_ece": _q198_sql,
-        "q199_ndcg": _q199_sql,
-        "q200_spearman": _q200_sql,
-        "q201_avg_precision": _q201_sql,
-        "q202_mrr": _q202_sql,
-        "q203_recall_at_k": _q203_sql,
-        "q204_cohens_kappa": _q204_sql,
-        "q205_corpus_divergence": _q205_sql,
-        "q206_word_entropy": _q206_sql,
-        "q207_histogram": _q207_sql,
-        "q208_stream_dedup": _q208_sql,
-        "q209_bpe_train": _q209_sql,
-        "q210_bpe_encode": _q210_sql,
-        "q211_pq_adc": _q211_sql,
-        "q212_dedup_keep_best": _q212_sql,
-        "q213_sft_examples": _q213_sql,
-        "q214_containment_df_prefix": _q214_sql,
-        "q215_psi_drift": _q215_sql,
-        "q216_class_loss": _q216_sql,
-        "q217_fleiss_kappa": _q217_sql,
-        "q218_k_anonymity": _q218_sql,
-        "q219_readability": _q219_sql,
-        "q220_ks_test": _q220_sql,
-        "q221_gini": _q221_sql,
-        "q222_benford": _q222_sql,
-        "q223_stream_drift": _q223_sql,
-        "q224_scaled": _q224_sql,
-        "q225_l_diversity": _q225_sql,
-        "q226_rrf_fusion": _q226_sql,
-        "q227_prop_ztest": _q227_sql,
-        "q228_survival": _q228_sql,
-        "q229_twa": _q229_sql,
-        "q230_lift": _q230_sql,
-        "q231_pmi": _q231_sql,
-        "q232_target_encode": _q232_sql,
-        "q233_feature_hash": _q233_sql,
-        "q234_validate": _q234_sql,
-        "q235_ivfpq": _q235_sql,
-        "q236_embedding_drift": _q236_sql,
-        "q237_markov": _q237_sql,
-        "q238_conformal": _q238_sql,
-        "q239_sessionize": _q239_sql,
-        "q240_basket_rules": _q240_sql,
-        "q241_cuped": _q241_sql,
-        "q242_triangles": _q242_sql,
-        "q243_rouge1": _q243_sql,
-        "q244_edit_distance": _q244_sql,
-        "q245_srm": _q245_sql,
-        "q246_mahalanobis": _q246_sql,
-        "q247_attribution": _q247_sql,
-        "q248_rake": _q248_sql,
-        "q249_profile": _q249_sql,
-        "q250_weighted_quantile": _q250_sql,
-        "q251_label_propagation": _q251_sql,
-        "q252_holt": _q252_sql,
-        "q253_grouping_sets": _q253_sql,
-        "q254_rfm": _q254_sql,
-        "q255_woe_iv": _q255_sql,
-        "q256_abc": _q256_sql,
-        "q257_pareto_front": _q257_sql,
-        "q258_frame_diff": _q258_sql,
-        "q259_multilabel": _q259_sql,
-        "q260_did": _q260_sql,
-        "q261_bh_adjust": _q261_sql,
-        "q262_funnel_timing": _q262_sql,
-        "q263_mmr_rerank": _q263_sql,
-        "q264_cohort_value": _q264_sql,
-        "q265_ratio_ttest": _q265_sql,
-        "q266_concentration": _q266_sql,
-        "q267_stream_upsert": _q267_sql,
-        "q268_forecast_accuracy": _q268_sql,
-        "q269_fk_integrity": _q269_sql,
-        "q270_theil_sen": _q270_sql,
-        "q271_pop_report": _q271_sql,
-        "q272_freq_sequences": _q272_sql,
-        "q273_ipf_raking": _q273_sql,
-        "q274_kendall_tau": _q274_sql,
-        "q275_cramers_v": _q275_sql,
-        "q276_odds_ratio": _q276_sql,
-        "q277_mcnemar": _q277_sql,
-        "q278_cohens_d": _q278_sql,
-        "q279_brier_decomposition": _q279_sql,
-        "q280_lorenz": _q280_sql,
-        "q281_kmv_distinct": _q281_sql,
-        "q282_kmv_grouped": _q282_sql,
-        "q283_cms_freq": _q283_sql,
-        "q284_mad_outliers": _q284_sql,
-        "q285_log_rank": _q285_sql,
-        "q286_zipf_fit": _q286_sql,
-        "q287_profile_diff": _q287_sql,
-        "q288_holt_forecast": _q288_sql,
-        "q289_bradley_terry": _q289_sql,
-        "q290_anova": _q290_sql,
-        "q291_info_gain": _q291_sql,
-        "q292_degree_report": _q292_sql,
-        "q293_msprt": _q293_sql,
-        "q294_stream_stateful": _q294_sql,
-        "q295_rollup_merge": _q295_sql,
-        "q296_dp_counts": _q296_sql,
-        "q297_collapse_rare": _q297_sql,
-        "q298_rows_diff": _q298_sql,
-        "q299_dup_stats": _q299_sql,
-        "q300_neyman": _q300_sql,
-        "q301_stream_sliding": _q301_sql,
-        "q302_median_ci": _q302_sql,
-        "q303_ca_trend": _q303_sql,
-        "q304_auc": _q304_sql,
-        "q305_reliability_bins": _q305_sql,
-        "q306_calibration": _q306_sql,
-        "q307_gains_chart": _q307_sql,
-        "q308_theil": _q308_sql,
-        "q309_weighted_quantiles": _q309_sql,
-        "q310_rmst": _q310_sql,
-        "q311_group_auc": _q311_sql,
-        "q312_avg_precision": _q312_sql,
-        "q313_heaps_law": _q313_sql,
-        "q314_interarrival": _q314_sql,
-        "q315_krippendorff": _q315_sql,
-        "q316_wasserstein": _q316_sql,
-        "q317_diversity": _q317_sql,
-        "q318_ngram_coverage": _q318_sql,
-        "q319_nelson_aalen": _q319_sql,
-        "q320_dup_rate": _q320_sql,
-        "q321_mann_kendall": _q321_sql,
-        "q322_ipw_ate": _q322_sql,
-        "q323_power_mde": _q323_sql,
-        "q324_jackknife_ratio": _q324_sql,
-        "q325_leakage_safe_split": _q325_sql,
-        "q326_strip_boilerplate": _q326_sql,
-        "q327_fertility": _q327_sql,
-        "q328_stream_enrich": _q328_sql,
-        "q329_k_core": _q329_sql,
-        "q330_c_index": _q330_sql,
-        "q331_qq_drift": _q331_sql,
-        "q332_embedding_cov": _q332_sql,
-        "q333_qini": _q333_sql,
-        "q334_huber": _q334_sql,
-        "q335_poisson_rate": _q335_sql,
-        "q336_strip_markup": _q336_sql,
-        "q337_script_detect": _q337_sql,
-        "q338_fe_regression": _q338_sql,
-        "q339_changepoint": _q339_sql,
-        "q340_cox_ph": _q340_sql,
-        "q341_levene": _q341_sql,
-        "q342_jarque_bera": _q342_sql,
-        "q343_energy_dist": _q343_sql,
-        "q344_pettitt": _q344_sql,
-        "q345_best_split": _q345_sql,
-        "q346_confusion": _q346_sql,
-        "q347_gumbel": _q347_sql,
-        "q348_kmv_jaccard": _q348_sql,
-        "q349_components": _q349_sql,
-        "q350_bleu": _q350_sql,
-        "q351_rouge": _q351_sql,
-        "q352_cvm": _q352_sql,
-        "q353_perm_test": _q353_sql,
-        "q354_kmeans": _q354_sql,
-        "q355_stickiness": _q355_sql,
-        "q356_power_users": _q356_sql,
-        "q357_chrf": _q357_sql,
-        "q358_bfs": _q358_sql,
-        "q359_weibull": _q359_sql,
-        "q360_chapman": _q360_sql,
-        "q361_stream_outer_join": _q361_sql,
-        "q362_partial_corr": _q362_sql,
-        "q363_dist_compare": _q363_sql,
-        "q364_negbin": _q364_sql,
-        "q365_eb_rates": _q365_sql,
-        "q366_rdd": _q366_sql,
-        "q367_strat_ate": _q367_sql,
-        "q368_kish_wmean": _q368_sql,
-        "q369_yules_k": _q369_sql,
-        "q370_holt_winters": _q370_sql,
-        "q371_mediation": _q371_sql,
-        "q372_logistic": _q372_sql,
-        "q373_stream_full_outer": _q373_sql,
-        "q374_lins_ccc": _q374_sql,
-        "q375_bland_altman": _q375_sql,
-        "q376_grubbs": _q376_sql,
-        "q377_icc": _q377_sql,
-        "q378_cochran_q": _q378_sql,
-        "q379_durbin_watson": _q379_sql,
-        "q380_kruskal": _q380_sql,
-        "q381_breusch_pagan": _q381_sql,
-        "q382_granger": _q382_sql,
-        "q383_ljung_box": _q383_sql,
-        "q384_holm": _q384_sql,
-        "q385_jaro_winkler": _q385_sql,
-        "q386_quantile_normalize": _q386_sql,
-        "q387_page_hinkley": _q387_sql,
-        "q388_hurst": _q388_sql,
-        "q389_stream_jdbc": _q389_sql,
-        "q390_cell_ranks": _q390_sql,
-        "q391_friedman": _q391_sql,
-        "q392_wilcoxon": _q392_sql,
-        "q393_tost": _q393_sql,
-        "q394_by_adjust": _q394_sql,
-        "q395_anderson_darling": _q395_sql,
-        "q396_random_projection": _q396_sql,
-        "q397_theta_forecast": _q397_sql,
-        "q398_brunner_munzel": _q398_sql,
-        "q399_winnowing": _q399_sql,
-        "q400_fellegi_sunter": _q400_sql,
-        "q401_fs_em": _q401_sql,
-        "q402_stream_union_dedup": _q402_sql,
-        "q403_fs_full_loop": _q403_sql,
-    }
+    return {name: sql for name, (_, sql) in _GATES.items()}

@@ -28,11 +28,31 @@ the value from the driver again.  The caller gets a zero-argument getter
 that the worker code calls.  Small objects are not sent in the task
 closure instead: no measured workload showed that path winning.
 
+Every bound lives here, and no operator takes a per-call override.  An
+operator is held to ``BOUND`` = 65,536 rows unless ``BOUNDS`` names it:
+
+    operator                  bound        unit
+    bradley_terry             50,000       comparison edges
+    dedup_clusters            400,000      directed edges
+    cosine_topk               100,000      query rows
+    embedding_near_dup_pairs  200,000      rows
+    embedding_threshold_join  200,000      right-side rows
+    cell_ranks                5,000,000    (partition, value) cells
+    ipf_weights               4,096        category-grid cells
+    containment_pairs         32 MiB       bytes of the gram-df table
+
+The three vector operators broadcast their bounded side (the queries, the
+right frame, the frame itself) as a numpy matrix; above the bound they run
+a broadcast-join (cosine_topk) or hyperplane-bucketed (the other two)
+plan.  A common value for all of them would need a measured crossover
+for each operator, so each keeps its own.
+
 Each decision is appended to a bounded in-memory record, read with
 ``decisions()``, as ``{operator, path, n, bound}``; ``path`` is
 ``"bounded"`` (the single-task or driver-side form) or ``"distributed"``.
 A bound of 0 forces the distributed path for every input, the empty one
-included.
+included: tests force it by setting ``BOUND`` and every ``BOUNDS`` entry
+to 0 (the ``force_distributed`` fixture).
 """
 
 from __future__ import annotations
@@ -50,6 +70,21 @@ __all__ = ["BOUND", "Guarded", "bounded", "ship", "record", "decisions", "clear_
 # bounds the train_bpe artifact
 BOUND = 65_536
 
+# the operators held to another bound, with the unit the module docstring
+# gives; both are read at call time
+BOUNDS = {
+    "bradley_terry": 50_000,
+    "dedup_clusters": 400_000,
+    "cosine_topk": 100_000,
+    "embedding_near_dup_pairs": 200_000,
+    "embedding_threshold_join": 200_000,
+    "cell_ranks": 5_000_000,
+    "ipf_weights": 4_096,
+    # the gram-df table's bytes, taken as if every gram occurrence were
+    # distinct: about 2M occurrences at 16 bytes per hashed row
+    "containment_pairs": 32 << 20,
+}
+
 _DECISIONS: "deque[dict]" = deque(maxlen=1024)
 
 
@@ -59,14 +94,12 @@ class Guarded(NamedTuple):
     small: bool  # n <= bound: take the bounded path
 
 
-def bounded(sdf: SparkDF, operator: str, bound: "int | None" = None) -> Guarded:
-    """Persist ``sdf``, count it once and decide the path for ``operator``.
-
-    ``bound`` defaults to the module's ``BOUND`` read at call time, so a
-    test can force either side by setting ``_bounded.BOUND``."""
+def bounded(sdf: SparkDF, operator: str) -> Guarded:
+    """Persist ``sdf``, count it once and decide the path for ``operator``
+    against its bound."""
     cached = register_cache(sdf)
     n = full_count(cached)
-    return Guarded(cached, n, record(operator, n, bound))
+    return Guarded(cached, n, record(operator, n))
 
 
 def ship(sc, obj: Any) -> Callable[[], Any]:
@@ -76,15 +109,14 @@ def ship(sc, obj: Any) -> Callable[[], Any]:
     return lambda: handle.value
 
 
-def record(operator: str, n: int, bound: "int | None" = None) -> bool:
-    """Compare an already-known size ``n`` with the bound (``BOUND`` read
-    at call time when ``bound`` is None), record the decision for
-    ``operator`` and return whether ``n`` takes the bounded path.  For
-    sites that count several inputs in one job, such as
+def record(operator: str, n: int) -> bool:
+    """Compare an already-known size ``n`` with ``operator``'s bound,
+    record the decision and return whether ``n`` takes the bounded path.
+    For sites that count several inputs in one job, such as
     ``exact_quantiles_multi``'s per-column distinct counts, or whose size
     is known without a job, such as ipf_weights' category grid.  A bound
     of 0 takes the distributed path even for ``n == 0``."""
-    limit = BOUND if bound is None else int(bound)
+    limit = BOUNDS.get(operator, BOUND)
     small = limit != 0 and n <= limit
     _DECISIONS.append(
         {

@@ -18,15 +18,9 @@ from pyspark.sql import functions as F
 
 from .._arrow import map_batches
 from .._bounded import bounded, record
-from .._cache import full_count, register_cache
+from .._cache import register_cache
 from ..frame import LazyFrame
 from ..operators.graph import _min_id_components
-
-# containment_pairs broadcasts its (gram, df) table when the estimated
-# bytes of that table, taken as if every gram occurrence were distinct,
-# fit under this bound.  32 MiB is about the former bound of 2M
-# occurrences at 16 bytes per hashed row (8-byte gram, 8-byte df).
-_DF_BROADCAST_BYTES = 32 << 20
 
 __all__ = [
     "dedup_exact",
@@ -623,65 +617,34 @@ def embedding_near_dup_pairs(
     id_col: str = "vec_id",
     threshold: float = 0.95,
     round_to: int = 6,
-    method: str = "auto",
-    broadcast_limit: int = 200_000,
-    size_hint: int | None = None,
     num_planes: int = 8,
     num_tables: int = 16,
 ) -> LazyFrame:
     """Embedding-cosine near-dup pairs (id_a < id_b, cosine >= threshold).
 
-    method='numpy' (default when the table fits ``broadcast_limit`` rows):
-    broadcast the id/vector matrix, then every executor scores its Arrow
-    batches against it with one BLAS matmul and emits only above-threshold
-    pairs — the standard blocked all-pairs design.  Compute is O(n²·d) either
-    way, but the matmul path is ~10-50× faster than per-pair expressions and
-    shuffles nothing (output pairs only).
+    The (id, vector) frame is cached and counted once
+    (``_bounded.bounded``).  Up to 200,000 rows: broadcast the id/vector
+    matrix, then every executor scores its Arrow batches against it with
+    one BLAS matmul and emits only above-threshold pairs — the standard
+    blocked all-pairs design.  Compute is O(n²·d) either way, but the
+    matmul path is ~10-50× faster than per-pair expressions and shuffles
+    nothing (output pairs only).
 
-    method='bucketed' (default ABOVE broadcast_limit — the 100 TB path):
-    random-hyperplane LSH buckets (``num_planes``/``num_tables``, shared with
+    Above the bound (the 100 TB path): random-hyperplane LSH buckets
+    (``num_planes``/``num_tables``, shared with
     :func:`~.similarity.lsh_bucket_topk`), equi-join on (table, bucket), then
     exact cosine verification of the candidates.  Never a cross join; recall
     at the default settings is ≥1-(1-p^planes)^tables where p = 1-θ/π (≈99.98%
     per true pair at cosine 0.95).  Emitted pairs are always exact-verified,
-    so precision is 1 regardless of bucket settings.
-
-    method='expr': pure Column crossJoin baseline (no Python workers) — kept
-    as the small-n oracle reference, O(n²) by construction; never auto-chosen.
-
-    ``size_hint`` = known row count: supply it (or an explicit method) to
-    skip the auto-probe.  The probe is bounded — limit(broadcast_limit+1)
-    count, not a full scan."""
-    sdf = _sdf(frame)
-    if method == "auto":
-        n = size_hint if size_hint is not None else full_count(sdf.limit(broadcast_limit + 1))
-        method = "numpy" if n <= broadcast_limit else "bucketed"
-    if method == "numpy":
+    so precision is 1 regardless of bucket settings."""
+    sdf, _, small = bounded(
+        _sdf(frame).select(id_col, vec_col), "embedding_near_dup_pairs"
+    )
+    if small:
         return _numpy_near_dup_pairs(sdf, vec_col, id_col, threshold, round_to)
-    if method == "bucketed":
-        return _bucketed_near_dup_pairs(
-            sdf, vec_col, id_col, threshold, round_to, num_planes, num_tables
-        )
-
-    norm = F.sqrt(F.aggregate(F.col(vec_col), F.lit(0.0), lambda a, x: a + x.cast("double") * x.cast("double")))
-    base = sdf.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v"), norm.alias("nrm")
+    return _bucketed_near_dup_pairs(
+        sdf, vec_col, id_col, threshold, round_to, num_planes, num_tables
     )
-    a = base.select(F.col("id").alias("id_a"), F.col("v").alias("va"), F.col("nrm").alias("na"))
-    b = base.select(F.col("id").alias("id_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb"))
-    dot = F.aggregate(
-        F.zip_with(F.col("va"), F.col("vb"), lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    pairs = (
-        a.crossJoin(b)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", F.round(dot / (F.col("na") * F.col("nb")), round_to))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
-    return LazyFrame(pairs)
 
 
 def _bucketed_near_dup_pairs(
@@ -728,40 +691,18 @@ def _bucketed_near_dup_pairs(
 
 
 def _numpy_near_dup_pairs(sdf: SparkDF, vec_col, id_col, threshold, round_to) -> LazyFrame:
-    import numpy as np
+    from .similarity import _ship_matrix, _threshold_pairs, _vectors
 
-    from .similarity import _batch_matrix, _ship_matrix, _vectors
-
-    # the broadcast side is bounded by the caller's broadcast_limit
+    # the broadcast side is the guarded frame, at most its bound in rows
     get_matrix = _ship_matrix(sdf, id_col, vec_col)
-    # Score the corpus in column chunks so peak per-task memory is one
-    # (batch_rows x CHUNK) float64 block (~40 MB at 625x8192), not a full
-    # (batch_rows x n) matrix — at broadcast_limit rows the unchunked block
-    # would be ~1 GB/task.  All ops are in-place with the same FP order as
-    # round(dot / (na*nb), r), so emitted values are bit-identical to the
-    # column-expression oracle.
-    CHUNK = 8192
 
     def gen(batches):
-        b_ids, b_M, b_norms = get_matrix()
-        n = b_ids.shape[0]
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids_a, Ma, na = _batch_matrix(batch, id_col, vec_col)
-            for s in range(0, n, CHUNK):
-                e = min(s + CHUNK, n)
-                S = Ma @ b_M[s:e].T
-                S /= na[:, None] * b_norms[s:e]
-                np.round(S, round_to, out=S)
-                ia, ib = np.where(S >= threshold)
-                mask = ids_a[ia] < b_ids[s:e][ib]
-                if mask.any():
-                    yield {
-                        "id_a": ids_a[ia][mask],
-                        "id_b": b_ids[s:e][ib][mask],
-                        "cosine": S[ia, ib][mask],
-                    }
+        for a, b, cos in _threshold_pairs(
+            batches, id_col, vec_col, get_matrix(), threshold, round_to
+        ):
+            mask = a < b
+            if mask.any():
+                yield {"id_a": a[mask], "id_b": b[mask], "cosine": cos[mask]}
 
     par = sdf.sparkSession.sparkContext.defaultParallelism
     out = map_batches(
@@ -777,7 +718,6 @@ def dedup_clusters(
     vertices: "LazyFrame | SparkDF | None" = None,
     vertex_id: str | None = None,
     max_iter: int = 30,
-    driver_threshold: int = 200_000,
     checkpoint_dir: str | None = None,
 ) -> LazyFrame:
     """Connected components over a near-dup pair list: every id gets the
@@ -808,18 +748,17 @@ def dedup_clusters(
     RuntimeError after ``max_iter`` non-converged rounds rather than
     returning wrong clusters.
 
-    ``driver_threshold``: near-dup edge lists are typically minuscule next to
+    Driver path: near-dup edge lists are typically minuscule next to
     the corpus (the expensive part was finding them), and the iterative
     fixpoint pays ~6 Spark jobs per round in fixed overhead.  The strategy
     probe is one ``count()`` of the cached candidate-generation output —
     which BOTH strategies must fully materialize anyway, so no extra scan
     happens (a limit-bounded probe is strictly worse here: CollectLimit's
     incremental partition scanning re-runs the expensive upstream stages).
-    When the count is at most ``2 * driver_threshold`` directed edges, the
-    components are solved with a driver-side union-find over one collect —
-    identical output (min reachable id), one job instead of rounds.  Above
-    the threshold the distributed fixpoint runs unchanged.  Set
-    ``driver_threshold=0`` to force the distributed path.
+    When the count is at most 400,000 directed edges (its ``_bounded``
+    bound), the components are solved with a driver-side union-find over
+    one collect — identical output (min reachable id), one job instead of
+    rounds.  Above the bound the distributed fixpoint runs unchanged.
     """
     p = _sdf(pairs).select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     # strategy probe = count() of the cached edges frame.  This is not an
@@ -832,7 +771,6 @@ def dedup_clusters(
     guarded = bounded(
         p.union(p.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct(),
         "dedup_clusters",
-        2 * driver_threshold,
     )
     # iterate only over the edge-induced subgraph: vertices in no pair can
     # never change label, so the fixpoint runs on ~2·|pairs| rows regardless
@@ -867,7 +805,6 @@ def dedup_fuzzy(
     threshold: float = 0.8,
     n: int = 3,
     max_iter: int = 30,
-    driver_threshold: int = 200_000,
     checkpoint_dir: str | None = None,
     **method_kwargs,
 ) -> LazyFrame:
@@ -898,7 +835,7 @@ def dedup_fuzzy(
     )
     clusters = dedup_clusters(
         pairs, vertices=sdf, vertex_id=id_col, max_iter=max_iter,
-        driver_threshold=driver_threshold, checkpoint_dir=checkpoint_dir,
+        checkpoint_dir=checkpoint_dir,
     )
     canon = clusters.spark.filter(F.col(id_col) == F.col("cluster_id")).select(id_col)
     return LazyFrame(sdf.join(canon, id_col, "semi"))
@@ -1327,10 +1264,10 @@ def containment_pairs(
         # occurrence; when those rows' bytes (read off the cached gram
         # table, one cache-read aggregate, run at most once per call) fit
         # in a broadcast relation, broadcasting it removes the gram-keyed
-        # exchange of the full postings stream (the cell_ranks
-        # broadcast_threshold convention — measured 2.33 s -> 1.38 s on the
-        # candidate pass at sf0.1).  Bytes, not occurrences: a few long
-        # string grams can outweigh millions of hashed ones.  Above the
+        # exchange of the full postings stream (the cell_ranks broadcast
+        # guard convention — measured 2.33 s -> 1.38 s on the candidate pass
+        # at sf0.1).  Bytes, not occurrences: a few long string grams can
+        # outweigh millions of hashed ones.  Above the
         # bound the plain shuffle join stands: at corpus scale the gram-df
         # table is corpus-sized and must never be broadcast.
         gram_bytes = (
@@ -1341,7 +1278,7 @@ def containment_pairs(
             F.sum(F.size("grams")).alias("occ"), F.sum(gram_bytes).alias("gram_bytes")
         ).first()
         n_bytes = int(est["gram_bytes"] or 0) + 8 * int(est["occ"] or 0)
-        return record("containment_pairs", n_bytes, _DF_BROADCAST_BYTES)
+        return record("containment_pairs", n_bytes)
 
     def _df_attach(tbl):
         return F.broadcast(tbl) if _broadcast_df() else tbl

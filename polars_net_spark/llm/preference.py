@@ -122,7 +122,6 @@ def bradley_terry(
     loser_col: str = "rejected",
     iterations: int = 8,
     round_to: int = 6,
-    driver_threshold: int = 50_000,
 ) -> LazyFrame:
     """Bradley–Terry strength scores from pairwise preference outcomes —
     the model behind RLHF reward-data QA and ranker evaluation: item i
@@ -139,14 +138,14 @@ def bradley_terry(
     (lo, hi, n, wins_lo) edges (one map-side-combining aggregate), and
     each round is one item-keyed join of scores onto edge endpoints + one
     item-keyed sum — all equi-joins, rounds bounded by ``iterations``.
-    When the comparison GRAPH is small (≤ ``driver_threshold`` edges —
-    the item-catalog case: brands, model variants, prompt templates), the
+    When the comparison GRAPH is small (≤ 50,000 edges, its ``_bounded``
+    bound — the item-catalog case: brands, model variants, prompt
+    templates), the
     MM rounds run on the DRIVER over the collected edge list instead of
     6 × 3 Spark stages over a few hundred rows — same arithmetic, same
     result, an order of magnitude less wall (the dedup_clusters
     driver-path pattern, through ``_bounded.bounded``).  The distributed
-    path remains for web-scale item spaces; set ``driver_threshold=0`` to
-    force it.
+    path remains for web-scale item spaces.
 
     Output: (item, n_comparisons, wins, score) — score descending is the
     preference ranking."""
@@ -166,7 +165,6 @@ def bradley_terry(
             F.sum((F.col("__w__") == F.least("__w__", "__l__")).cast("long")).alias("wa"),
         ),
         "bradley_terry",
-        driver_threshold,
     )
     per_item = (
         edges.select(F.col("a").alias("item"), F.col("n"), F.col("wa").alias("wins"))

@@ -19,8 +19,8 @@ from pyspark.sql import Column, DataFrame as SparkDF, Window
 from pyspark.sql import functions as F
 
 from .._arrow import map_batches, nan_as_null
-from .._bounded import ship
-from .._cache import full_count, register_cache, scoped_caches
+from .._bounded import bounded, ship
+from .._cache import register_cache, scoped_caches
 from ..frame import LazyFrame
 
 __all__ = [
@@ -71,32 +71,33 @@ def cosine_topk(
     id_col: str = "vec_id",
     query_id_col: str | None = None,
     round_to: int = 6,
-    method: str = "auto",
-    broadcast_limit: int = 100_000,
-    size_hint: int | None = None,
 ) -> LazyFrame:
     """Exact top-k neighbours for every query vector (excluding self-matches
-    when ids collide).
+    when ids collide).  A null vector, corpus or query, drops.
 
-    method='numpy' (default for query sets up to ``broadcast_limit``): the
-    query matrix is broadcast; each executor scores its corpus batches with
-    one BLAS matmul and emits only its per-batch top-k per query, so the final
-    global window ranks ≤ k·n_batches candidates instead of |corpus|·|queries|
-    pairs.  Corpus is scanned once, never shuffled — the design that holds at
-    100 TB.  method='expr' keeps the pure-Column broadcast-join baseline.
-
-    ``size_hint`` = known query-set row count: supply it (or an explicit
-    method) to skip the auto-probe.  The probe itself is bounded — a
-    limit(broadcast_limit+1) count, never a full scan of the query table."""
+    The query set is cached and counted once (``_bounded.bounded``).  Up to
+    100,000 query rows the query matrix is broadcast; each executor scores
+    its corpus batches with one BLAS matmul and emits only its per-batch
+    top-k per query, so the final global window ranks ≤ k·n_batches
+    candidates instead of |corpus|·|queries| pairs.  Corpus is scanned
+    once, never shuffled — the design that holds at 100 TB.  Above the
+    bound the pure-Column broadcast join scores the pairs, with the same
+    rounded cosines."""
     qid = query_id_col or id_col
     c_sdf = _sdf(corpus)
-    q_sdf = _sdf(queries)
-    if method == "auto":
-        n = size_hint if size_hint is not None else full_count(q_sdf.limit(broadcast_limit + 1))
-        method = "numpy" if n <= broadcast_limit else "expr"
-    if method == "numpy":
+    q_sdf, _, small = bounded(_sdf(queries).select(qid, vec_col), "cosine_topk")
+    if small:
         return _numpy_topk(c_sdf, q_sdf, k, vec_col, id_col, qid, round_to)
+    # null vectors drop here as they do in the numpy kernel
+    return _expr_topk(
+        _vectors(c_sdf, id_col, vec_col), _vectors(q_sdf, qid, vec_col),
+        k, vec_col, id_col, qid, round_to,
+    )
 
+
+def _expr_topk(c_sdf, q_sdf, k, vec_col, id_col, qid, round_to) -> LazyFrame:
+    """cosine_topk as a pure-Column broadcast join: the path above the
+    bound, and the exact reference of sq8_recall_frame."""
     # norms are computed once per row on each side of the join (not once per
     # PAIR): same doubles, same multiply order, ~1/3 the aggregate passes
     c = c_sdf.select(
@@ -152,6 +153,36 @@ def _batch_matrix(batch, id_col: str, vec_col: str):
     ids = batch.column(id_col).to_numpy().astype(np.int64)
     M = np.stack(batch.column(vec_col).to_numpy(zero_copy_only=False)).astype(np.float64)
     return ids, M, np.sqrt((M * M).sum(axis=1))
+
+
+def _threshold_pairs(batches, id_col: str, vec_col: str, shipped, threshold, round_to):
+    """The numpy threshold scorer: every pair of a row of ``batches`` (Arrow
+    batches of :func:`_vectors` rows) and a row of the shipped ``(ids, M,
+    norms)`` whose cosine, rounded to ``round_to``, is at least
+    ``threshold``, yielded as ``(batch ids, shipped ids, cosines)`` arrays.
+    The shipped matrix is scored in column chunks, so peak per-task memory
+    is one (batch_rows x 8192) float64 block (~40 MB at 625 rows), not a
+    (batch_rows x n) matrix.  All ops are in place with the FP order of
+    round(dot / (na*nb), r), so the cosines are bit-identical to the
+    column-expression form; a zero-norm vector scores NaN and passes no
+    threshold."""
+    import numpy as np
+
+    CHUNK = 8192
+    b_ids, b_M, b_norms = shipped
+    n = b_ids.shape[0]
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        ids_a, Ma, na = _batch_matrix(batch, id_col, vec_col)
+        for s in range(0, n, CHUNK):
+            e = min(s + CHUNK, n)
+            S = Ma @ b_M[s:e].T
+            S /= na[:, None] * b_norms[s:e]
+            np.round(S, round_to, out=S)
+            ia, ib = np.where(S >= threshold)
+            if len(ia):
+                yield ids_a[ia], b_ids[s:e][ib], S[ia, ib]
 
 
 def _numpy_topk(c_sdf, q_sdf, k, vec_col, id_col, qid, round_to) -> LazyFrame:
@@ -656,7 +687,7 @@ def sq8_topk(
 ) -> LazyFrame:
     """Asymmetric SQ8 top-k: full-precision query against the dequantized
     (int8-coded) corpus — the standard memory/recall trade.  Same join shape
-    as cosine_topk(method='expr'): corpus scanned once, queries broadcast,
+    as cosine_topk above its bound: corpus scanned once, queries broadcast,
     per-query window rank."""
     qid = query_id_col or id_col
     c_sdf = _sdf(corpus)
@@ -700,8 +731,9 @@ def sq8_recall_frame(
     a pipeline would run on a sample before switching its serving index to
     codes."""
     approx = sq8_topk(corpus, queries, k=k, vec_col=vec_col, id_col=id_col, round_to=round_to)
-    exact = cosine_topk(corpus, queries, k=k, vec_col=vec_col, id_col=id_col,
-                        round_to=round_to, method="expr")
+    exact = _expr_topk(
+        _sdf(corpus), _sdf(queries), k, vec_col, id_col, id_col, round_to
+    )
     a = approx._sdf.select("query_id", "corpus_id")
     e = exact._sdf.select("query_id", "corpus_id").withColumn("__hit__", F.lit(1))
     # the exact top-k side is |queries| x k rows — always broadcast-sized
@@ -854,8 +886,6 @@ def embedding_threshold_join(
     vec_col: str = "embedding",
     threshold: float = 0.9,
     round_to: int = 6,
-    method: str = "auto",
-    broadcast_limit: int = 200_000,
     num_planes: int = 8,
     num_tables: int = 16,
 ) -> "LazyFrame":
@@ -864,15 +894,14 @@ def embedding_threshold_join(
     supervision, and cross-corpus semantic linking (the two-frame sibling of
     :func:`~.dedup.embedding_near_dup_pairs`).
 
-    method='numpy' (auto when the RIGHT side fits ``broadcast_limit``):
-    broadcast the right id/vector matrix; each executor scores its left
-    Arrow batches with chunked BLAS matmuls and emits only passing pairs —
-    left never shuffles, right ships once.
-
-    method='bucketed' (auto above the limit — the both-sides-huge path):
-    shared random-hyperplane buckets on both frames, equi-join on
-    (table, bucket), exact cosine verify.  Precision 1 always; recall
-    ≥ 1-(1-p^planes)^tables per true pair (documented LSH trade).
+    The right side is cached and counted once (``_bounded.bounded``).  Up
+    to 200,000 right rows the right id/vector matrix is broadcast; each
+    executor scores its left Arrow batches with chunked BLAS matmuls and
+    emits only passing pairs — left never shuffles, right ships once.
+    Above the bound (the both-sides-huge path): shared random-hyperplane
+    buckets on both frames, equi-join on (table, bucket), exact cosine
+    verify.  Precision 1 always; recall ≥ 1-(1-p^planes)^tables per true
+    pair (documented LSH trade).
 
     Output: (left_id, right_id, cosine).
     """
@@ -882,35 +911,18 @@ def embedding_threshold_join(
     rsdf = right if isinstance(right, SparkDF) else right.spark
     out_l = left_id if left_id != right_id else left_id + "_left"
     out_r = right_id if left_id != right_id else right_id + "_right"
-    if method == "auto":
-        n = full_count(rsdf.limit(broadcast_limit + 1))
-        method = "numpy" if n <= broadcast_limit else "bucketed"
-    if method == "numpy":
-        import numpy as np
-
+    rsdf, _, small = bounded(rsdf.select(right_id, vec_col), "embedding_threshold_join")
+    if small:
         get_right = _ship_matrix(rsdf, right_id, vec_col)
-        CHUNK = 8192
 
         def gen(batches):
-            b_ids, b_M, b_norms = get_right()
-            n_r = b_ids.shape[0]
-            for batch in batches:
-                if batch.num_rows == 0:
-                    continue
-                ids_a, Ma, na = _batch_matrix(batch, left_id, vec_col)
-                for s in range(0, n_r, CHUNK):
-                    e = min(s + CHUNK, n_r)
-                    S = Ma @ b_M[s:e].T
-                    S /= na[:, None] * b_norms[s:e]
-                    np.round(S, round_to, out=S)
-                    ia, ib = np.where(S >= threshold)
-                    if len(ia):
-                        yield {out_l: ids_a[ia], out_r: b_ids[s:e][ib], "cosine": S[ia, ib]}
+            for a, b, cos in _threshold_pairs(
+                batches, left_id, vec_col, get_right(), threshold, round_to
+            ):
+                yield {out_l: a, out_r: b, "cosine": cos}
 
         schema = f"{out_l} long, {out_r} long, cosine double"
         return LazyFrame(map_batches(_vectors(lsdf, left_id, vec_col), gen, schema))
-    if method != "bucketed":
-        raise ValueError(f"unknown method {method!r}")
     lb = register_cache(
         hyperplane_buckets(lsdf, left_id, vec_col, "id", "v", num_planes, num_tables)
         .withColumn("nrm", _norm_expr(F.col("v")))

@@ -149,7 +149,7 @@ def _train_bpe_driver(
     exact semantics of the distributed loop (same pair counting, same
     (count desc, left asc, right asc) tie-break, same greedy left-to-right
     fold), minus ten rounds of Spark job overhead.  Used only when the
-    vocabulary is bounded (see train_bpe's driver_threshold)."""
+    vocabulary is bounded (see train_bpe)."""
     vocab: list[tuple[int, list[str]]] = [
         (int(r["cnt"]), list(r["word"]) + [end_of_word]) for r in wc_rows
     ]
@@ -188,7 +188,6 @@ def train_bpe(
     end_of_word: str = "</w>",
     checkpoint_every: int = 8,
     checkpoint_dir: str | None = None,
-    driver_threshold: "int | None" = None,
 ) -> LazyFrame:
     """Byte-pair-encoding MERGE TABLE learned from the corpus: the standard
     BPE trainer (Sennrich et al. 2016) run distributed.  Returns
@@ -214,14 +213,13 @@ def train_bpe(
 
     Driver fast-path (the bradley_terry pattern): the word-count table is
     persisted through the cache registry and counted once
-    (``_bounded.bounded``); when the DISTINCT vocabulary is ≤
-    ``driver_threshold`` rows (default ``None`` = ``_bounded.BOUND`` =
-    65,536) the table collects and the merge loop runs in plain Python
-    with identical semantics — num_merges sequential Spark jobs over a
+    (``_bounded.bounded``); when the DISTINCT vocabulary is ≤ 65,536 rows
+    (``_bounded.BOUND``) the table collects and the merge loop runs in
+    plain Python with identical semantics — num_merges sequential Spark jobs over a
     small cached table are pure scheduler overhead (measured 8.3 s → <1 s
     for 10 merges on a 31-word corpus).  Web-scale corpora (raw
     vocabularies of 10^8–10^9 words) exceed the threshold and take the
-    distributed loop; pass ``driver_threshold=0`` to force it.
+    distributed loop.
 
     Greedy left-to-right merge semantics within a word ("aaa" under (a,a)
     → ["aa","a"]), matching the reference implementation; ``end_of_word``
@@ -240,7 +238,7 @@ def train_bpe(
     with scoped_caches():
         # the count is the one corpus-sized job either way, and both paths
         # then read the registered cache
-        wc, _, small = bounded(wc, "train_bpe", driver_threshold)
+        wc, _, small = bounded(wc, "train_bpe")
         if small:
             merges = _train_bpe_driver(wc.collect(), num_merges, min_pair_count, end_of_word)
             return LazyFrame(spark.createDataFrame(merges, schema=schema))

@@ -320,7 +320,6 @@ def cell_ranks(
     methods: "tuple[str, ...]" = ("min", "max", "average", "dense"),
     prefix: str = "rank_",
     descending: bool = False,
-    broadcast_threshold: "int | None" = 5_000_000,
 ):
     """All the tie-aware rank methods (min/max/average/dense) computed from
     the DISTINCT (partition, value) CELL TABLE instead of a row-level
@@ -351,11 +350,10 @@ def cell_ranks(
 
     Misuse guard: the broadcast of a near-unique value column's cell table
     would be data-sized — an executor/driver OOM, not a slow plan.  The
-    cell count is therefore checked against ``broadcast_threshold`` first
-    (one extra run of the cheap map-side-combined groupBy); above it the
-    attach falls back to a plain shuffle hash join (degraded but safe).
-    Pass ``broadcast_threshold=None`` to skip the count and force the
-    broadcast when the cardinality is known-small.
+    cell count is therefore checked against the ``cell_ranks`` bound of
+    ``_bounded`` (5,000,000 cells) first (one extra run of the cheap
+    map-side-combined groupBy); above it the attach falls back to a plain
+    shuffle hash join (degraded but safe).
 
     NULL values rank the way the window they replace ranks them (ascending
     → NULLs first, descending → NULLs last, Spark's defaults): NULL is a
@@ -396,9 +394,7 @@ def cell_ranks(
     attach = ranked.select(
         *[F.col(c).alias(f"__cr_{c}__") for c in jcols], *out_cols
     )
-    if broadcast_threshold is None or record(
-        "cell_ranks", cells.count(), broadcast_threshold
-    ):
+    if record("cell_ranks", cells.count()):
         attach = F.broadcast(attach)
     cond = None
     for c in jcols:
@@ -492,7 +488,6 @@ def exact_quantiles(
     col,
     probs: "list[float]",
     nbuckets: "int | None" = None,
-    driver_threshold: "int | None" = None,
 ) -> "list[float | None]":
     """EXACT linear-interpolation quantiles of one numeric column as driver
     scalars, computed DISTRIBUTED — the scale-safe replacement for a global
@@ -514,12 +509,12 @@ def exact_quantiles(
     Returns one float per prob, or Nones when the column has no rows.
 
     Scale shape: the module's one bound rule.  The distinct-value table
-    is cached and counted once; at most ``driver_threshold`` rows (default
-    ``_bounded.BOUND`` = 65,536) resolve the order statistics DRIVER-SIDE
-    from the collected (value, count) pairs — the identical selection +
-    interpolation arithmetic, two cheap jobs on the cached table instead
-    of the sketch/offsets/final chain (measured ~+1.2 s of per-call job
-    overhead on low-cardinality gate columns).
+    is cached and counted once; at most 65,536 rows (``_bounded.BOUND``)
+    resolve the order statistics DRIVER-SIDE from the collected (value,
+    count) pairs — the identical selection + interpolation arithmetic,
+    two cheap jobs on the cached table instead of the sketch/offsets/final
+    chain (measured ~+1.2 s of per-call job overhead on low-cardinality
+    gate columns).
     The distributed path is unchanged above the bound, so the 100 TB
     contract — no task ever buffers more than a bucket — still holds;
     note Spark's own ``F.percentile`` buffer is a per-distinct-value
@@ -533,7 +528,6 @@ def exact_quantiles(
     dv, ndv, small = bounded(
         base.groupBy("__v__").agg(F.count(F.lit(1)).alias("__cnt__")),
         "exact_quantiles",
-        driver_threshold,
     )
     if ndv == 0:
         return [None] * len(probs)
@@ -548,7 +542,6 @@ def exact_quantiles_multi(
     cols: "dict[str, Column | str]",
     probs: "list[float]",
     nbuckets: "int | None" = None,
-    driver_threshold: "int | None" = None,
 ) -> "dict[str, list[float | None]]":
     """``exact_quantiles`` for SEVERAL columns in ONE shared input pass —
     the multi-column feature-scaling shape (r12 ADVICE: a per-column loop
@@ -558,9 +551,8 @@ def exact_quantiles_multi(
     order statistics then resolve against that cached table with the
     IDENTICAL per-column arithmetic as ``exact_quantiles``.  Each column's
     distinct-value count is checked against the one bound
-    (``driver_threshold``, default ``_bounded.BOUND`` read at call time)
-    and recorded as an ``exact_quantiles_multi`` decision.  Returns
-    {name: [quantile per prob]}."""
+    (``_bounded.BOUND``) and recorded as an ``exact_quantiles_multi``
+    decision.  Returns {name: [quantile per prob]}."""
     _check_probs(probs)
     from .._cache import register_cache
 
@@ -587,7 +579,7 @@ def exact_quantiles_multi(
     out: "dict[str, list[float | None]]" = {}
     for name in names:
         n_distinct = ndv.get(name, 0)
-        small = record("exact_quantiles_multi", n_distinct, driver_threshold)
+        small = record("exact_quantiles_multi", n_distinct)
         if n_distinct == 0:
             out[name] = [None] * len(probs)
             continue

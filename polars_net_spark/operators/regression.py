@@ -1308,17 +1308,18 @@ def ipf_weights(
         .join(F.broadcast(ct), "__c__")
     )
     # DRIVER PATH (the bradley_terry convention): the calibrated cell table
-    # is bounded by |row_targets| x |col_targets| — a bound known from the
-    # ARGUMENTS, zero probe jobs — and IPF is only meaningful for bounded
-    # category grids (survey raking).  Collect the cells once (after the
-    # one data-sized aggregate) and run the rounds as a Python loop: the
+    # is bounded by |row_targets| x |col_targets| — a size known from the
+    # ARGUMENTS, zero probe jobs, held to 4,096 cells by ``_bounded`` —
+    # and IPF is only meaningful for bounded category grids (survey
+    # raking).  Collect the cells once (after the one data-sized
+    # aggregate) and run the rounds as a Python loop: the
     # identical multiplicative updates over the identical cells, ~3 jobs
     # instead of 6 nested broadcast-subquery evaluations per fit (measured
     # 103 AQE stage-jobs on the distributed shape at 3 rounds).  Division
     # and ROUNDING stay Spark expressions on the result frame, so the
     # output convention (F.round HALF_UP) is bit-identical.  The
     # distributed path remains for web-scale category grids.
-    if record("ipf_weights", len(row_targets) * len(col_targets), 4096):
+    if record("ipf_weights", len(row_targets) * len(col_targets)):
         erows = [
             (r["__r__"], r["__c__"], int(r["n"]), float(r["__tr__"]), float(r["__tc__"]))
             for r in cells.collect()
@@ -2995,7 +2996,6 @@ def pettitt_test(
     time_col: str,
     value_col: str,
     round_to: int = 6,
-    driver_threshold: "int | None" = None,
 ) -> LazyFrame:
     """Pettitt changepoint test — the RANK-based (outlier-proof) "did the
     level shift, and when" locator that complements best_changepoint's
@@ -3008,9 +3008,9 @@ def pettitt_test(
     sequence needs distinct positions), mirroring best_changepoint's
     determinism contract.  Scale shape: the time-collapsed series is
     cached and counted once under the one bound rule of
-    operators/distsort.py.  At most ``driver_threshold`` distinct times
-    (default ``_bounded.BOUND`` = 65,536) are collected and scanned on
-    the driver.  Above it, value ranks come from ONE distsort pass over
+    operators/distsort.py.  At most 65,536 distinct times
+    (``_bounded.BOUND``) are collected and scanned on the driver.  Above
+    it, value ranks come from ONE distsort pass over
     distinct-value cells (average rank = strictly-below count +
     (ties+1)/2) joined back on the value, then the U scan rides a second
     distsort pass keyed on time — no data-sized window, no self-join.
@@ -3028,7 +3028,6 @@ def pettitt_test(
             .groupBy(t.alias("__t__"))
             .agg(F.avg(v).alias("__v__")),
             "pettitt_test",
-            driver_threshold,
         )
         # DRIVER PATH: the U scan runs over DISTINCT TIMES, so after the one
         # data-sized time-collapse the series is a bounded artifact for any

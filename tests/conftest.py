@@ -21,3 +21,17 @@ def people(spark):
         [("Alice", 25, 100.0), ("Bob", 30, 200.0), ("Charlie", 35, 300.0)],
         ["name", "age", "salary"],
     )
+
+
+@pytest.fixture
+def force_distributed(monkeypatch):
+    """Call it to send every guarded operator down its distributed path for
+    the rest of the test: ``_bounded.BOUND`` and every ``_bounded.BOUNDS``
+    entry become 0, so even an empty input is above its bound."""
+    from polars_net_spark import _bounded
+
+    def force():
+        monkeypatch.setattr(_bounded, "BOUND", 0)
+        monkeypatch.setattr(_bounded, "BOUNDS", dict.fromkeys(_bounded.BOUNDS, 0))
+
+    return force

@@ -209,7 +209,8 @@ def _ops():
         ddl, rows = FAMILIES["text"]
         return build_vocab(spark.createDataFrame(rows, ddl), vocab_size=5)
 
-    # name -> (family, fn(frame, spark))
+    # name -> (family, fn(frame, spark)); a name ending in _bucketed runs
+    # with every bound at 0
     return {
         "encode_tokens": ("text", lambda d, s: encode_tokens_frame(d, vocab(s))),
         "encode_tokens_drop_oov": ("text", lambda d, s: encode_tokens_frame(d, vocab(s), oov_id=None)),
@@ -227,15 +228,15 @@ def _ops():
         "permutation_test": ("perm", lambda d, s: permutation_test(d, "v", "g", "id", "a", "b", n_perms=8)),
         "kmv_distinct": ("sketch", lambda d, s: kmv_distinct(d, "v", k=4)),
         "kmv_jaccard": ("sketch", lambda d, s: kmv_jaccard(d, "v", "g", "a", "b", k=4)),
-        "cosine_topk": ("vec", lambda d, s: cosine_topk(d, d, k=2, method="numpy")),
+        "cosine_topk": ("vec", lambda d, s: cosine_topk(d, d, k=2)),
         "lsh_bucket_topk": ("vec", lambda d, s: lsh_bucket_topk(d, d, k=2, num_planes=2, num_tables=2)),
-        "threshold_join_numpy": ("vec", lambda d, s: embedding_threshold_join(d, d, threshold=0.5, method="numpy")),
+        "threshold_join_numpy": ("vec", lambda d, s: embedding_threshold_join(d, d, threshold=0.5)),
         "threshold_join_bucketed": ("vec", lambda d, s: embedding_threshold_join(
-            d, d, threshold=0.5, method="bucketed", num_planes=2, num_tables=2)),
+            d, d, threshold=0.5, num_planes=2, num_tables=2)),
         "covariance": ("vec", lambda d, s: embedding_covariance(d)),
-        "near_dup_numpy": ("vec", lambda d, s: embedding_near_dup_pairs(d, threshold=0.5, method="numpy")),
+        "near_dup_numpy": ("vec", lambda d, s: embedding_near_dup_pairs(d, threshold=0.5)),
         "near_dup_bucketed": ("vec", lambda d, s: embedding_near_dup_pairs(
-            d, threshold=0.5, method="bucketed", num_planes=2, num_tables=2)),
+            d, threshold=0.5, num_planes=2, num_tables=2)),
         "image_features": ("media", lambda d, s: extract_image_features(d, feature_dim=4)),
         "media_features": ("media", lambda d, s: decode_media_features(d)),
         "video_frames": ("video", lambda d, s: sample_video_frames(d, every=2, thumb=(2, 2))),
@@ -284,7 +285,9 @@ def expected():
 
 
 @pytest.mark.parametrize("name,inp", _cases())
-def test_boundary_operator_outputs(spark, expected, name, inp):
+def test_boundary_operator_outputs(spark, expected, force_distributed, name, inp):
+    if name.endswith("_bucketed"):
+        force_distributed()
     assert run_case(spark, name, inp) == expected[f"{name}/{inp}"]
 
 
@@ -292,9 +295,11 @@ def test_boundary_operator_outputs(spark, expected, name, inp):
     "cosine_topk", "lsh_bucket_topk", "threshold_join_numpy", "threshold_join_bucketed",
     "near_dup_numpy", "near_dup_bucketed",
 ])
-def test_null_vector_drops(spark, name):
+def test_null_vector_drops(spark, force_distributed, name):
     """A null vector among valid ones drops, as embedding_covariance and
     kmeans_report drop it: the rows equal those of the input without it."""
+    if name.endswith("_bucketed"):
+        force_distributed()
     rows = _inputs("vec")["mixed"]
     with_null = rows[:3] + [(99, None)] + rows[3:]
     got = run_rows(spark, name, with_null)

@@ -20,10 +20,8 @@ import pytest
 from pyspark import Broadcast
 
 from polars_net_spark import _bounded, _cache, release_caches
-from polars_net_spark.llm import dedup
 from polars_net_spark.llm.chunking import build_sft_examples
 from polars_net_spark.llm.dedup import (
-    _DF_BROADCAST_BYTES,
     containment_pairs,
     dedup_clusters,
     embedding_near_dup_pairs,
@@ -48,6 +46,24 @@ from polars_net_spark.operators.regression import ipf_weights, median_ci, pettit
 
 NAN, INF = float("nan"), float("inf")
 DEFAULT_BOUND = _bounded.BOUND
+CONTAINMENT_BYTES = _bounded.BOUNDS["containment_pairs"]
+
+
+def test_every_bound_is_pinned():
+    """The one table of path bounds: a change to any of them moves inputs
+    from one path to the other, so it must be deliberate."""
+    assert _bounded.BOUND == 65_536
+    assert _bounded.BOUNDS == {
+        "bradley_terry": 50_000,
+        "dedup_clusters": 400_000,
+        "cosine_topk": 100_000,
+        "embedding_near_dup_pairs": 200_000,
+        "embedding_threshold_join": 200_000,
+        "cell_ranks": 5_000_000,
+        "ipf_weights": 4_096,
+        "containment_pairs": 32 * 1024 * 1024,
+    }
+
 
 # (t, e, v): survival reads (t, e), median_ci / exact_quantiles read t,
 # pettitt_test reads (t, v)
@@ -218,26 +234,6 @@ def test_decision_record_is_bounded(spark):
     _bounded.clear_decisions()
 
 
-def test_explicit_driver_threshold_still_wins(spark):
-    """exact_quantiles / exact_quantiles_multi / pettitt_test keep their
-    driver_threshold argument; it overrides the module bound for that
-    call."""
-    sdf = spark.createDataFrame([(float(i), 0, float(i % 3)) for i in range(10)],
-                                "t double, e int, v double")
-    _bounded.clear_decisions()
-    exact_quantiles(sdf, "t", [0.5], driver_threshold=0)
-    exact_quantiles_multi(sdf, {"t": "t", "v": "v"}, [0.5], driver_threshold=5)
-    pettitt_test(sdf, "t", "v", driver_threshold=0).collect()
-    assert [
-        (d["operator"], d["path"], d["n"], d["bound"]) for d in _bounded.decisions()
-    ] == [
-        ("exact_quantiles", "distributed", 10, 0),
-        ("exact_quantiles_multi", "distributed", 10, 5),
-        ("exact_quantiles_multi", "bounded", 3, 5),
-        ("pettitt_test", "distributed", 10, 0),
-    ]
-
-
 # ---------------------------------------------------------------------------
 # sites that keep their own decision and only record it
 
@@ -246,7 +242,7 @@ def _records(operator):
     return [d for d in _bounded.decisions() if d["operator"] == operator]
 
 
-def test_recorded_sites_log_one_decision_per_call(spark):
+def test_recorded_sites_log_one_decision_per_call(spark, force_distributed):
     cells = spark.createDataFrame(
         [("a", 1.0), ("a", 1.0), ("a", 2.0), ("b", 5.0)], "k string, v double"
     )
@@ -259,23 +255,26 @@ def test_recorded_sites_log_one_decision_per_call(spark):
         [("a", "x"), ("a", "y"), ("b", "x"), ("b", "y"), ("b", "y")], "r string, c string"
     )
     calls = [
-        ("cell_ranks", lambda: cell_ranks(cells, "v", "k", broadcast_threshold=2),
-         ("distributed", 3, 2)),
-        ("cell_ranks", lambda: cell_ranks(cells, "v", "k", broadcast_threshold=3),
-         ("bounded", 3, 3)),
+        ("cell_ranks", lambda: cell_ranks(cells, "v", "k"), 3),
+        # 10 hashed gram occurrences, 8 bytes of gram and 8 of df each
         ("containment_pairs",
          lambda: containment_pairs(docs, threshold=0.5, prefix_order="df", max_gram_df=5),
-         # 10 hashed gram occurrences, 8 bytes of gram and 8 of df each
-         ("bounded", 160, _DF_BROADCAST_BYTES)),
+         160),
         ("ipf_weights",
          lambda: ipf_weights(raking, "r", "c", {"a": 0.5, "b": 0.5}, {"x": 0.5, "y": 0.5}),
-         ("bounded", 4, 4096)),
+         4),
     ]
-    for operator, call, expected in calls:
-        _bounded.clear_decisions()
-        call().collect()
-        recs = _records(operator)
-        assert [(d["path"], d["n"], d["bound"]) for d in recs] == [expected], operator
+    for forced in (False, True):
+        if forced:
+            force_distributed()
+        for operator, call, n in calls:
+            _bounded.clear_decisions()
+            call().collect()
+            expected = ("distributed", n, 0) if forced else (
+                "bounded", n, _bounded.BOUNDS[operator]
+            )
+            recs = _records(operator)
+            assert [(d["path"], d["n"], d["bound"]) for d in recs] == [expected], operator
     _bounded.clear_decisions()
 
 
@@ -300,8 +299,8 @@ def test_containment_broadcast_is_bounded_by_bytes(spark, monkeypatch):
         return rows, hinted, (rec["path"], rec["n"], rec["bound"])
 
     wide = run()
-    assert wide[1:] == (True, ("bounded", n_bytes, _DF_BROADCAST_BYTES))
-    monkeypatch.setattr(dedup, "_DF_BROADCAST_BYTES", n_bytes - 1)
+    assert wide[1:] == (True, ("bounded", n_bytes, CONTAINMENT_BYTES))
+    monkeypatch.setitem(_bounded.BOUNDS, "containment_pairs", n_bytes - 1)
     narrow = run()
     assert narrow[1:] == (False, ("distributed", n_bytes, n_bytes - 1))
     assert narrow[0] == wide[0]
@@ -337,13 +336,11 @@ def _ship_sites(spark):
         "bpe_encode_frame": lambda: bpe_encode_frame(docs, merges),
         "build_sft_examples": lambda: build_sft_examples(sft, vocab),
         "bigram_logprob_frame": lambda: bigram_logprob_frame(docs, vocab_size=5),
-        "cosine_topk": lambda: cosine_topk(vecs, vecs.filter("vec_id < 7"), k=3, method="numpy"),
+        "cosine_topk": lambda: cosine_topk(vecs, vecs.filter("vec_id < 7"), k=3),
         "embedding_threshold_join": lambda: embedding_threshold_join(
-            vecs, vecs.filter("vec_id < 9"), threshold=0.9, method="numpy"
+            vecs, vecs.filter("vec_id < 9"), threshold=0.9
         ),
-        "embedding_near_dup_pairs": lambda: embedding_near_dup_pairs(
-            vecs, threshold=0.9, method="numpy"
-        ),
+        "embedding_near_dup_pairs": lambda: embedding_near_dup_pairs(vecs, threshold=0.9),
     }
 
 
@@ -398,7 +395,7 @@ CORPORA = {
 }
 
 FITS = {
-    # name: (schema, fixtures, call(frame, **driver_threshold))
+    # name: (schema, fixtures, call(frame))
     "dedup_clusters": ("id_a long, id_b long", PAIRS, dedup_clusters),
     "bradley_terry": ("chosen string, rejected string", COMPARISONS, bradley_terry),
     "train_bpe": ("doc_id long, text string", CORPORA, partial(train_bpe, num_merges=6)),
@@ -407,17 +404,19 @@ FITS = {
 
 @pytest.mark.parametrize("fixture", ["empty", "one_row", "all_ties", "many"])
 @pytest.mark.parametrize("operator", sorted(FITS))
-def test_driver_and_distributed_fits_agree(spark, operator, fixture):
+def test_driver_and_distributed_fits_agree(spark, force_distributed, operator, fixture):
     schema, fixtures, call = FITS[operator]
     data = fixtures[fixture]
     sdf = spark.createDataFrame(data, schema)
     # the public default keeps these inputs on the driver; 0 forces every
     # input to the distributed path, the empty one included
     results = []
-    for kwargs, path in (({}, "bounded"), ({"driver_threshold": 0}, "distributed")):
+    for path in ("bounded", "distributed"):
+        if path == "distributed":
+            force_distributed()
         _bounded.clear_decisions()
         before = _cache.cached_count()
-        lf = call(sdf, **kwargs)
+        lf = call(sdf)
         if operator == "train_bpe":
             # the merge table is a local list: the word-count cache is
             # released before train_bpe returns
@@ -428,3 +427,48 @@ def test_driver_and_distributed_fits_agree(spark, operator, fixture):
     release_caches()
     assert results[0] == results[1]
     assert bool(results[0]) == bool(data)
+
+
+# ---------------------------------------------------------------------------
+# the vector operators: a broadcast numpy matrix below the bound, a
+# broadcast join (cosine_topk) or hyperplane buckets above it
+
+_SPREAD = [(i, [float(i), 1.0, float(i % 2)]) for i in range(1, 8)]
+VEC_FIXTURES = {
+    "empty": [],
+    "one_row": [(0, [1.0, 2.0, 3.0])],
+    "all_ties": [(i, [1.0, 2.0, 3.0]) for i in range(6)],
+    "zero_norm": [(0, [0.0, 0.0, 0.0])] + _SPREAD,
+    "null_vector": [(0, None)] + _SPREAD,
+}
+VECTOR_OPS = {
+    "cosine_topk": lambda d: _rows(cosine_topk(d, d.filter("vec_id < 4"), k=3)),
+    "embedding_near_dup_pairs": lambda d: _rows(embedding_near_dup_pairs(d, threshold=0.5)),
+    "embedding_threshold_join": lambda d: _rows(
+        embedding_threshold_join(d, d.filter("vec_id % 2 = 0"), threshold=0.5)
+    ),
+}
+
+
+@pytest.mark.parametrize("fixture", sorted(VEC_FIXTURES))
+@pytest.mark.parametrize("operator", sorted(VECTOR_OPS))
+def test_vector_operators_agree_on_both_sides(spark, force_distributed, operator, fixture):
+    """cosine_topk's two paths are bit-identical.  The bucketed pairs of
+    the other two are a subset of the numpy pairs with identical cosines
+    (buckets may cost recall, never precision), and all of them when every
+    vector is the same, since equal vectors share every bucket."""
+    sdf = spark.createDataFrame(VEC_FIXTURES[fixture], "vec_id long, embedding array<double>")
+    _bounded.clear_decisions()
+    small = _canon(VECTOR_OPS[operator](sdf))
+    force_distributed()
+    big = _canon(VECTOR_OPS[operator](sdf))
+    recs = _records(operator)
+    assert [d["path"] for d in recs] == ["bounded", "distributed"]
+    assert recs[0]["n"] == recs[1]["n"]
+    if operator == "cosine_topk" or fixture == "all_ties":
+        assert big == small
+    else:
+        assert set(big) <= set(small)
+    if fixture == "all_ties":
+        assert small
+    release_caches()

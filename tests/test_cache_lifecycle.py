@@ -120,7 +120,8 @@ def _cases():
     logit = [(float(x), int(x in (1, 3, 4, 6))) for x in range(8)]
     vecs = [(i, [float(i % 2), float(i // 2)]) for i in range(6)]
     docs = ["low lower lowest", "new newer newest", "wide wider widest"] * 3
-    # name -> (ddl, success rows, raise rows or None, fn)
+    # name -> (ddl, success rows, raise rows or None, fn); a name ending in
+    # _distributed runs with every bound at 0
     return {
         "mann_kendall": ("t double, v double", trend, trend[:2],
                          lambda d: rg.mann_kendall(d, "t", "v")),
@@ -135,7 +136,7 @@ def _cases():
         "pettitt_bounded": ("t double, v double", step, step[:2],
                             lambda d: rg.pettitt_test(d, "t", "v")),
         "pettitt_distributed": ("t double, v double", step, step[:2],
-                                lambda d: rg.pettitt_test(d, "t", "v", driver_threshold=0)),
+                                lambda d: rg.pettitt_test(d, "t", "v")),
         "cox_ph": ("t double, e long, x double", surv, [(t, 0, x) for t, _, x in surv],
                    lambda d: rg.cox_ph(d, "t", "e", "x")),
         "logistic_fit": ("x double, y long", logit, [(x, 1) for x, _ in logit],
@@ -152,8 +153,7 @@ def _cases():
         "bfs_distances": ("src long, dst long", chain, chain,
                           lambda d, rounds=20: bfs_distances(d, [0], max_rounds=rounds)),
         "train_bpe_distributed": ("text string", [(t,) for t in docs], None,
-                                  lambda d: train_bpe(d, num_merges=7, checkpoint_every=3,
-                                                      driver_threshold=0)),
+                                  lambda d: train_bpe(d, num_merges=7, checkpoint_every=3)),
     }
 
 
@@ -170,8 +170,10 @@ def _cache_manager_empty(spark):
     for name, case in sorted(_cases().items())
     for outcome in ("success", "raise")[: 1 if case[2] is None else 2]
 ])
-def test_operator_leaves_no_cached_blocks(spark, name, outcome):
+def test_operator_leaves_no_cached_blocks(spark, force_distributed, name, outcome):
     ddl, ok_rows, bad_rows, fn = _cases()[name]
+    if name.endswith("_distributed"):
+        force_distributed()
     rows = ok_rows if outcome == "success" else bad_rows
     frame = spark.createDataFrame(rows, ddl)
     spark.catalog.clearCache()

@@ -84,24 +84,20 @@ def test_nulls_rank_like_the_window(spark):
     assert gotd == refd
 
 
-def test_broadcast_guard_falls_back_to_shuffle_join(spark):
+def test_broadcast_guard_falls_back_to_shuffle_join(spark, force_distributed):
     rows = [(i, "k", float(i % 5)) for i in range(100)]
     d = spark.createDataFrame(rows, "id long, k string, v double")
-    # threshold below the 5-cell table → plain (non-broadcast) join, same answer
-    lf = cell_ranks(d, "v", partition_by="k", broadcast_threshold=2)
-    plan = lf.spark._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
     base = {
         r["id"]: r["rank_min"]
         for r in cell_ranks(d, "v", partition_by="k").spark.collect()
     }
+    # a bound below the 5-cell table → plain (non-broadcast) join, same answer
+    force_distributed()
+    lf = cell_ranks(d, "v", partition_by="k")
+    plan = lf.spark._jdf.queryExecution().executedPlan().toString()
+    assert "CartesianProduct" not in plan
+    assert "BroadcastHashJoin" not in plan
     assert {r["id"]: r["rank_min"] for r in lf.spark.collect()} == base
-    # threshold=None skips the guard count entirely and broadcasts
-    plan2 = (
-        cell_ranks(d, "v", partition_by="k", broadcast_threshold=None)
-        .spark._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BroadcastHashJoin" in plan2
 
 
 def test_unknown_method_raises(spark):

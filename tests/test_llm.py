@@ -280,49 +280,56 @@ def _seeded_cluster_vectors(spark, n_clusters=120, per_cluster=5, dim=8):
     return pl.from_records(rows, ["vec_id", "embedding"]).lazy()
 
 
-def test_bucketed_near_dup_no_cross_join_and_matches_exact(spark):
-    """Above broadcast_limit the auto route must be the hyperplane-bucketed
-    equi-join (no CartesianProduct / nested-loop join in the plan) and, at
-    these settings, return exactly the exact-method pairs."""
-    v = _seeded_cluster_vectors(spark)  # 600 rows > broadcast_limit=100
-    bucketed = embedding_near_dup_pairs(
-        v, threshold=0.99, method="auto", broadcast_limit=100, num_planes=8, num_tables=16
-    )
+def test_bucketed_near_dup_no_cross_join_and_matches_exact(spark, force_distributed):
+    """Above its bound the route must be the hyperplane-bucketed equi-join
+    (no CartesianProduct / nested-loop join in the plan) and, at these
+    settings, return exactly the numpy path's pairs."""
+    v = _seeded_cluster_vectors(spark)  # 600 rows
+    exact = sorted(embedding_near_dup_pairs(v, threshold=0.99).collect().rows())
+    force_distributed()
+    bucketed = embedding_near_dup_pairs(v, threshold=0.99, num_planes=8, num_tables=16)
     plan = bucketed._sdf._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     got = sorted(bucketed.collect().rows())
-    exact = sorted(
-        embedding_near_dup_pairs(v, threshold=0.99, method="numpy").collect().rows()
-    )
     assert len(exact) > 100  # the corpus really contains near-dup clusters
     assert got == exact
     pl.release_caches()
 
 
-def test_lazy_builders_run_no_eager_jobs(spark):
-    """Building (not executing) the llm similarity/dedup plans must not run
-    Spark jobs: no count()/first() probes when method/size_hint is given."""
+def test_lazy_builders_run_no_eager_jobs(spark, force_distributed):
+    """Building (not executing) the llm similarity plans: lsh_bucket_topk
+    runs no Spark job, and each guarded vector operator runs exactly its
+    guard's one count job and records one decision.  Every bound is 0 here,
+    so no bounded side is collected for a broadcast."""
+    from polars_net_spark import _bounded
+    from polars_net_spark.llm import embedding_threshold_join
+
     sc = spark.sparkContext
     v = _seeded_cluster_vectors(spark, n_clusters=4)
-    sc.setJobGroup("probe_check", "probe_check")
-    try:
-        from polars_net_spark.frame import LazyFrame as LF
-        import pyspark.sql.functions as SF
-
-        q = LF(v._sdf.filter(SF.col("vec_id") < 3))
-        _ = embedding_near_dup_pairs(v, method="bucketed")
-        # a size_hint above broadcast_limit routes to bucketed with NO probe
-        _ = embedding_near_dup_pairs(v, size_hint=1000, broadcast_limit=100)
-        _ = cosine_topk(v, q, k=2, size_hint=1000, broadcast_limit=100, method="auto")
-        _ = lsh_bucket_topk(v, q, k=2, num_planes=4, num_tables=2)
-        jobs = sc.statusTracker().getJobIdsForGroup("probe_check")
-        # the numpy paths materialize their bounded broadcast side at build
-        # (data plane, like a broadcast-join build); the candidate-generation
-        # builders above must not run ANY job — no count()/first() probes
-        assert list(jobs) == [], f"eager jobs ran during lazy build: {jobs}"
-    finally:
-        sc.setJobGroup(None, None)
+    q = LazyFrame(v._sdf.filter(F.col("vec_id") < 3))
+    force_distributed()
+    builders = {
+        "lsh_bucket_topk": lambda: lsh_bucket_topk(v, q, k=2, num_planes=4, num_tables=2),
+        "embedding_near_dup_pairs": lambda: embedding_near_dup_pairs(v),
+        "cosine_topk": lambda: cosine_topk(v, q, k=2),
+        "embedding_threshold_join": lambda: embedding_threshold_join(v, q),
+    }
+    for name, build in builders.items():
+        group = f"probe_check_{name}"
+        _bounded.clear_decisions()
+        sc.setJobGroup(group, group)
+        try:
+            build()
+        finally:
+            sc.setJobGroup(None, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        guarded = name != "lsh_bucket_topk"
+        assert len(jobs) == guarded, (name, jobs)
+        assert [(d["operator"], d["path"]) for d in _bounded.decisions()] == (
+            [(name, "distributed")] if guarded else []
+        )
     pl.release_caches()
 
 
@@ -416,7 +423,7 @@ def test_ivf_topk_exact_when_all_lists_probed(spark):
 
     e = pl.scan_parquet("/root/testdata/sf0.001/embeddings.parquet")
     q = LazyFrame(e._sdf.filter(F.col("vec_id") < 8))
-    exact = sorted(cosine_topk(e, q, k=5, method="expr").collect().rows())
+    exact = sorted(cosine_topk(e, q, k=5).collect().rows())
     # nprobe == nlist probes every inverted list -> brute force
     ivf = sorted(ivf_topk(e, q, k=5, nlist=8, nprobe=8).collect().rows())
     assert ivf == exact
@@ -431,7 +438,7 @@ def test_ivf_topk_recall_and_plan(spark):
     plan = lf._sdf._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan  # centroid NL joins must broadcast
     got = {(r[0], r[1]) for r in lf.collect().rows()}
-    exact = {(r[0], r[1]) for r in cosine_topk(e, q, k=5, method="expr").collect().rows()}
+    exact = {(r[0], r[1]) for r in cosine_topk(e, q, k=5).collect().rows()}
     recall = len(got & exact) / len(exact)
     assert recall >= 0.5  # nprobe=4/16 on an unclustered quantizer
     # every emitted cosine is a true cosine (exact re-verification)
@@ -471,7 +478,7 @@ def test_kmeans_refined_ivf_recall(spark):
     q = LazyFrame(e.spark.filter(F.col("vec_id") < 8))
     cents = kmeans_centroids(e, k=8, iters=3)
     assert len(cents) == 8 and all(len(c) == len(cents[0]) for c in cents)
-    exact = {(r[0], r[1]) for r in cosine_topk(e, q, k=5, method="expr").collect().rows()}
+    exact = {(r[0], r[1]) for r in cosine_topk(e, q, k=5).collect().rows()}
     got = {
         (r[0], r[1])
         for r in ivf_topk(e, q, k=5, nprobe=2, centroids=cents).collect().rows()
@@ -482,7 +489,7 @@ def test_kmeans_refined_ivf_recall(spark):
     assert recall >= 0.6, recall
 
 
-def test_dedup_clusters_driver_path_matches_distributed(spark):
+def test_dedup_clusters_driver_path_matches_distributed(spark, force_distributed):
     """The small-graph union-find shortcut must produce exactly the
     distributed fixpoint's labels (min reachable id), including singletons,
     chains, and vertex filtering."""
@@ -498,16 +505,15 @@ def test_dedup_clusters_driver_path_matches_distributed(spark):
     fast = sorted(
         dedup_clusters(pairs, vertices=verts, vertex_id="doc_id").collect().rows()
     )
+    force_distributed()
     slow = sorted(
-        dedup_clusters(
-            pairs, vertices=verts, vertex_id="doc_id", driver_threshold=0
-        ).collect().rows()
+        dedup_clusters(pairs, vertices=verts, vertex_id="doc_id").collect().rows()
     )
     assert fast == slow
     assert fast == [(1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10), (20, 20)]
 
 
-def test_dedup_clusters_reliable_checkpoint(spark, tmp_path):
+def test_dedup_clusters_reliable_checkpoint(spark, tmp_path, force_distributed):
     """checkpoint_dir= switches the fixpoint to reliable .checkpoint()
     (cluster-grade: blocks survive executor loss) with identical output."""
     from polars_net_spark.llm import dedup_clusters
@@ -516,26 +522,21 @@ def test_dedup_clusters_reliable_checkpoint(spark, tmp_path):
         [(1, 2), (2, 3), (3, 4), (10, 11)], ["id_a", "id_b"]
     ).lazy()
     ckdir = str(tmp_path / "ck")
-    out = sorted(
-        dedup_clusters(
-            pairs, driver_threshold=0, checkpoint_dir=ckdir
-        ).collect().rows()
-    )
+    force_distributed()
+    out = sorted(dedup_clusters(pairs, checkpoint_dir=ckdir).collect().rows())
     assert out == [(1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10)]
     import os
 
     assert os.listdir(ckdir)  # reliable checkpoint actually wrote blocks
 
 
-def test_dedup_fuzzy_driver_and_distributed_agree(spark):
+def test_dedup_fuzzy_driver_and_distributed_agree(spark, force_distributed):
     from polars_net_spark.llm import dedup_fuzzy
 
     d = docs(spark).lazy()
     fast = sorted(r[0] for r in dedup_fuzzy(d, threshold=0.5).collect().rows())
-    slow = sorted(
-        r[0]
-        for r in dedup_fuzzy(d, threshold=0.5, driver_threshold=0).collect().rows()
-    )
+    force_distributed()
+    slow = sorted(r[0] for r in dedup_fuzzy(d, threshold=0.5).collect().rows())
     assert fast == slow
 
 
@@ -857,7 +858,7 @@ def test_dedup_against_reference(spark):
     assert out3 == [0, 2]
 
 
-def test_embedding_threshold_join_paths_agree(spark):
+def test_embedding_threshold_join_paths_agree(spark, force_distributed):
     from polars_net_spark.llm import embedding_threshold_join
 
     left = pl.from_records(
@@ -868,21 +869,20 @@ def test_embedding_threshold_join_paths_agree(spark):
         ["vec_id", "embedding"],
     ).lazy()
     numpy_out = sorted(
-        embedding_threshold_join(left, right, threshold=0.9, method="numpy")
-        .collect().rows()
+        embedding_threshold_join(left, right, threshold=0.9).collect().rows()
     )
     assert [(a, b) for a, b, _ in numpy_out] == [(0, 1), (2, 5)]
     # bucketed path: same pairs (recall holds at these settings), precision 1
+    force_distributed()
     bucketed = sorted(
         embedding_threshold_join(
-            left, right, threshold=0.9, method="bucketed",
-            num_planes=4, num_tables=16,
+            left, right, threshold=0.9, num_planes=4, num_tables=16,
         ).collect().rows()
     )
     assert bucketed == numpy_out
     # bucketed plan never cross-joins
     plan = (
-        embedding_threshold_join(left, right, threshold=0.9, method="bucketed")
+        embedding_threshold_join(left, right, threshold=0.9)
         .spark._jdf.queryExecution().executedPlan().toString()
     )
     assert "CartesianProduct" not in plan and "NestedLoop" not in plan
@@ -1140,8 +1140,8 @@ class TestBPE:
         d = pl.from_records([(1, "ab cd ef")], ["doc_id", "text"])  # all pairs count 1
         assert train_bpe(d, num_merges=5, min_pair_count=2).collect().height == 0
 
-    def test_driver_and_distributed_paths_identical(self, spark):
-        # driver_threshold=0 forces the distributed loop; both paths must
+    def test_driver_and_distributed_paths_identical(self, spark, force_distributed):
+        # a bound of 0 forces the distributed loop; both paths must
         # produce the identical merge table (the r8 fast-path contract)
         from polars_net_spark.llm.vocab import train_bpe
 
@@ -1152,7 +1152,8 @@ class TestBPE:
         ]
         d = pl.from_records([(i, t) for i, t in enumerate(corpus)], ["doc_id", "text"])
         fast = train_bpe(d, num_merges=6).collect().rows()
-        dist = train_bpe(d, num_merges=6, driver_threshold=0).collect().rows()
+        force_distributed()
+        dist = train_bpe(d, num_merges=6).collect().rows()
         assert fast == dist and len(fast) > 0
 
     def test_greedy_overlap(self, spark):

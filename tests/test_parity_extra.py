@@ -202,24 +202,53 @@ def test_streaming_parquet_sink(spark, tmp_path):
     assert pl.scan_parquet(out_dir, spark=spark).collect().height == 2
 
 
-def test_cosine_topk_expr_equals_numpy(spark):
+def test_cosine_topk_expr_equals_numpy(spark, force_distributed):
     from polars_net_spark.frame import LazyFrame
     from polars_net_spark.llm import cosine_topk
     from pyspark.sql import functions as F
 
     e = pl.scan_parquet("/root/testdata/sf0.001/embeddings.parquet")
     q = LazyFrame(e._sdf.filter(F.col("vec_id") < 3))
-    a = sorted(cosine_topk(e, q, k=3, method="numpy").collect().rows())
-    b = sorted(cosine_topk(e, q, k=3, method="expr").collect().rows())
+    a = sorted(cosine_topk(e, q, k=3).collect().rows())
+    force_distributed()  # the broadcast-join (expr) path
+    b = sorted(cosine_topk(e, q, k=3).collect().rows())
     assert a == b
+
+
+def _cross_join_pairs(sdf, threshold, round_to=6):
+    """The O(n²) Column-expression reference for embedding_near_dup_pairs:
+    every id_a < id_b pair of a crossJoin, cosine rounded, then
+    thresholded."""
+    from pyspark.sql import functions as F
+
+    def norm(v):
+        return F.sqrt(
+            F.aggregate(v, F.lit(0.0), lambda a, x: a + x.cast("double") * x.cast("double"))
+        )
+
+    base = sdf.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v"))
+    a = base.select(F.col("id").alias("id_a"), F.col("v").alias("va"), norm(F.col("v")).alias("na"))
+    b = base.select(F.col("id").alias("id_b"), F.col("v").alias("vb"), norm(F.col("v")).alias("nb"))
+    dot = F.aggregate(
+        F.zip_with(F.col("va"), F.col("vb"), lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    return (
+        a.crossJoin(b)
+        .filter(F.col("id_a") < F.col("id_b"))
+        .withColumn("cosine", F.round(dot / (F.col("na") * F.col("nb")), round_to))
+        .filter(F.col("cosine") >= threshold)
+        .select("id_a", "id_b", "cosine")
+    )
 
 
 def test_embedding_pairs_expr_equals_numpy(spark):
     from polars_net_spark.llm import embedding_near_dup_pairs
 
     e = pl.scan_parquet("/root/testdata/sf0.001/embeddings.parquet")
-    a = sorted(embedding_near_dup_pairs(e, threshold=0.45, method="numpy").collect().rows())
-    b = sorted(embedding_near_dup_pairs(e, threshold=0.45, method="expr").collect().rows())
+    a = sorted(embedding_near_dup_pairs(e, threshold=0.45).collect().rows())
+    b = sorted(tuple(r) for r in _cross_join_pairs(e._sdf, 0.45).collect())
     assert a == b
 
 

@@ -22,16 +22,19 @@ def spark():
 
 class TestExactQuantiles:
     @pytest.mark.parametrize("threshold", [65_536, 0])
-    def test_matches_percentile_with_ties(self, spark, threshold):
-        # threshold=65_536 takes the driver (collected distinct-count)
-        # path; threshold=0 forces the distributed sketch/offsets path —
-        # both must be bit-identical to the F.percentile reference.
+    def test_matches_percentile_with_ties(self, spark, force_distributed, threshold):
+        # the default bound 65_536 takes the driver (collected
+        # distinct-count) path; a bound of 0 forces the distributed
+        # sketch/offsets path — both must be bit-identical to the
+        # F.percentile reference.
+        if threshold == 0:
+            force_distributed()
         rng = random.Random(7)
         vals = [round(rng.uniform(0, 100), 1) for _ in range(5000)]
         vals += [50.0] * 400 + [0.0] * 10  # heavy tie blocks
         df = spark.createDataFrame([(v,) for v in vals], "v double")
         probs = [0.0, 0.05, 0.25, 0.5, 0.9, 0.95, 1.0]
-        got = exact_quantiles(df, "v", probs, driver_threshold=threshold)
+        got = exact_quantiles(df, "v", probs)
         ref = df.agg(
             F.percentile(F.col("v"), F.array(*[F.lit(p) for p in probs]))
         ).first()[0]

@@ -92,7 +92,7 @@ def test_fused_empty_and_all_null(spark):
     assert [(r[gb2], r["__off_c__"]) for r in rows] == [(0, 0.0)]
 
 
-def test_exact_quantiles_multi_matches_single(spark):
+def test_exact_quantiles_multi_matches_single(spark, force_distributed):
     from polars_net_spark.operators.distsort import (
         exact_quantiles,
         exact_quantiles_multi,
@@ -106,17 +106,18 @@ def test_exact_quantiles_multi_matches_single(spark):
     for c in ("a", "b"):
         single = exact_quantiles(sdf, c, probs)
         assert multi[c] == single, c
-    # distributed path parity: force past the driver threshold
+    # distributed path parity: force every column past the bound
+    force_distributed()
     big = spark.range(5000).selectExpr(
         "cast(id as double) as a", "cast(id % 50 as double) as b"
     )
-    m2 = exact_quantiles_multi(big, {"a": "a", "b": "b"}, probs, driver_threshold=100)
+    m2 = exact_quantiles_multi(big, {"a": "a", "b": "b"}, probs)
     for c in ("a", "b"):
-        s2 = exact_quantiles(big, c, probs, driver_threshold=100)
+        s2 = exact_quantiles(big, c, probs)
         assert m2[c] == s2, c
 
 
-def test_pettitt_driver_path_matches_distributed(spark):
+def test_pettitt_driver_path_matches_distributed(spark, force_distributed):
     from polars_net_spark.operators.regression import pettitt_test
 
     rows = []
@@ -128,7 +129,8 @@ def test_pettitt_driver_path_matches_distributed(spark):
             rows.append((float(t), v + 1.0))  # duplicate time -> avg collapse
     sdf = spark.createDataFrame(rows, "t double, v double")
     drv = pettitt_test(sdf, "t", "v").collect().rows()
-    dist = pettitt_test(sdf, "t", "v", driver_threshold=0).collect().rows()
+    force_distributed()
+    dist = pettitt_test(sdf, "t", "v").collect().rows()
     assert drv == dist
 
 

@@ -586,7 +586,7 @@ class TestNeyman:
 
 
 class TestBradleyTerryDriverPath:
-    def test_driver_and_distributed_paths_agree(self, spark):
+    def test_driver_and_distributed_paths_agree(self, spark, force_distributed):
         from polars_net_spark.llm.preference import bradley_terry
 
         r = (
@@ -595,7 +595,8 @@ class TestBradleyTerryDriverPath:
         )
         d = spark.createDataFrame(r, "chosen string, rejected string")
         drv = sorted(rows(bradley_terry(d, iterations=8)))
-        dist = sorted(rows(bradley_terry(d, iterations=8, driver_threshold=0)))
+        force_distributed()
+        dist = sorted(rows(bradley_terry(d, iterations=8)))
         assert drv == dist
 
 

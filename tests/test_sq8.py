@@ -52,7 +52,7 @@ def test_sq8_topk_close_to_exact(spark):
     ).lazy()
     approx = sq8_topk(d, q, k=5).collect().rows()
     assert len(approx) == 20
-    exact = cosine_topk(d, q, k=5, method="expr").collect().rows()
+    exact = cosine_topk(d, q, k=5).collect().rows()
     a_sets = {}
     e_sets = {}
     for qid, cid, _, _ in approx:
